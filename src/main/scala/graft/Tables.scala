@@ -134,10 +134,6 @@ object TablesSpread {
     if (df.rdd.getNumPartitions >= want) df else df.repartition(want)
   }
 
-  /** Fan-out target for kernel-stage repartitions (experiment knob:
-    * GRAFT_EXP_FAN overrides for local A/B measurement only).
-    */
-  def fan(spark: SparkSession): Int =
-    sys.env.get("GRAFT_EXP_FAN").map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
+  /** Fan-out target for kernel-stage repartitions. */
+  def fan(spark: SparkSession): Int = spark.sparkContext.defaultParallelism
 }

@@ -551,12 +551,6 @@ final class DeltaTableReader(spark: SparkSession, location: String) {
     frames.reduce(_ unionByName _)
   }
 
-  /** Live data-file count after pruning — plan-assertion surface for
-    * specs ("this probe opened 1 of N files").
-    */
-  def liveFileCount(filters: Seq[LakePredicate] = Nil): Int =
-    read(filters = filters).inputFiles.length
-
   /** File-granular row-level changelog of `(fromVersion, toVersion]` —
     * the log-replay face of Delta's Change Data Feed for tables
     * without `_change_data` files: per commit, `add` actions with

@@ -91,7 +91,45 @@ final case class Snapshot(
   def dirSeq(i: Int): Long = if (dirSeqs.isEmpty) 0L else dirSeqs(i)
   /** Dirs of equality delete entries (for liveness/maintenance). */
   def eqDeleteDirs: Seq[String] = eqDeletes.map(EqDelete.decode(_).dir)
+
+  /** Every dir with its write-time schema, spec and commit sequence. */
+  private[lake] def entries: Seq[DirEntry] = dirs.indices.map(i =>
+    DirEntry(dirs(i), dirSchemaJson(i), Snapshot.joinSpec(dirSpec(i)), dirSeq(i)))
+  /** This snapshot over `es`, every per-dir list spelled out (a commit
+    * stores a uniform one as Nil).
+    */
+  private[lake] def withEntries(es: Seq[DirEntry]): Snapshot =
+    copy(dirs = es.map(_.dir), dirSchemaJsons = es.map(_.schemaJson),
+      dirSpecs = es.map(_.spec), dirSeqs = es.map(_.seq))
+  /** Only the dirs at `idx`, each keeping its schema, spec and sequence;
+    * delete files and meta are unchanged.
+    */
+  private[lake] def keepDirs(idx: Seq[Int]): Snapshot = withEntries(idx.map(entries))
+  /** Adds dirs a commit wrote, under the table spec unless `spec` says. */
+  private[lake] def addDirs(ds: Seq[String], dirSchemaJson: String, seq: Long,
+                            spec: String = Snapshot.joinSpec(partitionBy)): Snapshot =
+    withEntries(entries ++ ds.map(DirEntry(_, dirSchemaJson, spec, seq)))
+  private[lake] def plusMeta(m: Map[String, String]): Snapshot = copy(meta = meta ++ m)
+  /** The field-id high-water mark: the meta entry that keeps a dropped
+    * column's id from ever being reissued.
+    */
+  private[lake] def idMark: Map[String, String] =
+    meta.get(SchemaIds.LastIdKey).map(SchemaIds.LastIdKey -> _).toMap
+  private[lake] def idFloor: Long = meta.get(SchemaIds.LastIdKey).fold(0L)(_.toLong)
+  /** A per-dir list uniform with its table-level value stored as Nil —
+    * keeps pre-evolution manifests small.
+    */
+  private[lake] def compacted: Snapshot = copy(
+    dirSchemaJsons = if (dirSchemaJsons.forall(_ == schemaJson)) Nil else dirSchemaJsons,
+    dirSpecs =
+      if (dirSpecs.forall(_ == Snapshot.joinSpec(partitionBy))) Nil else dirSpecs,
+    dirSeqs = if (dirSeqs.forall(_ == 0L)) Nil else dirSeqs)
 }
+
+/** One manifest dir with its write-time schema json, joined partition
+  * spec and commit sequence.
+  */
+private[lake] final case class DirEntry(dir: String, schemaJson: String, spec: String, seq: Long)
 
 object Snapshot {
   /** ';' separates spec entries in the manifest — specs themselves
@@ -100,6 +138,100 @@ object Snapshot {
   def joinSpec(spec: Seq[String]): String = spec.mkString(";")
   def splitSpec(s: String): Seq[String] =
     if (s.isEmpty) Nil else s.split(';').toSeq.map(_.trim).filter(_.nonEmpty)
+
+  /** Prefixes of the meta keys bound to one dir (`<prefix><dir>`). */
+  private[lake] val PerDirMetaPrefixes = Seq(FileStats.DirKeyPrefix, FileStats.BytesKeyPrefix,
+    FileStats.RowsKeyPrefix, FileStats.FileRowsKeyPrefix, FileStats.HiveColsKeyPrefix)
+
+  /** A snapshot with no dirs; [[LakeTable.commit]] stamps its version,
+    * op and time.
+    */
+  private[lake] def empty(partitionBy: Seq[String], schemaJson: String,
+                          meta: Map[String, String] = Map.empty): Snapshot =
+    Snapshot(0L, "", Nil, partitionBy, schemaJson, 0L, meta)
+
+  /** The carry-forward rule of every commit that keeps the base's dirs
+    * (append, upsert, merge-on-read DML, metadata-only commits): under
+    * the commit's spec and schema, each base dir keeps its write-time
+    * schema, spec and sequence, and the base's delete files ride along
+    * (a rewrite replaces them instead). Of the meta, what is bound to
+    * the dirs rides with them:
+    *  - per-dir file stats and the table's stats/bloom/sort/auto-compact
+    *    declarations — unless `carryStats` is off (schema evolution:
+    *    a rename could make old-name stats prune a future same-named
+    *    column); a legacy single-blob key is upgraded to the per-dir
+    *    form on the way through;
+    *  - per-dir byte sizes, row counts and hive-layout markers, which
+    *    survive schema evolution (a rename changes none of them);
+    *  - CHECK constraints, which are table properties: a schema
+    *    evolution must not silently disarm validation.
+    * With no base it is the empty snapshot.
+    */
+  private[lake] def carry(base: Option[Snapshot], partitionBy: Seq[String], schemaJson: String,
+                          carryStats: Boolean = true): Snapshot =
+    base.fold(empty(partitionBy, schemaJson)) { b =>
+      val stats: Map[String, String] =
+        if (!carryStats) Map.empty
+        else {
+          val legacy = b.meta.get(FileStats.MetaKey) match {
+            case Some(blob) if b.dirs.size == 1 => Map(FileStats.dirKey(b.dirs.head) -> blob)
+            case _ => Map.empty[String, String]
+          }
+          legacy ++ b.meta.filter { case (k, _) =>
+            k == FileStats.StatsColsKey || k == FileStats.BloomColsKey ||
+              k == FileStats.SortOrderKey || k == FileStats.AutoCompactKey ||
+              k.startsWith(FileStats.DirKeyPrefix)
+          }
+        }
+      val dirMeta = b.meta.filter { case (k, _) =>
+        k.startsWith(FileStats.BytesKeyPrefix) || k.startsWith(FileStats.RowsKeyPrefix) ||
+          k.startsWith(FileStats.FileRowsKeyPrefix) || k.startsWith(FileStats.HiveColsKeyPrefix) ||
+          k.startsWith(LakeChecks.KeyPrefix)
+      }
+      b.withEntries(b.entries)
+        .copy(partitionBy = partitionBy, schemaJson = schemaJson, meta = stats ++ dirMeta)
+    }
+}
+
+/** What [[LakeTable.commit]] re-checks against every base it tries,
+  * and the lineage it commits to.
+  *
+  * @param base     the version a read-modify-write (DML, compaction,
+  *                 metadata-only change) read: any other base fails the
+  *                 commit rather than silently discard a concurrent one
+  * @param schema   the base schema an append merged against (None =
+  *                 empty table): publishing over a concurrently changed
+  *                 schema would hide that change or mint colliding ids
+  * @param spec     the spec an append resolved against its base: a lost
+  *                 claim race that rebases onto a differently
+  *                 partitioned base must not union incompatible dirs (an
+  *                 empty base spec stays appendable)
+  * @param branch   branch lineage to commit to (None = main)
+  * @param firstVersion the version the first commit of an empty lineage
+  *                 takes (a clone lands at its source's version)
+  */
+private[lake] final case class CommitChecks(
+    base: Option[Long] = None,
+    schema: Option[Option[String]] = None,
+    spec: Option[Seq[String]] = None,
+    branch: Option[String] = None,
+    firstVersion: Long = 1L) {
+  def verify(cur: Option[Snapshot], root: String): Unit = {
+    base.foreach { eb =>
+      val v = cur.map(_.version).getOrElse(0L)
+      if (v != eb) throw new java.util.ConcurrentModificationException(
+        s"table $root moved from v$eb to v$v since the operation read its base; retry the operation")
+    }
+    for (s <- spec; b <- cur if b.partitionBy.nonEmpty && b.partitionBy != s)
+      throw new java.util.ConcurrentModificationException(
+        s"append spec $s no longer matches table spec ${b.partitionBy} at $root " +
+          "(spec changed concurrently); retry the append")
+    schema.foreach { expected =>
+      if (cur.map(_.schemaJson) != expected)
+        throw new java.util.ConcurrentModificationException(
+          s"table $root schema changed concurrently since the append was planned; retry the append")
+    }
+  }
 }
 
 sealed trait WriteMode
@@ -863,9 +995,6 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
   private[lake] def readWithPos(version: Option[Long] = None): DataFrame =
     scanImpl(Nil, version, keepPos = true)
 
-  /** Probe-only public alias (scratch instrumentation). */
-  def readWithPosProbe(version: Option[Long] = None): DataFrame = readWithPos(version)
-
   /** Hadoop-qualified root with a trailing slash — the prefix under
     * which `_metadata.file_path` reports this table's data files.
     * Delete files store paths relative to it (relocatable manifests).
@@ -944,6 +1073,14 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     * a claim race waits for the winner's manifest and rebases (so
     * concurrent appends serialize without losing either commit).
     *
+    * `edit` builds the snapshot from the base and the version claimed
+    * over it. It runs inside the loop, once per claimed attempt, so a
+    * rebase after a lost claim race re-resolves everything that depends
+    * on them — above all the sequences of new dirs and equality
+    * deletes, which must exceed every prior dir's. The loop re-runs
+    * `checks` on each base, stamps version, op and timestamp, and stores
+    * uniform per-dir lists as Nil.
+    *
     * Crash recovery: a writer that dies between claiming and
     * publishing leaves an orphan claim that would otherwise block the
     * version forever. A claim older than [[LakeTable.StaleClaimMs]]
@@ -951,24 +1088,9 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     * one log-structured table formats make) and is removed by the next
     * writer.
     */
-  private[lake] def commit(op: String, newDirs: Seq[String], carryForward: Boolean,
-                           partitionBy: Seq[String], schemaJson: String,
-                           meta: Map[String, String] = Map.empty,
-                           expectedBase: Option[Long] = None,
-                           newDirSchemas: Seq[String] = Nil,
-                           carriedSchemasOverride: Option[Seq[String]] = None,
-                           expectedBaseSchema: Option[Option[String]] = None,
-                           newDeleteDirs: Seq[String] = Nil,
-                           allowSpecChange: Boolean = false,
-                           carryStats: Boolean = true,
-                           newDirSpecs: Seq[String] = Nil,
-                           deleteDirsOverride: Option[Seq[String]] = None,
-                           newEqDeletes: Seq[(Seq[String], String)] = Nil,
-                           eqDeletesOverride: Option[Seq[String]] = None,
-                           newDirSeqs: Seq[Long] = Nil,
-                           branch: Option[String] = None,
-                           firstVersionBase: Long = 0L,
-                           dropMetaKeys: Set[String] = Set.empty): Snapshot = {
+  private[lake] def commit(op: String, checks: CommitChecks,
+                           edit: (Option[Snapshot], Long) => Snapshot): Snapshot = {
+    val branch = checks.branch
     io.mkdirs(lineageVersionsDir(branch))
     // must outlive the stale-claim lease, else a crashed writer's
     // orphan claim exhausts the budget before it can be reclaimed
@@ -977,138 +1099,10 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     while (System.currentTimeMillis() < deadline) {
       attempts += 1
       val base = lineageLatest(branch)
-      // read-modify-write commits (DML, compact) must fail rather than
-      // silently discard a concurrent commit made after their base read
-      expectedBase.foreach { eb =>
-        val cur = base.map(_.version).getOrElse(0L)
-        if (cur != eb) throw new java.util.ConcurrentModificationException(
-          s"table $rootLocation moved from v$eb to v$cur since the operation read its base; retry the operation")
-      }
-      // append spec revalidation INSIDE the retry loop: the spec was
-      // resolved against the base visible at write() time, but a lost
-      // claim race rebases onto a newer snapshot — publishing the
-      // stale spec over a concurrently changed one would union
-      // incompatibly-partitioned dirs. (An empty base spec stays
-      // appendable-with-spec: those dirs read through the null-escape.)
-      // Spec-evolution commits (`set-spec`) change the spec on
-      // purpose and skip the check — per-dir specs keep old dirs
-      // readable under their own layout.
-      if (carryForward && !allowSpecChange) base.foreach { b =>
-        if (b.partitionBy.nonEmpty && b.partitionBy != partitionBy)
-          throw new java.util.ConcurrentModificationException(
-            s"append spec $partitionBy no longer matches table spec ${b.partitionBy} at $rootLocation " +
-              "(spec changed concurrently); retry the append")
-      }
-      // schema revalidation: an append's merged schema (and any fresh
-      // field ids) were derived from the base visible at plan time;
-      // publishing them over a concurrently changed schema would hide
-      // the concurrent change or mint colliding ids
-      expectedBaseSchema.foreach { expected =>
-        if (base.map(_.schemaJson) != expected)
-          throw new java.util.ConcurrentModificationException(
-            s"table $rootLocation schema changed concurrently since the append was planned; retry the append")
-      }
-      // firstVersionBase lets a clone land at its SOURCE's version so
-      // preserved dir/delete commit sequences stay below every future
-      // commit of the clone (versions need not start at 1)
-      val next = base.map(_.version).getOrElse(firstVersionBase) + 1
+      checks.verify(base, rootLocation)
+      val next = base.fold(checks.firstVersion)(_.version + 1)
       val claim = new HPath(lineageVersionsDir(branch), f"v$next%08d.claim")
       if (arbiter.tryClaim(claim)) {
-        val carriedDirs = if (carryForward) base.map(_.dirs).getOrElse(Nil) else Nil
-        val dirs = carriedDirs ++ newDirs
-        // per-dir write-time schemas travel with the dirs: carried
-        // dirs keep theirs (expanded from uniform legacy manifests),
-        // new dirs default to this commit's schema
-        val carriedSchemas = carriedSchemasOverride.getOrElse(
-          if (carryForward)
-            base.map(b => b.dirs.indices.map(b.dirSchemaJson)).getOrElse(Nil)
-          else Nil)
-        val addedSchemas =
-          if (newDirSchemas.nonEmpty) newDirSchemas else newDirs.map(_ => schemaJson)
-        val dirSchemas0 = carriedSchemas ++ addedSchemas
-        // store Nil when uniform — keeps pre-evolution manifests small
-        val dirSchemas =
-          if (dirSchemas0.forall(_ == schemaJson)) Nil else dirSchemas0.toSeq
-        // per-dir partition specs travel exactly like per-dir schemas:
-        // carried dirs keep theirs, new dirs take this commit's spec,
-        // and a uniform table stores Nil (manifests stay small)
-        val specStr = Snapshot.joinSpec(partitionBy)
-        val carriedSpecs =
-          if (carryForward)
-            base.map(b => b.dirs.indices.map(i => Snapshot.joinSpec(b.dirSpec(i)))).getOrElse(Nil)
-          else Nil
-        val dirSpecs0 = carriedSpecs ++
-          (if (newDirSpecs.nonEmpty) newDirSpecs else newDirs.map(_ => specStr))
-        val dirSpecsOut =
-          if (dirSpecs0.forall(_ == specStr)) Nil else dirSpecs0.toSeq
-        // per-dir file stats survive any dir-preserving commit: carried
-        // dirs keep their stats blobs and the table keeps its
-        // stats-column set (schema-evolution commits opt out — renames
-        // could make old-name stats prune a future same-named column).
-        // A base holding the legacy single-blob key is upgraded to the
-        // per-dir form on the way through.
-        val carriedStats: Map[String, String] =
-          if (!carryForward || !carryStats) Map.empty
-          else base.map { b =>
-            val perDir = b.meta.filter { case (k, _) =>
-              k == FileStats.StatsColsKey || k == FileStats.BloomColsKey ||
-                k == FileStats.SortOrderKey || k == FileStats.AutoCompactKey ||
-                k.startsWith(FileStats.DirKeyPrefix)
-            }
-            val legacy = b.meta.get(FileStats.MetaKey) match {
-              case Some(blob) if b.dirs.size == 1 =>
-                Map(FileStats.dirKey(b.dirs.head) -> blob)
-              case _ => Map.empty[String, String]
-            }
-            legacy ++ perDir
-          }.getOrElse(Map.empty)
-        // per-dir byte sizes and row counts ride with their dirs on
-        // EVERY dir-preserving commit — unlike column stats they
-        // survive schema evolution (a rename changes neither file
-        // sizes nor row counts)
-        val carriedBytes: Map[String, String] =
-          if (!carryForward) Map.empty
-          else base.map(_.meta.filter(kv =>
-            kv._1.startsWith(FileStats.BytesKeyPrefix) ||
-              kv._1.startsWith(FileStats.RowsKeyPrefix) ||
-              kv._1.startsWith(FileStats.FileRowsKeyPrefix) ||
-              kv._1.startsWith(FileStats.HiveColsKeyPrefix)))
-            .getOrElse(Map.empty)
-        // CHECK constraints are table properties: they ride EVERY
-        // carry-forward commit independently of carryStats (a schema
-        // evolution must not silently disarm validation — rename/drop
-        // of a constrained column is rejected up front instead)
-        val carriedChecks: Map[String, String] =
-          if (!carryForward) Map.empty
-          else base.map(_.meta.filter(_._1.startsWith(LakeChecks.KeyPrefix)))
-            .getOrElse(Map.empty)
-        // positional delete dirs ride the same carry rule as data
-        // dirs: appends/DML keep them, overwrite/compact drop them
-        // (the rewrite they describe no longer exists). A delete-file
-        // rewrite REPLACES the set wholesale via the override.
-        val deleteDirs = deleteDirsOverride.getOrElse(
-          (if (carryForward) base.map(_.deleteDirs).getOrElse(Nil) else Nil) ++ newDeleteDirs)
-        // equality deletes ride the same carry rule; entries minted by
-        // THIS commit take the FINAL version as their sequence — a
-        // rebase after a lost claim race re-resolves `next`, keeping
-        // the invariant that a delete's seq exceeds every prior dir's
-        val eqDeletesOut = eqDeletesOverride.getOrElse(
-          (if (carryForward) base.map(_.eqDeletes).getOrElse(Nil) else Nil) ++
-            newEqDeletes.map { case (cs, d) => EqDelete.encode(EqDelete(next, cs, d)) })
-        // per-dir commit sequences: carried dirs keep theirs (legacy →
-        // 0), new dirs take this commit's version unless the caller
-        // restores historical ones (rollback) or mixes kept + fresh
-        // dirs (binpack compaction; -1 = "this commit's version",
-        // resolved HERE so a rebase after a lost claim race re-stamps)
-        val carriedSeqs =
-          if (carryForward)
-            base.map(b => b.dirs.indices.map(b.dirSeq)).getOrElse(Nil)
-          else Nil
-        val dirSeqs0 = carriedSeqs ++
-          (if (newDirSeqs.nonEmpty) newDirSeqs.map(s => if (s == -1L) next else s)
-           else newDirs.map(_ => next))
-        val dirSeqsOut: Seq[Long] =
-          if (dirSeqs0.forall(_ == 0L)) Nil else dirSeqs0.toSeq
         // strictly monotonic commit timestamps: two commits inside one
         // millisecond would otherwise be indistinguishable to
         // timestamp time travel (`FOR TIMESTAMP AS OF` resolves the
@@ -1116,9 +1110,7 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
         // assumes snapshot-log timestamps are ordered)
         val ts = math.max(System.currentTimeMillis(),
           base.map(_.timestampMs + 1).getOrElse(Long.MinValue))
-        val snap = Snapshot(next, op, dirs, partitionBy, schemaJson,
-          ts, (carriedStats ++ carriedBytes ++ carriedChecks ++ meta) -- dropMetaKeys,
-          dirSchemas, deleteDirs, dirSpecsOut, eqDeletesOut, dirSeqsOut)
+        val snap = edit(base, next).compacted.copy(version = next, op = op, timestampMs = ts)
         // publish with the arbiter's atomic NO-REPLACE primitive: a
         // plain overwrite would silently clobber a manifest published
         // by a concurrent writer. A failed publish means we lost
@@ -1127,8 +1119,8 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
         // (check-then-act local FS) and two writers claimed the same
         // version. Both cases are safe to REBASE AND RETRY: nothing of
         // ours was published, the staged dirs recommit under the next
-        // version, and the loop's expectedBase/spec/schema
-        // revalidation decides whether the retry is still legal.
+        // version, and the loop's checks decide whether the retry is
+        // still legal.
         if (arbiter.publishIfAbsent(lineageManifestPath(branch, next), Manifest.toJson(snap))) {
           arbiter.releaseClaim(claim) // served its purpose; don't accumulate
           return snap
@@ -1432,8 +1424,6 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
       if (effectiveSort.isEmpty) Map.empty[String, String]
       else Map(FileStats.SortOrderKey ->
         FileStats.encodeClustering(effectiveSort, declZ))
-    // bytes/rows ride the combined writeMetaFor pass above
-    val bytesMeta = Map.empty[String, String]
     val op = mode match { case WriteMode.Overwrite => "overwrite"; case WriteMode.Append => "append" }
     // field-id bookkeeping: the dir records the frame's write-time
     // schema; the snapshot schema is the append-merged union (appends
@@ -1441,7 +1431,7 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     // The id high-water mark travels in the manifest so a dropped
     // column's id is NEVER reused (reuse would make align() resurrect
     // the dropped bytes under the new name).
-    val idFloor = base.flatMap(_.meta.get(SchemaIds.LastIdKey)).map(_.toLong).getOrElse(0L)
+    val idFloor = base.fold(0L)(_.idFloor)
     val annotatedDf = SchemaIds.annotate(df.schema, base.map(_.schema), idFloor)
     val currentSchema = mode match {
       case WriteMode.Append if base.nonEmpty => SchemaIds.merge(base.get.schema, df.schema, idFloor)
@@ -1449,21 +1439,22 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     }
     val idMeta = Map(SchemaIds.LastIdKey ->
       math.max(idFloor, math.max(SchemaIds.maxId(currentSchema), SchemaIds.maxId(annotatedDf))).toString)
+    val append = mode == WriteMode.Append
+    // an append's merged schema and spec derive from THIS base read: a
+    // lost claim race against a schema- or spec-changing commit must
+    // fail (and be re-planned) instead of publishing over the change
+    val checks = CommitChecks(expectedBase, branch = branch,
+      schema = if (append) Some(base.map(_.schemaJson)) else None,
+      spec = if (append) Some(effectiveSpec) else None)
     val snap = graft.ProfStream.prof(s"lake commit $root") {
-      commit(op, Seq(dirName), carryForward = mode == WriteMode.Append,
-      partitionBy = effectiveSpec, schemaJson = currentSchema.json,
-      meta = meta ++ statsMeta ++ bytesMeta ++ idMeta ++ bloomMeta ++ sortMeta ++ checkMeta,
-      expectedBase = expectedBase, newDirSchemas = Seq(annotatedDf.json),
-      // the merged schema above derives from THIS base read: a lost
-      // claim race against a schema-changing commit must fail (and be
-      // re-planned) instead of publishing a schema that hides the
-      // concurrent change
-      expectedBaseSchema = if (mode == WriteMode.Append) Some(base.map(_.schemaJson)) else None,
-      branch = branch)
+      commit(op, checks, (b, next) =>
+        Snapshot.carry(if (append) b else None, effectiveSpec, currentSchema.json)
+          .addDirs(Seq(dirName), annotatedDf.json, next)
+          .plusMeta(meta ++ statsMeta ++ idMeta ++ bloomMeta ++ sortMeta ++ checkMeta))
     }
     // declared auto-compaction rides appends on the MAIN lineage only
     // (branch compaction belongs to the branch's own publisher)
-    if (mode == WriteMode.Append && branch.isEmpty) maybeAutoCompact(snap)
+    if (append && branch.isEmpty) maybeAutoCompact(snap)
     snap
   }
 
@@ -1505,10 +1496,8 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     require(target.rootLocation != rootLocation, "clone target is the source")
     def abs(d: String): String =
       if (LakeTable.externalDir(d)) d else loc(d).toString
-    val perDirPrefixes = Seq(FileStats.DirKeyPrefix, FileStats.BytesKeyPrefix,
-      FileStats.RowsKeyPrefix, FileStats.FileRowsKeyPrefix, FileStats.HiveColsKeyPrefix)
     val meta = snap.meta.map { case (k, v) =>
-      perDirPrefixes.find(k.startsWith) match {
+      Snapshot.PerDirMetaPrefixes.find(k.startsWith) match {
         case Some(p) => (p + abs(k.stripPrefix(p))) -> v
         case None    => k -> v
       }
@@ -1533,18 +1522,12 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
         target.io.move(staged, target.loc(dirName))
         Seq(dirName)
       }
-    target.commit("clone", snap.dirs.map(abs), carryForward = false,
-      partitionBy = snap.partitionBy,
-      schemaJson = snap.schemaJson,
-      meta = meta,
-      newDirSchemas = snap.dirs.indices.map(snap.dirSchemaJson),
-      newDirSpecs = snap.dirs.indices.map(i => Snapshot.joinSpec(snap.dirSpec(i))),
-      newDirSeqs = snap.dirs.indices.map(snap.dirSeq),
-      deleteDirsOverride = Some(cloneDeleteDirs),
-      eqDeletesOverride = Some(snap.eqDeletes.map { e =>
-        val d = EqDelete.decode(e); EqDelete.encode(d.copy(dir = abs(d.dir)))
-      }),
-      firstVersionBase = snap.version - 1)
+    val eqDeletes = snap.eqDeletes.map { e =>
+      val d = EqDelete.decode(e); EqDelete.encode(d.copy(dir = abs(d.dir)))
+    }
+    target.commit("clone", CommitChecks(firstVersion = snap.version), (_, _) =>
+      snap.withEntries(snap.entries.map(e => e.copy(dir = abs(e.dir))))
+        .copy(meta = meta, deleteDirs = cloneDeleteDirs, eqDeletes = eqDeletes))
   }
 
   /** Declared CHECK constraints of the current snapshot (name → SQL
@@ -1570,18 +1553,16 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     // future write
     LakeChecks.referencedCols(spark, sqlPredicate)
     LakeChecks.enforce(read(Some(base.version)), Map(name -> sqlPredicate), rootLocation)
-    commit("add-check", Nil, carryForward = true,
-      partitionBy = base.partitionBy, schemaJson = base.schemaJson,
-      meta = Map(LakeChecks.key(name) -> sqlPredicate),
-      expectedBase = Some(base.version))
+    commitMeta("add-check", base)(_.plusMeta(Map(LakeChecks.key(name) -> sqlPredicate)))
   }
 
   /** Declare (or clear, with `smallDirs = 0`) an auto-compaction
     * policy: after each append/upsert commit, if at least `smallDirs`
     * data dirs are under `maxDirBytes` — decided from manifest byte
     * footprints, zero filesystem listing — the writer folds them with
-    * [[compactBinPack]] as a best-effort follow-up commit (a loss to
-    * a racing writer is silently skipped; the next write retries).
+    * [[compactBinPack]] as a best-effort follow-up commit (a failure,
+    * such as a loss to a racing writer, is logged and skipped; the
+    * next write retries).
     * Delta's autoCompact shape: a trickle-ingest streaming sink keeps
     * its own file-count debt bounded with no external scheduler.
     */
@@ -1589,18 +1570,20 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     val base = latest.getOrElse(throw new IllegalStateException(
       s"cannot declare auto-compact on empty table $rootLocation"))
     if (smallDirs <= 0)
-      commit("set-autocompact", Nil, carryForward = true,
-        partitionBy = base.partitionBy, schemaJson = base.schemaJson,
-        dropMetaKeys = Set(FileStats.AutoCompactKey),
-        expectedBase = Some(base.version))
+      commitMeta("set-autocompact", base)(s => s.copy(meta = s.meta - FileStats.AutoCompactKey))
     else {
       require(maxDirBytes > 0, "maxDirBytes must be positive")
-      commit("set-autocompact", Nil, carryForward = true,
-        partitionBy = base.partitionBy, schemaJson = base.schemaJson,
-        meta = Map(FileStats.AutoCompactKey -> s"$smallDirs,$maxDirBytes"),
-        expectedBase = Some(base.version))
+      commitMeta("set-autocompact", base)(
+        _.plusMeta(Map(FileStats.AutoCompactKey -> s"$smallDirs,$maxDirBytes")))
     }
   }
+
+  /** Metadata-only commit on `base`: every dir, delete file and carried
+    * meta key rides along, and `f` makes the change.
+    */
+  private def commitMeta(op: String, base: Snapshot)(f: Snapshot => Snapshot): Snapshot =
+    commit(op, CommitChecks(base = Some(base.version)), (b, _) =>
+      f(Snapshot.carry(b, base.partitionBy, base.schemaJson)))
 
   /** Post-commit auto-compaction ([[setAutoCompact]]): best-effort —
     * the caller's write already committed, so losing a compaction race
@@ -1617,7 +1600,10 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
         // error escape would fail a succeeded write and make retrying
         // callers (streaming foreachBatch) double-append their batch
         try compactBinPack(bytes.toLong)
-        catch { case scala.util.control.NonFatal(_) => () }
+        catch { case scala.util.control.NonFatal(e) =>
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"auto-compaction of $rootLocation failed; deferred to the next write", e)
+        }
     }
 
   /** ALTER TABLE DROP CONSTRAINT: metadata-only removal. */
@@ -1626,10 +1612,7 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
       s"empty table $rootLocation"))
     require(base.meta.contains(LakeChecks.key(name)),
       s"no constraint $name on $rootLocation (have: ${checkConstraints.keys.mkString(", ")})")
-    commit("drop-check", Nil, carryForward = true,
-      partitionBy = base.partitionBy, schemaJson = base.schemaJson,
-      dropMetaKeys = Set(LakeChecks.key(name)),
-      expectedBase = Some(base.version))
+    commitMeta("drop-check", base)(s => s.copy(meta = s.meta - LakeChecks.key(name)))
   }
 
   /** Register existing parquet data as a data dir of this table WITHOUT
@@ -1688,7 +1671,7 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
         else spark.read.option("recursiveFileLookup", "true").parquet(srcStr)
       LakeChecks.enforce(importDf, checks, rootLocation)
     }
-    val idFloor = base.flatMap(_.meta.get(SchemaIds.LastIdKey)).map(_.toLong).getOrElse(0L)
+    val idFloor = base.fold(0L)(_.idFloor)
     val annotated = SchemaIds.annotate(srcSchema, base.map(_.schema), idFloor)
     val currentSchema = base match {
       case Some(b) => SchemaIds.merge(b.schema, srcSchema, idFloor)
@@ -1706,16 +1689,14 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     val hiveMeta: Map[String, String] =
       if (hiveCols.isEmpty) Map.empty
       else Map(FileStats.hiveColsKey(srcStr) -> FileStats.joinCols(hiveCols))
-    commit("add-files", Seq(srcStr), carryForward = true,
-      partitionBy = base.map(_.partitionBy).getOrElse(Nil),
-      schemaJson = currentSchema.json,
-      meta = statsMeta ++ idMeta ++ hiveMeta,
-      newDirSchemas = Seq(annotated.json),
-      // the imported dir is an unpartitioned spec generation: on a
-      // partitioned table it reads through the null-escape like any
-      // pre-spec dir (no dir pruning, exact row filtering)
-      newDirSpecs = Seq(""),
-      expectedBaseSchema = Some(base.map(_.schemaJson)))
+    val spec = base.map(_.partitionBy).getOrElse(Nil)
+    commit("add-files", CommitChecks(schema = Some(base.map(_.schemaJson)), spec = Some(spec)),
+      (b, next) => Snapshot.carry(b, spec, currentSchema.json)
+        // the imported dir is an unpartitioned spec generation: on a
+        // partitioned table it reads through the null-escape like any
+        // pre-spec dir (no dir pruning, exact row filtering)
+        .addDirs(Seq(srcStr), annotated.json, next, spec = "")
+        .plusMeta(statsMeta ++ idMeta ++ hiveMeta))
   }
 
   /** Streaming/CDC upsert (the Flink→Iceberg upsert write shape):
@@ -1763,16 +1744,16 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     writeDataDir(coerced, dirName, base.partitionBy, inheritedBloomCols(Some(base)))
     val statsMeta = writeMetaFor(dirName, inheritedStatsCols(Some(base)),
       schema.fieldNames.toSeq)
-    val bytesMeta = Map.empty[String, String]
-    val idMeta = base.meta.get(SchemaIds.LastIdKey)
-      .map(v => Map(SchemaIds.LastIdKey -> v)).getOrElse(Map.empty[String, String])
-    val snap = commit("upsert", Seq(dirName), carryForward = true, base.partitionBy,
-      base.schemaJson, meta = meta ++ statsMeta ++ bytesMeta ++ idMeta,
-      newDirSchemas = Seq(base.schemaJson),
-      newEqDeletes = Seq((keys, delDir)),
-      // the coercion above resolved types against THIS schema; a
-      // concurrent evolution must fail the commit, not be hidden
-      expectedBaseSchema = Some(Some(base.schemaJson)))
+    // the coercion above resolved types against THIS schema; a
+    // concurrent evolution must fail the commit, not be hidden
+    val checks = CommitChecks(schema = Some(Some(base.schemaJson)), spec = Some(base.partitionBy))
+    val snap = commit("upsert", checks, { (b, next) =>
+      val s = Snapshot.carry(b, base.partitionBy, base.schemaJson)
+        .addDirs(Seq(dirName), base.schemaJson, next)
+        .plusMeta(meta ++ statsMeta ++ base.idMark)
+      // the delete's sequence is the version the commit lands at
+      s.copy(eqDeletes = s.eqDeletes :+ EqDelete.encode(EqDelete(next, keys, delDir)))
+    })
     maybeAutoCompact(snap) // CDC trickle ingest is the main small-file source
     snap
   }
@@ -1819,14 +1800,12 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     val statsMeta = newDirs.map(d =>
       writeMetaFor(d, inheritedStatsCols(Some(base)), base.schema.fieldNames.toSeq))
       .foldLeft(Map.empty[String, String])(_ ++ _)
-    // the field-id high-water mark survives (commit meta is per-snapshot)
-    val idMeta = base.meta.get(SchemaIds.LastIdKey)
-      .map(v => Map(SchemaIds.LastIdKey -> v)).getOrElse(Map.empty[String, String])
-    commit(op, newDirs, carryForward = true, base.partitionBy, base.schemaJson,
-      meta = meta ++ statsMeta ++ idMeta,
-      expectedBase = Some(base.version),
-      newDirSchemas = newDirs.map(_ => base.schemaJson),
-      newDeleteDirs = Seq(delDir))
+    commit(op, CommitChecks(base = Some(base.version)), { (b, next) =>
+      val s = Snapshot.carry(b, base.partitionBy, base.schemaJson)
+        .addDirs(newDirs, base.schemaJson, next)
+        .plusMeta(meta ++ statsMeta ++ base.idMark)
+      s.copy(deleteDirs = s.deleteDirs :+ delDir)
+    })
   }
 
   /** DDL create: commit a schema (and optional partition spec) with no
@@ -1836,7 +1815,7 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
   def create(schema: StructType, partitionBy: Seq[String] = Nil,
              meta: Map[String, String] = Map.empty): Snapshot = {
     require(latest.isEmpty, s"table already exists at $root")
-    commit("create", Nil, carryForward = false, partitionBy, schema.json, meta)
+    commit("create", CommitChecks(), (_, _) => Snapshot.empty(partitionBy, schema.json, meta))
   }
 
   // -- schema evolution (rename / drop / widen) ---------------------------
@@ -1876,24 +1855,21 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
 
   private def evolveSchema(op: String, f: StructType => StructType): Snapshot = {
     val snap = latest.getOrElse(throw new IllegalStateException(s"empty table at $root"))
-    val idFloor = snap.meta.get(SchemaIds.LastIdKey).map(_.toLong).getOrElse(0L)
     // materialize ids for legacy snapshots (all dirs shared the
     // current names until now, so a uniform annotation is faithful)
-    val annotated = SchemaIds.annotate(snap.schema, None, idFloor)
-    val carried = snap.dirs.indices.map { i =>
-      if (snap.dirSchemaJsons.isEmpty) annotated.json else snap.dirSchemaJson(i)
-    }
+    val annotated = SchemaIds.annotate(snap.schema, None, snap.idFloor)
+    val written = if (snap.dirSchemaJsons.isEmpty) snap.copy(schemaJson = annotated.json) else snap
     // the id high-water mark MUST survive a drop: it is what prevents
     // the dropped column's id from being reissued by a later append
     val idMeta = Map(SchemaIds.LastIdKey ->
-      math.max(idFloor, SchemaIds.maxId(annotated)).toString)
+      math.max(snap.idFloor, SchemaIds.maxId(annotated)).toString)
     // stats blobs and the stats-column set are keyed by COLUMN NAME:
     // after a rename/drop they could match a future same-named column
     // and wrongly prune — drop them (conservative; next statsBy write
     // or sorted compact re-arms skipping)
-    commit(op, Nil, carryForward = true, snap.partitionBy, f(annotated).json,
-      meta = idMeta, expectedBase = Some(snap.version),
-      carriedSchemasOverride = Some(carried), carryStats = false)
+    commit(op, CommitChecks(base = Some(snap.version)), (_, _) =>
+      Snapshot.carry(Some(written), snap.partitionBy, f(annotated).json, carryStats = false)
+        .plusMeta(idMeta))
   }
 
   /** Partition-spec evolution (Iceberg's `ALTER TABLE ... ADD/DROP/
@@ -1914,10 +1890,8 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
       s"partition source '${f.source}' is not a column of $rootLocation"))
     require(fields.map(_.name).distinct.size == fields.size,
       s"duplicate partition field names in $newSpec")
-    val idMeta = snap.meta.get(SchemaIds.LastIdKey)
-      .map(v => Map(SchemaIds.LastIdKey -> v)).getOrElse(Map.empty[String, String])
-    commit("set-spec", Nil, carryForward = true, newSpec, snap.schemaJson,
-      meta = idMeta, expectedBase = Some(snap.version), allowSpecChange = true)
+    commit("set-spec", CommitChecks(base = Some(snap.version)), (b, _) =>
+      Snapshot.carry(b, newSpec, snap.schemaJson).plusMeta(snap.idMark))
   }
 
   /** Rename a column, keeping its field id: existing files resolve to
@@ -1944,7 +1918,7 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
   def addColumn(name: String, dataType: DataType): Snapshot =
     evolveSchema("add-column", { cur =>
       require(!cur.fieldNames.contains(name), s"column '$name' already exists at $root")
-      val floor = latest.flatMap(_.meta.get(SchemaIds.LastIdKey)).map(_.toLong).getOrElse(0L)
+      val floor = latest.fold(0L)(_.idFloor)
       SchemaIds.annotate(
         StructType(cur.fields :+ org.apache.spark.sql.types.StructField(name, dataType)),
         None, math.max(floor, SchemaIds.maxId(cur)))
@@ -2057,11 +2031,9 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
       snap.schema.fieldNames.toSeq)
     // the field-id high-water mark survives compaction (commit meta is
     // per-snapshot, and losing it would allow dropped-id reuse)
-    val idMeta = snap.meta.get(SchemaIds.LastIdKey)
-      .map(v => Map(SchemaIds.LastIdKey -> v)).getOrElse(Map.empty[String, String])
-    commit("compact", Seq(dirName), carryForward = false, snap.partitionBy, snap.schemaJson,
-      meta = statsMeta ++ idMeta ++ propMeta,
-      expectedBase = Some(snap.version))
+    commit("compact", CommitChecks(base = Some(snap.version)), (_, next) =>
+      Snapshot.empty(snap.partitionBy, snap.schemaJson, statsMeta ++ snap.idMark ++ propMeta)
+        .addDirs(Seq(dirName), snap.schemaJson, next))
   }
 
   /** Incremental binpack compaction (Iceberg's `rewrite_data_files`
@@ -2087,47 +2059,7 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
       base.meta.get(FileStats.bytesKey(d)).map(_.toLong).getOrElse(io.dirBytes(loc(d)))
     val smallIdx = base.dirs.indices.filter(i => bytesOf(base.dirs(i)) <= maxDirBytes)
     if (smallIdx.size <= 1) return base
-    val keepIdx = base.dirs.indices.filterNot(smallIdx.contains)
-    // subset view: same schema/specs/deletes, only the small dirs —
-    // scanOf applies every delete file, so the rewrite materializes
-    // exactly the subset's LIVE rows
-    val sub = base.copy(
-      dirs = smallIdx.map(base.dirs),
-      dirSchemaJsons = smallIdx.map(base.dirSchemaJson),
-      dirSpecs = smallIdx.map(i => Snapshot.joinSpec(base.dirSpec(i))),
-      dirSeqs = smallIdx.map(base.dirSeq))
-    val df = scanOf(sub, Nil, keepPos = false).repartition(targetPartitions)
-    val dirName = s"data/${UUID.randomUUID().toString}"
-    writeDataDir(df, dirName, base.partitionBy, inheritedBloomCols(Some(base)))
-    // kept dirs keep their stats/bytes meta; the folded dir collects
-    // fresh stats and bytes
-    val keptMeta = base.meta.filter { case (k, _) =>
-      keepIdx.map(base.dirs).exists(d =>
-        k == FileStats.dirKey(d) || k == FileStats.bytesKey(d) ||
-          k == FileStats.rowsKey(d) || k == FileStats.fileRowsKey(d) ||
-          k == FileStats.hiveColsKey(d))
-    } ++ base.meta.filter { case (k, _) =>
-      k == FileStats.StatsColsKey || k == FileStats.SortOrderKey ||
-        k == FileStats.BloomColsKey || k == FileStats.AutoCompactKey ||
-        k.startsWith(LakeChecks.KeyPrefix) ||
-        k.startsWith(LakeTable.CarryMetaPrefix)
-    }
-    val statsMeta = writeMetaFor(dirName, inheritedStatsCols(Some(base)),
-      base.schema.fieldNames.toSeq)
-    val bytesMeta = Map.empty[String, String]
-    val idMeta = base.meta.get(SchemaIds.LastIdKey)
-      .map(v => Map(SchemaIds.LastIdKey -> v)).getOrElse(Map.empty[String, String])
-    commit("compact", keepIdx.map(base.dirs) :+ dirName, carryForward = false,
-      base.partitionBy, base.schemaJson,
-      meta = keptMeta ++ statsMeta ++ bytesMeta ++ idMeta,
-      expectedBase = Some(base.version),
-      newDirSchemas = keepIdx.map(base.dirSchemaJson) :+ base.schemaJson,
-      newDirSpecs = keepIdx.map(i => Snapshot.joinSpec(base.dirSpec(i))) :+
-        Snapshot.joinSpec(base.partitionBy),
-      newDirSeqs = keepIdx.map(base.dirSeq) :+ -1L,
-      deleteDirsOverride = Some(base.deleteDirs),
-      eqDeletesOverride = Some(base.eqDeletes),
-      allowSpecChange = true)
+    compactDirs(base, smallIdx)(_.repartition(targetPartitions))
   }
 
   /** Predicate-scoped compaction (Iceberg's `rewrite_data_files(where
@@ -2156,16 +2088,9 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
         .exists(_.isEmpty)
     val rewriteIdx = base.dirs.indices.filterNot(disjoint)
     if (rewriteIdx.isEmpty) return base
-    val keepIdx = base.dirs.indices.filterNot(rewriteIdx.contains)
-    val sub = base.copy(
-      dirs = rewriteIdx.map(base.dirs),
-      dirSchemaJsons = rewriteIdx.map(base.dirSchemaJson),
-      dirSpecs = rewriteIdx.map(i => Snapshot.joinSpec(base.dirSpec(i))),
-      dirSeqs = rewriteIdx.map(base.dirSeq))
-    val live = scanOf(sub, Nil, keepPos = false)
     val (clusterCols, clusterZ) = inheritedClustering(Some(base))
-    val effective = clusterCols.filter(live.columns.contains)
-    val df =
+    compactDirs(base, rewriteIdx) { live =>
+      val effective = clusterCols.filter(live.columns.contains)
       if (effective.isEmpty) live.repartition(targetPartitions)
       else if (clusterZ) {
         val code = zorderCodeNormalized(live, effective)
@@ -2173,34 +2098,34 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
       } else live.repartitionByRange(targetPartitions,
         effective.map(org.apache.spark.sql.functions.col): _*)
         .sortWithinPartitions(effective.map(org.apache.spark.sql.functions.col): _*)
+    }
+  }
+
+  /** Rewrite the LIVE rows of the dirs of `base` at `rewriteIdx` into
+    * one new dir laid out by `layout`, carrying every other dir, its
+    * meta and every delete file untouched (delete semantics: see
+    * [[compactBinPack]]). The new dir's sequence is the version the
+    * commit lands at.
+    */
+  private def compactDirs(base: Snapshot, rewriteIdx: Seq[Int])
+                         (layout: DataFrame => DataFrame): Snapshot = {
+    val df = layout(scanOf(base.keepDirs(rewriteIdx), Nil, keepPos = false))
     val dirName = s"data/${UUID.randomUUID().toString}"
     writeDataDir(df, dirName, base.partitionBy, inheritedBloomCols(Some(base)))
+    val keep = base.keepDirs(base.dirs.indices.filterNot(rewriteIdx.contains))
+    val keptDirs = keep.dirs.toSet
     val keptMeta = base.meta.filter { case (k, _) =>
-      keepIdx.map(base.dirs).exists(d =>
-        k == FileStats.dirKey(d) || k == FileStats.bytesKey(d) ||
-          k == FileStats.rowsKey(d) || k == FileStats.fileRowsKey(d) ||
-          k == FileStats.hiveColsKey(d))
-    } ++ base.meta.filter { case (k, _) =>
-      k == FileStats.StatsColsKey || k == FileStats.SortOrderKey ||
+      Snapshot.PerDirMetaPrefixes.exists(p => k.startsWith(p) && keptDirs(k.stripPrefix(p))) ||
+        k == FileStats.StatsColsKey || k == FileStats.SortOrderKey ||
         k == FileStats.BloomColsKey || k == FileStats.AutoCompactKey ||
         k.startsWith(LakeChecks.KeyPrefix) ||
         k.startsWith(LakeTable.CarryMetaPrefix)
     }
     val statsMeta = writeMetaFor(dirName, inheritedStatsCols(Some(base)),
       base.schema.fieldNames.toSeq)
-    val idMeta = base.meta.get(SchemaIds.LastIdKey)
-      .map(v => Map(SchemaIds.LastIdKey -> v)).getOrElse(Map.empty[String, String])
-    commit("compact", keepIdx.map(base.dirs) :+ dirName, carryForward = false,
-      base.partitionBy, base.schemaJson,
-      meta = keptMeta ++ statsMeta ++ idMeta,
-      expectedBase = Some(base.version),
-      newDirSchemas = keepIdx.map(base.dirSchemaJson) :+ base.schemaJson,
-      newDirSpecs = keepIdx.map(i => Snapshot.joinSpec(base.dirSpec(i))) :+
-        Snapshot.joinSpec(base.partitionBy),
-      newDirSeqs = keepIdx.map(base.dirSeq) :+ -1L,
-      deleteDirsOverride = Some(base.deleteDirs),
-      eqDeletesOverride = Some(base.eqDeletes),
-      allowSpecChange = true)
+    commit("compact", CommitChecks(base = Some(base.version)), (_, next) =>
+      keep.addDirs(Seq(dirName), base.schemaJson, next)
+        .copy(meta = keptMeta ++ statsMeta ++ base.idMark))
   }
 
   /** Fold all positional delete dirs into one (Iceberg's
@@ -2225,8 +2150,7 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
       .write.mode("overwrite").parquet(staged.toString)
     val delDir = s"deletes/${UUID.randomUUID().toString}"
     io.move(staged, loc(delDir))
-    commit("rewrite-deletes", Nil, carryForward = true, base.partitionBy, base.schemaJson,
-      expectedBase = Some(base.version), deleteDirsOverride = Some(Seq(delDir)))
+    commitMeta("rewrite-deletes", base)(_.copy(deleteDirs = Seq(delDir)))
   }
 
   /** Fold all equality delete files into ONE dir per key set, keeping
@@ -2262,9 +2186,7 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
         io.move(staged, loc(dir))
         EqDelete(EqDelete.PerRowSeq, cols, dir)
     }
-    commit("rewrite-deletes", Nil, carryForward = true, base.partitionBy, base.schemaJson,
-      expectedBase = Some(base.version),
-      eqDeletesOverride = Some(folded.map(EqDelete.encode)))
+    commitMeta("rewrite-deletes", base)(_.copy(eqDeletes = folded.map(EqDelete.encode)))
   }
 
   /** Rollback (Iceberg's `rollback_to_snapshot`): re-commit the target
@@ -2279,16 +2201,10 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     require(version != cur.version, s"table $rootLocation is already at v$version")
     val target = snapshotAt(version).getOrElse(throw new IllegalArgumentException(
       s"no snapshot v$version at $rootLocation (never committed, or expired)"))
-    commit("rollback", target.dirs, carryForward = false, target.partitionBy,
-      target.schemaJson, meta = target.meta, expectedBase = Some(cur.version),
-      newDirSchemas = target.dirs.indices.map(target.dirSchemaJson),
-      newDeleteDirs = target.deleteDirs, allowSpecChange = true,
-      newDirSpecs = target.dirs.indices.map(i => Snapshot.joinSpec(target.dirSpec(i))),
-      // equality-delete state restores EXACTLY: original sequences and
-      // per-dir sequences must survive, or the seq<delSeq semantics
-      // would re-delete (or resurrect) the wrong rows
-      eqDeletesOverride = Some(target.eqDeletes),
-      newDirSeqs = target.dirs.indices.map(target.dirSeq))
+    // equality-delete state restores EXACTLY: original sequences and
+    // per-dir sequences must survive, or the seq<delSeq semantics
+    // would re-delete (or resurrect) the wrong rows
+    commit("rollback", CommitChecks(base = Some(cur.version)), (_, _) => target)
   }
 
   // -- tags & write-audit-publish -----------------------------------------
@@ -2455,15 +2371,8 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     // version, which would let them escape later equality deletes.
     // Dirs inherited from the base keep their original sequences.
     val baseDirs = branchHistory(name).headOption.map(_.dirs.toSet).getOrElse(Set.empty)
-    val snap = commit("fast-forward", head.dirs, carryForward = false, head.partitionBy,
-      head.schemaJson, meta = head.meta, expectedBase = Some(cur.version),
-      newDirSchemas = head.dirs.indices.map(head.dirSchemaJson),
-      newDeleteDirs = head.deleteDirs, allowSpecChange = true,
-      newDirSpecs = head.dirs.indices.map(i => Snapshot.joinSpec(head.dirSpec(i))),
-      eqDeletesOverride = Some(head.eqDeletes),
-      newDirSeqs = head.dirs.zipWithIndex.map { case (d, i) =>
-        if (baseDirs.contains(d)) head.dirSeq(i) else -1L
-      })
+    val snap = commit("fast-forward", CommitChecks(base = Some(cur.version)), (_, next) =>
+      head.withEntries(head.entries.map(e => if (baseDirs(e.dir)) e else e.copy(seq = next))))
     dropBranch(name)
     snap
   }
@@ -2583,8 +2492,6 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     // head dir's bytes/rows ride writeMetaFor; remaining staged dirs
     // still pay their own footprint pass
     val bytesMeta = dirs.drop(1).flatMap(footprintMetaFor).toMap
-    val idMeta = base.meta.get(SchemaIds.LastIdKey)
-      .map(v => Map(SchemaIds.LastIdKey -> v)).getOrElse(Map.empty[String, String])
     val (op, carry) = mode match {
       case WriteMode.Append    => ("append", true)
       case WriteMode.Overwrite => ("overwrite", false)
@@ -2598,11 +2505,12 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
         k == FileStats.StatsColsKey || k == FileStats.BloomColsKey ||
           k == FileStats.SortOrderKey
       }
-    val snap = commit(op, dirs, carryForward = carry, base.partitionBy,
-      base.schemaJson, meta = meta ++ statsMeta ++ bytesMeta ++ idMeta ++ propMeta,
-      newDirSchemas = dirs.map(_ => base.schemaJson),
-      expectedBase = expectedBase,
-      expectedBaseSchema = Some(Some(base.schemaJson)))
+    val checks = CommitChecks(expectedBase, schema = Some(Some(base.schemaJson)),
+      spec = if (carry) Some(base.partitionBy) else None)
+    val snap = commit(op, checks, (b, next) =>
+      Snapshot.carry(if (carry) b else None, base.partitionBy, base.schemaJson)
+        .addDirs(dirs, base.schemaJson, next)
+        .plusMeta(meta ++ statsMeta ++ bytesMeta ++ base.idMark ++ propMeta))
     io.delete(stagedPath(id))
     snap
   }

@@ -227,16 +227,8 @@ object LakeDml {
         FileStats.rowsKey(d), FileStats.fileRowsKey(d))
     }.toSet ++ (if (base.dirs.size == 1) Set(FileStats.MetaKey) else Set.empty)
     val keptMeta = base.meta.filter { case (k, _) => !droppedKeys.contains(k) }
-    Some(table.commit("delete", keepIdx.map(base.dirs), carryForward = false,
-      base.partitionBy, base.schemaJson,
-      meta = keptMeta,
-      expectedBase = Some(base.version),
-      newDirSchemas = keepIdx.map(base.dirSchemaJson),
-      newDirSpecs = keepIdx.map(i => Snapshot.joinSpec(base.dirSpec(i))),
-      newDirSeqs = keepIdx.map(base.dirSeq),
-      deleteDirsOverride = Some(base.deleteDirs),
-      eqDeletesOverride = Some(base.eqDeletes),
-      allowSpecChange = true))
+    Some(table.commit("delete", CommitChecks(base = Some(base.version)), (_, _) =>
+      base.keepDirs(keepIdx).copy(meta = keptMeta)))
   }
 
   /** DELETE FROM t WHERE cond. Rows where `cond` is TRUE are removed;

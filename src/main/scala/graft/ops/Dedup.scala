@@ -31,14 +31,6 @@ private[ops] final class XorAccumulator
   */
 object Dedup {
 
-  /** Exact duplicate groups by normalized-text fingerprint: one
-    * hash-groupBy, the linear-scale baseline every pipeline runs first.
-    */
-  def exactGroups(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    docs.select(col(idCol), TextOps.fingerprint(col(textCol)).as("fp"))
-      .groupBy(col("fp"))
-      .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keep_id"))
-
   /** In-bucket ordered pair expansion: rows carrying the same bucket
     * key become (a, b) struct pairs with a < b (by the struct's first
     * field), via a self-join on the key. The join keys are compact

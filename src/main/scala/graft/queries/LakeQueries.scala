@@ -91,14 +91,15 @@ object LakeQueries {
   private def freshCatalog(spark: SparkSession): LakeCatalog =
     new LakeCatalog(spark, scratchDir("graft-lake-").toString)
 
-  /** Two INDEPENDENT read-only actions on concurrent action threads
-    * (guide §2.6) — the value-returning sibling of
-    * [[StreamQueries.inParallel]], for fixture asserts that each pay a
-    * full driver-action round trip over disjoint/immutable state.
-    * Both futures settle before a failure rethrows (suppressed-pair
-    * rule), so no job outlives the exception.
+  /** Two INDEPENDENT actions on concurrent action threads (guide §2.6):
+    * fixture asserts that each pay a full driver-action round trip over
+    * disjoint/immutable state, or fixture tasks whose commits touch
+    * disjoint table roots (one Spark session schedules both fine).
+    * Both futures settle before a failure rethrows, so no job outlives
+    * the exception; when BOTH fail, the second is attached to the first
+    * as a suppressed exception instead of vanishing.
     */
-  private def inParallel2[A, B](a: => A, b: => B): (A, B) = {
+  private[queries] def inParallel[A, B](a: => A, b: => B): (A, B) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -401,10 +402,10 @@ object LakeQueries {
     // the two source counts, then the two post-stage audit reads, are
     // pairwise independent read-only actions on disjoint/immutable
     // state — each pair overlaps on action threads (guide §2.6)
-    val (nBase, nBatch) = inParallel2(customer.count(), batch.count())
+    val (nBase, nBatch) = inParallel(customer.count(), batch.count())
     val id = t.stageAppend(batch)
     val (mainN, stagedN) =
-      inParallel2(t.read(None).count(), t.readStaged(id).count())
+      inParallel(t.read(None).count(), t.readStaged(id).count())
     require(mainN == nBase,
       "staged rows must be invisible before publish")
     require(stagedN == nBase + nBatch,
@@ -691,7 +692,7 @@ object LakeQueries {
     // read-only actions — overlapped (guide §2.6); the source count is
     // taken once and reused by the post-rollback assert below
     val (bronzeN1, nOrders) =
-      inParallel2(cat.read("bronze.orders").count(), orders.count())
+      inParallel(cat.read("bronze.orders").count(), orders.count())
     require(bronzeN1 == nOrders,
       "transaction must publish the bronze backfill")
     // a racing transaction: its bronze half publishes first, then its
@@ -745,7 +746,7 @@ object LakeQueries {
     }
     // the two post-erasure remaining-row counts are independent
     // read-only actions on disjoint tables — overlapped (guide §2.6)
-    val (evN, prN) = inParallel2(
+    val (evN, prN) = inParallel(
       cat.read("pii.events").count(), cat.read("pii.profiles").count())
     Seq(
       ("events", evN,
@@ -927,7 +928,7 @@ object LakeQueries {
     // main-invisibility and the branch audit read are independent
     // read-only actions on disjoint snapshots — overlapped (guide §2.6)
     val (mainN, nBranch) =
-      inParallel2(t.read(None).count(), t.readBranch("audit").count())
+      inParallel(t.read(None).count(), t.readBranch("audit").count())
     require(mainN == nBase,
       "branch writes must be invisible on main before fast-forward")
     require(t.history.size == 1, "branch writes must not create main versions")
@@ -1003,7 +1004,7 @@ object LakeQueries {
     // independent tables commit on concurrent action threads (guide
     // §2.6): the scheduler back-fills the fact write's task tail with
     // the dim write's tasks
-    StreamQueries.inParallel(
+    inParallel(
       cat.write(orders.filter($"o_orderkey" % 3 =!= 0), "bronze.orders", WriteMode.Overwrite),
       cat.write(cust, "dim.customer", WriteMode.Overwrite))
     def refreshJoin() = JoinView.refresh(cat, "bronze.orders", "dim.customer",
@@ -1017,7 +1018,7 @@ object LakeQueries {
     require(first.meta(IncrementalView.RefreshModeKey) == "full",
       "first rollup refresh builds full")
     // trickle: fact append + a dim segment re-assignment (upsert)
-    StreamQueries.inParallel(
+    inParallel(
       cat.write(orders.filter($"o_orderkey" % 3 === 0), "bronze.orders", WriteMode.Append),
       cat.table("dim.customer").upsert(
         cust.filter($"c_custkey" % 10 === 0)
@@ -1431,7 +1432,7 @@ object LakeQueries {
     val cat = freshCatalog(spark)
     val t = Tables(spark, dir)
     // independent tables → concurrent commits (guide §2.6)
-    StreamQueries.inParallel(
+    inParallel(
       cat.write(t.orders.select($"o_orderkey", $"o_custkey", $"o_totalprice")
         .repartition(4), "silver.fact", WriteMode.Overwrite),
       cat.write(t.customer.select($"c_custkey", $"c_mktsegment"),
@@ -1443,7 +1444,7 @@ object LakeQueries {
 
     // the two fact commits stay ordered; the dim upsert is independent
     // of both and overlaps them (guide §2.6)
-    StreamQueries.inParallel(
+    inParallel(
       {
         cat.table("silver.fact").write(t.orders.where($"o_orderkey" % 100 === 0 && $"o_orderkey" =!= 0)
           .select((-$"o_orderkey").as("o_orderkey"), $"o_custkey",

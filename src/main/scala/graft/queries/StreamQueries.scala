@@ -12,31 +12,6 @@ import graft.streaming.EventsWindows
   */
 object StreamQueries {
 
-  /** Run two independent fixture tasks on concurrent action threads
-    * (one Spark session schedules both fine; commits touch disjoint
-    * table roots), settling BOTH before rethrowing — a failure in one
-    * must not leave the other committing unsupervised past the
-    * caller's exception.
-    */
-  private[queries] def inParallel(a: => Unit, b: => Unit): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fa = Future(a)
-    val fb = Future(b)
-    val ra = scala.util.Try(Await.result(fa, Duration.Inf))
-    val rb = scala.util.Try(Await.result(fb, Duration.Inf))
-    // when BOTH fail, the second failure must not vanish — attach it
-    // to the first as a suppressed exception before rethrowing
-    (ra, rb) match {
-      case (scala.util.Failure(ea), scala.util.Failure(eb)) if ea ne eb =>
-        ea.addSuppressed(eb)
-      case _ => ()
-    }
-    ra.get
-    rb.get
-  }
-
   /** Tumbling 1h event-time windows, batch plan. */
   def tumbling(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -233,7 +208,7 @@ object StreamQueries {
     val t = Tables(spark, dir)
     val ev = t.events.select($"event_id", $"user_id", $"value")
     prof("enrich fixtures (parallel)") {
-      inParallel(
+      LakeQueries.inParallel(
         cat.write(t.customer.select($"c_custkey", $"c_mktsegment"), "dim.customer",
           WriteMode.Overwrite, partitionBy = Seq("bucket(8, c_custkey)")),
         {
@@ -421,7 +396,7 @@ object StreamQueries {
     val cat = new LakeCatalog(spark, LakeQueries.scratchDir("graft-jvs-").toString)
     val t = Tables(spark, dir)
     prof("jvs fixture writes (parallel)") {
-      inParallel(
+      LakeQueries.inParallel(
         cat.write(t.customer.where($"c_custkey" % 3 =!= 0)
           .select($"c_custkey", $"c_nationkey", $"c_acctbal"),
           "silver.cust", WriteMode.Overwrite),
@@ -443,7 +418,7 @@ object StreamQueries {
     require(mode() == "full", s"first pass builds full, got ${mode()}")
     // both sides move: fact append + dim upsert fan-out
     prof("jvs append+upsert (parallel)") {
-      inParallel(
+      LakeQueries.inParallel(
         cat.table("silver.cust").write(t.customer.where($"c_custkey" % 3 === 0)
           .select($"c_custkey", $"c_nationkey", $"c_acctbal"), WriteMode.Append),
         cat.table("silver.nat").upsert(t.nation.where($"n_nationkey" < 10)

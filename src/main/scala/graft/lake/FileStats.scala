@@ -377,20 +377,12 @@ private[graft] object FileStats {
     (Some(om.writeValueAsString(rootNode)), fileRows)
   }
 
-  /** May `file` contain a row matching EVERY probe? Tests the parquet
-    * footer bloom filters (written because the table declares
-    * [[BloomColsKey]]): a file is droppable only when some probe
-    * column's blooms say every candidate value is definitely absent
-    * from every row group. Missing blooms, unhashable types, or read
-    * errors keep the file — pruning is always conservative. Driver
-    * cost is one footer + bloom-bytes read per CANDIDATE file (files
-    * min/max stats already skipped are never opened).
-    */
-  /** Batch bloom filtering over a dir's candidate files: one footer +
-    * bloom-bytes read per file, fanned out on the footer pool instead
-    * of stalling scan planning on serial round-trips. Returns the
-    * candidates (relative keys) whose blooms cannot rule them out,
-    * preserving input order.
+  /** Batch bloom filtering over a dir's candidate files: per file one
+    * footer read plus one right-sized bloom read per row group and
+    * probed column (see [[bloomMayContain]]), fanned out on the footer
+    * pool instead of stalling scan planning on serial round-trips.
+    * Returns the candidates (relative keys) whose blooms cannot rule
+    * them out, preserving input order.
     */
   def bloomSurviving(io: LakeIo, dir: org.apache.hadoop.fs.Path,
                      candidates: Seq[String],
@@ -399,6 +391,16 @@ private[graft] object FileStats {
       f -> bloomMayContain(io, new org.apache.hadoop.fs.Path(dir, f), probes)
     }.collect { case (f, true) => f }
 
+  /** May `file` contain a row matching EVERY probe? Tests the parquet
+    * footer bloom filters (written because the table declares
+    * [[BloomColsKey]]): a file is droppable only when some probe
+    * column's blooms say every candidate value is definitely absent
+    * from every row group. A missing column or bloom, an unhashable
+    * value or a read error keeps the file — pruning is always
+    * conservative. Each row group's bloom for a probed column is read
+    * once and tested against all of the probe's values, so an `IN` of
+    * many keys costs one bloom read per row group, not one per value.
+    */
   def bloomMayContain(io: LakeIo, file: org.apache.hadoop.fs.Path,
                       probes: Seq[(String, Seq[Any])]): Boolean = {
     import scala.jdk.CollectionConverters._
@@ -408,18 +410,12 @@ private[graft] object FileStats {
       try {
         val blocks = reader.getFooter.getBlocks.asScala.toSeq
         probes.forall { case (c, vs) =>
-          vs.exists { v =>
-            blocks.isEmpty || blocks.exists { b =>
-              b.getColumns.asScala.find(_.getPath.toDotString == c) match {
-                case None => true // column absent (older generation) → keep
-                case Some(cc) =>
-                  val bf = reader.getBloomFilterDataReader(b).readBloomFilter(cc)
-                  if (bf == null) true
-                  else bloomHash(bf, cc, v) match {
-                    case Some(h) => bf.findHash(h)
-                    case None    => true
-                  }
-              }
+          blocks.isEmpty || blocks.exists { b =>
+            b.getColumns.asScala.find(_.getPath.toDotString == c) match {
+              case None => true // column absent (older generation) → keep
+              case Some(cc) =>
+                val bf = reader.getBloomFilterDataReader(b).readBloomFilter(cc)
+                bf == null || vs.exists(v => bloomHash(bf, cc, v).forall(bf.findHash))
             }
           }
         }
@@ -430,7 +426,7 @@ private[graft] object FileStats {
   /** Probe value → parquet bloom hash, in the column's PHYSICAL
     * domain. None = unhashable (type mismatch, null) → no pruning.
     */
-  private def bloomHash(bf: org.apache.parquet.column.values.bloomfilter.BloomFilter,
+  private[lake] def bloomHash(bf: org.apache.parquet.column.values.bloomfilter.BloomFilter,
                         cc: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData,
                         v: Any): Option[Long] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._

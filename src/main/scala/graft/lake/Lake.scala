@@ -110,11 +110,9 @@ final case class Snapshot(
                             spec: String = Snapshot.joinSpec(partitionBy)): Snapshot =
     withEntries(entries ++ ds.map(DirEntry(_, dirSchemaJson, spec, seq)))
   private[lake] def plusMeta(m: Map[String, String]): Snapshot = copy(meta = meta ++ m)
-  /** The field-id high-water mark: the meta entry that keeps a dropped
-    * column's id from ever being reissued.
+  /** The field-id high-water mark ([[SchemaIds.LastIdKey]]): it keeps a
+    * dropped column's id from ever being reissued.
     */
-  private[lake] def idMark: Map[String, String] =
-    meta.get(SchemaIds.LastIdKey).map(SchemaIds.LastIdKey -> _).toMap
   private[lake] def idFloor: Long = meta.get(SchemaIds.LastIdKey).fold(0L)(_.toLong)
   /** A per-dir list uniform with its table-level value stored as Nil —
     * keeps pre-evolution manifests small.
@@ -164,7 +162,9 @@ object Snapshot {
     *  - per-dir byte sizes, row counts and hive-layout markers, which
     *    survive schema evolution (a rename changes none of them);
     *  - CHECK constraints, which are table properties: a schema
-    *    evolution must not silently disarm validation.
+    *    evolution must not silently disarm validation;
+    *  - the field-id high-water mark, which must outlive every commit
+    *    or a later append could reissue a dropped column's id.
     * With no base it is the empty snapshot.
     */
   private[lake] def carry(base: Option[Snapshot], partitionBy: Seq[String], schemaJson: String,
@@ -186,7 +186,7 @@ object Snapshot {
       val dirMeta = b.meta.filter { case (k, _) =>
         k.startsWith(FileStats.BytesKeyPrefix) || k.startsWith(FileStats.RowsKeyPrefix) ||
           k.startsWith(FileStats.FileRowsKeyPrefix) || k.startsWith(FileStats.HiveColsKeyPrefix) ||
-          k.startsWith(LakeChecks.KeyPrefix)
+          k.startsWith(LakeChecks.KeyPrefix) || k == SchemaIds.LastIdKey
       }
       b.withEntries(b.entries)
         .copy(partitionBy = partitionBy, schemaJson = schemaJson, meta = stats ++ dirMeta)
@@ -1153,10 +1153,20 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     // declared bloom columns ride parquet's native per-row-group bloom
     // filters — written inline with the files (no extra job), consulted
     // at plan time for equality-probe file skipping (readRaw) AND by
-    // Spark's own row-group filtering during the scan
-    val writer0 = withParts.write.mode("overwrite")
+    // Spark's own row-group filtering during the scan. Sized adaptively:
+    // without an NDV parquet gives every row group a 1 MiB bloom per
+    // column, so a 40-row file would carry a megabyte the planner reads
+    // back per probe. Adaptive sizing keeps candidates halving from
+    // 1 MiB down to 2 KiB (10 of them) and writes the smallest one that
+    // holds the row group's distinct values at the default 1% fpp. The
+    // adaptive switch is a global key (parquet ignores its `#col` form)
+    // and does nothing for columns without a bloom, so it is set once.
     val writer = bloomCols.filter(withParts.columns.contains)
-      .foldLeft(writer0)((w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true"))
+      .foldLeft(withParts.write.mode("overwrite")
+          .option("parquet.bloom.filter.adaptive.enabled", "true")) { (w, c) =>
+        w.option(s"parquet.bloom.filter.enabled#$c", "true")
+          .option(s"parquet.bloom.filter.candidates.number#$c", "10")
+      }
     (if (fields.nonEmpty) writer.partitionBy(fields.map(_.name): _*) else writer)
       .parquet(location(dirName))
   }
@@ -1750,7 +1760,7 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     val snap = commit("upsert", checks, { (b, next) =>
       val s = Snapshot.carry(b, base.partitionBy, base.schemaJson)
         .addDirs(Seq(dirName), base.schemaJson, next)
-        .plusMeta(meta ++ statsMeta ++ base.idMark)
+        .plusMeta(meta ++ statsMeta)
       // the delete's sequence is the version the commit lands at
       s.copy(eqDeletes = s.eqDeletes :+ EqDelete.encode(EqDelete(next, keys, delDir)))
     })
@@ -1803,7 +1813,7 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     commit(op, CommitChecks(base = Some(base.version)), { (b, next) =>
       val s = Snapshot.carry(b, base.partitionBy, base.schemaJson)
         .addDirs(newDirs, base.schemaJson, next)
-        .plusMeta(meta ++ statsMeta ++ base.idMark)
+        .plusMeta(meta ++ statsMeta)
       s.copy(deleteDirs = s.deleteDirs :+ delDir)
     })
   }
@@ -1891,7 +1901,7 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     require(fields.map(_.name).distinct.size == fields.size,
       s"duplicate partition field names in $newSpec")
     commit("set-spec", CommitChecks(base = Some(snap.version)), (b, _) =>
-      Snapshot.carry(b, newSpec, snap.schemaJson).plusMeta(snap.idMark))
+      Snapshot.carry(b, newSpec, snap.schemaJson))
   }
 
   /** Rename a column, keeping its field id: existing files resolve to
@@ -2001,10 +2011,12 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     val snap = latest.getOrElse(throw new IllegalStateException(s"empty table at $root"))
     // compaction rewrites data, never declarations: the table's
     // clustering and bloom properties must survive it or the NEXT
-    // append silently de-clusters/disarms the table
+    // append silently de-clusters/disarms the table; so must the
+    // field-id high-water mark, or a dropped column's id is reissued
     val propMeta = snap.meta.filter { case (k, _) =>
       k == FileStats.SortOrderKey || k == FileStats.BloomColsKey ||
-        k == FileStats.AutoCompactKey || k.startsWith(LakeChecks.KeyPrefix) ||
+        k == FileStats.AutoCompactKey || k == SchemaIds.LastIdKey ||
+        k.startsWith(LakeChecks.KeyPrefix) ||
         k.startsWith(LakeTable.CarryMetaPrefix)
     }
     val base = read(Some(snap.version))
@@ -2029,10 +2041,8 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     val statsMeta = writeMetaFor(dirName,
       if (statsCols.nonEmpty) statsCols else inheritedStatsCols(Some(snap)),
       snap.schema.fieldNames.toSeq)
-    // the field-id high-water mark survives compaction (commit meta is
-    // per-snapshot, and losing it would allow dropped-id reuse)
     commit("compact", CommitChecks(base = Some(snap.version)), (_, next) =>
-      Snapshot.empty(snap.partitionBy, snap.schemaJson, statsMeta ++ snap.idMark ++ propMeta)
+      Snapshot.empty(snap.partitionBy, snap.schemaJson, statsMeta ++ propMeta)
         .addDirs(Seq(dirName), snap.schemaJson, next))
   }
 
@@ -2118,14 +2128,14 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
       Snapshot.PerDirMetaPrefixes.exists(p => k.startsWith(p) && keptDirs(k.stripPrefix(p))) ||
         k == FileStats.StatsColsKey || k == FileStats.SortOrderKey ||
         k == FileStats.BloomColsKey || k == FileStats.AutoCompactKey ||
-        k.startsWith(LakeChecks.KeyPrefix) ||
+        k == SchemaIds.LastIdKey || k.startsWith(LakeChecks.KeyPrefix) ||
         k.startsWith(LakeTable.CarryMetaPrefix)
     }
     val statsMeta = writeMetaFor(dirName, inheritedStatsCols(Some(base)),
       base.schema.fieldNames.toSeq)
     commit("compact", CommitChecks(base = Some(base.version)), (_, next) =>
       keep.addDirs(Seq(dirName), base.schemaJson, next)
-        .copy(meta = keptMeta ++ statsMeta ++ base.idMark))
+        .copy(meta = keptMeta ++ statsMeta))
   }
 
   /** Fold all positional delete dirs into one (Iceberg's
@@ -2498,19 +2508,20 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     }
     // overwrite drops carried meta with the dirs it replaces; re-declare
     // the table-property keys so file skipping and the sort contract
-    // survive a staged rewrite (same inheritance write() applies)
+    // survive a staged rewrite (same inheritance write() applies), and
+    // keep the field-id high-water mark
     val propMeta =
       if (carry) Map.empty[String, String]
       else base.meta.filter { case (k, _) =>
         k == FileStats.StatsColsKey || k == FileStats.BloomColsKey ||
-          k == FileStats.SortOrderKey
+          k == FileStats.SortOrderKey || k == SchemaIds.LastIdKey
       }
     val checks = CommitChecks(expectedBase, schema = Some(Some(base.schemaJson)),
       spec = if (carry) Some(base.partitionBy) else None)
     val snap = commit(op, checks, (b, next) =>
       Snapshot.carry(if (carry) b else None, base.partitionBy, base.schemaJson)
         .addDirs(dirs, base.schemaJson, next)
-        .plusMeta(meta ++ statsMeta ++ bytesMeta ++ base.idMark ++ propMeta))
+        .plusMeta(meta ++ statsMeta ++ bytesMeta ++ propMeta))
     io.delete(stagedPath(id))
     snap
   }

@@ -82,10 +82,10 @@ object PartitionField {
   final case class Days(source: String) extends PartitionField {
     val name = s"_p_${source}_day"
     def derive(df: org.apache.spark.sql.DataFrame): Column =
-      PartitionField.utcDay(col(source))
+      PartitionField.utcDay(col(source), df.schema(source).dataType)
     def project(p: LakePredicate,
                 sourceType: org.apache.spark.sql.types.DataType): Option[Column] = {
-      def l(v: Any) = PartitionField.utcDay(lit(v).cast(sourceType))
+      def l(v: Any) = PartitionField.utcDay(lit(v).cast(sourceType), sourceType)
       p match {
         case EqualTo(_, v) => Some(col(name) === l(v))
         case In(_, vs) if vs.nonEmpty =>
@@ -103,10 +103,10 @@ object PartitionField {
   final case class Months(source: String) extends PartitionField {
     val name = s"_p_${source}_month"
     def derive(df: org.apache.spark.sql.DataFrame): Column =
-      trunc(PartitionField.utcDay(col(source)), "month")
+      trunc(PartitionField.utcDay(col(source), df.schema(source).dataType), "month")
     def project(p: LakePredicate,
                 sourceType: org.apache.spark.sql.types.DataType): Option[Column] = {
-      def l(v: Any) = trunc(PartitionField.utcDay(lit(v).cast(sourceType)), "month")
+      def l(v: Any) = trunc(PartitionField.utcDay(lit(v).cast(sourceType), sourceType), "month")
       p match {
         case EqualTo(_, v) => Some(col(name) === l(v))
         case In(_, vs) if vs.nonEmpty =>
@@ -173,21 +173,24 @@ object PartitionField {
     * this reason: a reader session in another zone must project
     * predicates onto the same partition values the writer derived).
     * Integral floor-division via pmod — `floor(x / 86400e6)` would
-    * round epoch micros through doubles.
+    * round epoch micros through doubles. A DATE (`dataType` of the
+    * source column) already is its day and passes through.
     */
   private val DayMicros = 86400000000L
-  private[lake] def utcDay(c: Column): Column = {
-    // IntegralDivide, not Catalyst `/` (double division): |epoch µs|
-    // beyond 2^53 (≈ years <1685 / >2255) would round through the
-    // double and shift the derived day — same bridge construction as
-    // Tables.tsFromNanos
-    import org.apache.spark.sql.GraftColumnBridge
-    import org.apache.spark.sql.catalyst.expressions.{IntegralDivide, Literal}
-    val us = unix_micros(c)
-    val floored = us - pmod(us, lit(DayMicros))
-    date_from_unix_date(GraftColumnBridge.column(
-      IntegralDivide(GraftColumnBridge.expression(floored), Literal(DayMicros))).cast("int"))
-  }
+  private[lake] def utcDay(c: Column, dataType: org.apache.spark.sql.types.DataType): Column =
+    if (dataType == org.apache.spark.sql.types.DateType) c
+    else {
+      // IntegralDivide, not Catalyst `/` (double division): |epoch µs|
+      // beyond 2^53 (≈ years <1685 / >2255) would round through the
+      // double and shift the derived day — same bridge construction as
+      // Tables.tsFromNanos
+      import org.apache.spark.sql.GraftColumnBridge
+      import org.apache.spark.sql.catalyst.expressions.{IntegralDivide, Literal}
+      val us = unix_micros(c)
+      val floored = us - pmod(us, lit(DayMicros))
+      date_from_unix_date(GraftColumnBridge.column(
+        IntegralDivide(GraftColumnBridge.expression(floored), Literal(DayMicros))).cast("int"))
+    }
 
   private val DaysRe = """days\(\s*([A-Za-z0-9_]+)\s*\)""".r
   private val MonthsRe = """months\(\s*([A-Za-z0-9_]+)\s*\)""".r

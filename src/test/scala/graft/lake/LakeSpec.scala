@@ -502,6 +502,30 @@ class LakeSpec extends AnyFunSuite {
     assert(jan.select($"id").as[Long].collect().sorted === Array(1L, 2L))
   }
 
+  test("days and months partition a DATE column: pruned scans match a plain filter") {
+    import LakePredicate._
+    val day0 = java.time.LocalDate.of(2024, 1, 1)
+    def date(i: Int) = java.sql.Date.valueOf(day0.plusDays(i))
+    val df = (0 until 150).map(i => (i.toLong, date(i % 75))).toDF("id", "d")
+    val cat = freshCat()
+    for ((spec, name) <- Seq("days(d)" -> "dd", "months(d)" -> "dm")) {
+      cat.write(df, s"ns.$name", WriteMode.Overwrite, partitionBy = Seq(spec))
+      val t = cat.table(s"ns.$name")
+      val all = scannedFiles(t.read(None))
+      val cases = Seq(
+        Seq(GtEq("d", date(31)), LtEq("d", date(59))) -> ($"d" >= date(31) && $"d" <= date(59)),
+        Seq(EqualTo("d", date(40))) -> ($"d" === date(40)),
+        Seq(In("d", Seq(date(3), date(70)))) -> $"d".isin(date(3), date(70)))
+      cases.foreach { case (preds, raw) =>
+        val got = t.scan(preds)
+        val want = t.read(None).where(raw).select($"id").as[Long].collect().sorted
+        assert(want.nonEmpty)
+        assert(got.select($"id").as[Long].collect().sorted === want, s"$spec $preds")
+        assert(scannedFiles(got) < all, s"$spec $preds must prune partition dirs")
+      }
+    }
+  }
+
   test("partitioned write recovers partition column and values") {
     val cat = freshCat()
     cat.write(sample(), "ns.p", WriteMode.Overwrite, partitionBy = Seq("name"))

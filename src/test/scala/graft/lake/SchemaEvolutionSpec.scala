@@ -123,6 +123,40 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     assert(rows(1).getDouble(2) === 7.0)
   }
 
+  test("metadata-only commits carry the field-id high-water mark past a drop") {
+    val cat = new LakeCatalog(spark, Files.createTempDirectory("evo10-").toString)
+    cat.write(Seq((1L, "a", 1.5), (5L, "e", 5.5), (6L, "f", 6.5)).toDF("id", "s", "x"),
+      "ns.idm", WriteMode.Overwrite)
+    val t = cat.table("ns.idm")
+    t.dropColumn("x") // x held the max field id
+    val mark = t.latest.get.meta(SchemaIds.LastIdKey)
+    // two delete files of each kind, so both rewrites commit
+    LakeDml.delete(t, $"id" === 5L, DmlStrategy.MergeOnRead)
+    LakeDml.delete(t, $"id" === 6L, DmlStrategy.MergeOnRead)
+    t.upsert(Seq((102L, "u")).toDF("id", "s"), Seq("id"))
+    t.upsert(Seq((103L, "v")).toDF("id", "s"), Seq("id"))
+    Seq[(String, () => Snapshot)](
+      "rewrite-deletes" -> (() => t.rewritePositionDeletes()),
+      "rewrite-deletes" -> (() => t.rewriteEqualityDeletes()),
+      "set-autocompact" -> (() => t.setAutoCompact(1000)),
+      "set-autocompact" -> (() => t.setAutoCompact(0)),
+      "drop-check" -> { () => t.addCheckConstraint("c", "id >= 0"); t.dropCheckConstraint("c") },
+      "add-check" -> (() => t.addCheckConstraint("s_set", "s IS NOT NULL"))
+    ).foreach { case (op, run) => // each metadata-only commit keeps the mark
+      val s = run()
+      assert(s.op === op)
+      assert(s.meta.get(SchemaIds.LastIdKey) === Some(mark), s"$op dropped the id mark")
+    }
+    // drop, then add-check, then an append with a new column: the new
+    // column must not reuse x's id and read x's old bytes
+    cat.write(Seq((2L, "b", 7.0)).toDF("id", "s", "y"), "ns.idm", WriteMode.Append)
+    val rows = t.read(None).orderBy($"id").collect()
+    assert(t.read(None).columns.toSeq === Seq("id", "s", "y"))
+    assert(rows(0).getLong(0) === 1L && rows(0).isNullAt(2),
+      "old row must NOT resurrect dropped x under y")
+    assert(rows(1).getLong(0) === 2L && rows(1).getDouble(2) === 7.0)
+  }
+
   test("append type conflicts: widen silently-compatible, reject lossy") {
     val cat = new LakeCatalog(spark, Files.createTempDirectory("evo10-").toString)
     cat.write(Seq((1, "a")).toDF("n", "s"), "ns.tc", WriteMode.Overwrite) // n: int

@@ -79,67 +79,43 @@ object DeltaFormat {
     case other => other.toString
   }
 
-  /** Typed comparison key for partition-value / stats pruning: numbers
-    * in the numeric domain, everything else string. Unparseable values
-    * → None → the file is kept (pruning stays conservative).
+  /** A partition value or stats bound in the protocol's string form →
+    * key of its column's type (numbers, DATE → epoch day, TIMESTAMP →
+    * micros, BOOLEAN, STRING); unparseable → None (unknown). `upper`
+    * marks a stats max: writers truncate TIMESTAMP stats to
+    * milliseconds, so a max is widened to the end of its millisecond.
     */
-  def cmpKey(dt: DataType, s: String): Option[Either[BigDecimal, String]] =
+  def key(dt: DataType, s: String, upper: Boolean = false): Option[FileStats.Key] =
     if (s == null) None
-    else dt match {
+    else try dt match {
       case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
-           _: DecimalType =>
-        try Some(Left(BigDecimal(s))) catch { case _: NumberFormatException => None }
-      case DateType =>
-        try Some(Left(BigDecimal(java.time.LocalDate.parse(s).toEpochDay)))
-        catch { case _: Exception => None }
-      case BooleanType => Some(Left(if (s == "true") BigDecimal(1) else BigDecimal(0)))
-      case _ => Some(Right(s))
-    }
+           _: DecimalType => Some(Left(BigDecimal(s)))
+      case DateType => Some(Left(BigDecimal(java.time.LocalDate.parse(s).toEpochDay)))
+      case TimestampType | TimestampNTZType =>
+        val us = timestampMicros(s, dt == TimestampNTZType)
+        Some(Left(BigDecimal(if (upper) us + 999L else us)))
+      case BooleanType if s == "true" || s == "false" =>
+        Some(Left(BigDecimal(if (s == "true") 1 else 0)))
+      case StringType => Some(Right(s))
+      case _ => None
+    } catch { case _: NumberFormatException | _: java.time.DateTimeException => None }
 
-  def probeKey(dt: DataType, v: Any): Option[Either[BigDecimal, String]] = v match {
-    case null => None
-    case n: java.lang.Number => Some(Left(BigDecimal(n.toString)))
-    case d: java.sql.Date => Some(Left(BigDecimal(d.toLocalDate.toEpochDay)))
-    case t: java.sql.Timestamp =>
-      cmpKey(dt, serializePartitionValue(t))
-    case b: java.lang.Boolean => Some(Left(if (b) BigDecimal(1) else BigDecimal(0)))
-    case s: String => cmpKey(dt, s)
-    case other => cmpKey(dt, other.toString)
-  }
-
-  private def leq(a: Either[BigDecimal, String], b: Either[BigDecimal, String]): Option[Boolean] =
-    (a, b) match {
-      case (Left(x), Left(y))   => Some(x <= y)
-      case (Right(x), Right(y)) => Some(x <= y)
-      case _                    => None
-    }
-
-  /** May a value range [lo, hi] (either bound possibly unknown) satisfy
-    * the predicate? Unknown → keep.
+  /** Micros of a timestamp in either string form the log carries: ISO
+    * stats (`2024-01-01T05:00:00.000Z`, an offset, or none for
+    * TIMESTAMP_NTZ) and partition values (`2024-01-01 07:00:00[.ffffff]`,
+    * written in JVM-default time by [[serializePartitionValue]]). A
+    * zoneless value is UTC wall time for TIMESTAMP_NTZ.
     */
-  def rangeKeeps(p: LakePredicate, dt: DataType,
-                 lo: Option[Either[BigDecimal, String]],
-                 hi: Option[Either[BigDecimal, String]]): Boolean = {
-    def pk(v: Any) = probeKey(dt, v)
-    p match {
-      case LakePredicate.EqualTo(_, v) => pk(v) match {
-        case None => true
-        case Some(k) =>
-          lo.flatMap(l => leq(l, k)).getOrElse(true) &&
-          hi.flatMap(h => leq(k, h)).getOrElse(true)
+  private def timestampMicros(s: String, ntz: Boolean): Long = {
+    val iso = s.trim.replace(' ', 'T')
+    val instant =
+      try java.time.OffsetDateTime.parse(iso).toInstant
+      catch { case _: java.time.format.DateTimeParseException =>
+        val local = java.time.LocalDateTime.parse(iso)
+        if (ntz) local.toInstant(java.time.ZoneOffset.UTC)
+        else local.atZone(java.time.ZoneId.systemDefault()).toInstant
       }
-      case LakePredicate.In(_, vs) =>
-        vs.exists(v => rangeKeeps(LakePredicate.EqualTo(p.col, v), dt, lo, hi))
-      case LakePredicate.GtEq(_, v) => (pk(v), hi) match {
-        case (Some(k), Some(h)) => leq(k, h).getOrElse(true)
-        case _ => true
-      }
-      case LakePredicate.LtEq(_, v) => (pk(v), lo) match {
-        case (Some(k), Some(l)) => leq(l, k).getOrElse(true)
-        case _ => true
-      }
-      case _ => true
-    }
+    FileStats.micros(instant)
   }
 }
 
@@ -380,19 +356,13 @@ final class DeltaTableReader(spark: SparkSession, location: String) {
       tableSchema.fields.map(f => f.name -> physicalName(f)).toMap
     val logOfTop: Map[String, String] = physOfTop.map(_.swap)
 
-    def partitionKeeps(f: DeltaAddFile): Boolean = filters.forall { p =>
-      f.partitionValues.find(kv => logOfTop.getOrElse(kv._1, kv._1) == p.col) match {
+    val tests = filters.map(p => FileStats.KeyPred(p, typeOf.getOrElse(p.col, NullType)))
+
+    def partitionKeeps(f: DeltaAddFile): Boolean = tests.forall { t =>
+      f.partitionValues.find(kv => logOfTop.getOrElse(kv._1, kv._1) == t.col) match {
         case None => true
-        case Some((_, null)) => p match {
-          // a null partition value satisfies no comparison
-          case _: LakePredicate.EqualTo | _: LakePredicate.In |
-               _: LakePredicate.GtEq | _: LakePredicate.LtEq => false
-          case _ => true
-        }
-        case Some((c, v)) =>
-          val lt = typeOf(logOfTop.getOrElse(c, c))
-          val k = cmpKey(lt, v)
-          rangeKeeps(p, lt, k, k)
+        case Some((_, null)) => false // a null partition value satisfies no comparison
+        case Some((_, v)) => t.mayMatch(FileStats.ColRange.point(key(typeOf(t.col), v)))
       }
     }
 
@@ -400,22 +370,14 @@ final class DeltaTableReader(spark: SparkSession, location: String) {
       case None => true
       case Some(js) =>
         val stats = try om.readTree(js) catch { case _: Exception => return true }
-        filters.forall { p =>
-          if (partCols.contains(p.col)) true
-          else {
-            def bound(node: String): Option[Either[BigDecimal, String]] =
-              Option(stats.get(node)).filter(!_.isNull)
-                .flatMap(n => Option(n.get(physOfTop.getOrElse(p.col, p.col)))
-                  .orElse(Option(n.get(p.col)))).filter(!_.isNull)
-                .flatMap { v =>
-                  if (v.isNumber) Some(Left(BigDecimal(v.decimalValue())))
-                  else cmpKey(typeOf.getOrElse(p.col, StringType), v.asText)
-                }
-            (bound("minValues"), bound("maxValues")) match {
-              case (None, None) => true
-              case (lo, hi) => rangeKeeps(p, typeOf.getOrElse(p.col, StringType), lo, hi)
-            }
-          }
+        tests.forall { t =>
+          def bound(node: String): Option[FileStats.Key] =
+            Option(stats.get(node)).filter(!_.isNull)
+              .flatMap(n => Option(n.get(physOfTop.getOrElse(t.col, t.col)))
+                .orElse(Option(n.get(t.col)))).filter(!_.isNull)
+              .flatMap(v => key(typeOf.getOrElse(t.col, NullType), v.asText, node == "maxValues"))
+          partCols.contains(t.col) ||
+            t.mayMatch(FileStats.ColRange(bound("minValues"), bound("maxValues"), -1L))
         }
     }
 
@@ -786,8 +748,6 @@ final class DeltaExport(spark: SparkSession, location: String) {
     val dir = new HPath(new HPath(root, "data"), dirName)
     if (partitionBy.isEmpty) df.write.mode("overwrite").parquet(dir.toString)
     else df.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(dir.toString)
-    val rows = FileStats.dirFileRows(io, dir).getOrElse(
-      throw new IllegalStateException(s"unreadable footers under $dir")).toMap
     val statCols = df.schema.fields.toIndexedSeq
       .filterNot(f => partitionBy.contains(f.name))
       .filter(f => f.dataType match {
@@ -795,25 +755,15 @@ final class DeltaExport(spark: SparkSession, location: String) {
              StringType | DateType | _: DecimalType => true
         case _ => false
       })
-    val blob = FileStats.collectFromFooters(io, dir, statCols.map(_.name))
-    val perFileRanges: Map[String, Seq[(Option[String], Option[String], Long)]] =
-      blob.map { js =>
-        val n = om.readTree(js)
-        val files = n.get("files")
-        files.properties().asScala.map { e =>
-          val arr = e.getValue
-          val ranges = (0 until arr.size()).map { i =>
-            val pair = arr.get(i)
-            def s(j: Int): Option[String] =
-              Option(pair.get(j)).filterNot(_.isNull).map(_.asText)
-            (s(0), s(1), pair.get(2).asLong)
-          }
-          e.getKey -> ranges.toSeq
-        }.toMap
-      }.getOrElse(Map.empty)
+    val files = FileStats.listParquet(io, dir)
+    val facts = FileStats.footerMeta(io, dir, statCols.map(_.name), files)
+    val rows = FileStats.rowsOf(facts).getOrElse(
+      throw new IllegalStateException(s"unreadable footers under $dir")).toMap
+    val perFileRanges: Map[String, Seq[FileStats.ColRange]] =
+      FileStats.statsOf(statCols.map(_.name), facts).map(_.files.toMap).getOrElse(Map.empty)
 
-    // blob encodes "n:<decimal>"/"s:<string>"; re-type through the
-    // column's declared type for protocol-correct JSON stats
+    // keys re-type through the column's declared type for
+    // protocol-correct JSON stats
     def statsJsonFor(key: String, numRecords: Long): String = {
       val node = om.createObjectNode()
       node.put("numRecords", numRecords)
@@ -821,57 +771,40 @@ final class DeltaExport(spark: SparkSession, location: String) {
       val maxN = node.putObject("maxValues")
       val nullN = node.putObject("nullCount")
       perFileRanges.get(key).foreach { ranges =>
-        statCols.zip(ranges).foreach { case (f, (lo, hi, nulls)) =>
-          def putVal(target: ObjectNode, enc: String): Unit = {
-            if (enc.startsWith("n:")) {
-              val bd = BigDecimal(enc.substring(2))
-              f.dataType match {
-                case ByteType | ShortType | IntegerType | LongType =>
-                  target.put(f.name, bd.toLong)
-                case DateType =>
-                  target.put(f.name,
-                    java.time.LocalDate.ofEpochDay(bd.toLong).toString)
-                case _ => target.put(f.name, bd.bigDecimal)
-              }
-            } else target.put(f.name, enc.substring(2))
+        statCols.zip(ranges).foreach { case (f, r) =>
+          def putVal(target: ObjectNode, k: FileStats.Key): Unit = k match {
+            case Left(bd) => f.dataType match {
+              case ByteType | ShortType | IntegerType | LongType =>
+                target.put(f.name, bd.toLong)
+              case DateType =>
+                target.put(f.name, java.time.LocalDate.ofEpochDay(bd.toLong).toString)
+              case _ => target.put(f.name, bd.bigDecimal)
+            }
+            case Right(str) => target.put(f.name, str)
           }
-          lo.foreach(putVal(minN, _))
-          hi.foreach(putVal(maxN, _))
-          if (nulls >= 0) nullN.put(f.name, nulls)
+          r.lo.foreach(putVal(minN, _))
+          r.hi.foreach(putVal(maxN, _))
+          if (r.nulls >= 0) nullN.put(f.name, r.nulls)
         }
       }
       om.writeValueAsString(node)
     }
 
-    val srcType: Map[String, DataType] =
-      df.schema.fields.map(f => f.name -> f.dataType).toMap
-    def unescapeSeg(raw: String): String = decodePath(raw)
-    val out = Seq.newBuilder[(String, Long, Seq[(String, String)], String)]
-    val it = io.fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) {
-        val key = FileStats.relativeKey(st.getPath.toString, dirName)
-        val segs = key.split('/').dropRight(1).map { seg =>
-          val i = seg.indexOf('=')
-          seg.substring(0, i) -> unescapeSeg(seg.substring(i + 1))
-        }.toMap
-        val pv: Seq[(String, String)] = partitionBy.map { c =>
-          val raw = segs.getOrElse(c,
-            throw new IllegalStateException(s"no partition segment for $c in $key"))
-          val v: String =
-            if (raw == "__HIVE_DEFAULT_PARTITION__") null
-            else srcType(c) match {
-              case DateType | TimestampType => raw // hive layout already serializes both
-              case _ => raw
-            }
-          c -> v
-        }
-        val rel = s"data/$dirName/$key"
-        out += ((rel, st.getLen, pv, statsJsonFor(key, rows(key))))
+    files.map { st =>
+      val key = FileStats.relativeKey(st.getPath.toString, dirName)
+      val segs = key.split('/').dropRight(1).map { seg =>
+        val i = seg.indexOf('=')
+        seg.substring(0, i) -> decodePath(seg.substring(i + 1))
+      }.toMap
+      // the hive layout already serializes dates and timestamps in the
+      // protocol's form
+      val pv: Seq[(String, String)] = partitionBy.map { c =>
+        val raw = segs.getOrElse(c,
+          throw new IllegalStateException(s"no partition segment for $c in $key"))
+        c -> (if (raw == "__HIVE_DEFAULT_PARTITION__") null else raw)
       }
+      (s"data/$dirName/$key", st.getLen, pv, statsJsonFor(key, rows(key)))
     }
-    out.result()
   }
 
   private def addLine(rel: String, size: Long, pv: Seq[(String, String)],
@@ -953,8 +886,13 @@ final class DeltaExport(spark: SparkSession, location: String) {
   }
 
   /** Metadata-only partition delete: tombstone every live file whose
-    * partition values satisfy ALL predicates (which must target
-    * partition columns — rows inside files are never rewritten).
+    * partition values provably satisfy ALL predicates (which must
+    * target partition columns — rows inside files are never
+    * rewritten). A file some predicate provably fails is kept (a null
+    * partition value satisfies none); a file no predicate disproves
+    * but some predicate cannot decide (a probe of another type than
+    * its column, a null probe, an unparseable value) fails the call
+    * before any commit is written — deleting data is never a guess.
     */
   def deleteWhere(filters: Seq[LakePredicate]): Long = {
     val st = state()
@@ -964,15 +902,22 @@ final class DeltaExport(spark: SparkSession, location: String) {
       s"deleteWhere predicate on non-partition column '${p.col}' would need a data rewrite"))
     val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
     val typeOf = schema.fields.map(f => f.name -> f.dataType).toMap
+    val tests = filters.map(p => FileStats.KeyPred(p, typeOf(p.col)))
     val doomed = st.adds.filter { a =>
-      filters.forall { p =>
-        a.partitionValues.find(_._1 == p.col) match {
-          case Some((_, null)) => false
-          case Some((c, v)) =>
-            val k = DeltaFormat.cmpKey(typeOf(c), v)
-            DeltaFormat.rangeKeeps(p, typeOf(c), k, k)
-          case None => false
+      // per predicate: Some(true) provably holds, Some(false) provably fails
+      val verdicts = tests.map { t =>
+        a.partitionValues.find(_._1 == t.col) match {
+          case Some((_, v)) if v != null =>
+            val r = FileStats.ColRange.point(key(typeOf(t.col), v))
+            if (t.allMatch(r)) Some(true) else if (!t.mayMatch(r)) Some(false) else None
+          case _ => Some(false)
         }
+      }
+      val undecided = tests.zip(verdicts).collectFirst { case (t, None) => t.col }
+      !verdicts.contains(Some(false)) && {
+        require(undecided.isEmpty, s"deleteWhere cannot decide its predicate on column " +
+          s"'${undecided.get}' for ${a.path}; refusing to guess which data to delete")
+        true
       }
     }
     val v = st.version + 1

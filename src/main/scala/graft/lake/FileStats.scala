@@ -1,28 +1,45 @@
 package graft.lake
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 
-/** Per-file column statistics carried in the snapshot manifest — the
-  * role Iceberg's manifest min/max stats play: planning skips files
-  * whose [min, max] cannot satisfy a predicate WITHOUT listing row
-  * groups or reading parquet footers. At 100 TB the difference is
-  * "open every footer of every live file" vs "drop most files from
-  * the scan while still on the driver".
+import scala.jdk.CollectionConverters._
+
+/** Per-file column statistics and the one pruning decision every table
+  * format makes with them — the role Iceberg's manifest min/max and
+  * Delta's `add.stats` play: planning skips files whose ranges cannot
+  * satisfy a predicate without opening them.
   *
-  * Stats are gathered where they are cheap and tight: compaction
-  * ([[LakeTable.compact]] / [[LakeTable.compactZOrder]]) collects
-  * min/max of the sort / z-order columns over the files it just wrote
-  * (one columnar aggregate over the new dir), which is exactly when
-  * file ranges become disjoint and skipping starts paying.
-  * [[LakeTable.write]] accepts `statsBy` for direct writes.
+  * One model:
+  *   - **One footer pass.** [[footerMeta]] is the only code that opens
+  *     parquet footers for ranges and row counts. Commit-time stats and
+  *     per-file row counts, the Delta exporter's `add.stats`, the
+  *     changelog's delete-key bounds ([[dirColumnRanges]]) and footer
+  *     row counts ([[dirFileRows]]) are folds over its per-file result.
+  *     Bloom probes ([[bloomMayContain]]) are a different read.
+  *   - **One stats value.** [[DirStats]] holds a commit dir's stats
+  *     columns and, per file, one [[ColRange]] per column: bounds in an
+  *     ordered key domain (numbers, DATE as epoch day, TIMESTAMP as
+  *     micros and BOOLEAN as 0/1 in the numeric kind; strings in the
+  *     string kind) and the exact null count. Its `encode` is the
+  *     manifest blob; its `decode` reads only the columns a caller
+  *     probes. [[dirStats]] holds the legacy single-blob rule.
+  *   - **One comparator, two verdicts.** [[KeyPred]] is a conjunct with
+  *     its probe typed by the column's type (a probe of another kind is
+  *     unknown). `mayMatch` prunes: unknown keeps the file. `allMatch`
+  *     proves metadata deletes: unknown declines. Strings compare in
+  *     UTF-8 byte order, the order parquet and Delta write min/max in.
+  *     Native scans, Delta partition values and stats, and Iceberg
+  *     partition values all prune through it.
   *
-  * Values are encoded in an ordered string domain per column type
-  * (numbers/timestamps/dates as decimal strings, strings raw), so the
-  * driver compares probe values without re-deriving Spark types.
-  * Pruning is conservative: a file with missing/null stats, or a
-  * probe whose domain mismatches, is always kept.
+  * Stats are gathered where they are cheap and tight: every write of a
+  * table with stats columns ([[LakeTable.write]]'s `statsBy`, sorted
+  * and z-ordered compactions, inherited by appends) reads the new
+  * files' footers, falling back to one columnar aggregate
+  * ([[collect]]) for columns footers cannot bound.
   */
 private[graft] object FileStats {
   /** Legacy single-blob key: stats for a snapshot whose ONLY dir is
@@ -119,32 +136,37 @@ private[graft] object FileStats {
   val FileRowsKeyPrefix = "graft.filerows:"
   def fileRowsKey(dirName: String): String = FileRowsKeyPrefix + dirName
 
+  private val om = new ObjectMapper()
+
   def encodeFileRows(rows: Seq[(String, Long)]): String = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = om.createObjectNode()
     rows.foreach { case (k, n) => node.put(k, n) }
     om.writeValueAsString(node)
   }
 
-  def decodeFileRows(s: String): Seq[(String, Long)] = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = om.readTree(s)
-    val b = Seq.newBuilder[(String, Long)]
-    val it = node.fields()
-    while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asLong() }
-    b.result()
-  }
+  def decodeFileRows(s: String): Seq[(String, Long)] =
+    om.readTree(s).properties().asScala.toSeq.map(e => e.getKey -> e.getValue.asLong())
+
   def joinCols(cols: Seq[String]): String = cols.mkString(",")
   def splitCols(s: String): Seq[String] =
     s.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
 
-  /** Ordered comparison key: Left = numeric domain, Right = string.
+  /** A stats value in its ordered key domain: Left = numbers (also
+    * DATE as epoch day, TIMESTAMP as micros, BOOLEAN as 0/1), Right =
+    * strings. Keys of different kinds never compare.
+    */
+  type Key = Either[BigDecimal, String]
+
+  /** Key of a STORED value (footer bounds, aggregate results, Iceberg
+    * partition values), whose Java type says its domain.
     * NaN/Infinity have no BigDecimal form → None, which both encodes
     * as "no stat" and compares as "unknown" — a NaN max (Spark sorts
     * NaN largest) degrades that file to unprunable instead of crashing
-    * the write.
+    * the write. Raw binary, arrays and structs have no key either:
+    * `Array[Byte].toString` is JVM identity junk that would differ
+    * between write and probe time.
     */
-  private def toKey(v: Any): Option[Either[BigDecimal, String]] = v match {
+  private[lake] def toKey(v: Any): Option[Key] = v match {
     case null                  => None
     case d: java.lang.Double if d.isNaN || d.isInfinite => None
     case f: java.lang.Float  if f.isNaN || f.isInfinite => None
@@ -154,58 +176,253 @@ private[graft] object FileStats {
     case b: java.lang.Boolean  => Some(Left(if (b) BigDecimal(1) else BigDecimal(0)))
     case n: java.lang.Number   => Some(Left(BigDecimal(n.toString)))
     case s: String             => Some(Right(s))
-    // everything else (raw binary, arrays, structs) has no stats
-    // domain we can order consistently — Array[Byte].toString is JVM
-    // identity junk that DIFFERS between write-time encoding and
-    // probe-time comparison, so a Right(toString) here would let
-    // stats prune files that really match (a declared-stats binary
-    // merge key silently dropped its updates). None = never prune.
     case _                     => None
   }
 
-  private def encode(v: Any): String = toKey(v) match {
-    case Some(Left(n))  => "n:" + n.toString
-    case Some(Right(s)) => "s:" + s
-    case None           => null
+  /** Key of a PROBE value against a column of type `dt`. A probe of
+    * another kind has no key (unknown): a `Timestamp` against a DATE
+    * column would otherwise compare micros with epoch days, and a
+    * string against an INT column has no numeric order.
+    */
+  def probeKey(v: Any, dt: DataType): Option[Key] = (dt, v) match {
+    case (ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
+          _: DecimalType, n: java.lang.Number) => toKey(n)
+    case (DateType, d: java.sql.Date) => toKey(d)
+    case (DateType, d: java.time.LocalDate) => Some(Left(BigDecimal(d.toEpochDay)))
+    case (TimestampType | TimestampNTZType, t: java.sql.Timestamp) => toKey(t)
+    case (TimestampType, i: java.time.Instant) => Some(Left(BigDecimal(micros(i))))
+    case (TimestampNTZType, t: java.time.LocalDateTime) =>
+      Some(Left(BigDecimal(micros(t.toInstant(java.time.ZoneOffset.UTC)))))
+    case (BooleanType, b: java.lang.Boolean) => toKey(b)
+    case (StringType, s: String) => Some(Right(s))
+    case _ => None
   }
 
-  private def decode(s: String): Option[Either[BigDecimal, String]] =
-    if (s == null) None
-    else if (s.startsWith("n:")) Some(Left(BigDecimal(s.substring(2))))
-    else Some(Right(s.substring(2)))
+  private[lake] def micros(i: java.time.Instant): Long =
+    Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L), i.getNano / 1000L)
 
-  /** Spark computed the min/max in UTF-8 BINARY order; Java's String
-    * compareTo is UTF-16 code-unit order and the two disagree above
-    * the BMP (a supplementary-plane char is 4-byte UTF-8, sorting
-    * after every BMP char, but its UTF-16 surrogates start at 0xD800,
-    * sorting BEFORE U+E000..U+FFFF). Compare the same way the stats
-    * were made, or a file whose max is a supplementary-plane string
-    * gets wrongly pruned for high-BMP probes.
-    */
-  private def utf8Leq(x: String, y: String): Boolean = {
-    val a = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val b = y.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d < 0
-      i += 1
-    }
-    a.length <= b.length
+  private def encodeKey(k: Key): String = k match {
+    case Left(n)  => "n:" + n.toString
+    case Right(s) => "s:" + s
   }
 
-  private def leq(a: Either[BigDecimal, String], b: Either[BigDecimal, String]): Option[Boolean] =
-    (a, b) match {
-      case (Left(x), Left(y))   => Some(x <= y)
-      case (Right(x), Right(y)) => Some(utf8Leq(x, y))
-      case _                    => None // mixed domains: unknown → keep
+  private def decodeKey(s: String): Key =
+    if (s.startsWith("n:")) Left(BigDecimal(s.substring(2))) else Right(s.substring(2))
+
+  /** Key order: numbers by value, strings in UTF-8 byte order — the
+    * order parquet, Spark and Delta compute min/max in. Java's
+    * `compareTo` is UTF-16 code-unit order, which disagrees above the
+    * BMP (a supplementary-plane char sorts after every BMP char in
+    * UTF-8, but its surrogates sort before U+E000..U+FFFF); UTF-8 byte
+    * order is code-point order, so compare code points.
+    */
+  private def cmp(a: Key, b: Key): Int = (a, b) match {
+    case (Left(x), Left(y))   => x.compare(y)
+    case (Right(x), Right(y)) =>
+      var i = 0
+      while (i < x.length && i < y.length) {
+        val cx = x.codePointAt(i)
+        val cy = y.codePointAt(i)
+        if (cx != cy) return Integer.compare(cx, cy)
+        i += Character.charCount(cx)
+      }
+      Integer.compare(x.length - i, y.length - i)
+    case _ => throw new IllegalArgumentException(s"keys of different kinds: $a, $b")
+  }
+
+  private def sameKind(a: Key, b: Key): Boolean = a.isLeft == b.isLeft
+
+  /** One column's range in one file: bounds in the key domain (None =
+    * no usable bound) and the exact null count (-1 = unknown).
+    */
+  final case class ColRange(lo: Option[Key], hi: Option[Key], nulls: Long)
+  object ColRange {
+    /** A column holding the single non-null value `k` (a partition value). */
+    def point(k: Option[Key]): ColRange = ColRange(k, k, 0L)
+  }
+
+  /** One conjunct in its column's key domain — the comparator behind
+    * every format's pruning and every metadata delete. `op` is "in"
+    * (an equality is a one-key IN), "gt", "gteq", "lt" or "lteq". The
+    * keys are sorted once, so a file costs one binary search however
+    * many keys an IN holds: what lets the driver-exact key tier
+    * ([[DriverTiers.driverKeyCap]], tens of thousands of values) keep
+    * file skipping instead of degrading to a full-scan row filter. A
+    * probe without a key, or keys of mixed kinds, make the conjunct
+    * unknown.
+    */
+  private[graft] final class KeyPred(val col: String, val op: String, probe: Seq[Option[Key]]) {
+    private val unknown = probe.exists(_.isEmpty) ||
+      probe.flatten.exists(k => !sameKind(k, probe.head.get))
+    private val keys: Array[Key] =
+      if (unknown) Array.empty else probe.flatten.sortWith(cmp(_, _) < 0).toArray
+
+    /** A bound the keys can be compared with (absent bounds are unbounded). */
+    private def comparable(b: Option[Key]): Boolean =
+      b.forall(k => keys.isEmpty || sameKind(k, keys(0)))
+
+    /** Index of the first key >= `k`. */
+    private def ceil(k: Key): Int = {
+      var lo = 0; var hi = keys.length
+      while (lo < hi) {
+        val m = (lo + hi) >>> 1
+        if (cmp(keys(m), k) < 0) lo = m + 1 else hi = m
+      }
+      lo
     }
 
-  /** One distributed aggregate over the just-written dir → JSON stats
-    * blob for the manifest meta. Row count = file count of ONE commit
-    * dir (index state bounded by `targetPartitions`, not data size).
+    /** May a file with range `r` hold a matching row? Unknown keeps it. */
+    def mayMatch(r: ColRange): Boolean =
+      unknown || !comparable(r.lo) || !comparable(r.hi) || (op match {
+        case "in" =>
+          val i = r.lo.fold(0)(ceil)
+          i < keys.length && r.hi.forall(cmp(keys(i), _) <= 0)
+        case "gt"   => r.hi.forall(cmp(keys(0), _) < 0)
+        case "gteq" => r.hi.forall(cmp(keys(0), _) <= 0)
+        case "lt"   => r.lo.forall(cmp(_, keys(0)) < 0)
+        case "lteq" => r.lo.forall(cmp(_, keys(0)) <= 0)
+      })
+
+    /** Does every row of a file with range `r` match? Unknown declines,
+      * and so does any null (or an unknown null count): a NULL
+      * satisfies no comparison.
+      */
+    def allMatch(r: ColRange): Boolean =
+      !unknown && r.nulls == 0 && ((r.lo, r.hi) match {
+        case (Some(l), Some(h)) if keys.nonEmpty && comparable(r.lo) && comparable(r.hi) =>
+          op match {
+            case "in"   => cmp(l, h) == 0 && { val i = ceil(l); i < keys.length && cmp(keys(i), l) == 0 }
+            case "gt"   => cmp(l, keys(0)) > 0
+            case "gteq" => cmp(l, keys(0)) >= 0
+            case "lt"   => cmp(h, keys(0)) < 0
+            case "lteq" => cmp(h, keys(0)) <= 0
+          }
+        case _ => false
+      })
+  }
+
+  private[graft] object KeyPred {
+    /** `p` with its probe values typed by the column's type `dt`. */
+    def apply(p: LakePredicate, dt: DataType): KeyPred = p match {
+      case LakePredicate.EqualTo(c, v) => new KeyPred(c, "in", Seq(probeKey(v, dt)))
+      case LakePredicate.In(c, vs)     => new KeyPred(c, "in", vs.map(probeKey(_, dt)))
+      case LakePredicate.GtEq(c, v)    => new KeyPred(c, "gteq", Seq(probeKey(v, dt)))
+      case LakePredicate.LtEq(c, v)    => new KeyPred(c, "lteq", Seq(probeKey(v, dt)))
+    }
+  }
+
+  private def typeOf(schema: StructType, c: String): DataType =
+    schema.find(_.name == c).map(_.dataType).getOrElse(NullType)
+
+  /** One commit dir's stats: its stats columns and, per file (key
+    * relative to the dir, in write order), one [[ColRange]] per column.
+    * The blob lists every file of its dir, so `files` also counts the
+    * dir's data files without a listing.
     */
+  final case class DirStats(cols: IndexedSeq[String], files: Seq[(String, IndexedSeq[ColRange])]) {
+    /** The manifest blob: `{"cols":[..],"files":{key:[[lo,hi,nulls],..]}}`
+      * with bounds as `n:<decimal>` / `s:<string>` or null.
+      */
+    def encode: String = {
+      val root = om.createObjectNode()
+      val colsNode = root.putArray("cols")
+      cols.foreach(colsNode.add)
+      val filesNode = root.putObject("files")
+      files.foreach { case (key, ranges) =>
+        val fNode = filesNode.putArray(key)
+        ranges.foreach { r =>
+          val pair = fNode.addArray()
+          pair.add(r.lo.map(encodeKey).orNull)
+          pair.add(r.hi.map(encodeKey).orNull)
+          pair.add(r.nulls)
+        }
+      }
+      om.writeValueAsString(root)
+    }
+
+    /** Files (relative keys) that may hold a row matching every
+      * predicate, or None when the stats cover no predicate column.
+      */
+    def surviving(preds: Seq[LakePredicate], schema: StructType): Option[Set[String]] = {
+      val tests = preds.filter(p => cols.contains(p.col))
+        .map(p => KeyPred(p, typeOf(schema, p.col))).toIndexedSeq
+      if (tests.isEmpty) None
+      else {
+        val at = tests.map(t => cols.indexOf(t.col))
+        Some(files.iterator.collect {
+          case (f, rs) if tests.indices.forall(j => tests(j).mayMatch(rs(at(j)))) => f
+        }.toSet)
+      }
+    }
+
+    /** Does EVERY row of the dir provably satisfy ALL `preds`? Powers
+      * metadata-only DELETE: a fully-covered dir drops from the
+      * manifest without reading a row.
+      */
+    def allMatch(preds: Seq[KeyPred]): Boolean =
+      preds.nonEmpty && preds.forall(p => cols.contains(p.col)) && files.forall { case (_, rs) =>
+        preds.forall(p => p.allMatch(rs(cols.indexOf(p.col))))
+      }
+
+    /** Does provably NO row of the dir satisfy the `preds` conjunction?
+      * One disproved conjunct per file suffices.
+      */
+    def noneMatch(preds: Seq[KeyPred]): Boolean =
+      preds.nonEmpty && files.forall { case (_, rs) =>
+        preds.exists(p => cols.contains(p.col) && !p.mayMatch(rs(cols.indexOf(p.col))))
+      }
+
+    /** Global (lo, hi) of `col` across every file, NUMERIC domain only —
+      * the exact-aggregate counterpart of pruning. None when `col` is
+      * not covered, any file lacks a bound on it (pruning tolerates
+      * that, an exact MIN/MAX cannot), or it is a string: parquet
+      * BINARY stats may be truncated bounds, sound for pruning but not
+      * for exact answers.
+      */
+    def numericRange(col: String): Option[(BigDecimal, BigDecimal)] = {
+      val i = cols.indexOf(col)
+      if (i < 0) return None
+      files.foldLeft(Option.empty[(BigDecimal, BigDecimal)]) { case (acc, (_, rs)) =>
+        (rs(i).lo, rs(i).hi) match {
+          case (Some(Left(lo)), Some(Left(hi))) =>
+            Some(acc.fold((lo, hi)) { case (alo, ahi) => (alo.min(lo), ahi.max(hi)) })
+          case _ => return None
+        }
+      }
+    }
+  }
+
+  object DirStats {
+    /** Decode a manifest blob, keeping only the columns `only` selects —
+      * planning decodes the keys of the columns it probes and no more.
+      * Legacy blobs without null counts decode them as unknown (-1).
+      */
+    def decode(json: String, only: String => Boolean = _ => true): DirStats = {
+      val node = om.readTree(json)
+      val all = node.get("cols")
+      val idx = (0 until all.size()).filter(i => only(all.get(i).asText())).toIndexedSeq
+      def at(pair: com.fasterxml.jackson.databind.JsonNode, j: Int): Option[Key] =
+        if (pair.size() <= j || pair.get(j).isNull) None else Some(decodeKey(pair.get(j).asText()))
+      val files = node.get("files").properties().asScala.toSeq.map { e =>
+        e.getKey -> idx.map { i =>
+          val pair = e.getValue.get(i)
+          ColRange(at(pair, 0), at(pair, 1), if (pair.size() > 2) pair.get(2).asLong(-1L) else -1L)
+        }
+      }
+      DirStats(idx.map(all.get(_).asText()), files)
+    }
+  }
+
+  /** Stats of dir `i` of `snap`, decoded for the columns `only` selects.
+    * A legacy single-blob manifest ([[MetaKey]]) counts only when its
+    * dir is the snapshot's sole one — the blob describes exactly that
+    * commit.
+    */
+  def dirStats(snap: Snapshot, i: Int, only: String => Boolean = _ => true): Option[DirStats] =
+    snap.meta.get(dirKey(snap.dirs(i)))
+      .orElse(if (snap.dirs.size == 1) snap.meta.get(MetaKey) else None)
+      .map(DirStats.decode(_, only))
+
   /** File key = path RELATIVE to the commit dir (plain file name for
     * flat dirs, `_p_…=…/part-….parquet` under partition specs), cut
     * at the unique `<uuid>/` commit-dir segment so URI scheme
@@ -262,34 +479,8 @@ private[graft] object FileStats {
     }
   }
 
-  /** Harvest per-file min/max from the parquet FOOTERS of a
-    * just-written dir — driver-side metadata reads, no Spark job, no
-    * data scan. This is the Iceberg shape (file metrics collected at
-    * write) and what keeps stats maintenance free on the write path:
-    * a COW rewrite that re-collects via [[collect]] costs a second
-    * table scan per statement, which is exactly the DML regression
-    * this replaces.
-    *
-    * Returns None (caller falls back to the scanning [[collect]]) when
-    * some requested column yields footer stats from NO file — the
-    * INT96-timestamp case (parquet writes no stats for INT96; session
-    * default `outputTimestampType=TIMESTAMP_MICROS` avoids it) and
-    * identity-partition columns (values live in the directory layout,
-    * not the files). Per-file gaps (a NaN-polluted double chunk, an
-    * empty file) stay conservative: the file is listed with a null
-    * range and is never skipped.
-    *
-    * Truncated binary stats are safe: parquet guarantees footer
-    * min/max are BOUNDS (max truncation increments the prefix), and
-    * pruning only needs bounds, not tight values.
-    */
-  def collectFromFooters(io: LakeIo, dir: org.apache.hadoop.fs.Path,
-                         cols: Seq[String]): Option[String] =
-    footerMeta(io, dir, cols, listParquet(io, dir))._1
-
-  private[lake] def listParquet(io: LakeIo,
-      dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val b = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
+  private[lake] def listParquet(io: LakeIo, dir: HPath): Seq[FileStatus] = {
+    val b = Seq.newBuilder[FileStatus]
     if (io.isDir(dir)) {
       val it = io.fs.listFiles(dir, true)
       while (it.hasNext) {
@@ -300,82 +491,76 @@ private[graft] object FileStats {
     b.result()
   }
 
-  /** ONE footer pass over pre-listed parquet files serving BOTH
-    * write-time consumers: the per-file column-range stats blob (as
-    * [[collectFromFooters]]) and the exact per-file row counts (as
-    * [[dirFileRows]]). A commit previously listed the fresh dir three
-    * times and opened every footer twice — at 100 TB-scale commit
-    * rates the metadata round trips are a real term, and locally they
-    * were ~half the non-Spark wall of each lake write.
+  /** One parquet file's footer facts: its key relative to the commit
+    * dir; per requested column its (lo, hi) bounds as typed values
+    * (null = no usable bound) and exact null count (-1 = unknown); and
+    * its row count (None = unreadable footer).
     */
-  private[lake] def footerMeta(io: LakeIo, dir: org.apache.hadoop.fs.Path,
-      cols: Seq[String], files: Seq[org.apache.hadoop.fs.FileStatus])
-      : (Option[String], Option[Seq[(String, Long)]]) = {
-    import scala.jdk.CollectionConverters._
-    if (files.isEmpty) return (None, Some(Nil))
-    val perFile: Seq[(String, Seq[(Any, Any, Long)], Option[Long])] = parFooter(files) { st =>
+  private[lake] final case class FooterFacts(key: String, ranges: Seq[(Any, Any, Long)],
+                                             rows: Option[Long])
+
+  /** THE footer pass: one driver-side metadata read per pre-listed
+    * file, fanned out on the footer pool — no Spark job, no data scan.
+    * This is the Iceberg shape (file metrics collected at write).
+    *
+    * A file's column range is null when any row group gives it no
+    * usable bound (INT96 timestamps — parquet writes no stats for
+    * them; a NaN-polluted double chunk; an empty file). Truncated
+    * binary stats are safe: parquet guarantees footer min/max are
+    * BOUNDS (max truncation increments the prefix), and pruning only
+    * needs bounds. An unreadable footer gives null ranges and no row
+    * count.
+    */
+  private[lake] def footerMeta(io: LakeIo, dir: HPath, cols: Seq[String],
+                               files: Seq[FileStatus]): Seq[FooterFacts] =
+    parFooter(files) { st =>
       val key = relativeKey(st.getPath.toString, dir.getName)
       try {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, io.fs.getConf)
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try {
           val blocks = reader.getFooter.getBlocks.asScala.toSeq
-          val rows = blocks.map(_.getRowCount).sum
           val ranges = cols.map { c =>
-            val chunks = blocks.map(_.getColumns.asScala
-              .find(_.getPath.toDotString == c))
+            val chunks = blocks.map(_.getColumns.asScala.find(_.getPath.toDotString == c))
             val perBlock = chunks.map(_.flatMap(footerRange))
             // exact per-file null count when every row group states
-            // one (-1 = unknown): what makes full-coverage proofs
-            // (metadata DELETE) sound — a NULL satisfies no
-            // comparison, so covered columns must be null-free
+            // one: what makes full-coverage proofs (metadata DELETE)
+            // and null-free key bounds sound
             val nulls: Long = {
               val perChunk = chunks.map(_.map(_.getStatistics))
               if (perChunk.exists(s => s.isEmpty || s.get == null || !s.get.isNumNullsSet)) -1L
               else perChunk.map(_.get.getNumNulls).sum
             }
-            // every row group must contribute a valid range, else the
-            // file is unprunable on this column
             if (blocks.isEmpty || perBlock.exists(_.isEmpty)) (null, null, nulls)
             else {
-              val (lo, hi) = perBlock.flatten.reduce[(Any, Any)] {
-                case ((lo1, hi1), (lo2, hi2)) => (minByKey(lo1, lo2), maxByKey(hi1, hi2))
-              }
-              (lo, hi, nulls)
+              val bounds = perBlock.flatten
+              (bounds.map(_._1).reduce(minByKey), bounds.map(_._2).reduce(maxByKey), nulls)
             }
           }
-          (key, ranges, Some(rows))
+          FooterFacts(key, ranges, Some(blocks.map(_.getRowCount).sum))
         } finally reader.close()
       } catch { case _: Exception =>
-        // unreadable footer: unprunable ranges (never skipped) and no
-        // row count (callers fall back to a scanning count)
-        (key, cols.map(_ => (null: Any, null: Any, -1L)), None)
+        FooterFacts(key, cols.map(_ => (null: Any, null: Any, -1L)), None)
       }
     }
-    val fileRows =
-      if (perFile.exists(_._3.isEmpty)) None
-      else Some(perFile.map { case (k, _, r) => k -> r.get })
-    // a column no file can bound (INT96, partition-derived) → let the
-    // caller decide between scanning and giving up
-    val colServed = cols.indices.map(i => perFile.exists { case (_, rs, _) =>
-      rs(i)._1 != null || rs(i)._2 != null })
-    if (cols.isEmpty || colServed.contains(false)) return (None, fileRows)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val rootNode = om.createObjectNode()
-    val colsNode = rootNode.putArray("cols")
-    cols.foreach(colsNode.add)
-    val filesNode = rootNode.putObject("files")
-    perFile.foreach { case (key, ranges, _) =>
-      val fNode = filesNode.putArray(key)
-      ranges.foreach { case (lo, hi, nulls) =>
-        val pair = fNode.addArray()
-        pair.add(encode(lo))
-        pair.add(encode(hi))
-        pair.add(nulls)
-      }
-    }
-    (Some(om.writeValueAsString(rootNode)), fileRows)
+
+  /** The dir's stats from its footer facts. None when some column is
+    * bounded by NO file (INT96, identity-partition columns whose
+    * values live in the directory layout): the caller decides between
+    * the scanning [[collect]] and no stats. Per-file gaps stay
+    * conservative: that file's range is null and it is never skipped.
+    */
+  private[lake] def statsOf(cols: Seq[String], facts: Seq[FooterFacts]): Option[DirStats] = {
+    val served = cols.indices.forall(i => facts.exists(f => f.ranges(i)._1 != null || f.ranges(i)._2 != null))
+    if (cols.isEmpty || !served) None
+    else Some(DirStats(cols.toIndexedSeq, facts.map { f =>
+      f.key -> f.ranges.map { case (lo, hi, n) => ColRange(toKey(lo), toKey(hi), n) }.toIndexedSeq
+    }))
   }
+
+  /** Per-file (relative key → rows); None when any footer was unreadable. */
+  private[lake] def rowsOf(facts: Seq[FooterFacts]): Option[Seq[(String, Long)]] =
+    if (facts.exists(_.rows.isEmpty)) None else Some(facts.map(f => f.key -> f.rows.get))
 
   /** Batch bloom filtering over a dir's candidate files: per file one
     * footer read plus one right-sized bloom read per row group and
@@ -384,11 +569,10 @@ private[graft] object FileStats {
     * Returns the candidates (relative keys) whose blooms cannot rule
     * them out, preserving input order.
     */
-  def bloomSurviving(io: LakeIo, dir: org.apache.hadoop.fs.Path,
-                     candidates: Seq[String],
+  def bloomSurviving(io: LakeIo, dir: HPath, candidates: Seq[String],
                      probes: Seq[(String, Seq[Any])]): Seq[String] =
     parFooter(candidates) { f =>
-      f -> bloomMayContain(io, new org.apache.hadoop.fs.Path(dir, f), probes)
+      f -> bloomMayContain(io, new HPath(dir, f), probes)
     }.collect { case (f, true) => f }
 
   /** May `file` contain a row matching EVERY probe? Tests the parquet
@@ -401,9 +585,7 @@ private[graft] object FileStats {
     * once and tested against all of the probe's values, so an `IN` of
     * many keys costs one bloom read per row group, not one per value.
     */
-  def bloomMayContain(io: LakeIo, file: org.apache.hadoop.fs.Path,
-                      probes: Seq[(String, Seq[Any])]): Boolean = {
-    import scala.jdk.CollectionConverters._
+  def bloomMayContain(io: LakeIo, file: HPath, probes: Seq[(String, Seq[Any])]): Boolean = {
     try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, io.fs.getConf)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -453,7 +635,7 @@ private[graft] object FileStats {
     * back to a scanning count). Parquet footers carry exact per-block
     * row counts, so unlike min/max bounds this is never approximate.
     */
-  def dirRowCount(io: LakeIo, dir: org.apache.hadoop.fs.Path): Option[Long] =
+  def dirRowCount(io: LakeIo, dir: HPath): Option[Long] =
     dirFileRows(io, dir).map(_.map(_._2).sum)
 
   /** Per-file (relative key → row count) under `dir`, from footers
@@ -461,165 +643,8 @@ private[graft] object FileStats {
     * `.files` metadata table. Same conventions: empty dir → empty,
     * any unreadable footer → None.
     */
-  def dirFileRows(io: LakeIo,
-                  dir: org.apache.hadoop.fs.Path): Option[Seq[(String, Long)]] = {
-    import scala.jdk.CollectionConverters._
-    if (!io.isDir(dir)) return Some(Nil)
-    val files = {
-      val b = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-      val it = io.fs.listFiles(dir, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) b += st
-      }
-      b.result()
-    }
-    val perFile = parFooter(files) { st =>
-      try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, io.fs.getConf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try Some(relativeKey(st.getPath.toString, dir.getName) ->
-          reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
-        finally reader.close()
-      } catch { case _: Exception => None } // any unreadable footer → whole dir None
-    }
-    if (perFile.contains(None)) None else Some(perFile.flatten)
-  }
-
-  /** Global (lo, hi) of `col` across EVERY file of a stats blob, in
-    * the NUMERIC key domain — the exact-aggregate counterpart of
-    * [[surviving]]'s pruning reads. None when the blob doesn't cover
-    * the column, any file lacks a bound on it (all-null values or a
-    * stats-less chunk — pruning tolerates that as "unprunable", an
-    * exact MIN/MAX answer cannot), or the domain is non-numeric:
-    * parquet BINARY stats may be TRUNCATED bounds, sound for pruning
-    * but not for exact aggregate answers, so strings never qualify.
-    */
-  /** One covering conjunct for metadata-DML proofs: comparison op
-    * ("eq" | "gt" | "gteq" | "lt" | "lteq") against a value already in
-    * blob key space ([[toKey]]'s numeric domain — numbers, timestamps,
-    * dates, booleans all canonicalize there). Built losslessly by
-    * `PredicateExtract.covering`: unlike scan-pruning predicates,
-    * strictness must survive (relaxing `>` to `>=` is sound for
-    * pruning but UNSOUND for proving every row matches).
-    */
-  private[graft] final case class Cover(col: String, op: String, v: BigDecimal)
-
-  /** `v` in blob key space, numeric domain only. */
-  private[graft] def coverValue(v: Any): Option[BigDecimal] =
-    toKey(v) match { case Some(Left(n)) => Some(n); case _ => None }
-
-  private def fileColStats(pair: com.fasterxml.jackson.databind.JsonNode)
-      : (Option[BigDecimal], Option[BigDecimal], Long) = {
-    def num(j: Int): Option[BigDecimal] =
-      if (pair.size() <= j || pair.get(j).isNull) None
-      else decode(pair.get(j).asText()) match {
-        case Some(Left(n)) => Some(n)
-        case _             => None
-      }
-    val nulls = if (pair.size() > 2) pair.get(2).asLong(-1L) else -1L
-    (num(0), num(1), nulls)
-  }
-
-  /** Does EVERY row of the blob's dir provably satisfy ALL `covers`?
-    * Requires per-file [lo, hi] on each covered column AND an exact
-    * ZERO null count (blob v2 third element; legacy blobs decline) —
-    * a NULL satisfies no comparison, so any or unknown nulls defeat
-    * the proof. Powers metadata-only DELETE: a fully-covered dir can
-    * be dropped from the manifest without reading a row.
-    */
-  def blobFullyMatches(statsJson: String, covers: Seq[Cover]): Boolean = {
-    if (covers.isEmpty) return false
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = om.readTree(statsJson)
-    val colsNode = node.get("cols")
-    val idxOf = covers.map { c =>
-      c -> (0 until colsNode.size()).find(i => colsNode.get(i).asText() == c.col)
-    }.toMap
-    if (idxOf.values.exists(_.isEmpty)) return false
-    val it = node.get("files").fields()
-    while (it.hasNext) {
-      val f = it.next().getValue
-      covers.foreach { c =>
-        val (lo, hi, nulls) = fileColStats(f.get(idxOf(c).get))
-        val ok = nulls == 0L && ((lo, hi) match {
-          case (Some(l), Some(h)) => c.op match {
-            case "eq"   => l == c.v && h == c.v
-            case "gteq" => l >= c.v
-            case "gt"   => l > c.v
-            case "lteq" => h <= c.v
-            case "lt"   => h < c.v
-            case _      => false
-          }
-          case _ => false
-        })
-        if (!ok) return false
-      }
-    }
-    true
-  }
-
-  /** Does provably NO row of the blob's dir satisfy the `covers`
-    * conjunction? Nulls are irrelevant here — a null row already fails
-    * the conjunction. One disprovable conjunct per file suffices.
-    */
-  def blobNoneMatch(statsJson: String, covers: Seq[Cover]): Boolean = {
-    if (covers.isEmpty) return false
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = om.readTree(statsJson)
-    val colsNode = node.get("cols")
-    val idxOf = covers.map { c =>
-      c -> (0 until colsNode.size()).find(i => colsNode.get(i).asText() == c.col)
-    }.toMap
-    val it = node.get("files").fields()
-    while (it.hasNext) {
-      val f = it.next().getValue
-      val fileExcluded = covers.exists { c =>
-        idxOf(c).exists { i =>
-          val (lo, hi, _) = fileColStats(f.get(i))
-          (lo, hi) match {
-            case (Some(l), Some(h)) => c.op match {
-              case "eq"   => c.v < l || c.v > h
-              case "gteq" => h < c.v
-              case "gt"   => h <= c.v
-              case "lteq" => l > c.v
-              case "lt"   => l >= c.v
-              case _      => false
-            }
-            case _ => false
-          }
-        }
-      }
-      if (!fileExcluded) return false
-    }
-    true
-  }
-
-  def blobNumericRange(statsJson: String, col: String): Option[(BigDecimal, BigDecimal)] = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = om.readTree(statsJson)
-    val colsNode = node.get("cols")
-    val idx = (0 until colsNode.size()).find(i => colsNode.get(i).asText() == col)
-      .getOrElse(return None)
-    var acc: Option[(BigDecimal, BigDecimal)] = None
-    val it = node.get("files").fields()
-    while (it.hasNext) {
-      val pair = it.next().getValue.get(idx)
-      def at(j: Int): Option[BigDecimal] =
-        if (pair.get(j).isNull) None
-        else decode(pair.get(j).asText()) match {
-          case Some(Left(n)) => Some(n)
-          case _             => None // string domain: truncation-unsafe
-        }
-      (at(0), at(1)) match {
-        case (Some(lo), Some(hi)) =>
-          acc = Some(acc.map { case (alo, ahi) => (alo.min(lo), ahi.max(hi)) }
-            .getOrElse((lo, hi)))
-        case _ => return None
-      }
-    }
-    acc
-  }
+  def dirFileRows(io: LakeIo, dir: HPath): Option[Seq[(String, Long)]] =
+    rowsOf(footerMeta(io, dir, Nil, listParquet(io, dir)))
 
   /** Global (min, max) per requested column across every parquet file
     * under `dir`, from footers only — driver-side, no Spark job, no
@@ -629,85 +654,29 @@ private[graft] object FileStats {
     * omission is what keeps null-safe key matching sound — min/max
     * cannot see null keys, so a nullable key must not prune.
     */
-  def dirColumnRanges(io: LakeIo, dir: org.apache.hadoop.fs.Path,
-                      cols: Seq[String]): Map[String, (Any, Any)] = {
-    import scala.jdk.CollectionConverters._
-    if (!io.isDir(dir)) return Map.empty
-    val files = {
-      val b = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-      val it = io.fs.listFiles(dir, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) b += st
+  def dirColumnRanges(io: LakeIo, dir: HPath, cols: Seq[String]): Map[String, (Any, Any)] = {
+    val facts = footerMeta(io, dir, cols, listParquet(io, dir))
+    cols.indices.flatMap { i =>
+      val perFile = facts.map(_.ranges(i))
+      if (perFile.isEmpty || perFile.exists { case (lo, hi, n) => n != 0 || lo == null || hi == null })
+        None
+      else {
+        val lo = perFile.map(_._1).reduce(minByKey)
+        val hi = perFile.map(_._2).reduce(maxByKey)
+        if (lo == null || hi == null) None else Some(cols(i) -> (lo, hi))
       }
-      b.result()
-    }
-    // per-file footer reads fan out on the pool; the cross-file merge
-    // (with its "any unusable file kills the column" semantics) folds
-    // the ordered results on the calling thread
-    val perFile: Seq[Seq[Option[(Any, Any)]]] = parFooter(files) { st =>
-      try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, io.fs.getConf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val blocks = reader.getFooter.getBlocks.asScala.toSeq
-          cols.map { c =>
-            val perBlock = blocks.map(_.getColumns.asScala
-              .find(_.getPath.toDotString == c).flatMap { cc =>
-                val s = cc.getStatistics
-                // any nulls (or unknown null count) unbound the column
-                if (s == null || !s.isNumNullsSet || s.getNumNulls != 0) None
-                else footerRange(cc)
-              })
-            if (blocks.isEmpty || perBlock.exists(_.isEmpty)) None
-            else {
-              val (lo, hi) = perBlock.flatten.reduce[(Any, Any)] {
-                case ((l1, h1), (l2, h2)) => (minByKey(l1, l2), maxByKey(h1, h2))
-              }
-              if (lo == null || hi == null) None else Some((lo, hi))
-            }
-          }
-        } finally reader.close()
-      } catch { case _: Exception => cols.map(_ => None) }
-    }
-    var acc = Map.empty[String, (Any, Any)]
-    var dead = Set.empty[String]
-    perFile.foreach { ranges =>
-      cols.indices.foreach { i =>
-        val c = cols(i)
-        if (!dead(c)) ranges(i) match {
-          case None => dead += c
-          case Some((lo, hi)) => acc += c -> (acc.get(c) match {
-            case Some((al, ah)) =>
-              val nl = minByKey(al, lo); val nh = maxByKey(ah, hi)
-              if (nl == null || nh == null) { dead += c; (al, ah) }
-              else (nl, nh)
-            case None => (lo, hi)
-          })
-        }
-      }
-    }
-    acc -- dead
+    }.toMap
   }
 
-  private def minByKey(a: Any, b: Any): Any =
-    if (a == null || b == null) null
-    else (toKey(a), toKey(b)) match {
-      case (Some(ka), Some(kb)) => leq(ka, kb) match {
-        case Some(true)  => a
-        case Some(false) => b
-        case None        => null
-      }
-      case _ => null
-    }
-  private def maxByKey(a: Any, b: Any): Any =
-    if (a == null || b == null) null
-    else (toKey(a), toKey(b)) match {
-      case (Some(ka), Some(kb)) => leq(ka, kb) match {
-        case Some(true)  => b
-        case Some(false) => a
-        case None        => null
-      }
+  /** The smaller / larger of two typed values by key order; null when
+    * either has no key or they are of different kinds.
+    */
+  private def minByKey(a: Any, b: Any): Any = pickByKey(a, b, smaller = true)
+  private def maxByKey(a: Any, b: Any): Any = pickByKey(a, b, smaller = false)
+  private def pickByKey(a: Any, b: Any, smaller: Boolean): Any =
+    (toKey(a), toKey(b)) match {
+      case (Some(ka), Some(kb)) if sameKind(ka, kb) =>
+        if ((cmp(ka, kb) <= 0) == smaller) a else b
       case _ => null
     }
 
@@ -786,8 +755,11 @@ private[graft] object FileStats {
     }
   }
 
-  def collect(spark: SparkSession, dir: org.apache.hadoop.fs.Path,
-              cols: Seq[String]): String = {
+  /** Scanning fallback for columns footers cannot bound: one
+    * distributed aggregate over the just-written dir (rows = files of
+    * ONE commit dir, bounded by `targetPartitions`, not data size).
+    */
+  def collect(spark: SparkSession, dir: HPath, cols: Seq[String]): DirStats = {
     val df = spark.read.parquet(dir.toString)
     val present = cols.filter(df.columns.contains)
     require(present.nonEmpty, s"no stats columns $cols in ${df.columns.toSeq}")
@@ -795,150 +767,10 @@ private[graft] object FileStats {
       count(when(col(c).isNull, 1)).as(s"_n_$c")))
     val rows = df.groupBy(input_file_name().as("_f"))
       .agg(aggs.head, aggs.tail: _*).collect()
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val rootNode = om.createObjectNode()
-    val colsNode = rootNode.putArray("cols")
-    present.foreach(colsNode.add)
-    val filesNode = rootNode.putObject("files")
-    rows.foreach { r =>
-      val fNode = filesNode.putArray(relativeKey(r.getString(0), dir.getName))
-      present.indices.foreach { i =>
-        val pair = fNode.addArray()
-        pair.add(encode(r.get(1 + 3 * i)))
-        pair.add(encode(r.get(2 + 3 * i)))
-        pair.add(r.getLong(3 + 3 * i))
+    DirStats(present.toIndexedSeq, rows.toSeq.map { r =>
+      relativeKey(r.getString(0), dir.getName) -> present.indices.map { i =>
+        ColRange(toKey(r.get(1 + 3 * i)), toKey(r.get(2 + 3 * i)), r.getLong(3 + 3 * i))
       }
-    }
-    om.writeValueAsString(rootNode)
-  }
-
-  /** Number of files the blob describes — the blob lists every file of
-    * its commit dir, so this counts the dir's data files without a
-    * filesystem listing.
-    */
-  def fileCount(statsJson: String): Int = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    om.readTree(statsJson).get("files").size()
-  }
-
-  /** File names (relative to the commit dir) that can satisfy ALL
-    * predicates, or None when the stats cover no predicate column
-    * (no pruning possible).
-    */
-  /** Pre-decoded `In` probe: the predicate's values split into SORTED
-    * numeric and string key arrays (plus an unknown-key flag for
-    * null/NaN probes, which keep every file). The per-file question
-    * "could any probe fall inside [lo, hi]?" is then one binary search
-    * instead of an O(values) scan — what lets the driver-exact key
-    * tier ([[DriverTiers.driverKeyCap]], tens of thousands of values)
-    * keep FILE SKIPPING instead of degrading to a full-scan row
-    * filter. At a 100M-row base that skip is the difference between a
-    * bounded refresh read and a table scan (the round-12 soak's third
-    * MV decade measured exactly that knee).
-    */
-  private final class InProbe(vs: Seq[Any]) {
-    private val keys = vs.map(toKey)
-    val hasUnknown: Boolean = keys.exists(_.isEmpty)
-    val nums: Array[BigDecimal] =
-      keys.collect { case Some(Left(n)) => n }.sorted.toArray
-    val strs: Array[Array[Byte]] = keys
-      .collect { case Some(Right(s)) =>
-        s.getBytes(java.nio.charset.StandardCharsets.UTF_8) }
-      .sortWith(java.util.Arrays.compareUnsigned(_, _) < 0).toArray
-    val nonEmpty: Boolean = hasUnknown || nums.nonEmpty || strs.nonEmpty
-    private def anyNumIn(l: BigDecimal, h: BigDecimal): Boolean = {
-      var lo = 0; var hi = nums.length
-      while (lo < hi) {
-        val m = (lo + hi) >>> 1
-        if (nums(m) < l) lo = m + 1 else hi = m
-      }
-      lo < nums.length && nums(lo) <= h
-    }
-    private def anyStrIn(l: Array[Byte], h: Array[Byte]): Boolean = {
-      var lo = 0; var hi = strs.length
-      while (lo < hi) {
-        val m = (lo + hi) >>> 1
-        if (java.util.Arrays.compareUnsigned(strs(m), l) < 0) lo = m + 1
-        else hi = m
-      }
-      lo < strs.length && java.util.Arrays.compareUnsigned(strs(lo), h) <= 0
-    }
-    /** Same verdicts as `vs.exists(pointIn)` under the original
-      * semantics: unknown probes and cross-domain comparisons keep the
-      * file; only a provably-disjoint same-domain range prunes.
-      */
-    def anyIn(lo: Option[Either[BigDecimal, String]],
-              hi: Option[Either[BigDecimal, String]]): Boolean =
-      hasUnknown || ((lo, hi) match {
-        case (Some(Left(l)), Some(Left(h))) => anyNumIn(l, h) || strs.nonEmpty
-        case (Some(Right(l)), Some(Right(h))) =>
-          anyStrIn(l.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-            h.getBytes(java.nio.charset.StandardCharsets.UTF_8)) || nums.nonEmpty
-        // mixed-domain or missing stats: no probe is refutable
-        case _ => nums.nonEmpty || strs.nonEmpty
-      })
-  }
-
-  def surviving(statsJson: String, preds: Seq[LakePredicate],
-                schema: StructType): Option[Set[String]] = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = om.readTree(statsJson)
-    val cols = {
-      val a = node.get("cols")
-      (0 until a.size()).map(a.get(_).asText())
-    }
-    val applicable = preds.filter(p => cols.contains(p.col))
-    if (applicable.isEmpty) return None
-    // decode + sort each In predicate's probe set ONCE; the file loop
-    // below answers it per file in O(log values). Index-aligned with
-    // `applicable` (keying a Map by the predicate would re-hash its
-    // whole value Seq per file — the exact cost this removes)
-    val inProbes: Array[InProbe] = applicable.map {
-      case LakePredicate.In(_, vs) => new InProbe(vs)
-      case _                       => null
-    }.toArray
-    val files = node.get("files")
-    val kept = Set.newBuilder[String]
-    val it = files.fields()
-    while (it.hasNext) {
-      val e = it.next()
-      val ranges = e.getValue
-      def range(c: String): (Option[Either[BigDecimal, String]], Option[Either[BigDecimal, String]]) = {
-        val i = cols.indexOf(c)
-        val pair = ranges.get(i)
-        def at(j: Int): Option[Either[BigDecimal, String]] =
-          if (pair.get(j).isNull) None else decode(pair.get(j).asText())
-        (at(0), at(1))
-      }
-      val keep = applicable.zipWithIndex.forall { case (p, pi) =>
-        val (lo, hi) = range(p.col)
-        // can a point probe `v` fall inside this file's [lo, hi]?
-        // (null probe / missing stats / cross-domain compare → keep;
-        // only provable emptiness prunes)
-        def pointIn(pv: Any): Boolean = (toKey(pv), lo, hi) match {
-          case (None, _, _) => true
-          case (Some(v), Some(l), Some(h)) => (leq(l, v), leq(v, h)) match {
-            case (Some(a), Some(b)) => a && b
-            case _                  => true
-          }
-          case _ => true
-        }
-        p match {
-          case LakePredicate.EqualTo(_, v) => pointIn(v)
-          // IN = disjunction of point probes: keep if ANY could match
-          case LakePredicate.In(_, _)      => inProbes(pi).anyIn(lo, hi)
-          case LakePredicate.GtEq(_, v) => (toKey(v), hi) match {
-            case (Some(k), Some(h)) => leq(k, h).getOrElse(true)
-            case _                  => true
-          }
-          case LakePredicate.LtEq(_, v) => (toKey(v), lo) match {
-            case (Some(k), Some(l)) => leq(l, k).getOrElse(true)
-            case _                  => true
-          }
-        }
-      }
-      if (keep) kept += e.getKey
-    }
-    Some(kept.result())
+    })
   }
 }

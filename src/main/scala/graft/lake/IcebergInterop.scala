@@ -534,44 +534,36 @@ final class IcebergTableReader(spark: SparkSession, location: String) {
   }
 
   /** Does a file whose partition value is `value` under `transform`
-    * possibly satisfy `p`? Unknown domains keep the file — pruning is
-    * conservative, like the graft stats path.
+    * possibly satisfy `p`? The predicate is projected into the
+    * partition domain and compared through [[FileStats.KeyPred]];
+    * unknown domains keep the file — pruning is conservative, like
+    * the graft stats path.
     */
   private def partitionKeeps(p: LakePredicate, transform: String, value: Any,
                              srcType: Option[String]): Boolean = {
-    def num(v: Any): Option[BigDecimal] = v match {
-      case n: java.lang.Number => Some(BigDecimal(n.toString))
-      case _                   => None
-    }
-    def cmp(a: Any, b: Any): Option[Int] = (num(a), num(b)) match {
-      case (Some(x), Some(y)) => Some(x.compare(y))
-      case _ => (a, b) match {
-        case (s1: String, s2: String) => Some(s1.compareTo(s2))
-        case _                        => None
-      }
-    }
-    def against(bound: Any, test: Int => Boolean): Boolean =
-      cmp(value, bound).forall(test)
     // bucket[N] admits EXACT equality projection (the spec's murmur3
     // bucket index of the probe value) but no range projection
-    val bucketN: Option[Int] =
+    def eqBound(v: Any): Option[Any] =
       if (transform.startsWith("bucket["))
-        Some(transform.stripPrefix("bucket[").stripSuffix("]").toInt)
-      else None
-    def eqKeeps(v: Any): Boolean = bucketN match {
-      case Some(n) =>
-        IcebergFormat.bucketIndexTyped(n, v, srcType).forall(b => against(b, _ == 0))
-      case None =>
-        projectBound(transform, v).forall(b => against(b, _ == 0))
+        IcebergFormat.bucketIndexTyped(
+          transform.stripPrefix("bucket[").stripSuffix("]").toInt, v, srcType)
+      else projectBound(transform, v)
+    val projected: Option[LakePredicate] = p match {
+      case LakePredicate.EqualTo(c, v) => eqBound(v).map(LakePredicate.EqualTo(c, _))
+      case LakePredicate.In(c, vs) =>
+        val bs = vs.map(eqBound)
+        if (bs.forall(_.isDefined)) Some(LakePredicate.In(c, bs.flatten)) else None
+      case LakePredicate.GtEq(c, v) => projectBound(transform, v).map(LakePredicate.GtEq(c, _))
+      case LakePredicate.LtEq(c, v) => projectBound(transform, v).map(LakePredicate.LtEq(c, _))
     }
-    p match {
-      case LakePredicate.EqualTo(_, v) => eqKeeps(v)
-      case LakePredicate.In(_, vs)     => vs.isEmpty || vs.exists(eqKeeps)
-      case LakePredicate.GtEq(_, v) =>
-        projectBound(transform, v).forall(b => against(b, _ >= 0))
-      case LakePredicate.LtEq(_, v) =>
-        projectBound(transform, v).forall(b => against(b, _ <= 0))
-    }
+    // identity and truncate keep the source column's type; the other
+    // transforms count (days, hours, months, years, buckets)
+    val dt =
+      if (transform == "identity" || transform.startsWith("truncate["))
+        srcType.flatMap(IcebergFormat.sparkType).getOrElse(NullType)
+      else LongType
+    projected.forall(q => FileStats.KeyPred(q, dt)
+      .mayMatch(FileStats.ColRange.point(FileStats.toKey(value))))
   }
 
   /** Assemble the DataFrame of one snapshot (default: current).
@@ -1004,7 +996,8 @@ final class IcebergExport(spark: SparkSession, location: String) {
       withParts.write.mode("overwrite")
         .partitionBy(spec.map(f => s"_ice_${f.name}"): _*).parquet(dir.toString)
     }
-    val rows = FileStats.dirFileRows(io, dir).getOrElse(
+    val files = FileStats.listParquet(io, dir)
+    val rows = FileStats.rowsOf(FileStats.footerMeta(io, dir, Nil, files)).getOrElse(
       throw new IllegalStateException(s"unreadable footers under $dir")).toMap
     val srcType: Map[String, DataType] =
       spec.map(f => f.name -> df.schema(f.srcCol).dataType).toMap
@@ -1046,23 +1039,17 @@ final class IcebergExport(spark: SparkSession, location: String) {
         }
       }
     }
-    val b = Seq.newBuilder[(String, Long, Long, Seq[(String, Any)])]
-    val it = io.fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) {
-        val key = FileStats.relativeKey(st.getPath.toString, dir.getName)
-        val segs = key.split('/').dropRight(1)
-          .map { seg =>
-            val i = seg.indexOf('=')
-            seg.substring("_ice_".length, i) -> seg.substring(i + 1)
-          }.toMap
-        val partVals = spec.map(f => f.name -> parseValue(f, segs.getOrElse(f.name,
-          throw new IllegalStateException(s"no partition segment for ${f.name} in $key"))))
-        b += ((io.qualify(st.getPath).toString, rows(key), st.getLen, partVals))
-      }
+    files.map { st =>
+      val key = FileStats.relativeKey(st.getPath.toString, dir.getName)
+      val segs = key.split('/').dropRight(1)
+        .map { seg =>
+          val i = seg.indexOf('=')
+          seg.substring("_ice_".length, i) -> seg.substring(i + 1)
+        }.toMap
+      val partVals = spec.map(f => f.name -> parseValue(f, segs.getOrElse(f.name,
+        throw new IllegalStateException(s"no partition segment for ${f.name} in $key"))))
+      (io.qualify(st.getPath).toString, rows(key), st.getLen, partVals)
     }
-    b.result()
   }
 
   /** `meta` becomes Avro key-value file metadata — the Iceberg spec

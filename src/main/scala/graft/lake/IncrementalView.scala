@@ -461,11 +461,9 @@ object IncrementalView {
     // file counts, zero IO); only dirs without a blob fall back to a
     // filesystem listing
     val files = viewT.latest.map { s =>
-      s.dirs.map { d =>
-        s.meta.get(FileStats.dirKey(d))
-          .orElse(if (s.dirs.size == 1) s.meta.get(FileStats.MetaKey) else None)
-          .map(FileStats.fileCount(_).toLong)
-          .getOrElse(viewT.io.countFiles(viewT.loc(d), ".parquet"))
+      s.dirs.indices.map { i =>
+        FileStats.dirStats(s, i, _ => false).map(_.files.size.toLong)
+          .getOrElse(viewT.io.countFiles(viewT.loc(s.dirs(i)), ".parquet"))
       }.sum
     }.getOrElse(0L)
     if (files < tiers.bloomFileThreshold) return full

@@ -808,16 +808,11 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     // manifest-level file skipping, PER DIR: each dir's stats blob
     // (written by the commit that created it, carried forward since)
     // yields the files that can satisfy `preds`; dirs without stats
-    // keep all their files — no file is ever wrongly skipped. Legacy
-    // single-blob manifests count only when their dir is the
-    // snapshot's sole one (the blob describes exactly that commit).
+    // keep all their files — no file is ever wrongly skipped
+    val predCols = preds.map(_.col).toSet
     def statsKeepFor(i: Int): Option[Set[String]] =
       if (preds.isEmpty) None
-      else for {
-        json <- snap.meta.get(FileStats.dirKey(snap.dirs(i)))
-          .orElse(if (snap.dirs.size == 1) snap.meta.get(FileStats.MetaKey) else None)
-        kept <- FileStats.surviving(json, preds, cur)
-      } yield kept
+      else FileStats.dirStats(snap, i, predCols).flatMap(_.surviving(preds, cur))
     // bloom pruning on top of range pruning: equality/IN probes on the
     // table's declared bloom columns test candidate files' parquet
     // footer blooms — the skip min/max cannot make on a
@@ -834,17 +829,9 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
         }
       }
     def relFilesOf(i: Int): Seq[String] = {
-      val dirPath = loc(snap.dirs(i))
       val marker = new HPath(snap.dirs(i)).getName
-      val b = Seq.newBuilder[String]
-      if (io.isDir(dirPath)) {
-        val it = io.fs.listFiles(dirPath, true)
-        while (it.hasNext) {
-          val f = it.next().getPath
-          if (f.getName.endsWith(".parquet")) b += FileStats.relativeKey(f.toString, marker)
-        }
-      }
-      b.result()
+      FileStats.listParquet(io, loc(snap.dirs(i)))
+        .map(f => FileStats.relativeKey(f.getPath.toString, marker))
     }
     def keepFor(i: Int): Option[Set[String]] = {
       val ranged = statsKeepFor(i)
@@ -975,13 +962,13 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     val snap = resolve(version)
     if (snap.deleteDirs.nonEmpty || snap.eqDeletes.nonEmpty) return None
     var acc: Option[(BigDecimal, BigDecimal)] = None
-    snap.dirs.foreach { d =>
-      snap.meta.get(FileStats.dirKey(d)).flatMap(FileStats.blobNumericRange(_, column)) match {
+    snap.dirs.indices.foreach { i =>
+      FileStats.dirStats(snap, i, Set(column)).flatMap(_.numericRange(column)) match {
         case Some((lo, hi)) =>
           acc = Some(acc.map { case (alo, ahi) => (alo.min(lo), ahi.max(hi)) }
             .getOrElse((lo, hi)))
         case None =>
-          if (!snap.meta.get(FileStats.rowsKey(d)).contains("0")) return None
+          if (!snap.meta.get(FileStats.rowsKey(snap.dirs(i))).contains("0")) return None
       }
     }
     acc
@@ -1257,12 +1244,6 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     base.flatMap(_.meta.get(FileStats.StatsColsKey))
       .map(FileStats.splitCols).getOrElse(Nil)
 
-  /** Stats meta for one just-written dir: the per-dir blob plus the
-    * refreshed stats-column set. Columns absent from the written frame
-    * are skipped (a post-rename append must not crash on stale names),
-    * and a zero-file dir (empty frame under a partition spec) collects
-    * nothing.
-    */
   /** Byte size + row count of a just-written dir: one listing plus
     * footer metadata reads, recorded in the commit meta and carried
     * with the dir. Bytes power streaming admission control; rows
@@ -1278,35 +1259,13 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
           FileStats.fileRowsKey(dirName) -> FileStats.encodeFileRows(fr))
       }.getOrElse(Map.empty[String, String])
 
-  private def statsMetaFor(dirName: String, cols: Seq[String],
-                           written: Seq[String]): Map[String, String] = {
-    val present = cols.filter(written.contains)
-    if (present.isEmpty) return Map.empty
-    // footers first: driver-side metadata reads, no second data scan
-    // per write/rewrite. The scanning aggregate remains the fallback
-    // for columns footers cannot bound (INT96 timestamps, identity-
-    // partition columns whose values live in the directory layout).
-    FileStats.collectFromFooters(io, loc(dirName), present) match {
-      case Some(blob) => Map(
-        FileStats.dirKey(dirName) -> blob,
-        FileStats.StatsColsKey -> FileStats.joinCols(present))
-      case None if io.countFiles(loc(dirName), ".parquet") == 0 => Map.empty
-      case None => Map(
-        FileStats.dirKey(dirName) -> FileStats.collect(spark, loc(dirName), present),
-        FileStats.StatsColsKey -> FileStats.joinCols(present))
-    }
-  }
-
   /** Combined write-time metadata for one freshly-written dir — the
     * stats blob, byte footprint, and per-file row counts from ONE
-    * recursive listing and ONE footer pass ([[FileStats.footerMeta]]).
-    * Every commit previously paid three listings and two footer passes
-    * over the same just-written files ([[statsMetaFor]] +
-    * [[footprintMetaFor]]); on an object store those are per-commit
-    * metadata round trips, locally they were ~half the non-Spark wall
-    * of a small write. Semantics are unchanged: scanning fallback for
-    * footer-unboundable columns, no row count when a footer is
-    * unreadable, bytes over every non-underscore file.
+    * recursive listing and ONE footer pass ([[FileStats.footerMeta]]):
+    * scanning fallback for footer-unboundable columns, no row count
+    * when a footer is unreadable, bytes over every non-underscore file.
+    * Stats columns absent from the written frame are skipped (a
+    * post-rename append must not crash on stale names).
     */
   private def writeMetaFor(dirName: String, cols: Seq[String],
                            written: Seq[String],
@@ -1331,19 +1290,19 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     // Every rows-meta reader has a documented fallback (footer re-read
     // or scanning count), and bytes — the admission-control input —
     // still come from the listing above.
-    val (blob, fileRows) =
-      if (present.isEmpty && !rowMeta) (None, None)
-      else FileStats.footerMeta(io, dir, present, files)
-    val statsMeta = blob match {
-      case Some(b) => Map(
-        FileStats.dirKey(dirName) -> b,
+    val facts =
+      if (present.isEmpty && !rowMeta) None
+      else Some(FileStats.footerMeta(io, dir, present, files))
+    val statsMeta = facts.flatMap(FileStats.statsOf(present, _)) match {
+      case Some(stats) => Map(
+        FileStats.dirKey(dirName) -> stats.encode,
         FileStats.StatsColsKey -> FileStats.joinCols(present))
       case None if present.isEmpty || files.isEmpty => Map.empty[String, String]
       case None => Map(
-        FileStats.dirKey(dirName) -> FileStats.collect(spark, dir, present),
+        FileStats.dirKey(dirName) -> FileStats.collect(spark, dir, present).encode,
         FileStats.StatsColsKey -> FileStats.joinCols(present))
     }
-    val rowsMeta = fileRows.map { fr =>
+    val rowsMeta = facts.flatMap(FileStats.rowsOf).map { fr =>
       Map(FileStats.rowsKey(dirName) -> fr.map(_._2).sum.toString,
         FileStats.fileRowsKey(dirName) -> FileStats.encodeFileRows(fr))
     }.getOrElse(Map.empty[String, String])
@@ -2093,9 +2052,8 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     val base = latest.getOrElse(throw new IllegalStateException(s"empty table at $root"))
     val cur = base.schema
     def disjoint(i: Int): Boolean =
-      base.meta.get(FileStats.dirKey(base.dirs(i)))
-        .flatMap(FileStats.surviving(_, preds, cur))
-        .exists(_.isEmpty)
+      FileStats.dirStats(base, i, preds.map(_.col).toSet)
+        .flatMap(_.surviving(preds, cur)).exists(_.isEmpty)
     val rewriteIdx = base.dirs.indices.filterNot(disjoint)
     if (rewriteIdx.isEmpty) return base
     val (clusterCols, clusterZ) = inheritedClustering(Some(base))

@@ -67,18 +67,14 @@ object LakeDml {
     if (preds.isEmpty || snap.dirs.isEmpty) return None
     var cand = 0L
     var total = 0L
-    snap.dirs.foreach { d =>
-      val blob = snap.meta.get(FileStats.dirKey(d))
-        .orElse(if (snap.dirs.size == 1) snap.meta.get(FileStats.MetaKey) else None)
-      blob match {
-        case Some(json) => FileStats.surviving(json, preds, snap.schema) match {
-          case Some(kept) =>
-            cand += kept.size
-            total += FileStats.fileCount(json)
-          case None => return None // stats don't cover the predicate columns
-        }
-        case None => return None // a dir without stats — bound is vacuous
-      }
+    val predCols = preds.map(_.col).toSet
+    snap.dirs.indices.foreach { i =>
+      val stats = FileStats.dirStats(snap, i, predCols)
+        .getOrElse(return None) // a dir without stats — bound is vacuous
+      val kept = stats.surviving(preds, snap.schema)
+        .getOrElse(return None) // stats don't cover the predicate columns
+      cand += kept.size
+      total += stats.files.size
     }
     Some((cand, total))
   }
@@ -208,12 +204,11 @@ object LakeDml {
       table.read(Some(base.version)), cond).getOrElse(return None)
     if (covers.isEmpty) return None
     val full = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val coverCols = covers.map(_.col).toSet
     base.dirs.indices.foreach { i =>
-      val blob = base.meta.get(FileStats.dirKey(base.dirs(i)))
-        .orElse(if (base.dirs.size == 1) base.meta.get(FileStats.MetaKey) else None)
-        .getOrElse(return None)
-      if (FileStats.blobFullyMatches(blob, covers)) full += i
-      else if (!FileStats.blobNoneMatch(blob, covers)) return None // partial
+      val stats = FileStats.dirStats(base, i, coverCols).getOrElse(return None)
+      if (stats.allMatch(covers)) full += i
+      else if (!stats.noneMatch(covers)) return None // partial
     }
     if (full.isEmpty) return None // pure no-op is the zero-candidate case
     val keepIdx = base.dirs.indices.filterNot(full.contains)

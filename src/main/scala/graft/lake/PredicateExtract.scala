@@ -102,39 +102,30 @@ private[graft] object PredicateExtract {
     }.getOrElse(Nil)
 
   /** LOSSLESS covering extraction for metadata-DML proofs: Some only
-    * when EVERY conjunct of `cond` maps to a [[FileStats.Cover]] —
+    * when EVERY conjunct of `cond` maps to a [[FileStats.KeyPred]] —
     * strictness preserved (relaxing `>` to `>=` prunes soundly but
-    * proves unsoundly), values canonicalized to blob key space. Any
-    * unmappable conjunct (OR, functions, string/binary domains, null
-    * literal, unresolved attr) → None and the caller must not use the
-    * coverage proof.
+    * proves unsoundly), values typed by the column into the numeric
+    * key domain. Any unmappable conjunct (OR, functions, string/binary
+    * domains, null literal, unresolved attr) → None and the caller
+    * must not use the coverage proof.
     */
-  def covering(cond: Expression, attrs: AttributeSet): Option[Seq[FileStats.Cover]] = {
+  def covering(cond: Expression, attrs: AttributeSet): Option[Seq[FileStats.KeyPred]] = {
     import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala
-    def value(l: Literal): Option[BigDecimal] =
-      if (l.value == null) None
-      else FileStats.coverValue(convertToScala(l.value, l.dataType))
+    def cover(a: AttributeReference, op: String, l: Literal): Option[FileStats.KeyPred] =
+      if (!attrs.contains(a) || l.value == null) None
+      else FileStats.probeKey(convertToScala(l.value, l.dataType), a.dataType)
+        .filter(_.isLeft).map(k => new FileStats.KeyPred(a.name, op, Seq(Some(k))))
     val covers = conjuncts(cond).map {
-      case EqualTo(Attr(a), Lit(l)) if attrs.contains(a) =>
-        value(l).map(FileStats.Cover(a.name, "eq", _))
-      case EqualTo(Lit(l), Attr(a)) if attrs.contains(a) =>
-        value(l).map(FileStats.Cover(a.name, "eq", _))
-      case GreaterThanOrEqual(Attr(a), Lit(l)) if attrs.contains(a) =>
-        value(l).map(FileStats.Cover(a.name, "gteq", _))
-      case LessThanOrEqual(Lit(l), Attr(a)) if attrs.contains(a) =>
-        value(l).map(FileStats.Cover(a.name, "gteq", _))
-      case GreaterThan(Attr(a), Lit(l)) if attrs.contains(a) =>
-        value(l).map(FileStats.Cover(a.name, "gt", _))
-      case LessThan(Lit(l), Attr(a)) if attrs.contains(a) =>
-        value(l).map(FileStats.Cover(a.name, "gt", _))
-      case LessThanOrEqual(Attr(a), Lit(l)) if attrs.contains(a) =>
-        value(l).map(FileStats.Cover(a.name, "lteq", _))
-      case GreaterThanOrEqual(Lit(l), Attr(a)) if attrs.contains(a) =>
-        value(l).map(FileStats.Cover(a.name, "lteq", _))
-      case LessThan(Attr(a), Lit(l)) if attrs.contains(a) =>
-        value(l).map(FileStats.Cover(a.name, "lt", _))
-      case GreaterThan(Lit(l), Attr(a)) if attrs.contains(a) =>
-        value(l).map(FileStats.Cover(a.name, "lt", _))
+      case EqualTo(Attr(a), Lit(l))            => cover(a, "in", l)
+      case EqualTo(Lit(l), Attr(a))            => cover(a, "in", l)
+      case GreaterThanOrEqual(Attr(a), Lit(l)) => cover(a, "gteq", l)
+      case LessThanOrEqual(Lit(l), Attr(a))    => cover(a, "gteq", l)
+      case GreaterThan(Attr(a), Lit(l))        => cover(a, "gt", l)
+      case LessThan(Lit(l), Attr(a))           => cover(a, "gt", l)
+      case LessThanOrEqual(Attr(a), Lit(l))    => cover(a, "lteq", l)
+      case GreaterThanOrEqual(Lit(l), Attr(a)) => cover(a, "lteq", l)
+      case LessThan(Attr(a), Lit(l))           => cover(a, "lt", l)
+      case GreaterThan(Lit(l), Attr(a))        => cover(a, "lt", l)
       case _ => None
     }
     if (covers.exists(_.isEmpty)) None else Some(covers.flatten)
@@ -143,7 +134,7 @@ private[graft] object PredicateExtract {
   /** [[covering]] for a DataFrame-API condition (analysis only). */
   def coveringFromCondition(df: org.apache.spark.sql.DataFrame,
                             cond: org.apache.spark.sql.Column)
-      : Option[Seq[FileStats.Cover]] =
+      : Option[Seq[FileStats.KeyPred]] =
     scala.util.Try {
       df.where(cond).queryExecution.analyzed.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>

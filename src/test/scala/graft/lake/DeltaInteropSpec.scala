@@ -113,6 +113,31 @@ class DeltaInteropSpec extends AnyFunSuite {
     assert(sProbe.inputFiles.length < all)
   }
 
+  test("add.stats re-type the footer ranges per column, byte for byte") {
+    val loc = freshLoc()
+    val df = Seq(
+      (1L, 7, 0.1, BigDecimal("12.50"), "a", java.sql.Date.valueOf("2024-01-01"), true, "p"),
+      (2L, -3, 2.5e10, BigDecimal("-0.01"), "é", java.sql.Date.valueOf("2023-12-31"), false, "p"),
+      (3L, 0, -1.0, BigDecimal("3.00"), "😀", java.sql.Date.valueOf("2024-02-29"), true, "q"),
+      (4L, 9, 1.0, null, null, null, false, "q"))
+      .toDF("id", "n", "x", "dec", "s", "day", "flag", "part")
+      .withColumn("dec", $"dec".cast("decimal(10,2)"))
+    new DeltaExport(spark, loc).append(df.repartition(1), partitionBy = Seq("part"))
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val stats = new String(Files.readAllBytes(
+        new java.io.File(logDir(loc), f"${0}%020d.json").toPath), "UTF-8")
+      .split('\n').toSeq.map(om.readTree).flatMap(n => Option(n.get("add")))
+      .map(_.get("stats").asText).sorted
+    // booleans carry no stats; null counts are exact
+    assert(stats === Seq(
+      """{"numRecords":2,"minValues":{"id":1,"n":-3,"x":0.1,"dec":-0.01,"s":"a",""" +
+        """"day":"2023-12-31"},"maxValues":{"id":2,"n":7,"x":2.5E+10,"dec":12.50,"s":"é",""" +
+        """"day":"2024-01-01"},"nullCount":{"id":0,"n":0,"x":0,"dec":0,"s":0,"day":0}}""",
+      """{"numRecords":2,"minValues":{"id":3,"n":0,"x":-1.0,"dec":3.00,"s":"😀",""" +
+        """"day":"2024-02-29"},"maxValues":{"id":4,"n":9,"x":1.0,"dec":3.00,"s":"😀",""" +
+        """"day":"2024-02-29"},"nullCount":{"id":0,"n":0,"x":0,"dec":1,"s":1,"day":1}}"""))
+  }
+
   test("checkpoint bounds replay: log truncated to the tail still reads") {
     val loc = freshLoc()
     val exp = new DeltaExport(spark, loc)
@@ -149,6 +174,45 @@ class DeltaInteropSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       exp.deleteWhere(Seq(LakePredicate.EqualTo("id", 5L)))
     }
+  }
+
+  /** A partition delete may only tombstone what it PROVES matches:
+    * an undecidable predicate fails the call and writes no commit.
+    */
+  private def assertUndecidableDelete(df: org.apache.spark.sql.DataFrame, part: String,
+                                      probe: LakePredicate): Unit = {
+    val loc = freshLoc()
+    val exp = new DeltaExport(spark, loc)
+    exp.append(df, partitionBy = Seq(part))
+    val before = new DeltaTableReader(spark, loc).read().count()
+    val e = intercept[IllegalArgumentException](exp.deleteWhere(Seq(probe)))
+    assert(e.getMessage.contains(s"'$part'"), e.getMessage)
+    val rdr = new DeltaTableReader(spark, loc)
+    assert(rdr.latestVersion === Some(0L))
+    assert(rdr.read().count() === before)
+  }
+
+  test("partition delete: a null probe deletes nothing, a null partition value is kept") {
+    val loc = freshLoc()
+    val exp = new DeltaExport(spark, loc)
+    val df = Seq((1L, Some(1)), (2L, Some(2)), (3L, None)).toDF("id", "p")
+    exp.append(df, partitionBy = Seq("p"))
+    exp.deleteWhere(Seq(LakePredicate.EqualTo("p", 1)))
+    assert(new DeltaTableReader(spark, loc).read().orderBy($"id")
+      .select($"id").as[Long].collect().toSeq === Seq(2L, 3L))
+    assertUndecidableDelete(df, "p", LakePredicate.EqualTo("p", null))
+  }
+
+  test("partition delete: a Timestamp probe on a DATE partition is undecidable") {
+    val df = Seq((1L, java.sql.Date.valueOf("2024-01-01")),
+      (2L, java.sql.Date.valueOf("2024-01-02"))).toDF("id", "day")
+    assertUndecidableDelete(df, "day",
+      LakePredicate.EqualTo("day", java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
+  }
+
+  test("partition delete: a non-numeric string on an INT partition is undecidable") {
+    val df = Seq((1L, 1), (2L, 2)).toDF("id", "p")
+    assertUndecidableDelete(df, "p", LakePredicate.EqualTo("p", "x"))
   }
 
   test("unsupported protocol surface fails loud") {

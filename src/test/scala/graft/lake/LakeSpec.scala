@@ -291,15 +291,16 @@ class LakeSpec extends AnyFunSuite {
     spark.range(0, 3200).select($"id", ($"id" % 7).cast("double").as("v"))
       .repartition(32).write.mode("overwrite").parquet(dir.toString)
     FileStats.peakFooterReads.set(0)
-    val blob = FileStats.collectFromFooters(io, hdir, Seq("id", "v"))
-    assert(blob.isDefined)
-    assert(FileStats.fileCount(blob.get) === 32)
+    val stats = FileStats.statsOf(Seq("id", "v"),
+      FileStats.footerMeta(io, hdir, Seq("id", "v"), FileStats.listParquet(io, hdir)))
+    assert(stats.isDefined)
+    assert(stats.get.files.size === 32)
     // 32 submitted reads against a 16-thread pool must overlap
     assert(FileStats.peakFooterReads.get() > 1,
       s"footer harvest ran serially (peak=${FileStats.peakFooterReads.get()})")
     // fan-out changed the I/O schedule, not the answer: global range is
     // exact and every file is listed
-    assert(FileStats.blobNumericRange(blob.get, "id") ===
+    assert(stats.get.numericRange("id") ===
       Some((BigDecimal(0), BigDecimal(3199))))
     // row-count harvest rides the same pool
     FileStats.peakFooterReads.set(0)

@@ -891,8 +891,9 @@ final class DeltaExport(spark: SparkSession, location: String) {
     * rewritten). A file some predicate provably fails is kept (a null
     * partition value satisfies none); a file no predicate disproves
     * but some predicate cannot decide (a probe of another type than
-    * its column, a null probe, an unparseable value) fails the call
-    * before any commit is written — deleting data is never a guess.
+    * its column — a numeric string on an INT column included — a null
+    * probe, an unparseable value) fails the call before any commit is
+    * written: deleting data is never a guess.
     */
   def deleteWhere(filters: Seq[LakePredicate]): Long = {
     val st = state()
@@ -916,7 +917,8 @@ final class DeltaExport(spark: SparkSession, location: String) {
       val undecided = tests.zip(verdicts).collectFirst { case (t, None) => t.col }
       !verdicts.contains(Some(false)) && {
         require(undecided.isEmpty, s"deleteWhere cannot decide its predicate on column " +
-          s"'${undecided.get}' for ${a.path}; refusing to guess which data to delete")
+          s"'${undecided.get}' (${typeOf(undecided.get).simpleString}) for ${a.path}; " +
+          "pass a non-null probe of the column's type")
         true
       }
     }

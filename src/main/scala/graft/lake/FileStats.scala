@@ -189,8 +189,11 @@ private[graft] object FileStats {
           _: DecimalType, n: java.lang.Number) => toKey(n)
     case (DateType, d: java.sql.Date) => toKey(d)
     case (DateType, d: java.time.LocalDate) => Some(Left(BigDecimal(d.toEpochDay)))
-    case (TimestampType | TimestampNTZType, t: java.sql.Timestamp) => toKey(t)
+    case (TimestampType, t: java.sql.Timestamp) => toKey(t)
     case (TimestampType, i: java.time.Instant) => Some(Left(BigDecimal(micros(i))))
+    // NTZ keys are wall micros taken as UTC; a Timestamp's wall time is
+    // its JVM-default-zone local time, as Spark reads it
+    case (TimestampNTZType, t: java.sql.Timestamp) => probeKey(t.toLocalDateTime, dt)
     case (TimestampNTZType, t: java.time.LocalDateTime) =>
       Some(Left(BigDecimal(micros(t.toInstant(java.time.ZoneOffset.UTC)))))
     case (BooleanType, b: java.lang.Boolean) => toKey(b)
@@ -397,7 +400,7 @@ private[graft] object FileStats {
       * planning decodes the keys of the columns it probes and no more.
       * Legacy blobs without null counts decode them as unknown (-1).
       */
-    def decode(json: String, only: String => Boolean = _ => true): DirStats = {
+    def decode(json: String, only: String => Boolean): DirStats = {
       val node = om.readTree(json)
       val all = node.get("cols")
       val idx = (0 until all.size()).filter(i => only(all.get(i).asText())).toIndexedSeq
@@ -418,7 +421,7 @@ private[graft] object FileStats {
     * dir is the snapshot's sole one — the blob describes exactly that
     * commit.
     */
-  def dirStats(snap: Snapshot, i: Int, only: String => Boolean = _ => true): Option[DirStats] =
+  def dirStats(snap: Snapshot, i: Int, only: String => Boolean): Option[DirStats] =
     snap.meta.get(dirKey(snap.dirs(i)))
       .orElse(if (snap.dirs.size == 1) snap.meta.get(MetaKey) else None)
       .map(DirStats.decode(_, only))

@@ -212,6 +212,27 @@ class PruningSpec extends AnyFunSuite {
     assert(t.scan(Seq(probe)).count() === 4L)
   }
 
+  test("a Timestamp probe on a TIMESTAMP_NTZ column keys by its wall time outside UTC") {
+    val saved = java.util.TimeZone.getDefault
+    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("Etc/GMT-2")) // UTC+2
+    try {
+      val wall = "2024-01-01 07:00:00"
+      val t = Timestamp.valueOf(wall)
+      // NTZ partition values and stats are wall micros taken as UTC
+      assert(FileStats.probeKey(t, TimestampNTZType) === DeltaFormat.key(TimestampNTZType, wall))
+      assert(FileStats.probeKey(t, TimestampNTZType) ===
+        DeltaFormat.key(TimestampNTZType, DeltaFormat.serializePartitionValue(t)))
+      // a zoned column keys the instant; its zoneless partition string is JVM-default time
+      assert(FileStats.probeKey(t, TimestampType) ===
+        DeltaFormat.key(TimestampType, DeltaFormat.serializePartitionValue(t)))
+      // deleteWhere's proof: the 07:00 partition, never the 05:00 one
+      val eq = FileStats.KeyPred(LakePredicate.EqualTo("p", t), TimestampNTZType)
+      assert(eq.allMatch(FileStats.ColRange.point(DeltaFormat.key(TimestampNTZType, wall))))
+      assert(!eq.mayMatch(FileStats.ColRange.point(
+        DeltaFormat.key(TimestampNTZType, "2024-01-01 05:00:00"))))
+    } finally java.util.TimeZone.setDefault(saved)
+  }
+
   test("seeded differential: pruned native, Delta and Iceberg reads equal a plain filter") {
     val rnd = new scala.util.Random(20240101L)
     val strs = Seq("a", "z", "é", Replacement, Grin)

@@ -1,19 +1,21 @@
 #!/usr/bin/env python3
 """Change in non-blank, non-comment Scala lines between two commits.
 
-    python3 tools/loc_diff.py <base> [<head>] [--path PREFIX]
+    python3 tools/loc_diff.py <base> [<head>]
 
-Counts, for every .scala file under PREFIX (default src/main/scala) at
-<base> and at <head> (default HEAD), the lines that still hold code once
-`//` and `/* ... */` comments (scaladoc included, nesting honoured) are
-removed and blank lines dropped; string and character literals are
-respected, so a "//" inside a string is code. Prints one row per file
+Counts, for every .scala file under src/main/scala at <base> and at
+<head> (default HEAD), the lines that still hold code once `//` and
+`/* ... */` comments (scaladoc included, nesting honoured) are removed
+and blank lines dropped; string and character literals are respected,
+so a "//" inside a string is code. Prints one row per file
 whose count changed (base, head, delta, path) and a TOTAL row. Deleted
 comments therefore do not count as removed code.
 """
 import argparse
 import subprocess
 import sys
+
+PREFIX = "src/main/scala"
 
 
 def git(*args):
@@ -108,9 +110,8 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("base")
     ap.add_argument("head", nargs="?", default="HEAD")
-    ap.add_argument("--path", default="src/main/scala")
     a = ap.parse_args()
-    base_files, head_files = files_at(a.base, a.path), files_at(a.head, a.path)
+    base_files, head_files = files_at(a.base, PREFIX), files_at(a.head, PREFIX)
     rows, tb, th = [], 0, 0
     for p in sorted(base_files | head_files):
         b = count(a.base, p) if p in base_files else 0
@@ -121,7 +122,7 @@ def main():
     print(f"{'base':>7} {'head':>7} {'delta':>7}  path")
     for b, h, d, p in rows:
         print(f"{b:7d} {h:7d} {d:+7d}  {p}")
-    print(f"{tb:7d} {th:7d} {th - tb:+7d}  TOTAL ({a.path})")
+    print(f"{tb:7d} {th:7d} {th - tb:+7d}  TOTAL ({PREFIX})")
 
 
 if __name__ == "__main__":

@@ -2,7 +2,7 @@ package graft.lake
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
@@ -124,10 +124,77 @@ object DeltaFormat {
   */
 private[graft] final case class DeltaAddFile(
     path: String, partitionValues: Seq[(String, String)], size: Long,
-    statsJson: Option[String], dvJson: Option[String] = None)
+    statsJson: Option[String], dv: Option[DeltaDv.Descriptor] = None)
+
+/** A `metaData` action: the logical schema as written, the partition
+  * columns and the column-mapping mode.
+  */
+private[lake] final case class DeltaMeta(schemaJson: String, partitionColumns: Seq[String],
+                                          mappingMode: String) {
+  lazy val schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+}
+
+/** One decoded log action: every reader of commit files and
+  * checkpoints decodes through [[DeltaAction.decode]].
+  */
+private[lake] sealed trait DeltaAction
+
+private[lake] object DeltaAction {
+  final case class Add(file: DeltaAddFile, dataChange: Boolean) extends DeltaAction
+  final case class Remove(path: String, dataChange: Boolean) extends DeltaAction
+  final case class Meta(meta: DeltaMeta) extends DeltaAction
+  final case class Protocol(node: JsonNode) extends DeltaAction
+  final case class Info(timestampMs: Option[Long]) extends DeltaAction
+
+  private val om = new ObjectMapper()
+
+  /** The action a log line (or a checkpoint row as JSON) carries. */
+  def decode(line: String): Option[DeltaAction] = {
+    val n = om.readTree(line)
+    def field(node: JsonNode, k: String): Option[JsonNode] = Option(node.get(k)).filter(!_.isNull)
+    def dataChange(a: JsonNode): Boolean = field(a, "dataChange").forall(_.asBoolean)
+    field(n, "add").map { a =>
+      val pv = field(a, "partitionValues").map(_.properties().asScala.toSeq.map(e =>
+        e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText))).getOrElse(Nil)
+      val dv = field(a, "deletionVector").map(d => DeltaDv.Descriptor(
+        d.get("storageType").asText, d.get("pathOrInlineDv").asText,
+        field(d, "offset").map(_.asLong), d.get("sizeInBytes").asInt, d.get("cardinality").asLong))
+      Add(DeltaAddFile(a.get("path").asText, pv, field(a, "size").map(_.asLong).getOrElse(0L),
+        field(a, "stats").map(_.asText).filter(_.nonEmpty), dv), dataChange(a))
+    }.orElse(field(n, "remove").map(r => Remove(r.get("path").asText, dataChange(r))))
+      .orElse(field(n, "metaData").map { m =>
+        Meta(DeltaMeta(m.get("schemaString").asText,
+          field(m, "partitionColumns").map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil),
+          field(m, "configuration").flatMap(field(_, "delta.columnMapping.mode"))
+            .map(_.asText).getOrElse("none")))
+      })
+      .orElse(field(n, "protocol").map(Protocol))
+      .orElse(field(n, "commitInfo").map(ci => Info(field(ci, "timestamp").map(_.asLong))))
+  }
+}
+
+private object DeltaTableReader {
+  /** One `_delta_log` listing: commit files and complete checkpoints
+    * (every part present) by version.
+    */
+  final case class LogListing(commits: Map[Long, FileStatus],
+                              checkpoints: Map[Long, Seq[FileStatus]]) {
+    def latest: Option[Long] = (commits.keys ++ checkpoints.keys).maxOption
+  }
+
+  /** Table state at one version: live adds, newest metaData and
+    * protocol.
+    */
+  final case class Replayed(adds: Seq[DeltaAddFile], metaData: Option[DeltaMeta],
+                            protocol: Option[JsonNode]) {
+    def meta: DeltaMeta =
+      metaData.getOrElse(throw new IllegalStateException("no metaData action in log"))
+  }
+}
 
 final class DeltaTableReader(spark: SparkSession, location: String) {
   import DeltaFormat._
+  import DeltaTableReader.{LogListing, Replayed}
 
   private val om = new ObjectMapper()
   private[lake] val io = new LakeIo(
@@ -135,132 +202,99 @@ final class DeltaTableReader(spark: SparkSession, location: String) {
   private val root: HPath = io.qualify(new HPath(location))
   private def logDir = new HPath(root, "_delta_log")
 
-  private def commitName(v: Long) = f"$v%020d.json"
-  private def versionOf(name: String): Long = name.take(20).toLong
+  private val Commit = """(\d{20})\.json""".r
+  private val Checkpoint = """(\d{20})\.checkpoint(?:\.\d{10}\.(\d{10}))?\.parquet""".r
 
-  /** Commit versions present as JSON files, ascending. */
-  private def jsonVersions(): Seq[Long] =
-    io.list(logDir).map(_.getPath.getName)
-      .filter(_.matches("\\d{20}\\.json")).map(versionOf).sorted
-
-  private def checkpointVersions(): Seq[Long] =
-    io.list(logDir).map(_.getPath.getName)
-      .filter(_.matches("\\d{20}\\.checkpoint(\\.\\d{10}\\.\\d{10})?\\.parquet"))
-      .map(versionOf).distinct.sorted
-
-  /** `_last_checkpoint` hint, if present: (version, parts). */
-  private def lastCheckpointHint(): Option[(Long, Int)] = {
-    val p = new HPath(logDir, "_last_checkpoint")
-    if (!io.exists(p)) None
-    else {
-      val n = om.readTree(io.readString(p))
-      Some((n.get("version").asLong,
-        Option(n.get("parts")).map(_.asInt).getOrElse(1)))
+  private def listLog(): LogListing = {
+    val files = io.list(logDir).map(s => (s.getPath.getName, s))
+    val checkpoints = files.collect { case (Checkpoint(v, parts), s) =>
+      (v.toLong, Option(parts).fold(1)(_.toInt), s)
+    }.groupBy(c => (c._1, c._2)).collect {
+      case ((v, parts), fs) if fs.size == parts => v -> fs.map(_._3).sortBy(_.getPath.getName)
     }
+    LogListing(files.collect { case (Commit(v), s) => v.toLong -> s }.toMap, checkpoints)
   }
 
-  def latestVersion: Option[Long] =
-    (jsonVersions() ++ checkpointVersions()).maxOption
+  def latestVersion: Option[Long] = listLog().latest
+
+  private def latestOf(log: LogListing): Long =
+    log.latest.getOrElse(throw new IllegalArgumentException(s"no Delta log at $logDir"))
+
+  private def commitActions(p: HPath): Seq[DeltaAction] =
+    io.readString(p).split('\n').iterator.map(_.trim).filter(_.nonEmpty)
+      .flatMap(DeltaAction.decode).toSeq
 
   /** Commit timestamps for timestamp-based time travel: commitInfo's
     * timestamp when recorded, else the log file's modification time
     * (the protocol's defined fallback).
     */
-  private def commitTimestampMs(v: Long): Long = {
-    val p = new HPath(logDir, commitName(v))
-    val fromInfo =
-      try io.readString(p).split('\n').iterator.map(_.trim).filter(_.nonEmpty)
-        .map(om.readTree).flatMap(n => Option(n.get("commitInfo")))
-        .flatMap(ci => Option(ci.get("timestamp")).map(_.asLong))
-        .nextOption()
-      catch { case _: Exception => None }
-    fromInfo.orElse(io.mtimeMs(p)).getOrElse(0L)
-  }
+  private def commitTimestampMs(s: FileStatus): Long =
+    (try commitActions(s.getPath).collectFirst { case DeltaAction.Info(Some(ts)) => ts }
+     catch { case _: Exception => None }).getOrElse(s.getModificationTime)
 
-  private final class Replay {
-    val adds = scala.collection.mutable.LinkedHashMap[String, DeltaAddFile]()
-    var metaData: Option[JsonNode] = None
-    var protocol: Option[JsonNode] = None
-
-    def applyAction(n: JsonNode): Unit = {
-      Option(n.get("metaData")).filter(!_.isNull).foreach(m => metaData = Some(m))
-      Option(n.get("protocol")).filter(!_.isNull).foreach(p => protocol = Some(p))
-      Option(n.get("add")).filter(!_.isNull).foreach { a =>
-        val pv = Option(a.get("partitionValues")).filter(!_.isNull)
-          .map(m => m.properties().asScala.toSeq.map(e =>
-            e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText)))
-          .getOrElse(Nil)
-        val path = a.get("path").asText
-        val dv = Option(a.get("deletionVector")).filter(!_.isNull)
-          .map(d => new ObjectMapper().writeValueAsString(d))
-        adds(path) = DeltaAddFile(path, pv,
-          Option(a.get("size")).map(_.asLong).getOrElse(0L),
-          Option(a.get("stats")).filter(n => !n.isNull && n.asText.nonEmpty)
-            .map(_.asText), dv)
-      }
-      Option(n.get("remove")).filter(!_.isNull).foreach { r =>
-        adds.remove(r.get("path").asText); ()
-      }
+  /** Replayed states by version. Commit files and checkpoints are
+    * write-once (put-if-absent publish), so a version's state never
+    * changes; the (name, mtime, length) of every log file a replay
+    * used guards the one reuse case (a table dropped and rewritten at
+    * the same location), as the native manifest cache does.
+    */
+  private val MaxCached = 8
+  private val replays =
+    new java.util.LinkedHashMap[Long, (Seq[(String, Long, Long)], Replayed)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Long, (Seq[(String, Long, Long)], Replayed)]): Boolean =
+        size() > MaxCached
     }
-  }
 
   /** Replay the log to `version` (or latest). Driver cost: one
-    * checkpoint parquet read + the JSON tail — never data files.
+    * checkpoint parquet read + the JSON tail — never data files — and
+    * nothing but the listing when the version was replayed before.
     */
-  private def replayTo(version: Option[Long]): (Replay, Long) = {
-    val jsons = jsonVersions()
-    val cps = checkpointVersions()
-    val latest = (jsons ++ cps).maxOption.getOrElse(
-      throw new IllegalArgumentException(s"no Delta log at $logDir"))
+  private def replayTo(log: LogListing, version: Option[Long]): (Replayed, Long) = {
+    val latest = latestOf(log)
     val target = version.getOrElse(latest)
     require(target <= latest, s"version $target beyond latest $latest")
-    val r = new Replay
-    // newest usable checkpoint at or below target; hint is only an
-    // optimization and must not be trusted past the target version
-    val cp = cps.filter(_ <= target).maxOption
-    cp.foreach { cv =>
-      val parts = lastCheckpointHint() match {
-        case Some((v, p)) if v == cv => p
-        case _ =>
-          val multi = io.list(logDir).map(_.getPath.getName)
-            .filter(_.matches(f"$cv%020d\\.checkpoint\\.\\d{10}\\.\\d{10}\\.parquet"))
-          if (multi.nonEmpty) multi.size else 1
-      }
-      val paths: Seq[String] =
-        if (parts == 1) Seq(new HPath(logDir, f"$cv%020d.checkpoint.parquet").toString)
-        else (1 to parts).map(i =>
-          new HPath(logDir, f"$cv%020d.checkpoint.$i%010d.$parts%010d.parquet").toString)
-      val cpDf = spark.read.parquet(paths: _*)
-      // project through JSON to reuse one action-shape parser for both
-      // log and checkpoint forms. The collect is METADATA-bounded: one
-      // row per live file/txn action (what Delta itself replays on the
-      // driver), never data rows — ~100 bytes × live-file count, so
-      // even a million-file table stays ~100 MB of driver transit.
-      cpDf.toJSON.collect().foreach(line => r.applyAction(om.readTree(line)))
-    }
+    val cp = log.checkpoints.keys.filter(_ <= target).maxOption
     val from = cp.map(_ + 1).getOrElse(0L)
-    val need = (from to target).filter(v => jsons.contains(v))
-    require(cp.isDefined || jsons.headOption.contains(0L),
-      s"log truncated before any checkpoint: earliest commit ${jsons.headOption}")
-    require(need.size == (target - from + 1),
-      s"missing commit files in [$from, $target] at $logDir")
-    need.foreach { v =>
-      io.readString(new HPath(logDir, commitName(v))).split('\n')
-        .iterator.map(_.trim).filter(_.nonEmpty)
-        .foreach(line => r.applyAction(om.readTree(line)))
+    require(cp.isDefined || log.commits.contains(0L),
+      s"log truncated before any checkpoint: earliest commit ${log.commits.keys.minOption}")
+    val tail = (from to target).flatMap(log.commits.get)
+    require(tail.size == (target - from + 1), s"missing commit files in [$from, $target] at $logDir")
+    val used = cp.toSeq.flatMap(log.checkpoints) ++ tail
+    val stamp = used.map(s => (s.getPath.getName, s.getModificationTime, s.getLen))
+    val hit = replays.synchronized(Option(replays.get(target)).collect { case (`stamp`, r) => r })
+    val r = hit.getOrElse {
+      // checkpoint rows go through JSON so one decoder serves both log
+      // forms. The collect is METADATA-bounded: one row per live
+      // file/txn action (what Delta itself replays on the driver)
+      val cpActions = cp.toSeq.flatMap(v => spark.read.parquet(
+        log.checkpoints(v).map(_.getPath.toString): _*).toJSON.collect().flatMap(DeltaAction.decode))
+      val adds = scala.collection.mutable.LinkedHashMap[String, DeltaAddFile]()
+      var meta: Option[DeltaMeta] = None
+      var protocol: Option[JsonNode] = None
+      (cpActions.iterator ++ tail.iterator.flatMap(s => commitActions(s.getPath))).foreach {
+        case DeltaAction.Add(f, _)      => adds(f.path) = f
+        case DeltaAction.Remove(p, _)   => adds.remove(p)
+        case DeltaAction.Meta(m)        => meta = Some(m)
+        case DeltaAction.Protocol(p)    => protocol = Some(p)
+        case DeltaAction.Info(_)        => ()
+      }
+      val fresh = Replayed(adds.values.toIndexedSeq, meta, protocol)
+      replays.synchronized(replays.put(target, (stamp, fresh)))
+      fresh
     }
     (r, target)
   }
 
   /** Replayed table state at a version, for the exporter: live adds
-    * (stats preserved), newest metaData, newest protocol, the resolved
-    * version. Protocol-validated.
+    * (stats preserved), newest metaData, the resolved version.
+    * Protocol-validated.
     */
   private[lake] def stateAt(version: Option[Long])
-      : (Seq[DeltaAddFile], Option[JsonNode], Option[JsonNode], Long) = {
-    val (r, v) = replayTo(version)
+      : (Seq[DeltaAddFile], Option[DeltaMeta], Long) = {
+    val (r, v) = replayTo(listLog(), version)
     checkProtocol(r)
-    (r.adds.values.toSeq, r.metaData, r.protocol, v)
+    (r.adds, r.metaData, v)
   }
 
   /** Protocol gate. `allowNameMapping` is granted ONLY by the batch
@@ -271,7 +305,7 @@ final class DeltaTableReader(spark: SparkSession, location: String) {
     * parquet resolution) is unsupported everywhere and always fails
     * with a clear message.
     */
-  private def checkProtocol(r: Replay, allowNameMapping: Boolean = false): Unit = {
+  private def checkProtocol(r: Replayed, allowNameMapping: Boolean = false): Unit = {
     val minReader = r.protocol.flatMap(p => Option(p.get("minReaderVersion")))
       .map(_.asInt).getOrElse(1)
     val features: Seq[String] = r.protocol.flatMap(p => Option(p.get("readerFeatures")))
@@ -282,20 +316,16 @@ final class DeltaTableReader(spark: SparkSession, location: String) {
     require(unsupported.isEmpty,
       s"table requires unsupported reader features: ${unsupported.mkString(", ")}")
     require(minReader <= 3, s"unsupported minReaderVersion $minReader")
-    val mapping = mappingMode(r)
-    val ok = mapping == "none" || (mapping == "name" && allowNameMapping)
-    require(ok, if (mapping == "name")
-      s"column mapping mode 'name' is only supported for batch reads, not this access path"
-    else
-      s"column mapping mode '$mapping' is not supported " +
-        "(id-mode parquet field resolution; rewrite the table with " +
-        "name mapping or no mapping)")
+    checkMapping(r.metaData.fold("none")(_.mappingMode), allowNameMapping)
   }
 
-  private def mappingMode(r: Replay): String =
-    r.metaData.flatMap(m => Option(m.get("configuration")))
-      .filter(!_.isNull).flatMap(c => Option(c.get("delta.columnMapping.mode")))
-      .map(_.asText).getOrElse("none")
+  private def checkMapping(mode: String, allowName: Boolean): Unit =
+    require(mode == "none" || (mode == "name" && allowName), if (mode == "name")
+      s"column mapping mode 'name' is only supported for batch reads, not this access path"
+    else
+      s"column mapping mode '$mode' is not supported " +
+        "(id-mode parquet field resolution; rewrite the table with " +
+        "name mapping or no mapping)")
 
   private val PhysicalNameKey = "delta.columnMapping.physicalName"
 
@@ -317,11 +347,9 @@ final class DeltaTableReader(spark: SparkSession, location: String) {
   }
 
   def schema(version: Option[Long] = None): StructType = {
-    val (r, _) = replayTo(version)
+    val (r, _) = replayTo(listLog(), version)
     checkProtocol(r, allowNameMapping = true) // schemaString IS logical
-    DataType.fromJson(r.metaData.getOrElse(
-      throw new IllegalStateException("no metaData action in log"))
-      .get("schemaString").asText).asInstanceOf[StructType]
+    r.meta.schema
   }
 
   /** Read the table at `versionAsOf` / `timestampAsOf` (default
@@ -329,22 +357,16 @@ final class DeltaTableReader(spark: SparkSession, location: String) {
     */
   def read(versionAsOf: Option[Long] = None, timestampAsOf: Option[Long] = None,
            filters: Seq[LakePredicate] = Nil): DataFrame = {
-    val version = (versionAsOf, timestampAsOf) match {
-      case (Some(v), _) => Some(v)
-      case (None, Some(ts)) =>
-        val eligible = jsonVersions().filter(v => commitTimestampMs(v) <= ts)
-        require(eligible.nonEmpty, s"no commit at or before $ts")
-        Some(eligible.max)
-      case _ => None
-    }
-    val (r, _) = replayTo(version)
+    val log = listLog()
+    val version = versionAsOf.orElse(timestampAsOf.map { ts =>
+      val eligible = log.commits.filter(c => commitTimestampMs(c._2) <= ts).keys
+      require(eligible.nonEmpty, s"no commit at or before $ts")
+      eligible.max
+    })
+    val (r, _) = replayTo(log, version)
     checkProtocol(r, allowNameMapping = true)
-    val meta = r.metaData.getOrElse(
-      throw new IllegalStateException("no metaData action in log"))
-    val tableSchema =
-      DataType.fromJson(meta.get("schemaString").asText).asInstanceOf[StructType]
-    val partCols: Seq[String] = Option(meta.get("partitionColumns"))
-      .filter(!_.isNull).map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil)
+    val tableSchema = r.meta.schema
+    val partCols = r.meta.partitionColumns
     val typeOf: Map[String, DataType] =
       tableSchema.fields.map(f => f.name -> f.dataType).toMap
     // name mapping: the log keys partitionValues/stats and the parquet
@@ -381,64 +403,58 @@ final class DeltaTableReader(spark: SparkSession, location: String) {
         }
     }
 
-    val live = r.adds.values.toSeq.filter(partitionKeeps).filter(statsKeep)
-    val (dvFiles, plainFiles) = live.partition(_.dvJson.isDefined)
-    // the relation is assembled entirely under PHYSICAL names (files,
+    val live = r.adds.filter(partitionKeeps).filter(statsKeep)
+    // the scan runs entirely under PHYSICAL names (files,
     // partitionValues and DV coordinates all live there); toLogical
     // renames once at the end — identity when there is no mapping
     val physSchema = toPhysical(tableSchema).asInstanceOf[StructType]
-    val physPartCols = partCols.map(c => physOfTop.getOrElse(c, c))
-    def toLogical(df: DataFrame): DataFrame =
-      if (physSchema == tableSchema) df
-      else df.select(tableSchema.fields.map(f =>
-        // positional struct cast renames NESTED physical fields back
-        col(physOfTop(f.name)).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-    val plainDf = relationFor(plainFiles, physSchema, physPartCols)
-    if (dvFiles.isEmpty) return toLogical(plainDf)
-    // deletion vectors: the driver fetches each file's COMPRESSED
-    // bitmap (bounded by the descriptors' sizeInBytes), executors
-    // expand to (file, position) rows, and one anti-join on
-    // (canonical path, row_index) drops the deleted rows — the same
-    // coordinate shape as the Iceberg position-delete path
-    val withPos = relationFor(dvFiles, physSchema, physPartCols, withPos = true)
-    val posRows: Seq[(String, Array[Byte])] = dvFiles.map { f =>
-      val d = parseDvDescriptor(f.dvJson.get)
-      (canonStr(new HPath(root, decodePath(f.path)).toString),
-        DeltaDv.readBitmap(io, root, d))
+    val df = scanFiles(live, physSchema, partCols.map(c => physOfTop.getOrElse(c, c)),
+      deletes = deletionVectors(live), partitionKey = k => physOfTop.getOrElse(k, k))
+    if (physSchema == tableSchema) df
+    else df.select(tableSchema.fields.map(f =>
+      // positional struct cast renames NESTED physical fields back
+      col(physOfTop(f.name)).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
+  }
+
+  /** Scan `files` as `schema` with their partition values typed by
+    * it; `partitionKey` maps a log key to its column name.
+    */
+  private[graft] def scanFiles(files: Seq[DeltaAddFile], schema: StructType, partCols: Seq[String],
+                               deletes: ScanDeletes = ScanDeletes(), only: Option[ScanDeletes] = None,
+                               coordinates: Boolean = false,
+                               partitionKey: String => String = identity): DataFrame = {
+    val tasks = files.map { f =>
+      val byCol = f.partitionValues.map { case (k, v) => partitionKey(k) -> v }.toMap
+      FileTask(pathOf(f), partCols.map(c => byCol.getOrElse(c,
+        throw new IllegalStateException(s"partition column $c missing from ${f.path}"))))
     }
-    val sp = spark
-    import sp.implicits._
-    val posDf = sp.createDataset(posRows)
-      .flatMap { case (f, b) => Roaring64.decode(b).map(p => (f, p)) }
-      .toDF("_gr_dfile", "_gr_dpos")
-    val applied = withPos.join(posDf,
-        IcebergFormat.canonPath(col("_gr_file")) === col("_gr_dfile") &&
-          col("_gr_pos") === col("_gr_dpos"),
-        "left_anti")
-      .select(physSchema.fieldNames.map(col).toIndexedSeq: _*)
-    toLogical(if (plainFiles.isEmpty) applied else plainDf.unionByName(applied))
+    TaskScan.scan(spark, tasks, schema, partCols, deletes, only, coordinates = coordinates)
   }
 
-  private[graft] def parseDvDescriptor(js: String): DeltaDv.Descriptor = {
-    val n = om.readTree(js)
-    DeltaDv.Descriptor(n.get("storageType").asText, n.get("pathOrInlineDv").asText,
-      Option(n.get("offset")).filter(!_.isNull).map(_.asLong),
-      n.get("sizeInBytes").asInt, n.get("cardinality").asLong)
-  }
+  private def pathOf(f: DeltaAddFile): String = new HPath(root, decodePath(f.path)).toString
 
-  private[graft] def canonStr(p: String): String =
-    p.replaceFirst("^([a-zA-Z0-9+.-]+):/+", "$1:/")
+  /** Deletion vectors of `files` as position deletes at their own
+    * file's sequence: the driver fetches each COMPRESSED bitmap
+    * (bounded by the descriptors' sizeInBytes), executors expand them
+    * to (file, position) rows.
+    */
+  private def deletionVectors(files: Seq[DeltaAddFile]): ScanDeletes = {
+    val bitmaps = files.flatMap(f => f.dv.map(d => (pathOf(f), DeltaDv.readBitmap(io, root, d))))
+    if (bitmaps.isEmpty) ScanDeletes()
+    else {
+      val sp = spark
+      import sp.implicits._
+      ScanDeletes(positions = Some(sp.createDataset(bitmaps)
+        .flatMap { case (f, b) => Roaring64.decode(b).map(p => (f, p)) }
+        .toDF("file_path", "pos").withColumn(TaskScan.SeqCol, lit(0L))))
+    }
+  }
 
   /** Table schema + partition columns at a version (streaming pin). */
   private[graft] def metaInfo(version: Option[Long]): (StructType, Seq[String]) = {
-    val (r, _) = replayTo(version)
+    val (r, _) = replayTo(listLog(), version)
     checkProtocol(r)
-    val meta = r.metaData.getOrElse(
-      throw new IllegalStateException("no metaData action in log"))
-    val ts = DataType.fromJson(meta.get("schemaString").asText).asInstanceOf[StructType]
-    val pc = Option(meta.get("partitionColumns"))
-      .filter(!_.isNull).map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil)
-    (ts, pc)
+    (r.meta.schema, r.meta.partitionColumns)
   }
 
   /** Per-commit action summary for the streaming source: dataChange
@@ -448,69 +464,19 @@ final class DeltaTableReader(spark: SparkSession, location: String) {
     * per-commit actions).
     */
   private[graft] def commitSummary(v: Long): (Seq[DeltaAddFile], Boolean, Option[String]) = {
-    val p = new HPath(logDir, commitName(v))
+    val p = new HPath(logDir, f"$v%020d.json")
     require(io.exists(p),
       s"commit $v of $logDir is gone (checkpoint-truncated?); streaming reads need the " +
         "JSON history of the covered range — restart with a fresh checkpoint or startingVersion")
-    val adds = Seq.newBuilder[DeltaAddFile]
-    var rewrites = false
-    var newSchema: Option[String] = None
-    io.readString(p).split('\n').iterator.map(_.trim).filter(_.nonEmpty)
-      .map(om.readTree).foreach { n =>
-        Option(n.get("metaData")).filter(!_.isNull)
-          .foreach(m => newSchema = Some(m.get("schemaString").asText))
-        Option(n.get("add")).filter(!_.isNull).foreach { a =>
-          require(Option(a.get("deletionVector")).forall(_.isNull),
-            s"add at v$v carries a deletion vector; not supported")
-          if (Option(a.get("dataChange")).forall(_.asBoolean)) {
-            val pv = Option(a.get("partitionValues")).filter(!_.isNull)
-              .map(m => m.properties().asScala.toSeq.map(e =>
-                e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText)))
-              .getOrElse(Nil)
-            adds += DeltaAddFile(a.get("path").asText, pv,
-              Option(a.get("size")).map(_.asLong).getOrElse(0L), None)
-          }
-        }
-        Option(n.get("remove")).filter(!_.isNull).foreach { rm =>
-          if (Option(rm.get("dataChange")).forall(_.asBoolean)) rewrites = true
-        }
-      }
-    (adds.result(), rewrites, newSchema)
-  }
-
-  /** One relation per partition-value tuple over `files`: partition
-    * columns are absent from the files and re-enter as typed literals;
-    * empty input yields a schema-typed empty frame.
-    */
-  private[graft] def relationFor(files: Seq[DeltaAddFile], tableSchema: StructType,
-                                 partCols: Seq[String],
-                                 withPos: Boolean = false): DataFrame = {
-    val posCols = if (withPos) Seq("_gr_file", "_gr_pos") else Nil
-    if (files.isEmpty) {
-      val full = StructType(tableSchema.fields.toSeq ++ posCols.map {
-        case "_gr_file" => StructField("_gr_file", StringType)
-        case _          => StructField("_gr_pos", LongType)
-      })
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], full)
+    val actions = commitActions(p)
+    actions.foreach {
+      case DeltaAction.Add(f, _) => require(f.dv.isEmpty,
+        s"add at v$v carries a deletion vector; not supported")
+      case _ => ()
     }
-    val dataSchema = StructType(tableSchema.filterNot(f => partCols.contains(f.name)))
-    val typeOf: Map[String, DataType] =
-      tableSchema.fields.map(f => f.name -> f.dataType).toMap
-    val frames = files.groupBy(_.partitionValues).toSeq.map { case (pv, fs) =>
-      val paths = fs.map(f => new HPath(root, decodePath(f.path)).toString)
-      val base0 = spark.read.schema(dataSchema).parquet(paths: _*)
-      val base =
-        if (!withPos) base0
-        else base0.withColumn("_gr_file", col("_metadata.file_path"))
-          .withColumn("_gr_pos", col("_metadata.row_index"))
-      val withParts = pv.foldLeft(base) { case (d, (c, v)) =>
-        val t = typeOf.getOrElse(c,
-          throw new IllegalStateException(s"partition column $c missing from schema"))
-        d.withColumn(c, (if (v == null) lit(null) else lit(v)).cast(t))
-      }
-      withParts.select((tableSchema.fieldNames.toSeq ++ posCols).map(col): _*)
-    }
-    frames.reduce(_ unionByName _)
+    (actions.collect { case DeltaAction.Add(f, true) => f },
+      actions.exists { case DeltaAction.Remove(_, true) => true; case _ => false },
+      actions.collect { case DeltaAction.Meta(m) => m.schemaJson }.lastOption)
   }
 
   /** File-granular row-level changelog of `(fromVersion, toVersion]` —
@@ -522,35 +488,14 @@ final class DeltaTableReader(spark: SparkSession, location: String) {
     * both sides, the OPTIMIZE shape) pass through silently. An
     * update-style rewrite is delete + insert at the same version —
     * the standard CDC convention. Driver cost is O(commits) JSON
-    * parses; reads are bounded by the changed files.
+    * parses; reads are bounded by the changed files, at most three
+    * scans per commit.
     */
-  private def posFrame(positions: Array[Long]): DataFrame = {
-    val sp = spark
-    import sp.implicits._
-    sp.createDataset(positions.toSeq).toDF("_gr_dpos")
-  }
-
-  /** Rows of ONE file at the given row indexes (single-file relation —
-    * the position alone identifies the row).
-    */
-  private def rowsAt(f: DeltaAddFile, positions: Array[Long],
-                     ts: StructType, pc: Seq[String]): DataFrame =
-    relationFor(Seq(f), ts, pc, withPos = true)
-      .join(posFrame(positions), col("_gr_pos") === col("_gr_dpos"), "left_semi")
-      .select(ts.fieldNames.map(col).toIndexedSeq: _*)
-
-  /** A single-file with-pos relation minus the given row indexes. */
-  private def rowsExcept(rel: DataFrame, positions: Array[Long],
-                         ts: StructType): DataFrame =
-    rel.join(posFrame(positions), col("_gr_pos") === col("_gr_dpos"), "left_anti")
-      .select(ts.fieldNames.map(col).toIndexedSeq: _*)
-
   def readChanges(fromVersion: Long, toVersion: Option[Long] = None): DataFrame = {
-    val jsons = jsonVersions()
-    val hi = toVersion.orElse(latestVersion).getOrElse(
-      throw new IllegalArgumentException(s"no Delta log at $logDir"))
+    val log = listLog()
+    val hi = toVersion.getOrElse(latestOf(log))
     val need = (fromVersion + 1) to hi
-    require(need.forall(jsons.contains),
+    require(need.forall(log.commits.contains),
       s"changelog needs the JSON commits of (${fromVersion}, $hi] at $logDir; " +
         "some were truncated (checkpointed history has no per-commit actions)")
     // running state at fromVersion: remove actions name only a path —
@@ -558,112 +503,55 @@ final class DeltaTableReader(spark: SparkSession, location: String) {
     // fromVersion = -1 starts before the initial commit (Delta
     // versions are 0-based), delivering v0's load as inserts.
     val state = scala.collection.mutable.LinkedHashMap[String, DeltaAddFile]()
-    var metaNode: Option[JsonNode] = None
+    var meta: Option[DeltaMeta] = None
     if (fromVersion >= 0) {
-      val (r, _) = replayTo(Some(fromVersion))
+      val (r, _) = replayTo(log, Some(fromVersion))
       checkProtocol(r)
-      r.adds.values.foreach(a => state(a.path) = a)
-      metaNode = r.metaData
+      r.adds.foreach(a => state(a.path) = a)
+      meta = r.metaData
     }
+    def metaOf = meta.getOrElse(throw new IllegalStateException("no metaData action in log"))
     val frames = Seq.newBuilder[DataFrame]
     for (v <- need) {
-      def metaOf = metaNode.getOrElse(
-        throw new IllegalStateException("no metaData action in log"))
-      val actions = io.readString(new HPath(logDir, commitName(v))).split('\n')
-        .iterator.map(_.trim).filter(_.nonEmpty).map(om.readTree).toSeq
-      actions.foreach(n => Option(n.get("metaData")).filter(!_.isNull)
-        .foreach(m => metaNode = Some(m)))
+      val actions = commitActions(log.commits(v).getPath)
+      actions.foreach { case DeltaAction.Meta(m) => meta = Some(m); case _ => () }
       // mapped tables key partitionValues/files by PHYSICAL names; this
       // path assembles relations under logical names, so it must fail
       // loud for ANY commit whose metadata has mapping on (fromVersion
       // = -1 skips the entry checkProtocol, and mapping can turn on
       // mid-history)
-      locally {
-        val mode = Option(metaOf.get("configuration")).filter(!_.isNull)
-          .flatMap(c => Option(c.get("delta.columnMapping.mode")))
-          .map(_.asText).getOrElse("none")
-        require(mode == "none", s"column mapping mode '$mode' is only " +
-          "supported for batch reads, not this access path")
-      }
-      val tableSchema =
-        DataType.fromJson(metaOf.get("schemaString").asText).asInstanceOf[StructType]
-      val partCols: Seq[String] = Option(metaOf.get("partitionColumns"))
-        .filter(!_.isNull).map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil)
-      def tagged(df: DataFrame, tpe: String): DataFrame =
-        df.withColumn("_change_type", lit(tpe))
-          .withColumn("_commit_version", lit(v))
-      val adds = Seq.newBuilder[DeltaAddFile]
-      val removedPaths = Seq.newBuilder[String]
+      checkMapping(metaOf.mappingMode, allowName = false)
       val prior: Map[String, DeltaAddFile] = state.toMap
-      actions.foreach { n =>
-        Option(n.get("add")).filter(!_.isNull).foreach { a =>
-          val pv = Option(a.get("partitionValues")).filter(!_.isNull)
-            .map(m => m.properties().asScala.toSeq.map(e =>
-              e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText)))
-            .getOrElse(Nil)
-          val dv = Option(a.get("deletionVector")).filter(!_.isNull)
-            .map(d => om.writeValueAsString(d))
-          val f = DeltaAddFile(a.get("path").asText, pv,
-            Option(a.get("size")).map(_.asLong).getOrElse(0L),
-            Option(a.get("stats")).filter(s => !s.isNull && s.asText.nonEmpty)
-              .map(_.asText), dv)
-          if (Option(a.get("dataChange")).forall(_.asBoolean)) adds += f
-          state(f.path) = f
-        }
-        Option(n.get("remove")).filter(!_.isNull).foreach { rm =>
-          val path = rm.get("path").asText
-          state.remove(path)
-          if (Option(rm.get("dataChange")).forall(_.asBoolean)) removedPaths += path
-        }
+      actions.foreach {
+        case DeltaAction.Add(f, _)    => state(f.path) = f
+        case DeltaAction.Remove(p, _) => state.remove(p)
+        case _                        => ()
       }
-      val addFiles = adds.result()
-      val addedPaths = addFiles.map(_.path).toSet
-      def positionsOf(f: DeltaAddFile): Array[Long] =
-        f.dvJson.map(js => Roaring64.decode(
-          DeltaDv.readBitmap(io, root, parseDvDescriptor(js)))).getOrElse(Array.empty)
+      val adds = actions.collect { case DeltaAction.Add(f, true) => f }
+      val addedPaths = adds.map(_.path).toSet
       // a remove whose path is re-added in the SAME commit is a
-      // deletion-vector (or metadata) update, not a file drop — handle
-      // through the add side as a position diff
-      val dropped = removedPaths.result().filterNot(addedPaths)
-        .flatMap(p => prior.get(p))
-      // full-file drops deliver their LIVE rows only: rows a DV had
-      // already masked were delivered as deletes when the DV landed
-      dropped.foreach { f =>
-        val masked = positionsOf(f)
-        val rel = relationFor(Seq(f), tableSchema, partCols, withPos = masked.nonEmpty)
-        val live =
-          if (masked.isEmpty) rel
-          else rowsExcept(rel, masked, tableSchema)
-        frames += tagged(live, "delete")
-      }
-      addFiles.foreach { f =>
-        prior.get(f.path) match {
-          case Some(old) =>
-            // DV update on a live file: newly-masked positions are
-            // deletes; positions un-masked never happen (DVs only grow)
-            val newlyMasked = (positionsOf(f).toSet -- positionsOf(old).toSet).toArray
-            if (newlyMasked.nonEmpty)
-              frames += tagged(rowsAt(f, newlyMasked, tableSchema, partCols), "delete")
-          case None =>
-            val masked = positionsOf(f)
-            val rel = relationFor(Seq(f), tableSchema, partCols, withPos = masked.nonEmpty)
-            val live = if (masked.isEmpty) rel else rowsExcept(rel, masked, tableSchema)
-            frames += tagged(live, "insert")
-        }
-      }
+      // deletion-vector (or metadata) update, not a file drop; full-file
+      // drops deliver their LIVE rows only — rows a DV had already
+      // masked were delivered as deletes when the DV landed
+      val dropped = actions.collect { case DeltaAction.Remove(p, true) if !addedPaths(p) => p }
+        .flatMap(prior.get)
+      // DV update on a live file: newly-masked positions are deletes;
+      // positions are never un-masked (DVs only grow)
+      val grown = adds.filter(f => prior.get(f.path).exists(old => f.dv.nonEmpty && f.dv != old.dv))
+      val fresh = adds.filterNot(f => prior.contains(f.path))
+      val ts = metaOf.schema
+      val pc = metaOf.partitionColumns
+      def tagged(files: Seq[DeltaAddFile], tpe: String, only: Option[ScanDeletes] = None): Unit =
+        if (files.nonEmpty) frames += scanFiles(files, ts, pc, deletionVectors(files), only)
+          .withColumn("_change_type", lit(tpe)).withColumn("_commit_version", lit(v))
+      tagged(dropped, "delete")
+      tagged(grown.map(f => prior(f.path)), "delete", only = Some(deletionVectors(grown)))
+      tagged(fresh, "insert")
     }
     val out = frames.result()
-    if (out.isEmpty) {
-      val meta = metaNode.getOrElse(
-        throw new IllegalStateException("no metaData action in log"))
-      val tableSchema =
-        DataType.fromJson(meta.get("schemaString").asText).asInstanceOf[StructType]
-      val partCols: Seq[String] = Option(meta.get("partitionColumns"))
-        .filter(!_.isNull).map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil)
-      relationFor(Nil, tableSchema, partCols)
-        .withColumn("_change_type", lit("insert"))
-        .withColumn("_commit_version", lit(0L)).where(lit(false))
-    } else out.reduce(_ unionByName _)
+    if (out.nonEmpty) out.reduce(_ unionByName _)
+    else scanFiles(Nil, metaOf.schema, metaOf.partitionColumns)
+      .withColumn("_change_type", lit("insert")).withColumn("_commit_version", lit(0L))
   }
 }
 
@@ -682,10 +570,6 @@ final class DeltaExport(spark: SparkSession, location: String) {
   private val root: HPath = io.qualify(new HPath(location))
   private def logDir = new HPath(root, "_delta_log")
 
-  private def jsonVersions(): Seq[Long] =
-    io.list(logDir).map(_.getPath.getName)
-      .filter(_.matches("\\d{20}\\.json")).map(_.take(20).toLong).sorted
-
   private def reader = new DeltaTableReader(spark, root.toString)
 
   private def writeCommit(version: Long, lines: Seq[String]): Unit = {
@@ -702,8 +586,6 @@ final class DeltaExport(spark: SparkSession, location: String) {
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
-
-  private def jstr(s: String): String = om.writeValueAsString(s)
 
   private def protocolLine: String =
     """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
@@ -728,12 +610,10 @@ final class DeltaExport(spark: SparkSession, location: String) {
   private def state(): State = {
     val rd = reader
     if (rd.latestVersion.isEmpty) return State(-1L, None, Nil, Nil)
-    val (adds, metaData, _, v) = rd.stateAt(None)
+    val (adds, metaData, v) = rd.stateAt(None)
     val meta = metaData.getOrElse(
       throw new IllegalStateException("no metaData action in log"))
-    val partCols = Option(meta.get("partitionColumns"))
-      .filter(!_.isNull).map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil)
-    State(v, Some(meta.get("schemaString").asText), partCols, adds)
+    State(v, Some(meta.schemaJson), meta.partitionColumns, adds)
   }
 
   /** Write `df`'s rows as data files under `data/<uuid>`, returning
@@ -941,20 +821,18 @@ final class DeltaExport(spark: SparkSession, location: String) {
     * (file, pos) coordinate set.
     */
   def deleteRows(cond: org.apache.spark.sql.Column): Long = {
-    import DeltaExport.canonOf
     val st = state()
     require(st.version >= 0, "deleteRows on a never-written table")
     val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
-    val rdr = reader
-    // distributed per-file bitmap build: groupByKey on the file path
-    // shuffles only the matched coordinates, each group encodes its
-    // roaring bitmap in the executor that owns it
-    val perFile: Array[(String, Array[Byte], Long)] = {
+    // distributed per-file bitmap build: groupByKey on the file's task
+    // index shuffles only the matched coordinates, each group encodes
+    // its roaring bitmap in the executor that owns it
+    val perFile: Array[(Int, Array[Byte], Long)] = {
       import spark.implicits._
-      rdr.relationFor(st.adds, schema, st.partitionBy, withPos = true)
+      reader.scanFiles(st.adds, schema, st.partitionBy, coordinates = true)
         .where(cond)
-        .select(col("_gr_file"), col("_gr_pos"))
-        .as[(String, Long)]
+        .select(col(TaskScan.TaskCol), col(TaskScan.PosCol))
+        .as[(Int, Long)]
         .groupByKey(_._1)
         .mapGroups { (f, it) =>
           val ps = it.map(_._2).toArray.distinct.sorted
@@ -963,21 +841,14 @@ final class DeltaExport(spark: SparkSession, location: String) {
         .collect()
     }
     if (perFile.isEmpty) return st.version // nothing to delete, no commit
-    val byFile: Map[String, (Array[Byte], Long)] =
-      perFile.map { case (f, b, n) => rdr.canonStr(f) -> (b, n) }.toMap
-    val addByCanon: Map[String, DeltaAddFile] = st.adds.map { a =>
-      canonOf(root, a.path) -> a
-    }.toMap
-    val touched: Seq[(DeltaAddFile, Array[Byte], Long)] = byFile.toSeq.map { case (f, (bytes, n)) =>
-      val a = addByCanon.getOrElse(f,
-        throw new IllegalStateException(s"matched file $f not in live adds"))
-      a.dvJson match {
-        case Some(js) =>
+    val touched: Seq[(DeltaAddFile, Array[Byte], Long)] = perFile.toSeq.map { case (i, bytes, n) =>
+      val a = st.adds(i)
+      a.dv match {
+        case Some(d) =>
           // repeat delete on an already-vectored file: union with its
           // EXISTING deleted positions — decode cost is bounded by ONE
           // file's deletions, and only re-deleted files pay it
-          val old = Roaring64.decode(
-            DeltaDv.readBitmap(io, root, rdr.parseDvDescriptor(js)))
+          val old = Roaring64.decode(DeltaDv.readBitmap(io, root, d))
           val merged = (old ++ Roaring64.decode(bytes)).distinct.sorted
           (a, Roaring64.encode(merged), merged.length.toLong)
         case None => (a, bytes, n)
@@ -1029,11 +900,10 @@ final class DeltaExport(spark: SparkSession, location: String) {
   def vacuum(retentionMs: Long = 7L * 24 * 3600 * 1000): Seq[String] = {
     val st = state()
     require(st.version >= 0, "vacuum on a never-written table")
-    val rdr = reader
-    val live: Set[String] = st.adds.map(a => DeltaExport.canonOf(root, a.path)).toSet
-    val liveDvs: Set[String] = st.adds.flatMap(_.dvJson).map { js =>
-      rdr.canonStr(io.qualify(DeltaDv.dvPath(root, rdr.parseDvDescriptor(js))).toString)
-    }.toSet
+    val live: Set[String] = st.adds.map(a =>
+      TaskScan.canon(new HPath(root, decodePath(a.path)).toString)).toSet
+    val liveDvs: Set[String] = st.adds.flatMap(_.dv).map(d =>
+      TaskScan.canon(io.qualify(DeltaDv.dvPath(root, d)).toString)).toSet
     val horizon = System.currentTimeMillis() - retentionMs
     val deleted = Seq.newBuilder[String]
     val it = io.fs.listFiles(root, true)
@@ -1044,7 +914,7 @@ final class DeltaExport(spark: SparkSession, location: String) {
       val isLog = rel.contains("_delta_log")
       val isData = p.getName.endsWith(".parquet") ||
         p.getName.startsWith("deletion_vector_")
-      val canon = rdr.canonStr(p.toString)
+      val canon = TaskScan.canon(p.toString)
       if (!isLog && isData && !live.contains(canon) && !liveDvs.contains(canon) &&
           f.getModificationTime < horizon) {
         io.fs.delete(f.getPath, false)
@@ -1100,8 +970,7 @@ final class DeltaExport(spark: SparkSession, location: String) {
       Map.empty[String, String], System.currentTimeMillis())
     val protoRow = Row(1, 2)
     val addRows = st.adds.map { a =>
-      val dvRow = a.dvJson.map { js =>
-        val d = reader.parseDvDescriptor(js)
+      val dvRow = a.dv.map { d =>
         Row(d.storageType, d.pathOrInlineDv, d.offset.map(Long.box).orNull,
           d.sizeInBytes, d.cardinality)
       }.orNull
@@ -1136,13 +1005,6 @@ final class DeltaExport(spark: SparkSession, location: String) {
 }
 
 object DeltaExport {
-  /** Canonical absolute form of an add.path (scheme-collapsed), the
-    * join key between _metadata.file_path and live adds.
-    */
-  private def canonOf(root: HPath, addPath: String): String =
-    new HPath(root, DeltaFormat.decodePath(addPath)).toString
-      .replaceFirst("^([a-zA-Z0-9+.-]+):/+", "$1:/")
-
   /** Current table state needed to validate a new commit. */
   private final case class State(version: Long, schemaJson: Option[String],
                                  partitionBy: Seq[String], adds: Seq[DeltaAddFile])

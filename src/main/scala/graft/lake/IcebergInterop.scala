@@ -28,12 +28,9 @@ import org.apache.spark.sql.types._
   * Read path ([[IcebergTableReader]]): metadata resolution
   * (version-hint or highest version file), snapshot selection (current /
   * by id / as-of-timestamp), v2 sequence-number inheritance, live-file
-  * resolution (ADDED+EXISTING minus DELETED entries), POSITION deletes
-  * (anti-join on `_metadata.file_path`/`row_index` against the delete
-  * files' (file_path, pos) rows, path-canonicalized on both sides) and
-  * EQUALITY deletes (null-safe anti-join on the identifier columns,
-  * applied only to data files with strictly older data sequence
-  * numbers, per spec), partition pruning from manifest entry partition
+  * resolution (ADDED+EXISTING minus DELETED entries), POSITION and
+  * EQUALITY deletes under the spec's sequence-number rules (applied by
+  * [[TaskScan]]), partition pruning from manifest entry partition
   * tuples under identity AND projected transforms (day/hour/month/year
   * epoch-unit floors, truncate[W]; bucket[N] prunes on equality/IN via
   * the spec's murmur3 bucket index, keeps on ranges — the hash has no
@@ -44,10 +41,8 @@ import org.apache.spark.sql.types._
   * one concession to reading by name).
   *
   * Scale shape: everything driver-side here is metadata-proportional
-  * (manifest entries), the delete application is the same
-  * broadcast-anti-join shape as the graft MOR path, and data files are
-  * grouped by their APPLICABLE delete set so one relation serves each
-  * equivalence class — no per-file unions.
+  * (manifest entries), and a read is one scan of its data files with
+  * broadcast anti-joins against the delete files — no per-file unions.
   *
   * Export path ([[IcebergExport]]): append snapshots and
   * equality/position-delete commits with manifest + manifest-list Avro,
@@ -101,13 +96,6 @@ object IcebergFormat {
     case other => throw new IllegalArgumentException(
       s"iceberg export does not support column type $other")
   }
-
-  /** Both sides of every file-path equality pass through this: Hadoop
-    * renders `file:///x` and `file:/x` interchangeably, and an engine's
-    * delete files may use either — canonicalizing scheme://+ → scheme:/
-    * on BOTH join sides preserves equality regardless of renderer.
-    */
-  def canonPath(c: Column): Column = regexp_replace(c, "^([a-zA-Z0-9+.-]+):/+", "$1:/")
 
   /** Standard 32-bit Murmur3 (x86 variant, seed 0) — the hash the
     * Iceberg spec's `bucket[N]` transform is defined on (Appendix B).
@@ -566,112 +554,80 @@ final class IcebergTableReader(spark: SparkSession, location: String) {
       .mayMatch(FileStats.ColRange.point(FileStats.toKey(value))))
   }
 
-  /** Assemble the DataFrame of one snapshot (default: current).
-    *
-    * Delete application per the spec's sequence-number rules: a
-    * position delete with sequence S applies to data files with
-    * sequence <= S; an equality delete with sequence S applies to data
-    * files with sequence < S. Data files are grouped by their
-    * applicable delete-file SET, one relation + anti-join chain per
-    * group — group count is bounded by distinct commit sequences, not
-    * file count.
+  /** The current schema as scan columns; a field with no Spark type
+    * (nested, resolved by name) is NullType, typed by the files.
+    */
+  private lazy val tableSchema: StructType = StructType(schemaFields.map { case (_, name, tpe) =>
+    StructField(name, IcebergFormat.sparkType(tpe).getOrElse(NullType)) })
+
+  private def task(f: IcebergDataFile): FileTask =
+    FileTask(resolve(f.path).toString, dataSeq = f.sequence)
+
+  /** Scan data files as the current schema. The TABLE's declared
+    * schema is the read schema when every field maps to a Spark type:
+    * no footer sampling, and under add-column evolution each file
+    * null-fills its missing columns by name. Untypeable fields fall
+    * back to merging the footers — correct, just footer-cost-per-file.
+    */
+  private def scan(data: Seq[IcebergDataFile], deletes: Seq[IcebergDataFile] = Nil,
+                   only: Option[Seq[IcebergDataFile]] = None): DataFrame = {
+    val unsupported = (data ++ deletes ++ only.getOrElse(Nil)).map(_.format).distinct
+      .filterNot(_ == "PARQUET")
+    require(unsupported.isEmpty, s"unsupported data file formats: $unsupported")
+    // a delete file that no data file's sequence admits is never read
+    val oldest = data.map(_.sequence).minOption
+    def applicable(ds: Seq[IcebergDataFile]) = deletesOf(ds.filter(d => oldest.exists(m =>
+      m < d.sequence || m == d.sequence && d.content == IcebergFormat.PositionDeletes)))
+    TaskScan.scan(spark, data.map(task), tableSchema, deletes = applicable(deletes),
+      only = only.map(applicable), mergeFooters = tableSchema.exists(_.dataType == NullType))
+  }
+
+  /** Delete files as scan deletes: all position files in one relation,
+    * equality files in one relation per key-column set.
+    */
+  private def deletesOf(files: Seq[IcebergDataFile]): ScanDeletes = {
+    import IcebergFormat._
+    val idToName = schemaFields.map { case (id, name, _) => id -> name }.toMap
+    val positions = files.filter(_.content == PositionDeletes)
+    ScanDeletes(
+      positions = if (positions.isEmpty) None
+        else Some(TaskScan.positionRows(spark, positions.map(task))),
+      equality = files.filter(_.content == EqualityDeletes).groupBy(_.equalityIds).toSeq
+        .sortBy(_._1.mkString(",")).map { case (ids, fs) =>
+          val cols = ids.map(id => idToName.getOrElse(id,
+            throw new IllegalStateException(s"equality_id $id not in current schema")))
+          cols -> TaskScan.equalityRows(spark, fs.map(task), StructType(cols.map(tableSchema(_))))
+        })
+  }
+
+  /** Assemble the DataFrame of one snapshot (default: current): the
+    * live data files that survive partition pruning, scanned once with
+    * every live delete file applied under the spec's sequence-number
+    * rules ([[TaskScan]]), then `filters` applied to the rows.
     */
   def read(snapshotId: Option[Long] = None, asOfTimestampMs: Option[Long] = None,
            filters: Seq[LakePredicate] = Nil): DataFrame = {
     import IcebergFormat._
     val snap = (snapshotId, asOfTimestampMs) match {
-      case (Some(id), _) => snapshots.find(_.id == id)
-        .getOrElse(throw new IllegalArgumentException(s"no snapshot $id"))
+      case (Some(id), _) => Some(snapshots.find(_.id == id)
+        .getOrElse(throw new IllegalArgumentException(s"no snapshot $id")))
       case (None, Some(ts)) =>
         val eligible = snapshots.filter(_.timestampMs <= ts)
         require(eligible.nonEmpty, s"no snapshot at or before $ts")
-        eligible.maxBy(_.timestampMs)
-      case (None, None) =>
-        // never-written table: schema-typed empty, same as the
-        // no-data-files path, so downstream selects still analyze
-        val cur = currentSnapshotId.getOrElse(return emptyRelation)
-        snapshots.find(_.id == cur).get
+        Some(eligible.maxBy(_.timestampMs))
+      // a never-written table reads as the schema-typed empty frame
+      case (None, None) => currentSnapshotId.map(cur => snapshots.find(_.id == cur).get)
     }
-    val files = liveFiles(snap)
+    val files = snap.map(liveFiles).getOrElse(Nil)
     val colTypeOf: Map[String, String] =
       schemaFields.map { case (_, name, tpe) => name -> tpe }.toMap
-    val dataFiles = files.filter(_.content == DataContent)
+    val data = files.filter(_.content == DataContent)
       // partition pruning: drop files a predicate disproves through ANY
       // of the column's spec fields (identity or projected transform)
       .filter(f => filters.forall(p =>
         f.partition.forall { case (src, transform, v) =>
           src != p.col || partitionKeeps(p, transform, v, colTypeOf.get(src)) }))
-    val posDeletes = files.filter(_.content == PositionDeletes)
-    val eqDeletes = files.filter(_.content == EqualityDeletes)
-    val idToName = schemaFields.map { case (id, name, _) => id -> name }.toMap
-
-    if (dataFiles.isEmpty) return emptyRelation
-    require(dataFiles.forall(_.format == "PARQUET"),
-      s"unsupported data file formats: ${dataFiles.map(_.format).distinct.filterNot(_ == "PARQUET")}")
-
-    // group data files by applicable delete set → one scan per class
-    val groups = dataFiles.groupBy { f =>
-      (posDeletes.filter(_.sequence >= f.sequence).map(_.path).sorted,
-        eqDeletes.filter(_.sequence > f.sequence).map(d => (d.path, d.equalityIds)).sortBy(_._1))
-    }
-    // read with the TABLE's declared schema when every field maps to a
-    // Spark type: no footer sampling at all (one less job per group),
-    // and under add-column evolution each file null-fills its missing
-    // columns by name instead of silently dropping on-disk values the
-    // sampled footer didn't mention. Untypeable fields (nested types
-    // resolved by name) fall back to a full footer merge — correct,
-    // just footer-cost-per-file.
-    val declared: Option[StructType] = {
-      val fields = schemaFields.map { case (_, name, tpe) =>
-        IcebergFormat.sparkType(tpe).map(t => StructField(name, t))
-      }
-      if (fields.forall(_.isDefined)) Some(StructType(fields.flatten)) else None
-    }
-    val parts = groups.toSeq.map { case ((posPaths, eqSet), fs) =>
-      val needPos = posPaths.nonEmpty
-      val reader = declared match {
-        case Some(s) => spark.read.schema(s)
-        case None    => spark.read.option("mergeSchema", "true")
-      }
-      var df = reader.parquet(fs.map(f => resolve(f.path).toString): _*)
-      if (needPos) {
-        df = df
-          .withColumn("__if_path", canonPath(col("_metadata.file_path")))
-          .withColumn("__if_pos", col("_metadata.row_index"))
-        val dels = spark.read.parquet(posPaths.map(p => resolve(p).toString): _*)
-          .select(canonPath(col("file_path")).as("__df_path"), col("pos").as("__df_pos"))
-        df = df.join(broadcast(dels),
-            col("__if_path") === col("__df_path") && col("__if_pos") === col("__df_pos"),
-            "left_anti")
-          .drop("__if_path", "__if_pos")
-      }
-      eqSet.foreach { case (delPath, ids) =>
-        val cols = ids.map(id => idToName.getOrElse(id,
-          throw new IllegalStateException(s"equality_id $id not in current schema")))
-        val dels = spark.read.parquet(resolve(delPath).toString)
-          .select(cols.map(c => col(c).as(s"__eq_$c")): _*).distinct()
-        df = df.join(broadcast(dels),
-          cols.map(c => df(c) <=> dels(s"__eq_$c")).reduce(_ && _), "left_anti")
-      }
-      df
-    }
-    // heterogeneous groups (schema evolution split across delete
-    // classes) union by name with null-fill, not a strict-match throw
-    val unioned = parts.reduce(_.unionByName(_, allowMissingColumns = true))
-
-    // name-based projection to the CURRENT schema: present columns pass
-    // through, added-but-unbackfilled columns null-fill with their
-    // declared type, dropped columns disappear
-    val present = unioned.columns.toSet
-    val projected = schemaFields.map { case (_, name, tpe) =>
-      if (present(name)) col(name)
-      else IcebergFormat.sparkType(tpe) match {
-        case Some(t) => lit(null).cast(t).as(name)
-        case None => throw new IllegalStateException(
-          s"column '$name' ($tpe) absent from data files and untypeable")
-      }
-    }
-    val out = unioned.select(projected: _*)
+    val out = scan(data, deletes = files.filter(_.content != DataContent))
     if (filters.isEmpty) out else out.where(filters.map(predColumn).reduce(_ && _))
   }
 
@@ -695,40 +651,20 @@ final class IcebergTableReader(spark: SparkSession, location: String) {
     val nonAppend = intermediate.filterNot(_.operation == "append")
     require(nonAppend.isEmpty,
       s"incremental append scan crosses non-append snapshots: ${nonAppend.map(s => s"${s.id}(${s.operation})").mkString(", ")}")
-    val fresh = liveFiles(cur).filter(f =>
-      f.content == IcebergFormat.DataContent && f.sequence > from.sequence)
-    if (fresh.isEmpty) emptyRelation
-    else spark.read.option("mergeSchema", "true")
-      .parquet(fresh.map(f => resolve(f.path).toString): _*)
-  }
-
-  /** Name-based projection of an arbitrary frame to the CURRENT
-    * schema: present columns pass, absent ones null-fill typed.
-    */
-  private def projectToSchema(df: DataFrame): DataFrame = {
-    val present = df.columns.toSet
-    df.select(schemaFields.map { case (_, name, tpe) =>
-      if (present(name)) col(name)
-      else IcebergFormat.sparkType(tpe) match {
-        case Some(t) => lit(null).cast(t).as(name)
-        case None => throw new IllegalStateException(
-          s"column '$name' ($tpe) absent from data files and untypeable")
-      }
-    }: _*)
+    scan(liveFiles(cur).filter(f =>
+      f.content == IcebergFormat.DataContent && f.sequence > from.sequence))
   }
 
   /** Row-level changelog of `(fromSnapshotId, toSnapshotId]` — the
     * Iceberg changelog-scan shape for the histories this exporter
     * family produces: per snapshot, NEW data files deliver their rows
-    * as 'insert'; new POSITION-delete files materialize the named
-    * coordinates' rows as 'delete' (one bounded read of exactly the
-    * named files); new EQUALITY-delete files materialize 'delete' rows
-    * by a null-safe key semi-join against the PRIOR snapshot's live
-    * read (rows were live then by the sequence rule). Snapshots that
-    * REMOVE data files (rewrites/overwrites) fail loud — a compaction
-    * is not a row change, and silently re-delivering rewritten rows
-    * would duplicate the feed. `_commit_version` carries the
-    * snapshot's sequence number.
+    * as 'insert', and NEW delete files deliver as 'delete' the rows
+    * live in the prior snapshot that they remove — one scan of the
+    * prior data files, bounded to the files a position-only commit
+    * names. Snapshots that REMOVE data files (rewrites/overwrites) fail
+    * loud — a compaction is not a row change, and silently
+    * re-delivering rewritten rows would duplicate the feed.
+    * `_commit_version` carries the snapshot's sequence number.
     */
   def readChangesSince(fromSnapshotId: Long,
                        toSnapshotId: Option[Long] = None): DataFrame = {
@@ -743,82 +679,46 @@ final class IcebergTableReader(spark: SparkSession, location: String) {
       .getOrElse(throw new IllegalStateException("table has no current snapshot"))
     val range = snaps.filter(s => s.sequence > from.sequence && s.sequence <= to.sequence)
     def tagged(df: DataFrame, tpe: String, seq: Long): DataFrame =
-      projectToSchema(df).withColumn("_change_type", lit(tpe))
-        .withColumn("_commit_version", lit(seq))
+      df.withColumn("_change_type", lit(tpe)).withColumn("_commit_version", lit(seq))
     val frames = Seq.newBuilder[DataFrame]
-    var prev = from
+    var prevFiles = liveFiles(from)
     for (s <- range) {
-      val prevFiles = liveFiles(prev)
+      val (prevData, prevDel) = prevFiles.partition(_.content == DataContent)
       val curFiles = liveFiles(s)
-      val prevData = prevFiles.filter(_.content == DataContent).map(_.path).toSet
-      val prevDel = prevFiles.filter(_.content != DataContent).map(_.path).toSet
+      val prevPaths = prevData.map(_.path).toSet
       val curData = curFiles.filter(_.content == DataContent)
-      val removed = prevData -- curData.map(_.path).toSet
+      val removed = prevPaths -- curData.map(_.path)
       require(removed.isEmpty,
         s"snapshot ${s.id} (${s.operation}) removes data files; the changelog covers " +
           "append and delete-file snapshots only — read the table instead")
-      val addedData = curData.filterNot(f => prevData(f.path))
-      if (addedData.nonEmpty)
-        frames += tagged(spark.read.option("mergeSchema", "true")
-          .parquet(addedData.map(f => resolve(f.path).toString): _*), "insert", s.sequence)
-      val addedDeletes = curFiles.filter(f =>
-        f.content != DataContent && !prevDel(f.path))
-      addedDeletes.foreach { d =>
-        if (d.content == PositionDeletes) {
-          val coords = spark.read.parquet(resolve(d.path).toString)
-            .select(canonPath(col("file_path")).as("__df_path"), col("pos").as("__df_pos"))
-          // the delete file names its target files — read exactly those
-          val named = coords.select(col("__df_path")).distinct()
-            .collect().map(_.getString(0)).toSet
-          val targets = prevFiles.filter(f => f.content == DataContent &&
-            named(canonStrIce(io.qualify(resolve(f.path)).toString)))
-          if (targets.nonEmpty) {
-            val rows = spark.read.option("mergeSchema", "true")
-              .parquet(targets.map(f => resolve(f.path).toString): _*)
-              .withColumn("__if_path", canonPath(col("_metadata.file_path")))
-              .withColumn("__if_pos", col("_metadata.row_index"))
-              .join(broadcast(coords),
-                col("__if_path") === col("__df_path") && col("__if_pos") === col("__df_pos"),
-                "left_semi")
-            frames += tagged(rows, "delete", s.sequence)
+      val addedData = curData.filterNot(f => prevPaths(f.path))
+      if (addedData.nonEmpty) frames += tagged(scan(addedData), "insert", s.sequence)
+      val prevDelPaths = prevDel.map(_.path).toSet
+      val addedDeletes = curFiles.filter(f => f.content != DataContent && !prevDelPaths(f.path))
+      if (addedDeletes.nonEmpty) {
+        // position deletes name their files: read exactly those
+        val targets =
+          if (addedDeletes.exists(_.content == EqualityDeletes)) prevData
+          else {
+            val named = TaskScan.positionRows(spark, addedDeletes.map(task))
+              .select(TaskScan.canon(col("file_path"))).distinct().collect().map(_.getString(0)).toSet
+            prevData.filter(f => named(TaskScan.canon(io.qualify(resolve(f.path)).toString)))
           }
-        } else {
-          val idToName = schemaFields.map { case (id, name, _) => id -> name }.toMap
-          val cols = d.equalityIds.map(id => idToName.getOrElse(id,
-            throw new IllegalStateException(s"equality_id $id not in current schema")))
-          val keys = spark.read.parquet(resolve(d.path).toString)
-            .select(cols.map(c => col(c).as(s"__eq_$c")): _*).distinct()
-          val prior = read(snapshotId = Some(prev.id))
-          frames += tagged(prior.join(broadcast(keys),
-            cols.map(c => prior(c) <=> keys(s"__eq_$c")).reduce(_ && _),
-            "left_semi"), "delete", s.sequence)
-        }
+        if (targets.nonEmpty)
+          frames += tagged(scan(targets, prevDel, only = Some(addedDeletes)), "delete", s.sequence)
       }
-      prev = s
+      prevFiles = curFiles
     }
     val out = frames.result()
-    if (out.isEmpty)
-      emptyRelation.withColumn("_change_type", lit("insert"))
-        .withColumn("_commit_version", lit(0L)).where(lit(false))
-    else out.reduce(_.unionByName(_, allowMissingColumns = true))
+    if (out.isEmpty) tagged(scan(Nil), "insert", 0L)
+    else out.reduce(_ unionByName _)
   }
-
-  private def canonStrIce(p: String): String =
-    p.replaceFirst("^([a-zA-Z0-9+.-]+):/+", "$1:/")
 
   private def predColumn(p: LakePredicate): Column = p match {
     case LakePredicate.EqualTo(c, v) => col(c) === lit(v)
     case LakePredicate.In(c, vs)     => col(c).isin(vs: _*)
     case LakePredicate.GtEq(c, v)    => col(c) >= lit(v)
     case LakePredicate.LtEq(c, v)    => col(c) <= lit(v)
-  }
-
-  private def emptyRelation: DataFrame = {
-    val fields = schemaFields.flatMap { case (_, name, tpe) =>
-      IcebergFormat.sparkType(tpe).map(t => StructField(name, t))
-    }
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(fields))
   }
 }
 

@@ -122,11 +122,7 @@ class DeltaStreamingSource(ctx: SQLContext, reader: DeltaTableReader,
       // skipChangeCommits: the WHOLE commit is skipped — delivering its
       // adds would re-deliver rewritten rows as fresh inserts
     }
-    val batchFiles = files.result()
-    val rdd =
-      if (batchFiles.isEmpty)
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.catalyst.InternalRow]
-      else reader.relationFor(batchFiles, pinned, partCols).queryExecution.toRdd
+    val rdd = reader.scanFiles(files.result(), pinned, partCols).queryExecution.toRdd
     org.apache.spark.sql.GraftColumnBridge.streamingDataFrame(spark, rdd, pinned)
   }
 

@@ -6,6 +6,29 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 
+/** `countfs://`: local disk that counts the opens and listings of
+  * paths under [[DeltaLogCountingFileSystem.watched]].
+  */
+class DeltaLogCountingFileSystem extends GraftTestFileSystem {
+  import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path}
+  import DeltaLogCountingFileSystem._
+  override protected def scheme: String = "countfs"
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    if (f.toUri.getPath.startsWith(watched)) opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+  override def listStatus(f: Path): Array[FileStatus] = {
+    if (f.toUri.getPath.startsWith(watched)) lists.incrementAndGet()
+    super.listStatus(f)
+  }
+}
+
+object DeltaLogCountingFileSystem {
+  @volatile var watched: String = "\u0000"
+  val opens = new java.util.concurrent.atomic.AtomicInteger
+  val lists = new java.util.concurrent.atomic.AtomicInteger
+}
+
 /** The Delta-format interop contract: tables written by [[DeltaExport]]
   * follow the public Delta transaction-log protocol closely enough that
   * [[DeltaTableReader]] — a from-scratch log-replay reader — resolves
@@ -136,6 +159,33 @@ class DeltaInteropSpec extends AnyFunSuite {
       """{"numRecords":2,"minValues":{"id":3,"n":0,"x":-1.0,"dec":3.00,"s":"😀",""" +
         """"day":"2024-02-29"},"maxValues":{"id":4,"n":9,"x":1.0,"dec":3.00,"s":"😀",""" +
         """"day":"2024-02-29"},"nullCount":{"id":0,"n":0,"x":0,"dec":1,"s":1,"day":1}}"""))
+  }
+
+  test("a version replays once per reader: a second read opens no log file, lists the log once") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[DeltaLogCountingFileSystem].getName)
+    val loc = freshLoc()
+    val exp = new DeltaExport(spark, loc)
+    exp.append(Seq((1L, "a"), (2L, "b")).toDF("id", "name"))
+    exp.append(Seq((3L, "c")).toDF("id", "name"))
+    exp.checkpoint()
+    exp.deleteRows($"id" === 2L)
+    exp.append(Seq((4L, "d")).toDF("id", "name"))
+    val rdr = new DeltaTableReader(spark, s"countfs:$loc")
+    val first = rdr.read().orderBy($"id").as[(Long, String)].collect().toSeq
+    assert(first === Seq((1L, "a"), (3L, "c"), (4L, "d")))
+    import DeltaLogCountingFileSystem._
+    watched = logDir(loc).toString
+    try {
+      opens.set(0); lists.set(0)
+      val second = rdr.read().orderBy($"id").as[(Long, String)].collect().toSeq
+      assert(second === first)
+      assert(opens.get === 0, "a cached version opens no _delta_log file")
+      assert(lists.get <= 1, s"_delta_log listed ${lists.get} times")
+      // a version the reader has not replayed still replays
+      assert(rdr.read(versionAsOf = Some(1L)).count() === 3L)
+      assert(opens.get > 0)
+    } finally watched = "\u0000"
   }
 
   test("checkpoint bounds replay: log truncated to the tail still reads") {

@@ -22,9 +22,11 @@ class GraftTestFileSystem extends org.apache.hadoop.fs.FileSystem {
   import org.apache.hadoop.fs.permission.FsPermission
   import org.apache.hadoop.util.Progressable
 
+  /** The scheme this wrapper answers to; subclasses pick their own. */
+  protected def scheme: String = "graftfs"
   private val inner = new RawLocalFileSystem
   private def toLocal(p: Path) = new Path("file", null, p.toUri.getPath)
-  private def fromLocal(p: Path) = new Path("graftfs", null, p.toUri.getPath)
+  private def fromLocal(p: Path) = new Path(scheme, null, p.toUri.getPath)
   // plain FileStatus copy: RawLocal's lazy permission loader calls
   // `new java.io.File(status.path.toUri)`, which rejects any non-file
   // scheme — materializing here keeps the wrapper scheme opaque
@@ -38,8 +40,8 @@ class GraftTestFileSystem extends org.apache.hadoop.fs.FileSystem {
     setConf(conf)
     inner.initialize(URI.create("file:///"), conf)
   }
-  override def getScheme: String = "graftfs"
-  override def getUri: URI = URI.create("graftfs:///")
+  override def getScheme: String = scheme
+  override def getUri: URI = URI.create(s"$scheme:///")
   override def open(f: Path, bufferSize: Int): FSDataInputStream =
     inner.open(toLocal(f), bufferSize)
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,

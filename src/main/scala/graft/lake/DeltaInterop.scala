@@ -570,7 +570,9 @@ final class DeltaExport(spark: SparkSession, location: String) {
   private val root: HPath = io.qualify(new HPath(location))
   private def logDir = new HPath(root, "_delta_log")
 
-  private def reader = new DeltaTableReader(spark, root.toString)
+  // one reader per export: its replay cache then serves every call at
+  // an unchanged version (the cache checks each log file it used)
+  private lazy val reader = new DeltaTableReader(spark, root.toString)
 
   private def writeCommit(version: Long, lines: Seq[String]): Unit = {
     io.mkdirs(logDir)
@@ -608,9 +610,8 @@ final class DeltaExport(spark: SparkSession, location: String) {
   import DeltaExport.State
 
   private def state(): State = {
-    val rd = reader
-    if (rd.latestVersion.isEmpty) return State(-1L, None, Nil, Nil)
-    val (adds, metaData, v) = rd.stateAt(None)
+    if (reader.latestVersion.isEmpty) return State(-1L, None, Nil, Nil)
+    val (adds, metaData, v) = reader.stateAt(None)
     val meta = metaData.getOrElse(
       throw new IllegalStateException("no metaData action in log"))
     State(v, Some(meta.schemaJson), meta.partitionColumns, adds)
@@ -902,7 +903,8 @@ final class DeltaExport(spark: SparkSession, location: String) {
     require(st.version >= 0, "vacuum on a never-written table")
     val live: Set[String] = st.adds.map(a =>
       TaskScan.canon(new HPath(root, decodePath(a.path)).toString)).toSet
-    val liveDvs: Set[String] = st.adds.flatMap(_.dv).map(d =>
+    // inline (`i`) vectors live in the log entry itself: no file to keep
+    val liveDvs: Set[String] = st.adds.flatMap(_.dv).filter(_.storageType != "i").map(d =>
       TaskScan.canon(io.qualify(DeltaDv.dvPath(root, d)).toString)).toSet
     val horizon = System.currentTimeMillis() - retentionMs
     val deleted = Seq.newBuilder[String]

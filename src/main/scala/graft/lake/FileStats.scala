@@ -219,7 +219,7 @@ private[graft] object FileStats {
     * UTF-8, but its surrogates sort before U+E000..U+FFFF); UTF-8 byte
     * order is code-point order, so compare code points.
     */
-  private def cmp(a: Key, b: Key): Int = (a, b) match {
+  private[lake] def cmp(a: Key, b: Key): Int = (a, b) match {
     case (Left(x), Left(y))   => x.compare(y)
     case (Right(x), Right(y)) =>
       var i = 0
@@ -655,12 +655,20 @@ private[graft] object FileStats {
     * unbounded type is omitted: callers use the ranges to PRUNE or
     * pre-filter a scan, and omission just means "no bound". Null
     * omission is what keeps null-safe key matching sound — min/max
-    * cannot see null keys, so a nullable key must not prune.
+    * cannot see null keys, so a nullable key must not prune. Files
+    * whose footer reports zero rows bound nothing and are skipped
+    * (Spark writes one beside the data when a task's input is empty).
     */
-  def dirColumnRanges(io: LakeIo, dir: HPath, cols: Seq[String]): Map[String, (Any, Any)] = {
+  def dirColumnRanges(io: LakeIo, dir: HPath, cols: Seq[String]): Map[String, (Any, Any)] =
+    dirRowsAndRanges(io, dir, cols)._2
+
+  /** [[dirRowCount]] and [[dirColumnRanges]] of `dir` from one footer pass. */
+  def dirRowsAndRanges(io: LakeIo, dir: HPath,
+                       cols: Seq[String]): (Option[Long], Map[String, (Any, Any)]) = {
     val facts = footerMeta(io, dir, cols, listParquet(io, dir))
-    cols.indices.flatMap { i =>
-      val perFile = facts.map(_.ranges(i))
+    val bounding = facts.filterNot(_.rows.contains(0L))
+    (rowsOf(facts).map(_.map(_._2).sum), cols.indices.flatMap { i =>
+      val perFile = bounding.map(_.ranges(i))
       if (perFile.isEmpty || perFile.exists { case (lo, hi, n) => n != 0 || lo == null || hi == null })
         None
       else {
@@ -668,7 +676,7 @@ private[graft] object FileStats {
         val hi = perFile.map(_._2).reduce(maxByKey)
         if (lo == null || hi == null) None else Some(cols(i) -> (lo, hi))
       }
-    }.toMap
+    }.toMap)
   }
 
   /** The smaller / larger of two typed values by key order; null when

@@ -46,9 +46,14 @@ import org.apache.spark.sql.functions._
   * compactions and metadata commits all stay on the incremental path.
   *
   * Scale: the delta aggregate shuffles changelog-sized data on the
-  * group keys; the view-side MERGE touches only changed groups; the
-  * only driver-side state is the optional bounded `In` key collection
-  * (capped, index-metadata-sized — same policy as IVF centroids).
+  * group keys; the view-side MERGE touches only changed groups. The
+  * only driver-side state is the delta's key census, taken by the job
+  * that checkpoints the delta: at most `driverKeyCap + 1` key tuples
+  * (the bounded `In` of the view read; above the cap, a bloom) and
+  * each key column's range, which the MERGE takes as its source's key
+  * bounds instead of aggregating its source again. A COUNT/SUM/AVG
+  * refresh thus runs the delta's aggregate and checkpoint, then the
+  * merge; only a MIN/MAX recompute adds actions.
   */
 object IncrementalView {
 
@@ -218,10 +223,7 @@ object IncrementalView {
         catch {
           // no row-level changelog across a rewrite, or history
           // expired under the recorded version: rebuild
-          case _: RewriteCommitException =>
-            fullBuild(cat, src, viewIdent, cur, keys, maintained, extraMeta)
-          case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.contains("expired") =>
+          case _: RewriteCommitException | _: SnapshotExpiredException =>
             fullBuild(cat, src, viewIdent, cur, keys, maintained, extraMeta)
         }
       // source rolled back behind the view, or first build
@@ -287,15 +289,17 @@ object IncrementalView {
     // materialize once: the delta is changelog-sized (small by the
     // whole premise), but its lineage — readChanges' per-commit
     // delete-materialization semi-joins — is expensive, and downstream
-    // references it several times (merged rows, recompute key set,
-    // anti-join, plus the MERGE's own strategy decision aggregate)
-    val delta = graft.ProfStream.prof("iv delta ckpt") {
-      changes.groupBy(keys.map(col): _*)
-        .agg(deltaCols.head, deltaCols.tail: _*)
-        .localCheckpoint()
+    // references it several times (bounded view read join, recompute
+    // key set, anti-join, and the MERGE's staging and write). The same
+    // job takes the delta's key census: the key tuples the view read is
+    // bounded by, and the key ranges the merge's strategy decision
+    // needs (newRows' keys are a subset of the delta's).
+    val (delta, census) = graft.ProfStream.prof("iv delta ckpt") {
+      checkpointWithKeyCensus(changes.groupBy(keys.map(col): _*)
+        .agg(deltaCols.head, deltaCols.tail: _*), keys, tiers.driverKeyCap)
     }
 
-    val old = boundedViewRead(viewT, delta, keys, tiers)
+    val old = boundedViewRead(viewT, delta, census, keys, tiers)
     // group keys may hold NULL (a legitimate GROUP BY group): null-safe
     // join. RIGHT outer on the delta side: untouched view groups never
     // enter the refresh — the merge stays changelog-sized, not
@@ -391,14 +395,13 @@ object IncrementalView {
       }
 
     // one commit: update changed groups, insert new ones, DELETE
-    // vanished ones; CAS on the view base + source-version meta.
-    // Materialize first: the merge evaluates its source three times
-    // (key-uniqueness/range aggregate, strategy probe, final write),
-    // and newRows' lineage — view⋈delta join plus the MIN/MAX
-    // recompute's bounded source read — is the expensive part of the
-    // refresh. The frame itself is changelog-sized.
+    // vanished ones; CAS on the view base + source-version meta. The
+    // merge evaluates its source once (copy-on-write) or twice (staged
+    // positions, then the produced rows). Without MIN/MAX that is a
+    // read of the checkpointed delta and a key-bounded view read; the
+    // MIN/MAX recompute also reads the source, so materialize it first.
     val newRowsC =
-      if (fromCheckpoint) newRows
+      if (!hasMinMax || fromCheckpoint) newRows
       else graft.ProfStream.prof("iv newRows ckpt")(newRows.localCheckpoint())
     graft.ProfStream.prof("iv merge") {
       // key-unique by construction: incKept and rec are both groupBy
@@ -407,8 +410,93 @@ object IncrementalView {
         deleteMatched = Some(col(s"_src_$N") === 0),
         meta = extraMeta ++ recMeta ++
           Map(SourceVersionKey -> cur.toString, RefreshModeKey -> "incremental"),
-        sourceKeyUnique = true)
+        sourceKeyBounds = Some(census.bounds(keys)))
     }
+  }
+
+  /** `df` checkpointed, with a [[KeyCensus]] of its `keys` taken by the
+    * checkpoint's own job (the shape of
+    * `IncrementalDedup.checkpointWithBkCensus`): no second action reads
+    * the keys back.
+    */
+  private def checkpointWithKeyCensus(df: DataFrame, keys: Seq[String],
+                                      cap: Int): (DataFrame, KeyCensus) = {
+    val census = new KeyCensus(cap, keys.map(df.schema(_).dataType).toIndexedSeq)
+    df.sparkSession.sparkContext.register(census) // unnamed: no per-task UI strings
+    val idx = keys.map(df.schema.fieldIndex).toIndexedSeq
+    val cp = df.mapPartitions { it =>
+      it.map { r => census.add(idx.map(r.get)); r }
+    }(org.apache.spark.sql.Encoders.row(df.schema)).localCheckpoint()
+    (cp, census)
+  }
+
+  /** A frame's distinct key tuples, at most `cap + 1` of them in total
+    * (one more than the driver-exact tier holds, so overflow shows),
+    * and per key column its min, max and whether it holds a null.
+    * Every part is a set fold: a retried task that re-adds its rows
+    * changes nothing. A column whose values have no key in the stats
+    * domain that prunes on them (binary, NaN) gets no range.
+    */
+  private final class KeyCensus(cap: Int, types: IndexedSeq[org.apache.spark.sql.types.DataType])
+      extends org.apache.spark.util.AccumulatorV2[IndexedSeq[Any], KeyCensus] {
+    private val width = types.size
+    private val seen = scala.collection.mutable.LinkedHashSet.empty[IndexedSeq[Any]]
+    private val lo = new Array[Any](width)
+    private val hi = new Array[Any](width)
+    private val hasNull = new Array[Boolean](width)
+    private val unordered = new Array[Boolean](width)
+
+    /** The key tuples; more than `cap` means the census overflowed. */
+    def tuples: Seq[IndexedSeq[Any]] = seen.toSeq
+
+    /** Range predicates every key satisfies (Nil for an empty frame). */
+    def bounds(keys: Seq[String]): Seq[LakePredicate] =
+      keys.indices.flatMap { i =>
+        if (hasNull(i) || unordered(i) || lo(i) == null) Nil
+        else Seq(LakePredicate.GtEq(keys(i), lo(i)), LakePredicate.LtEq(keys(i), hi(i)))
+      }
+
+    private def fold(i: Int, vLo: Any, vHi: Any): Unit = {
+      def key(v: Any) = FileStats.probeKey(v, types(i))
+      if (!unordered(i)) (key(vLo), key(vHi)) match {
+        case (Some(kl), Some(kh)) =>
+          if (lo(i) == null) { lo(i) = vLo; hi(i) = vHi }
+          else {
+            if (FileStats.cmp(kl, key(lo(i)).get) < 0) lo(i) = vLo
+            if (FileStats.cmp(kh, key(hi(i)).get) > 0) hi(i) = vHi
+          }
+        case _ => unordered(i) = true
+      }
+    }
+
+    override def isZero: Boolean =
+      seen.isEmpty && (0 until width).forall(i => lo(i) == null && !hasNull(i) && !unordered(i))
+    override def copy(): KeyCensus = { val c = new KeyCensus(cap, types); c.merge(this); c }
+    override def reset(): Unit = {
+      seen.clear()
+      for (i <- 0 until width) { lo(i) = null; hi(i) = null; hasNull(i) = false; unordered(i) = false }
+    }
+    override def add(key: IndexedSeq[Any]): Unit = {
+      if (seen.size <= cap) seen += key
+      var i = 0
+      while (i < width) {
+        if (key(i) == null) hasNull(i) = true else fold(i, key(i), key(i))
+        i += 1
+      }
+    }
+    override def merge(other: org.apache.spark.util.AccumulatorV2[IndexedSeq[Any], KeyCensus]): Unit = {
+      val o = other.value
+      o.seen.iterator.takeWhile(_ => seen.size <= cap).foreach(seen += _)
+      var i = 0
+      while (i < width) {
+        hasNull(i) |= o.hasNull(i)
+        if (o.unordered(i)) unordered(i) = true
+        else if (o.lo(i) != null) fold(i, o.lo(i), o.hi(i))
+        i += 1
+      }
+    }
+    override def value: KeyCensus = this
+    override def toString: String = s"KeyCensus(${seen.size} tuples)"
   }
 
   /** View read bounded to the delta's group keys. SUPERSET-safe: the
@@ -417,20 +505,18 @@ object IncrementalView {
     * actual key tuples) cannot change the join's result — they only
     * cut the O(view) scan per refresh to the touched files/rows,
     * which is the difference between O(changes) and O(view) refresh
-    * cost on a large view. The delta is checkpointed by the caller,
-    * so the key collect here is a cheap re-read, and a driver-large
-    * delta falls back to the full view read.
+    * cost on a large view. The key tuples come from the delta's
+    * census (no action here), and a driver-large delta falls back to
+    * the bloom tier.
     */
-  private def boundedViewRead(viewT: LakeTable, delta: DataFrame,
+  private def boundedViewRead(viewT: LakeTable, delta: DataFrame, census: KeyCensus,
                               keys: Seq[String], tiers: DriverTiers): DataFrame = {
-    val sample = graft.ProfStream.prof("iv bvr collect") {
-      delta.select(keys.map(col): _*).limit(tiers.driverKeyCap + 1).collect()
-    }
+    val sample = census.tuples
     if (sample.isEmpty) return viewT.read(None).where(lit(false))
     if (sample.length > tiers.driverKeyCap)
       return bloomBoundedViewRead(viewT, delta, keys, tiers)
     val perCol = keys.zipWithIndex.map { case (k, i) =>
-      val vs = sample.map(_.get(i)).distinct.toSeq
+      val vs = sample.map(_(i)).distinct
       (k, vs.filterNot(_ == null), vs.contains(null))
     }
     // bound only when every key column is null-free and modest: the In

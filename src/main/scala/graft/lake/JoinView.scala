@@ -138,11 +138,7 @@ object JoinView {
         try incremental(cat, fact, dim, viewT, f, curF, d, curD,
           factKey, joinKey, dimKey, dimCols, extraMeta, strategy, tiers)
         catch {
-          case _: RewriteCommitException =>
-            fullBuild(cat, fact, dim, viewIdent, curF, curD,
-              factKey, joinKey, dimKey, dimCols, extraMeta)
-          case e: IllegalStateException if e.getMessage != null &&
-            e.getMessage.contains("expired") =>
+          case _: RewriteCommitException | _: SnapshotExpiredException =>
             fullBuild(cat, fact, dim, viewIdent, curF, curD,
               factKey, joinKey, dimKey, dimCols, extraMeta)
         }
@@ -391,7 +387,7 @@ object JoinView {
           }
         }
       return graft.ProfStream.prof("jv merge") {
-        // NO sourceKeyUnique assertion here: factKey uniqueness is the
+        // NO sourceKeyBounds assertion here: factKey uniqueness is the
         // USER's contract, and the merge's duplicate check is exactly
         // the loud gate the class doc promises on violation
         LakeDml.merge(viewT, mergeInput, Seq(factKey),

@@ -276,6 +276,15 @@ object LakeTable {
   val CarryMetaPrefix = "graft.carry."
 }
 
+/** An incremental walk needed snapshot `version`, but its manifest is
+  * gone (expired by retention): the walk cannot deliver the changes
+  * across it. Views catch this by type and rebuild.
+  */
+final class SnapshotExpiredException(val version: Long, root: String)
+  extends IllegalStateException(
+    s"snapshot v$version of $root is gone (expired?); incremental reads need " +
+      "snapshot retention >= the read window")
+
 /** An incremental walk ([[LakeTable.appendedDirs]]) covered a commit
   * that REWROTE data (overwrite/compact/DML). Callers surface their own
   * recovery advice (restart checkpoint, widen the range, opt into
@@ -469,6 +478,12 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
   private[graft] def snapshotAt(v: Long): Option[Snapshot] =
     if (v <= 0) None else Manifest.read(io, manifestPath(v))
 
+  /** [[snapshotAt]] for an incremental walk: an absent version throws
+    * [[SnapshotExpiredException]].
+    */
+  private def walkSnapshotAt(v: Long): Snapshot =
+    snapshotAt(v).getOrElse(throw new SnapshotExpiredException(v, rootLocation))
+
   /** Timestamp time travel resolution: the greatest version committed
     * at or before `tsMs` (Iceberg's `FOR TIMESTAMP AS OF` contract).
     * Commit timestamps are strictly monotonic (enforced in [[commit]]),
@@ -508,13 +523,10 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     */
   private[graft] def appendedDirs(lo: Long, hi: Long,
                                   skipRewrites: Boolean): Seq[(String, String, Seq[String])] = {
-    def snapAt2(v: Long) = snapshotAt(v).getOrElse(throw new IllegalStateException(
-      s"snapshot v$v of $rootLocation is gone (expired?); incremental reads need " +
-        "snapshot retention >= the read window"))
-    var prevDirs: Set[String] = if (lo <= 0) Set.empty else snapAt2(lo).dirs.toSet
+    var prevDirs: Set[String] = if (lo <= 0) Set.empty else walkSnapshotAt(lo).dirs.toSet
     val added = Seq.newBuilder[(String, String, Seq[String])]
     for (v <- lo + 1 to hi) {
-      val s = snapAt2(v)
+      val s = walkSnapshotAt(v)
       val newDirs = s.dirs.indices
         .filter(i => !prevDirs.contains(s.dirs(i)))
         .map(i => (s.dirs(i), s.dirSchemaJson(i), hiveColsOf(s, s.dirs(i))))
@@ -646,13 +658,10 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
       df.select(userCols.map(col): _*)
         .withColumn("_change_type", lit(change))
         .withColumn("_commit_version", lit(v))
-    def snapAt2(v: Long) = snapshotAt(v).getOrElse(throw new IllegalStateException(
-      s"snapshot v$v of $rootLocation is gone (expired?); changelog reads need " +
-        "snapshot retention >= the read window"))
     val frames = Seq.newBuilder[DataFrame]
-    var prev = if (fromVersion <= 0) None else Some(snapAt2(fromVersion))
+    var prev = if (fromVersion <= 0) None else Some(walkSnapshotAt(fromVersion))
     for (v <- fromVersion + 1 to hi) {
-      val s = snapAt2(v)
+      val s = walkSnapshotAt(v)
       val noRowChange = LakeTable.MetadataOps.contains(s.op) || s.op == "compact"
       val prevDirs = prev.map(_.dirs.toSet).getOrElse(Set.empty)
       val removed = prevDirs -- s.dirs.toSet
@@ -664,7 +673,7 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
         // Prior-snapshot frames align to the CURRENT schema by field id
         // (renames resolve, added columns null-fill) — a schema change
         // inside the range after a delete commit must not break the walk.
-        lazy val prevSchema = snapAt2(v - 1).schema
+        lazy val prevSchema = walkSnapshotAt(v - 1).schema
         val prevPosDeletes = prev.map(_.deleteDirs.toSet).getOrElse(Set.empty)
         val newPosDeletes = s.deleteDirs.filterNot(prevPosDeletes)
         if (newPosDeletes.nonEmpty) {

@@ -305,14 +305,15 @@ object LakeDml {
     * removed instead of updated — the CDC-apply shape where a source
     * op column decides update vs delete in ONE commit.
     *
-    * `sourceKeyUnique`: a caller whose source is key-unique BY
+    * `sourceKeyBounds`: a caller whose source is key-unique BY
     * CONSTRUCTION (the output of a groupBy on the merge keys, or a
-    * disjoint union of such) may assert it to drop the uniqueness
-    * check — the per-key groupBy stage disappears and the stats-bound
-    * key ranges come from a flat map-side-combined aggregate instead.
-    * Asserting it for a source that is NOT key-unique silently
-    * produces multi-matched garbage — the flag is for provably-shaped
-    * internal callers, not user-facing upserts.
+    * disjoint union of such) and already knows bounds every source
+    * key satisfies (range predicates on key columns; Nil = none
+    * known) passes them, and the merge runs no source aggregate: no
+    * uniqueness check, no key-range pass. Asserting it for a source
+    * that is NOT key-unique, or with bounds some key escapes, silently
+    * produces wrong results — it is for provably-shaped internal
+    * callers, not user-facing upserts.
     */
   def merge(table: LakeTable, source: DataFrame, keys: Seq[String],
             set: Map[String, Column] = Map.empty,
@@ -320,7 +321,7 @@ object LakeDml {
             strategy: DmlStrategy = DmlStrategy.Auto,
             deleteMatched: Option[Column] = None,
             meta: Map[String, String] = Map.empty,
-            sourceKeyUnique: Boolean = false): Snapshot = {
+            sourceKeyBounds: Option[Seq[LakePredicate]] = None): Snapshot = {
     val base = table.latest.getOrElse(
       throw new IllegalStateException(s"empty lake table at ${table.rootLocation}"))
     val target = table.readWithPos(Some(base.version))
@@ -335,13 +336,8 @@ object LakeDml {
     // target), and per-key null counts (a null source key matches
     // null target keys through the null-safe join, which min/max
     // can't see — such a key contributes no range predicate)
-    val keyPreds = {
-      // asserted-unique sources skip the per-key groupBy stage: max(_n)
-      // is 1 by the caller's construction, and the range/null stats the
-      // strategy bound needs survive a flat partial aggregate
-      val perKey =
-        if (sourceKeyUnique) source.select((lit(1L).as("_n") +: keys.map(col)): _*)
-        else source.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_n"))
+    val keyPreds = sourceKeyBounds.getOrElse {
+      val perKey = source.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_n"))
       val srcAggCols = max(col("_n")) +: keys.flatMap(k =>
         Seq(min(col(k)), max(col(k)), count(when(col(k).isNull, 1))))
       val srcAgg = perKey.agg(srcAggCols.head, srcAggCols.tail: _*).head

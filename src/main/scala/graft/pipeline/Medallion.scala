@@ -4,7 +4,8 @@ import java.nio.file.Path
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.lake.{LakeCatalog, WriteMode}
+import org.apache.spark.sql.types.TimestampType
+import graft.lake.{FileStats, LakeCatalog, WriteMode}
 import graft.state.WatermarkStore
 
 /** Bronze → Silver → Gold medallion pipeline — the reference's entire
@@ -93,10 +94,20 @@ final class Medallion(
     val stagingDir = bronze.location(s"_staging/${java.util.UUID.randomUUID()}")
     try {
       source.filter(col(tsCol) > lit(wm)).write.mode("overwrite").parquet(stagingDir)
-      val delta = spark.read.parquet(stagingDir)
-      val stats = delta.agg(max(col(tsCol)).as("mx"), count(lit(1)).as("n")).head
-      val maxTs = stats.getTimestamp(0)
-      val n = stats.getLong(1)
+      // the source's schema is the staged files' schema: no inference job
+      val delta = spark.read.schema(source.schema).parquet(stagingDir)
+      // max(ts) and the row count from the staged footers; the scanning
+      // aggregate only when they cannot bound ts (INT96, unreadable)
+      val (footerRows, ranges) = FileStats.dirRowsAndRanges(
+        bronze.io, new org.apache.hadoop.fs.Path(stagingDir), Seq(tsCol))
+      val (maxTs, n) = (footerRows, ranges.get(tsCol)) match {
+        case (Some(0L), _) => (null, 0L)
+        case (Some(rows), Some((_, hi: Timestamp)))
+            if source.schema(tsCol).dataType == TimestampType => (hi, rows)
+        case _ =>
+          val stats = delta.agg(max(col(tsCol)), count(lit(1))).head
+          (stats.getTimestamp(0), stats.getLong(1))
+      }
       val newWmUs =
         if (maxTs == null) wmUs else math.max(wmUs, WatermarkStore.toMicros(maxTs))
       val mode = if (referenceParity) WriteMode.Overwrite else WriteMode.Append
@@ -112,14 +123,15 @@ final class Medallion(
   }
 
   /** Exact dedup over all columns → silver (reference A3, etl.py:68).
-    * The returned row count scans the written snapshot — counting the
-    * `silver` plan would re-run the dedup shuffle a second time.
+    * The returned row count comes from the written snapshot's manifest
+    * (an overwrite with per-dir row counts and no deletes): no job, where
+    * counting the `silver` plan would re-run the dedup shuffle.
     */
   def transformSilver(): Long = withRetries("transform") {
     val bronze = catalog.read(s"bronze.$pipeline")
     val silver = bronze.dropDuplicates()
     catalog.write(silver, s"silver.$pipeline", WriteMode.Overwrite)
-    catalog.read(s"silver.$pipeline").count()
+    catalog.table(s"silver.$pipeline").countRows()
   }
 
   /** Grouped identity count → gold (reference A1, etl.py:86). */

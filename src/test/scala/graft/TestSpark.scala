@@ -24,4 +24,23 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The call sites of the Spark jobs `body` starts, in start order
+    * (`"collect at Foo.scala:12"`; AQE's stage jobs name their async
+    * submitter). Job counts are deterministic for a fixed plan, so a
+    * count pins which actions a code path runs.
+    */
+  def jobs(body: => Unit): Seq[String] = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sites.add(j.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("?"))
+    }
+    org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    sites.asScala.toSeq
+  }
 }

@@ -185,6 +185,13 @@ class DeltaInteropSpec extends AnyFunSuite {
       // a version the reader has not replayed still replays
       assert(rdr.read(versionAsOf = Some(1L)).count() === 3L)
       assert(opens.get > 0)
+      // an exporter keeps one reader: its second state() at the same
+      // version (here under vacuum) opens no log file either
+      val cexp = new DeltaExport(spark, s"countfs:$loc")
+      assert(cexp.vacuum() === Nil)
+      opens.set(0)
+      assert(cexp.vacuum() === Nil)
+      assert(opens.get === 0, "a second state() at one version replays nothing")
     } finally watched = "\u0000"
   }
 
@@ -599,6 +606,9 @@ class DeltaInteropSpec extends AnyFunSuite {
     assert(masked.count() === 7L)
     assert(masked.select($"id").as[Long].collect().sorted.toSeq ===
       Seq(1L, 2L, 4L, 5L, 6L, 8L, 9L))
+    // vacuum passes over the inline vector (no file) and keeps the data
+    assert(new DeltaExport(spark, loc2).vacuum(retentionMs = 0L) === Nil)
+    assert(new DeltaTableReader(spark, loc2).read().count() === 7L)
   }
 
   test("vacuum deletes only unreferenced files past the horizon") {

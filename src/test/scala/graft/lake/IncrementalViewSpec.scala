@@ -298,4 +298,50 @@ class IncrementalViewSpec extends AnyFunSuite {
     assert(meta(IncrementalView.SourceVersionKey).toLong ===
       cat.table("ns.src").latest.get.version)
   }
+
+  test("incremental COUNT/SUM refresh: no key collect, no merge source aggregate") {
+    val cat = freshCat()
+    val sums = Seq(GroupCount("cnt"), Sum(col("v"), "sum_v"))
+    IncrementalView.refresh(cat, "ns.src", "ns.view", Seq("g"), sums)
+    cat.write(Seq(("a", 4L, 5.0), ("c", 5L, 50.0)).toDF("g", "id", "v"),
+      "ns.src", WriteMode.Append)
+    var snap: Snapshot = null
+    val jobs = TestSpark.jobs {
+      snap = IncrementalView.refresh(cat, "ns.src", "ns.view", Seq("g"), sums)
+    }
+    assert(snap.meta(IncrementalView.RefreshModeKey) === "incremental")
+    // the delta's census stands in for both second reads of the keys
+    assert(!jobs.exists(_.startsWith("collect at IncrementalView")), jobs)
+    assert(!jobs.exists(_.startsWith("head at LakeDml")), jobs)
+    assert(jobs.size <= 8, jobs)
+    assert(IncrementalView.read(cat, "ns.view").as[(String, Long, Double)].collect().toSet ===
+      Set(("a", 3L, 35.0), ("b", 1L, 30.0), ("c", 1L, 50.0)))
+  }
+
+  test("key census past driverKeyCap: bloom-bounded view read, merge bounds still cover") {
+    val tiers = DriverTiers(driverKeyCap = 1, bloomFileThreshold = 0)
+    val cat = freshCat()
+    IncrementalView.refresh(cat, "ns.src", "ns.view", Seq("g"), aggs, tiers = tiers)
+    // four touched groups at both ends of the key range, one of them new
+    cat.write(Seq(("a", 4L, 1.0), ("b", 5L, 99.0), ("0", 6L, 7.0), ("z", 7L, 8.0))
+      .toDF("g", "id", "v"), "ns.src", WriteMode.Append)
+    LakeDml.delete(cat.table("ns.src"), $"id" === 1L, strategy = DmlStrategy.MergeOnRead)
+    val snap = IncrementalView.refresh(cat, "ns.src", "ns.view", Seq("g"), aggs,
+      tiers = tiers)
+    assert(snap.meta(IncrementalView.RefreshModeKey) === "incremental")
+    assert(view(cat) === oracle(cat))
+  }
+
+  test("source history expired past the recorded version: typed fallback to a full rebuild") {
+    val cat = freshCat()
+    IncrementalView.refresh(cat, "ns.src", "ns.view", Seq("g"), aggs)
+    cat.write(Seq(("a", 4L, 5.0)).toDF("g", "id", "v"), "ns.src", WriteMode.Append)
+    cat.write(Seq(("c", 5L, 6.0)).toDF("g", "id", "v"), "ns.src", WriteMode.Append)
+    val src = cat.table("ns.src")
+    src.expireSnapshots(retainLast = 1)
+    intercept[SnapshotExpiredException](src.readChanges(1L))
+    val snap = IncrementalView.refresh(cat, "ns.src", "ns.view", Seq("g"), aggs)
+    assert(snap.meta(IncrementalView.RefreshModeKey) === "full")
+    assert(view(cat) === oracle(cat))
+  }
 }

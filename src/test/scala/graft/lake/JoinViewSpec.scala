@@ -310,4 +310,21 @@ class JoinViewSpec extends AnyFunSuite {
     val rec = cat.table("ns.v").latest.get.meta(JoinView.DimVersionKey).toLong
     assert(rec === cat.table("ns.dim").latest.get.version)
   }
+
+  test("fact history expired past the recorded version: typed fallback to a full rebuild") {
+    val cat = fresh()
+    cat.write(Seq((1L, 10L, 5.0)).toDF("id", "ck", "amt"), "ns.fact", WriteMode.Overwrite)
+    cat.write(Seq((10L, "A")).toDF("ck", "seg"), "ns.dim", WriteMode.Overwrite)
+    def refresh() = JoinView.refreshSql(cat, "ns.fact", "ns.dim", "ns.v",
+      "id", "ck", "ck", Seq("seg"))
+    refresh()
+    val fact = cat.table("ns.fact")
+    fact.write(Seq((2L, 10L, 1.0)).toDF("id", "ck", "amt"), WriteMode.Append)
+    fact.write(Seq((3L, 99L, 2.0)).toDF("id", "ck", "amt"), WriteMode.Append)
+    fact.expireSnapshots(retainLast = 1)
+    intercept[SnapshotExpiredException](fact.readChanges(1L))
+    refresh()
+    assert(mode(cat) === "full")
+    assert(viewRows(cat) === expected(cat))
+  }
 }

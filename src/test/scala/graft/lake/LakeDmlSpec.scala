@@ -284,21 +284,13 @@ class LakeDmlSpec extends AnyFunSuite {
     val t = cat.table("ns.s")
     val v0 = t.latest.get.version
 
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = TestSpark.jobs {
       // no file's [min,max] can contain the probe → decided on the
       // driver from manifest blobs, no Spark job, no new snapshot
       val s = LakeDml.delete(t, $"id" === 100000L)
-      org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark.sparkContext)
       assert(s.version === v0)
-      assert(jobs === 0, s"expected a zero-job stats decision, ran $jobs jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.isEmpty, s"expected a zero-job stats decision, ran $jobs")
 
     // stats bound 1 of 8 range-disjoint files → merge-on-read without
     // the decision aggregate; then a spread predicate → copy-on-write

@@ -308,6 +308,21 @@ class LakeSpec extends AnyFunSuite {
     assert(FileStats.peakFooterReads.get() > 1)
   }
 
+  test("a zero-row file beside the data does not unbind footer ranges") {
+    val dir = Files.createTempDirectory("empty-part-")
+    val hdir = new org.apache.hadoop.fs.Path(dir.toUri)
+    val io = new LakeIo(hdir.getFileSystem(spark.sessionState.newHadoopConf()))
+    Seq((5L, "e"), (9L, "i")).toDF("id", "s").coalesce(1)
+      .write.mode("overwrite").parquet(dir.toString)
+    Seq.empty[(Long, String)].toDF("id", "s").coalesce(1)
+      .write.mode("append").parquet(dir.toString)
+    val rows = FileStats.dirFileRows(io, hdir).get
+    assert(rows.size === 2 && rows.map(_._2).sorted === Seq(0L, 2L))
+    assert(FileStats.dirColumnRanges(io, hdir, Seq("id", "s")) ===
+      Map("id" -> (5L, 9L), "s" -> ("e", "i")))
+    assert(FileStats.dirRowsAndRanges(io, hdir, Seq("id"))._1 === Some(2L))
+  }
+
   test("metadata tables: files/partitions track live rows through MOR deletes") {
     val cat = freshCat()
     cat.write(sample().repartition(1), "ns.md", WriteMode.Overwrite)

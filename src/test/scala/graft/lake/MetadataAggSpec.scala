@@ -37,22 +37,14 @@ class MetadataAggSpec extends AnyFunSuite {
     cat.write(df(151 to 160), "ns.t", WriteMode.Append)
     val t = cat.table("ns.t")
 
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = TestSpark.jobs {
       assert(t.metadataRowCount() === Some(160L))
       assert(t.countRows() === 160L)
       // time travel counts the PINNED snapshot from its own manifest
       assert(t.metadataRowCount(Some(1L)) === Some(100L))
       assert(t.metadataRowCount(Some(2L)) === Some(150L))
-      org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark.sparkContext)
-      assert(jobs === 0, s"metadata counts must launch no Spark job, ran $jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.isEmpty, s"metadata counts must launch no Spark job, ran $jobs")
     assert(t.read().count() === 160L)
   }
 

@@ -22,18 +22,7 @@ class MetadataDeleteSpec extends AnyFunSuite {
   private def fresh(): LakeCatalog =
     new LakeCatalog(spark, Files.createTempDirectory("mdel-wh-").toString)
 
-  private def countJobs(body: => Unit): Int = {
-    @volatile var jobs = 0
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try { body; org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    jobs
-  }
+  private def countJobs(body: => Unit): Int = TestSpark.jobs(body).size
 
   test("whole-dir delete is metadata-only: zero jobs, dirs dropped, rows exact") {
     val cat = fresh()

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.TestSpark
 import graft.lake.LakeCatalog
 import graft.state.WatermarkStore
@@ -152,5 +153,45 @@ class MedallionSpec extends AnyFunSuite {
     val rows = m2.extractBronze(seed(), "last_updated")
     assert(rows === 0L)
     assert(cat.read("bronze.medallion").count() === 8) // unchanged
+  }
+
+  test("extract takes max(ts) and the count from staged footers: no aggregate") {
+    val (m, cat, st) = freshPipeline()
+    var n = -1L
+    val jobs = TestSpark.jobs { n = m.extractBronze(seed(), "last_updated") }
+    assert(n === 8L)
+    assert(st.get("medallion", "extract") === ts("2024-01-07 10:00:00"))
+    // the staging write and the bronze write, nothing else
+    assert(jobs.size === 2, jobs)
+    assert(cat.read("bronze.medallion").count() === 8)
+  }
+
+  test("extract under INT96 timestamps falls back to the aggregate, same watermark") {
+    // a child session: INT96 footers carry no ts bounds; other suites'
+    // writes keep the shared session's micros
+    val s96 = spark.newSession()
+    s96.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    val cat = new LakeCatalog(s96, Files.createTempDirectory("med-int96-").toString)
+    val st = new WatermarkStore(Files.createTempDirectory("med-int96-state-"))
+    val m = new Medallion(s96, cat, st, retryBaseDelayMs = 1)
+    val src = s96.createDataFrame(seed().collect().toSeq.asJava, seed().schema)
+    var n = -1L
+    val jobs = TestSpark.jobs { n = m.extractBronze(src, "last_updated") }
+    assert(n === 8L)
+    assert(st.get("medallion", "extract") === ts("2024-01-07 10:00:00"))
+    assert(jobs.size > 2, jobs)
+    assert(m.extractBronze(src, "last_updated") === 0L)
+  }
+
+  test("transformSilver runs only its write's jobs; the count comes from the manifest") {
+    val (m, cat, _) = freshPipeline()
+    m.extractBronze(seed(), "last_updated")
+    val write = TestSpark.jobs {
+      cat.write(cat.read("bronze.medallion").dropDuplicates(), "silver.probe")
+    }
+    var n = -1L
+    val jobs = TestSpark.jobs { n = m.transformSilver() }
+    assert(n === 7L)
+    assert(jobs.size === write.size, s"$jobs vs the bare write's $write")
   }
 }

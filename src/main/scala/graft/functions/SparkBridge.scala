@@ -27,6 +27,21 @@ object GraftColumnBridge {
   def waitListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** A copy of the calling thread's Spark local properties (job group,
+    * job description, SQL execution id), and the runner that installs
+    * such a copy around `body` on another thread: what
+    * `SQLExecution.withThreadLocalCaptured` does for Spark's own pools.
+    */
+  def localProperties(sc: org.apache.spark.SparkContext): java.util.Properties =
+    org.apache.spark.util.Utils.cloneProperties(sc.getLocalProperties)
+
+  def withLocalProperties[A](sc: org.apache.spark.SparkContext,
+                             props: java.util.Properties)(body: => A): A = {
+    val own = sc.getLocalProperties
+    sc.setLocalProperties(props)
+    try body finally sc.setLocalProperties(own)
+  }
+
   /** isStreaming-tagged frame over raw internal rows — what a v1
     * streaming Source's getBatch must hand the micro-batch engine.
     */

@@ -44,6 +44,10 @@ import org.apache.spark.sql.functions._
   * falls back to a FULL rebuild (overwrite commit, same meta
   * contract). MOR deletes, equality-delete upserts, appends,
   * compactions and metadata commits all stay on the incremental path.
+  * When the latest source commit is metadata-only and the source reads
+  * the same files as at the recorded version (a schema change, say),
+  * the view's rows stand: one metadata-only view commit records the
+  * new source version, and no Spark job runs.
   *
   * Scale: the delta aggregate shuffles changelog-sized data on the
   * group keys; the view-side MERGE touches only changed groups. The
@@ -208,8 +212,9 @@ object IncrementalView {
       case a         => a
     }
     val src = cat.table(sourceIdent)
-    val cur = src.latest.getOrElse(throw new IllegalStateException(
-      s"view source '$sourceIdent' does not exist")).version
+    val curSnap = src.latest.getOrElse(throw new IllegalStateException(
+      s"view source '$sourceIdent' does not exist"))
+    val cur = curSnap.version
     val viewT = cat.table(viewIdent)
     // latest-first history walk: snapshot meta is per-commit, so a
     // maintenance commit on the view (compact, expire) between
@@ -218,6 +223,11 @@ object IncrementalView {
 
     recorded match {
       case Some(v) if v == cur => viewT.latest.get // up to date
+      // source moved by metadata commits only: the view's rows stand
+      case Some(v) if v < cur && LakeTable.MetadataOps(curSnap.op) &&
+          src.snapshotAt(v).exists(_.sameFiles(curSnap)) =>
+        viewT.setMeta(extraMeta ++
+          Map(SourceVersionKey -> cur.toString, RefreshModeKey -> "incremental"))
       case Some(v) if v < cur =>
         try incremental(cat, src, viewT, v, cur, keys, maintained, extraMeta, tiers)
         catch {

@@ -110,6 +110,12 @@ final case class Snapshot(
                             spec: String = Snapshot.joinSpec(partitionBy)): Snapshot =
     withEntries(entries ++ ds.map(DirEntry(_, dirSchemaJson, spec, seq)))
   private[lake] def plusMeta(m: Map[String, String]): Snapshot = copy(meta = meta ++ m)
+  /** Reads the same data and delete files as `o`, each data dir at the
+    * same commit sequence: no row was added or removed between them.
+    */
+  private[lake] def sameFiles(o: Snapshot): Boolean =
+    dirs == o.dirs && dirs.indices.forall(i => dirSeq(i) == o.dirSeq(i)) &&
+      deleteDirs == o.deleteDirs && eqDeletes == o.eqDeletes
   /** The field-id high-water mark ([[SchemaIds.LastIdKey]]): it keeps a
     * dropped column's id from ever being reissued.
     */
@@ -253,7 +259,7 @@ object LakeTable {
     */
   private[graft] val MetadataOps =
     Set("create", "rename", "add-column", "drop", "widen", "set-spec", "rewrite-deletes",
-      "add-check", "drop-check", "set-autocompact")
+      "add-check", "drop-check", "set-autocompact", "set-meta")
 
   /** A manifest dir entry OUTSIDE the table root: an absolute URI (or
     * absolute path) registered by [[LakeTable.addFiles]]. Owned dirs
@@ -1583,6 +1589,11 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
             s"auto-compaction of $rootLocation failed; deferred to the next write", e)
         }
     }
+
+  /** Metadata-only commit adding `meta` to the latest snapshot. */
+  private[lake] def setMeta(meta: Map[String, String]): Snapshot =
+    commitMeta("set-meta", latest.getOrElse(throw new IllegalStateException(
+      s"empty table $rootLocation")))(_.plusMeta(meta))
 
   /** ALTER TABLE DROP CONSTRAINT: metadata-only removal. */
   def dropCheckConstraint(name: String): Snapshot = {

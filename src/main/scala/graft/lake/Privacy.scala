@@ -374,25 +374,12 @@ object Privacy {
     // pre-image hit count pinned to the pre-update version: a read-only
     // job over files the update never mutates (CoW writes new files),
     // so it overlaps the update's scan+rewrite commit (guide §2.6)
+    // (both settle before an update failure rethrows)
     val preV = segTbl.latest.map(_.version)
-    val beforeF = {
-      import scala.concurrent.ExecutionContext.Implicits.global
-      scala.concurrent.Future(segTbl.read(preV).where(hit).count())
-    }
-    val snapT = scala.util.Try(LakeDml.update(segTbl, hit,
-      Map(bmCol -> BF.bitmap64_remove(col(bmCol), keyBm)),
-      strategy = DmlStrategy.CopyOnWrite))
-    // settle the audit count before rethrowing an update failure — a
-    // dangling job must not outlive the exception
-    val beforeT = scala.util.Try(scala.concurrent.Await.result(
-      beforeF, scala.concurrent.duration.Duration.Inf))
-    (snapT, beforeT) match {
-      case (scala.util.Failure(e1), scala.util.Failure(e2)) if e1 ne e2 =>
-        e1.addSuppressed(e2)
-      case _ => ()
-    }
-    val snap = snapT.get
-    val before = beforeT.get
+    val (snap, before) = graft.Async.both(segTbl.spark)(
+      LakeDml.update(segTbl, hit, Map(bmCol -> BF.bitmap64_remove(col(bmCol), keyBm)),
+        strategy = DmlStrategy.CopyOnWrite),
+      segTbl.read(preV).where(hit).count())
     val (expired, dirsFromExpiry) =
       segTbl.expireSnapshotsOlderThan(System.currentTimeMillis() + 1)
     val orphans =
@@ -484,26 +471,13 @@ object Privacy {
       // read-only job over files the CoW delete never mutates, so it
       // overlaps the delete's scan+rewrite commit on a concurrent
       // action thread (guide §2.6 — the forgetSegments pattern).
-      // Awaited BEFORE expiry, which is what actually removes the
-      // pre-delete files this count reads.
+      // Settled BEFORE expiry, which is what actually removes the
+      // pre-delete files this count reads, and before a delete
+      // failure rethrows.
       val preV = t.latest.map(_.version)
-      val beforeF = {
-        import scala.concurrent.ExecutionContext.Implicits.global
-        scala.concurrent.Future(t.read(preV).where(cond).count())
-      }
-      val snapT = scala.util.Try(
-        LakeDml.delete(t, cond, strategy = DmlStrategy.CopyOnWrite))
-      // settle the count before rethrowing a delete failure — a
-      // dangling job must not outlive the exception
-      val beforeT = scala.util.Try(scala.concurrent.Await.result(
-        beforeF, scala.concurrent.duration.Duration.Inf))
-      (snapT, beforeT) match {
-        case (scala.util.Failure(e1), scala.util.Failure(e2)) if e1 ne e2 =>
-          e1.addSuppressed(e2)
-        case _ => ()
-      }
-      val snap = snapT.get
-      val before = beforeT.get
+      val (snap, before) = graft.Async.both(t.spark)(
+        LakeDml.delete(t, cond, strategy = DmlStrategy.CopyOnWrite),
+        t.read(preV).where(cond).count())
       val (expired, dirsFromExpiry) =
         t.expireSnapshotsOlderThan(System.currentTimeMillis() + 1)
       // sweep bounded by the erasure start time, not zero grace: a
@@ -523,21 +497,17 @@ object Privacy {
     // SAME table — a request erasing two key columns — stay
     // sequential within their table's future (concurrent self-CAS
     // would conflict) and results return in input order
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val indexed = targets.zipWithIndex
     val perTable = indexed.groupBy(_._1._3.rootLocation).values.toSeq
-      .map(group => Future(group.map { case ((ident, keyCol, t), i) =>
-        i -> eraseOne(ident, keyCol, t)
+      .map(group => graft.Async(group.head._1._3.spark)(group.map {
+        case ((ident, keyCol, t), i) => i -> eraseOne(ident, keyCol, t)
       }))
     // await EVERY future before deciding the outcome: a runtime
     // failure on one table must neither discard the evidence of
     // erasures that DID complete (the compliance record of an
     // irreversible act) nor leave sibling erasures running
     // unsupervised past the caller's exception
-    val settled = perTable.map(f =>
-      scala.util.Try(Await.result(f, Duration.Inf)))
+    val settled = perTable.map(graft.Async.settle)
     val failures = settled.collect { case scala.util.Failure(e) => e }
     val completed = settled.collect { case scala.util.Success(rs) => rs }
       .flatten.sortBy(_._1).map(_._2)

@@ -72,7 +72,7 @@ object IncrementalContamination {
     val grams = gramRows(bench, textCol, idCol, n)
       .select(col("g")).distinct()
       .withColumn("bk", pmod(xxhash64(col("g")), lit(indexBuckets)).cast("int"))
-      .repartition(indexBuckets, col("bk"))
+      .repartition(col("bk"))
     tbl.write(grams, WriteMode.Overwrite, partitionBy = Seq("bk"),
       meta = Map(BucketsKey -> indexBuckets.toString, GramNKey -> n.toString))
   }
@@ -84,7 +84,7 @@ object IncrementalContamination {
     prof(s"contam batch=$batchId start")
     val (grams, bks) = checkpointWithBkCensus(gramRows(batch, textCol, idCol, n)
       .withColumn("bk", pmod(xxhash64(col("g")), lit(indexBuckets)).cast("int"))
-      .repartition(indexBuckets, col("bk")))
+      .repartition(col("bk")))
     prof(s"contam batch=$batchId grams checkpointed")
     val bench = readOrEmpty(spark, benchTbl,
       Seq(LakePredicate.In("bk", bks)),
@@ -92,7 +92,7 @@ object IncrementalContamination {
         org.apache.spark.sql.types.StructField("g",
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("bk",
-          org.apache.spark.sql.types.IntegerType))))
+          org.apache.spark.sql.types.IntegerType))))()
       .select(col("g"), col("bk"))
     // grams are distinct per doc AND distinct in the index, so the
     // join emits each (doc, gram) hit exactly once — the count is the
@@ -152,7 +152,7 @@ object IncrementalContamination {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id", docs.schema(idCol).dataType),
         org.apache.spark.sql.types.StructField("n_hit_grams",
-          org.apache.spark.sql.types.LongType))))
+          org.apache.spark.sql.types.LongType))))()
       .groupBy(col("id").as(idCol))
       // replayed batches skip on the marker, but a crash between the
       // flags append and the checkpoint can legitimately re-flag a doc

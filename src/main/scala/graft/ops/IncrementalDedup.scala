@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.lake.{LakePredicate, LakeTable, WriteMode}
+import graft.Async
+import graft.lake.{LakePredicate, LakeTable, Snapshot, WriteMode}
 
 /** Incremental (at-ingest) MinHash near-dedup — the streaming form of
   * [[Dedup.minHashLshPairs]]: every arriving micro-batch is
@@ -77,11 +78,15 @@ object IncrementalDedup {
         rowMeta = false)
   }
 
+  /** `tbl` at snapshot `at` (its latest by default) filtered by
+    * `preds`; an empty frame of `schema` when there is no snapshot.
+    */
   private[ops] def readOrEmpty(spark: SparkSession, tbl: LakeTable,
                                preds: Seq[LakePredicate],
-                               schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (tbl.latest.isDefined) tbl.scan(preds)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+                               schema: org.apache.spark.sql.types.StructType)
+                              (at: Option[Snapshot] = tbl.latest): DataFrame =
+    at.fold(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))(
+      s => tbl.scan(preds, Some(s.version)))
 
   /** Eagerly materialize `df` (localCheckpoint) AND census its `bk`
     * column in the SAME job, via an accumulator fed by a pass-through
@@ -133,59 +138,56 @@ object IncrementalDedup {
                                candPairCap: Int = DefaultCandPairCap): Unit = {
     val (bsh, bbanded) =
       Dedup.bandedSignatures(batch, textCol, idCol, n, numHashes, bands)
-    // checkpoint ALREADY hash-partitioned by bk: sigs evaluate once
+    // checkpoint ALREADY hash-clustered by bk: sigs evaluate once
     // (not per join branch) AND the index appends below write straight
     // from the materialized layout — partitionBy emits one file per
-    // bucket per holding task, so pre-clustering by bk here is what
-    // caps each append at ≤ indexBuckets files with no second shuffle.
-    // The two materializations are independent jobs; run them
-    // concurrently (fixed job cost dominates at micro-batch sizes).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // partition count = bucket count: one task per bucket is the
-    // natural parallelism of a bucketed layout (the default shuffle
-    // partition count leaves half the tasks empty when
-    // indexBuckets < partitions, and per-task scheduling is the
-    // dominant cost at micro-batch sizes; at 100 TB indexBuckets is
-    // thousands and this IS the scale-out)
-    val bshF = Future(bsh
+    // bucket per holding task, and hash clustering puts each bucket in
+    // exactly one task, so each append writes ≤ indexBuckets files
+    // with no second shuffle. The partition COUNT is left to adaptive
+    // execution, sized by bytes: a micro-batch coalesces to one task
+    // (each write task's fixed cost, mostly deserializing its task
+    // binary, dwarfs its data), while a large batch still fans out up
+    // to spark.sql.shuffle.partitions. The two materializations are
+    // independent jobs; run them concurrently.
+    val bshF = Async(spark)(bsh
       .withColumn("bk", pmod(xxhash64(col("id")), lit(indexBuckets)).cast("int"))
-      .repartition(indexBuckets, col("bk"))
+      .repartition(col("bk"))
       .localCheckpoint())
     // the band-bucket census rides the checkpoint job itself
     // (accumulator in a pass-through mapPartitions) — the separate
     // distinct-collect it replaces was one more job on the trigger's
     // critical path, and at micro-batch sizes the per-job scheduling
     // fixed cost is the entire bill
-    val bbandedF = Future(checkpointWithBkCensus(bbanded
+    val bbandedF = Async(spark)(checkpointWithBkCensus(bbanded
       .withColumn("bk", pmod(xxhash64(col("bh")), lit(indexBuckets)).cast("int"))
-      .repartition(indexBuckets, col("bk"))))
+      .repartition(col("bk"))))
     prof(s"batch=$batchId start")
-    val bshC = Await.result(bshF, Duration.Inf)
-    val (bbandedC, bandKeys) = Await.result(bbandedF, Duration.Inf)
+    val bshC = Async.await(bshF)
+    val (bbandedC, bandKeys) = Async.await(bbandedF)
     prof(s"batch=$batchId checkpoints done")
     // bucket-local index read: only the partitions this batch's
     // band hashes occupy — the per-trigger scan is O(batch's
     // bucket span), not O(history). Key sets are ≤ indexBuckets,
     // so the census is parameter-bounded driver state.
     val prevBanded = readOrEmpty(spark, bandsTbl,
-      Seq(LakePredicate.In("bk", bandKeys)), bbandedC.schema)
+      Seq(LakePredicate.In("bk", bandKeys)), bbandedC.schema)()
     // Index appends start NOW, overlapping the candidate/verify work
-    // below: prevBanded is already bound to a snapshot (lake snapshots
-    // are immutable, so the concurrent append cannot leak into it),
-    // and even a scan that DOES land after the append — the shingle
-    // read below, or a foreachBatch replay — only re-sees the batch's
-    // own rows, which the self-pair guards and the duplicate-set NOTE
-    // make harmless. Each per-trigger Spark job carries a fixed
-    // scheduling cost that dwarfs this data volume, so independent
-    // jobs run concurrently throughout. Index frames were checkpointed
-    // already clustered by bk, so each append is a straight map-stage
-    // write of <= indexBuckets files. No statsBy: bk lives in the
-    // directory names (pruning is PartitionFilters), and declaring it
-    // would trigger the writer's scanning-stats fallback every append.
-    val bandsAppendF = Future(idempotentAppend(bandsTbl, bbandedC, batchId, Seq("bk"), Nil))
-    val shAppendF = Future(idempotentAppend(shTbl, bshC, batchId, Seq("bk"), Nil))
+    // below. Both index reads are bound to the snapshot BEFORE the
+    // append (lake snapshots are immutable): prevBanded above, and the
+    // shingle read below at `shBase`, so what a trigger reads never
+    // depends on whether its own append has landed yet. A foreachBatch
+    // replay re-sees the batch's own rows, which the self-pair guards
+    // and the duplicate-set NOTE make harmless. Each per-trigger Spark
+    // job carries a fixed scheduling cost that dwarfs this data
+    // volume, so independent jobs run concurrently throughout. Index
+    // frames were checkpointed already clustered by bk, so each append
+    // is a straight map-stage write of <= indexBuckets files. No
+    // statsBy: bk lives in the directory names (pruning is
+    // PartitionFilters), and declaring it would trigger the writer's
+    // scanning-stats fallback every append.
+    val shBase = shTbl.latest
+    val bandsAppendF = Async(spark)(idempotentAppend(bandsTbl, bbandedC, batchId, Seq("bk"), Nil))
+    val shAppendF = Async(spark)(idempotentAppend(shTbl, bshC, batchId, Seq("bk"), Nil))
     // candidates: batch × index bucket collisions (either direction)
     // + in-batch collisions; canonicalized u < v. The BATCH side is
     // broadcast: the bucket-pruned index is then STREAMED against a
@@ -252,7 +254,7 @@ object IncrementalDedup {
         (candQuery.select(col("u"), col("v")).distinct(), keys, true)
       }
     val prevSh = readOrEmpty(spark, shTbl,
-      Seq(LakePredicate.In("bk", candKeys)), bshC.schema)
+      Seq(LakePredicate.In("bk", candKeys)), bshC.schema)(shBase)
     // NOTE: on a replayed batch the index already holds the batch's
     // sets, so ids can appear twice here — harmless (duplicate pairs
     // verify identically; `drops` is distinct) and cheaper than a
@@ -275,9 +277,9 @@ object IncrementalDedup {
     // ⇒ drops is provably empty ⇒ its write (and the verify joins
     // feeding it) are skipped outright.
     prof(s"batch=$batchId cands=${candSample.length} verify built")
-    val dropsAppendF = Future(if (hasCands)
+    val dropsAppendF = Async(spark)(if (hasCands)
       idempotentAppend(dropsTbl, drops.coalesce(1), batchId, Nil, Nil))
-    Seq(dropsAppendF, bandsAppendF, shAppendF).foreach(Await.result(_, Duration.Inf))
+    Seq(dropsAppendF, bandsAppendF, shAppendF).foreach(Async.await)
     prof(s"batch=$batchId appends done")
     // periodic bin-pack (also concurrent per table): fold the
     // per-trigger commit trickle so the manifest's dir list (and each
@@ -288,10 +290,10 @@ object IncrementalDedup {
     // handful of dirs it will never read again.
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
       Seq(dropsTbl, bandsTbl, shTbl)
-        .map(t => Future(
+        .map(t => Async(spark)(
           if (t.latest.exists(_.dirs.size >= CompactMinDirs))
             t.compactBinPack(maxDirBytes = 64L << 20)))
-        .foreach(Await.result(_, Duration.Inf))
+        .foreach(Async.await)
       prof(s"batch=$batchId compact done")
     }
   }
@@ -353,14 +355,11 @@ object IncrementalDedup {
       val idColMarker = srcDir.resolve("_id_col")
       if (!Files.exists(idColMarker)) Files.writeString(idColMarker, idCol)
       prof(s"ingest $batchName: slice writes start")
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      (0 until slices).map(s => Future(
+      (0 until slices).map(s => Async(spark)(
         input.filter(pmod(col(idCol), lit(slices)) === s)
           .coalesce(1).write.mode("overwrite")
           .parquet(batchDir.resolve(f"slice_$s%03d").toString)))
-        .foreach(Await.result(_, Duration.Inf))
+        .foreach(Async.await)
     }
     prof(s"ingest $batchName: slices written, stream starting")
     val q = spark.readStream
@@ -413,7 +412,7 @@ object IncrementalDedup {
     val dropped = readOrEmpty(spark, dropsTbl, Nil,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id",
-          docs.schema(idCol).dataType, nullable = false))))
+          docs.schema(idCol).dataType, nullable = false))))()
       .select(col("id").as(idCol)).distinct()
     docs.select(col(idCol))
       .join(dropped.withColumn("_drop", lit(true)), Seq(idCol), "left_outer")

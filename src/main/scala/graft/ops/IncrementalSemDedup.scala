@@ -3,6 +3,7 @@ package graft.ops
 import java.nio.file.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Async
 import graft.lake.{LakePredicate, LakeTable, WriteMode}
 import graft.functions.HashFunctions._
 import graft.functions.VectorFunctions._
@@ -56,21 +57,20 @@ object IncrementalSemDedup {
     // every independent job runs concurrently (the IncrementalDedup
     // pattern): the two checkpoint materializations, then the index
     // appends overlapped with the candidate/verify work below (the
-    // pre-append bucket read is snapshot-bound, so the overlap is safe)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // partition count = bucket count (see IncrementalDedup: one task
-    // per bucket is the bucketed layout's natural parallelism)
-    val vecsF = Future(batch
+    // index reads are bound to the pre-append snapshots, so the
+    // overlap is safe)
+    // hash-clustered by bk, partition count sized by adaptive
+    // execution (see IncrementalDedup: a micro-batch is one task, each
+    // bucket still lands in exactly one file per append)
+    val vecsF = Async(spark)(batch
       .select(col(idCol).as("id"), col(vecCol).cast("array<float>").as("vec"))
       .withColumn("bk", pmod(xxhash64(col("id")), lit(indexBuckets)).cast("int"))
-      .repartition(indexBuckets, col("bk"))
+      .repartition(col("bk"))
       .localCheckpoint())
     // bucket census rides the checkpoint job (see
     // IncrementalDedup.checkpointWithBkCensus) — one fewer sequential
     // job per trigger than a separate distinct-collect
-    val bucketsF = Future(checkpointWithBkCensus(batch
+    val bucketsF = Async(spark)(checkpointWithBkCensus(batch
       .select(col(idCol).as("id"),
         explode(array((0 until tables).map(t =>
           struct(lit(t).as("table"),
@@ -78,16 +78,17 @@ object IncrementalSemDedup {
           .as("tb"))
       .select(col("id"), col("tb.table").as("table"), col("tb.bucket").as("bucket"))
       .withColumn("bk", pmod(xxhash64(col("table"), col("bucket")), lit(indexBuckets)).cast("int"))
-      .repartition(indexBuckets, col("bk"))))
-    val vecs = Await.result(vecsF, Duration.Inf)
+      .repartition(col("bk"))))
+    val vecs = Async.await(vecsF)
     // bucket-local index read: only the partitions this batch's LSH
     // buckets occupy — O(batch's bucket span), never O(history)
-    val (buckets, bucketKeys) = Await.result(bucketsF, Duration.Inf)
+    val (buckets, bucketKeys) = Async.await(bucketsF)
     prof(s"sem batch=$batchId checkpoints done")
     val prevBuckets = readOrEmpty(spark, bucketsTbl,
-      Seq(LakePredicate.In("bk", bucketKeys)), buckets.schema)
-    val bucketsAppendF = Future(idempotentAppend(bucketsTbl, buckets, batchId, Seq("bk"), Nil))
-    val vecsAppendF = Future(idempotentAppend(vecsTbl, vecs, batchId, Seq("bk"), Nil))
+      Seq(LakePredicate.In("bk", bucketKeys)), buckets.schema)()
+    val vecsBase = vecsTbl.latest
+    val bucketsAppendF = Async(spark)(idempotentAppend(bucketsTbl, buckets, batchId, Seq("bk"), Nil))
+    val vecsAppendF = Async(spark)(idempotentAppend(vecsTbl, vecs, batchId, Seq("bk"), Nil))
     // candidates: batch × index bucket collisions + in-batch
     // collisions, canonical u < v; self-pairs guarded for replay
     val crossIdx = prevBuckets.select(col("table"), col("bucket"), col("id").as("pid"))
@@ -134,7 +135,7 @@ object IncrementalSemDedup {
         (candQuery.select(col("u"), col("v")).distinct(), keys, true)
       }
     val prevVecs = readOrEmpty(spark, vecsTbl,
-      Seq(LakePredicate.In("bk", candKeys)), vecs.schema)
+      Seq(LakePredicate.In("bk", candKeys)), vecs.schema)(vecsBase)
     val sets = vecs.unionByName(prevVecs).drop("bk")
     val uSide = sets
       .select(col("id").as("u"), col("vec").as("u_vec"))
@@ -144,17 +145,17 @@ object IncrementalSemDedup {
       .join(if (underCap) broadcast(uSide) else uSide, Seq("v"))
       .where(cosine_sim(col("u_vec"), col("v_vec")) >= threshold)
       .select(col("v").as("id")).distinct() // larger id tombstoned
-    val dropsAppendF = Future(if (hasCands)
+    val dropsAppendF = Async(spark)(if (hasCands)
       idempotentAppend(dropsTbl, drops.coalesce(1), batchId, Nil, Nil))
-    Seq(dropsAppendF, bucketsAppendF, vecsAppendF).foreach(Await.result(_, Duration.Inf))
+    Seq(dropsAppendF, bucketsAppendF, vecsAppendF).foreach(Async.await)
     prof(s"sem batch=$batchId appends done")
     // fragmentation-gated bin-pack (see IncrementalDedup.CompactMinDirs)
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
       Seq(dropsTbl, bucketsTbl, vecsTbl)
-        .map(t => Future(
+        .map(t => Async(spark)(
           if (t.latest.exists(_.dirs.size >= IncrementalDedup.CompactMinDirs))
             t.compactBinPack(maxDirBytes = 64L << 20)))
-        .foreach(Await.result(_, Duration.Inf))
+        .foreach(Async.await)
   }
 
   /** Ingest one ARRIVAL of vectors: parquet slices land under a

@@ -94,26 +94,11 @@ object LakeQueries {
   /** Two INDEPENDENT actions on concurrent action threads (guide §2.6):
     * fixture asserts that each pay a full driver-action round trip over
     * disjoint/immutable state, or fixture tasks whose commits touch
-    * disjoint table roots (one Spark session schedules both fine).
-    * Both futures settle before a failure rethrows, so no job outlives
-    * the exception; when BOTH fail, the second is attached to the first
-    * as a suppressed exception instead of vanishing.
+    * disjoint table roots (one Spark session schedules both fine);
+    * failures settle as [[graft.Async.both]] says.
     */
-  private[queries] def inParallel[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fa = Future(a)
-    val fb = Future(b)
-    val ra = scala.util.Try(Await.result(fa, Duration.Inf))
-    val rb = scala.util.Try(Await.result(fb, Duration.Inf))
-    (ra, rb) match {
-      case (scala.util.Failure(ea), scala.util.Failure(eb)) if ea ne eb =>
-        ea.addSuppressed(eb)
-      case _ => ()
-    }
-    (ra.get, rb.get)
-  }
+  private[queries] def inParallel[A, B](a: => A, b: => B): (A, B) =
+    graft.Async.both(SparkSession.active)(a, b)
 
   /** S5 overwrite + append: v1 overwrite, v2 append → latest is the
     * two-commit union.
@@ -799,10 +784,7 @@ object LakeQueries {
     // the three audit counts are independent single-job actions on
     // disjoint tables — run them concurrently (guide §2.6)
     locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val audits = graft.lake.Privacy.IndexTableNames.map(n => Future {
+      val audits = graft.lake.Privacy.IndexTableNames.map(n => graft.Async(spark) {
         val t = new graft.lake.LakeTable(spark, work.resolve(n).toString)
         if (t.latest.isDefined) {
           require(t.read().where(col("id").isin(subjects: _*)).count() == 0L,
@@ -812,7 +794,7 @@ object LakeQueries {
       })
       // settle all before rethrowing: a failed audit must not leave
       // sibling audit jobs running past the exception
-      val settled = audits.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+      val settled = audits.map(graft.Async.settle)
       settled.collect { case scala.util.Failure(e) => e } match {
         case Nil => ()
         case e :: rest => rest.foreach(e.addSuppressed); throw e

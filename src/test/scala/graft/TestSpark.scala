@@ -30,17 +30,37 @@ object TestSpark {
     * submitter). Job counts are deterministic for a fixed plan, so a
     * count pins which actions a code path runs.
     */
-  def jobs(body: => Unit): Seq[String] = {
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
+  def jobs(body: => Unit): Seq[String] =
+    jobStarts(body).map(_.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("?"))
+
+  /** The start events of the Spark jobs `body` starts: their stages and
+    * the local properties (job group, description) they ran under.
+    */
+  def jobStarts(body: => Unit): Seq[org.apache.spark.scheduler.SparkListenerJobStart] = {
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.scheduler.SparkListenerJobStart]()
+    listening(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        sites.add(j.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("?"))
-    }
+        starts.add(j)
+    })(body)
+    import scala.jdk.CollectionConverters._
+    starts.asScala.toSeq
+  }
+
+  /** The number of Spark tasks `body` starts. */
+  def tasks(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    listening(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskStart(t: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
+        n.incrementAndGet()
+    })(body)
+    n.get
+  }
+
+  private def listening(l: org.apache.spark.scheduler.SparkListener)(body: => Unit): Unit = {
     org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
     try { body; org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark.sparkContext) }
     finally spark.sparkContext.removeSparkListener(l)
-    import scala.jdk.CollectionConverters._
-    sites.asScala.toSeq
   }
 }

@@ -318,6 +318,29 @@ class IncrementalViewSpec extends AnyFunSuite {
       Set(("a", 3L, 35.0), ("b", 1L, 30.0), ("c", 1L, 50.0)))
   }
 
+  test("refresh over metadata-only source commits runs no job and adds no view dir") {
+    val cat = freshCat()
+    IncrementalView.refresh(cat, "ns.src", "ns.view", Seq("g"), aggs)
+    val src = cat.table("ns.src")
+    src.addColumn("note", org.apache.spark.sql.types.StringType)
+    src.addColumn("note2", org.apache.spark.sql.types.StringType)
+    val dirs = cat.table("ns.view").latest.get.dirs
+    var snap: Snapshot = null
+    val jobs = TestSpark.jobs {
+      snap = IncrementalView.refresh(cat, "ns.src", "ns.view", Seq("g"), aggs)
+    }
+    assert(jobs.isEmpty, jobs)
+    assert(snap.dirs === dirs)
+    assert(snap.meta(IncrementalView.SourceVersionKey).toLong === src.latest.get.version)
+    assert(view(cat) === oracle(cat))
+    // the next data commit folds from the recorded version as usual
+    cat.write(Seq(("a", 4L, 5.0, "n", "m")).toDF("g", "id", "v", "note", "note2"),
+      "ns.src", WriteMode.Append)
+    val s2 = IncrementalView.refresh(cat, "ns.src", "ns.view", Seq("g"), aggs)
+    assert(s2.meta(IncrementalView.RefreshModeKey) === "incremental")
+    assert(view(cat) === oracle(cat))
+  }
+
   test("key census past driverKeyCap: bloom-bounded view read, merge bounds still cover") {
     val tiers = DriverTiers(driverKeyCap = 1, bloomFileThreshold = 0)
     val cat = freshCat()

@@ -303,6 +303,98 @@ class IncrementalDedupSpec extends AnyFunSuite {
     runRace(concurrent = true)
   }
 
+  /** `n` documents of 24 random words; every seventh copies an earlier
+    * one but for its last word (a near-dup at Jaccard ~0.9).
+    */
+  private def corpus(n: Int) = {
+    val rnd = new scala.util.Random(11)
+    val texts = scala.collection.mutable.ArrayBuffer.empty[String]
+    (0 until n).foreach { i =>
+      texts += (if (i % 7 == 6) texts(rnd.nextInt(i)).split(' ').init.mkString(" ") + s" tail$i"
+                else Seq.fill(24)(s"w${rnd.nextInt(400)}").mkString(" "))
+    }
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toSeq.toDF("doc_id", "text")
+  }
+
+  test("a 100-document trigger runs few tasks and appends at most indexBuckets files") {
+    import java.nio.file.Files
+    import graft.lake.LakeTable
+    val all = corpus(200)
+    val work = Files.createTempDirectory("incdedup-shape")
+    val Seq(bandsTbl, shTbl, dropsTbl) = Seq("bands", "shingles", "drops")
+      .map(n => new LakeTable(spark, work.resolve(n).toString))
+    def trigger(batch: org.apache.spark.sql.DataFrame, bid: Long): Unit =
+      IncrementalDedup.ingestBatch(spark, batch, bid, bandsTbl, shTbl, dropsTbl,
+        textCol = "text", idCol = "doc_id", n = 3, numHashes = 128,
+        bands = 32, threshold = 0.5, indexBuckets = 16, compactEvery = 0)
+    // arrivals are parquet files, as the stream reads them
+    def arrival(lo: Long): org.apache.spark.sql.DataFrame = {
+      val dir = work.resolve(s"arrival$lo").toString
+      all.where($"doc_id" >= lo && $"doc_id" < lo + 100).coalesce(1).write.parquet(dir)
+      spark.read.parquet(dir)
+    }
+    trigger(arrival(0L), 0L) // the index the measured trigger reads
+    val batch = arrival(100L)
+    val before = Seq(bandsTbl, shTbl).map(_.latest.get.dirs.toSet)
+    // byte-sized clustering: each checkpoint and each index append is
+    // one task at this size (16 each when sized to indexBuckets)
+    val tasks = TestSpark.tasks(trigger(batch, 1L))
+    assert(tasks <= 40, s"$tasks tasks")
+    Seq("bands" -> bandsTbl, "shingles" -> shTbl).zip(before).foreach { case ((nm, t), old) =>
+      val added = t.latest.get.dirs.filterNot(old)
+      assert(added.size === 1, added)
+      val files = Files.walk(work.resolve(nm).resolve(added.head))
+        .filter(_.toString.endsWith(".parquet")).count()
+      assert(files > 1 && files <= 16, s"$nm: $files files")
+    }
+    val got = IncrementalDedup.keptReport(spark, all, work)
+      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    val dropped = Dedup.ngramJaccardPairs(all, threshold = 0.5)
+      .select("b_id").collect().map(_.getLong(0)).toSet
+    assert(dropped.exists(_ >= 100L), "fixture must drop in the measured trigger")
+    (0L until 200L).foreach(id => assert(got(id) === !dropped(id), s"doc $id"))
+  }
+
+  test("every job an ingest trigger starts carries the stream's job group") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    val sc = spark.sparkContext
+    // a pool thread keeps the local properties of the thread that
+    // created it: create every worker of the global pool under another
+    // job group first, so a future that does not carry its caller's
+    // properties shows up under that group
+    sc.setJobGroup("pool-warm-up", "pool warm-up")
+    try {
+      val n = Runtime.getRuntime.availableProcessors
+      val latch = new java.util.concurrent.CountDownLatch(n)
+      val warm = (1 to n).map(_ => Future {
+        latch.countDown(); latch.await(10, java.util.concurrent.TimeUnit.SECONDS)
+      }(scala.concurrent.ExecutionContext.global))
+      warm.foreach(Await.result(_, 30.seconds))
+    } finally sc.clearJobGroup()
+    val runIds = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        runIds.add(e.runId.toString)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(l)
+    val work = java.nio.file.Files.createTempDirectory("incdedup-group")
+    sc.setJobGroup("caller", "ingest caller")
+    val groups = try TestSpark.jobStarts {
+      IncrementalDedup.ingest(spark, docs, work, "a", slices = 2)
+    }.map(_.properties.getProperty("spark.jobGroup.id"))
+    finally { sc.clearJobGroup(); spark.streams.removeListener(l) }
+    import scala.jdk.CollectionConverters._
+    assert(runIds.size === 1)
+    // the slice writes run under the caller's group, everything after
+    // the stream starts under the stream's (its run id)
+    assert(groups.count(_ == runIds.peek) >= 10, groups)
+    assert(groups.forall(g => g == "caller" || runIds.asScala.toSet(g)), groups)
+  }
+
   test("negative ids are sliced (pmod), deduped, and reported") {
     val negDocs = Seq(
       (-7L, "negative id document about minhash banding and bucket joins"),

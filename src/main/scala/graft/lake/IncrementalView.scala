@@ -44,20 +44,24 @@ import org.apache.spark.sql.functions._
   * falls back to a FULL rebuild (overwrite commit, same meta
   * contract). MOR deletes, equality-delete upserts, appends,
   * compactions and metadata commits all stay on the incremental path.
-  * When the latest source commit is metadata-only and the source reads
-  * the same files as at the recorded version (a schema change, say),
-  * the view's rows stand: one metadata-only view commit records the
-  * new source version, and no Spark job runs.
+  * When no source commit since the recorded version changes rows (a
+  * schema change, a compaction), the view's rows stand: one
+  * metadata-only view commit records the new source version, and no
+  * Spark job runs ([[ViewRefresh]], the driver shared with
+  * [[JoinView]]).
   *
   * Scale: the delta aggregate shuffles changelog-sized data on the
   * group keys; the view-side MERGE touches only changed groups. The
-  * only driver-side state is the delta's key census, taken by the job
-  * that checkpoints the delta: at most `driverKeyCap + 1` key tuples
-  * (the bounded `In` of the view read; above the cap, a bloom) and
-  * each key column's range, which the MERGE takes as its source's key
-  * bounds instead of aggregating its source again. A COUNT/SUM/AVG
-  * refresh thus runs the delta's aggregate and checkpoint, then the
-  * merge; only a MIN/MAX recompute adds actions.
+  * only driver-side state is [[KeyCensus]]es, each filled by the job
+  * that materializes its frame ([[DriverTiers.materialize]]): the
+  * delta's (at most `driverKeyCap` key tuples, the bounded `In` of the
+  * view read, a bloom above it; and each key column's range, which the
+  * MERGE takes as its source's key bounds instead of aggregating its
+  * source again), and for MIN/MAX views the recompute's, taken over
+  * the extremum-touched groups of the materialized merge rows. A
+  * COUNT/SUM/AVG refresh thus runs the delta's aggregate and
+  * checkpoint, then the merge; a MIN/MAX recompute adds its bounded
+  * source read.
   */
 object IncrementalView {
 
@@ -178,7 +182,7 @@ object IncrementalView {
   def refreshByName(cat: LakeCatalog, viewIdent: String,
                     tiers: DriverTiers = DriverTiers.Default): Snapshot = {
     import scala.jdk.CollectionConverters._
-    val defJson = latestMeta(cat.table(viewIdent), DefinitionKey).getOrElse(
+    val defJson = cat.table(viewIdent).latestMeta(DefinitionKey).getOrElse(
       throw new IllegalArgumentException(
         s"'$viewIdent' has no persisted view definition; create it with refreshSql()"))
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -216,36 +220,10 @@ object IncrementalView {
       s"view source '$sourceIdent' does not exist"))
     val cur = curSnap.version
     val viewT = cat.table(viewIdent)
-    // latest-first history walk: snapshot meta is per-commit, so a
-    // maintenance commit on the view (compact, expire) between
-    // refreshes must not amnesia the tracking state into a rebuild
-    val recorded = latestMeta(viewT, SourceVersionKey).map(_.toLong)
-
-    recorded match {
-      case Some(v) if v == cur => viewT.latest.get // up to date
-      // source moved by metadata commits only: the view's rows stand
-      case Some(v) if v < cur && LakeTable.MetadataOps(curSnap.op) &&
-          src.snapshotAt(v).exists(_.sameFiles(curSnap)) =>
-        viewT.setMeta(extraMeta ++
-          Map(SourceVersionKey -> cur.toString, RefreshModeKey -> "incremental"))
-      case Some(v) if v < cur =>
-        try incremental(cat, src, viewT, v, cur, keys, maintained, extraMeta, tiers)
-        catch {
-          // no row-level changelog across a rewrite, or history
-          // expired under the recorded version: rebuild
-          case _: RewriteCommitException | _: SnapshotExpiredException =>
-            fullBuild(cat, src, viewIdent, cur, keys, maintained, extraMeta)
-        }
-      // source rolled back behind the view, or first build
-      case _ => fullBuild(cat, src, viewIdent, cur, keys, maintained, extraMeta)
-    }
+    ViewRefresh(viewT, Seq(ViewRefresh.Source(src, curSnap, SourceVersionKey)), extraMeta)(
+      (windows, meta) => incremental(src, viewT, windows.head.from, cur, keys, maintained, meta, tiers))(
+      meta => fullBuild(cat, src, viewIdent, cur, keys, maintained, meta))
   }
-
-  /** Most recent snapshot carrying `key` (meta is per-commit; see the
-    * history-walk comments at the call sites). Absent table → None.
-    */
-  private def latestMeta(t: LakeTable, key: String): Option[String] =
-    t.latestMeta(key) // lazy newest-first walk, not an O(history) parse
 
   /** Aggregate columns for a full computation over source rows. */
   private def fullAggCols(aggs: Seq[ViewAgg]): Seq[Column] =
@@ -260,23 +238,21 @@ object IncrementalView {
 
   private def fullBuild(cat: LakeCatalog, src: LakeTable, viewIdent: String,
                         cur: Long, keys: Seq[String], aggs: Seq[ViewAgg],
-                        extraMeta: Map[String, String]): Snapshot = {
+                        meta: Map[String, String]): Snapshot = {
     val aggCols = fullAggCols(aggs)
     val full = src.read(Some(cur)).groupBy(keys.map(col): _*)
       .agg(aggCols.head, aggCols.tail: _*)
-    cat.write(full, viewIdent, WriteMode.Overwrite,
-      meta = extraMeta ++
-        Map(SourceVersionKey -> cur.toString, RefreshModeKey -> "full"),
+    cat.write(full, viewIdent, WriteMode.Overwrite, meta = meta,
       // engine-owned layout with a known access pattern: refreshes
       // read the view bounded by the delta's group keys and MERGE on
       // them — declare key stats so those reads file-skip
       statsBy = keys)
   }
 
-  private def incremental(cat: LakeCatalog, src: LakeTable, viewT: LakeTable,
+  private def incremental(src: LakeTable, viewT: LakeTable,
                           from: Long, cur: Long, keys: Seq[String],
                           aggs: Seq[ViewAgg],
-                          extraMeta: Map[String, String],
+                          meta: Map[String, String],
                           tiers: DriverTiers): Snapshot = {
     val changes = src.readChanges(from, Some(cur))
     val sign = when(col("_change_type") === "insert", lit(1L)).otherwise(lit(-1L))
@@ -305,7 +281,7 @@ object IncrementalView {
     // bounded by, and the key ranges the merge's strategy decision
     // needs (newRows' keys are a subset of the delta's).
     val (delta, census) = graft.ProfStream.prof("iv delta ckpt") {
-      checkpointWithKeyCensus(changes.groupBy(keys.map(col): _*)
+      DriverTiers.materialize(changes.groupBy(keys.map(col): _*)
         .agg(deltaCols.head, deltaCols.tail: _*), keys, tiers.driverKeyCap)
     }
 
@@ -347,9 +323,10 @@ object IncrementalView {
       case Max(_, o) => delta.col(s"_dd_$o").isNotNull &&
         (old.col(o).isNull || delta.col(s"_dd_$o") >= old.col(o))
     }
+    // a vanished group (live count 0) is deleted, never recomputed
     val needRecCol =
       if (recTriggers.isEmpty) lit(false)
-      else coalesce(recTriggers.reduce(_ || _), lit(false))
+      else coalesce(recTriggers.reduce(_ || _), lit(false)) && newN > 0
     val keyCols = keys.map(k => coalesce(old(k), delta(k)).as(k))
     val inc = j.select((keyCols ++ aggs.flatMap(mergedCol) :+ newN.as(N) :+
       needRecCol.as("_needrec") :+
@@ -371,20 +348,18 @@ object IncrementalView {
         // extremum-touched, still-live groups: MIN/MAX can only be
         // recomputed — but ONLY for those groups, from a source read
         // bounded to them. `inc` is referenced three times below
-        // (recompute key set, its driver-side In-pushdown sample, and
-        // the anti-join) — materialize the changelog-sized frame once
-        // instead of re-running the view⋈delta join per reference.
-        val incC = graft.ProfStream.prof("iv incC ckpt")(inc.localCheckpoint())
-        val needRec = incC.where(col("_needrec") && col(N) > 0)
-          .select(keys.map(col): _*)
-        // one collect serves the In-pushdown tier AND the audit count
-        val recSample = graft.ProfStream.prof("iv recSample collect") {
-          needRec.limit(tiers.driverKeyCap + 1).collect()
+        // (recompute key set, the anti-join, the merge) — materialize
+        // the changelog-sized frame once instead of re-running the
+        // view⋈delta join per reference; the same job censuses the
+        // recompute keys for the In pushdown and the audit count
+        val (incC, recKeys) = graft.ProfStream.prof("iv incC ckpt") {
+          DriverTiers.materialize(inc, keys, tiers.driverKeyCap, rowsWhere = Some("_needrec"))
         }
+        val needRec = incC.where(col("_needrec")).select(keys.map(col): _*)
         recMeta = Map(RecomputedGroupsKey ->
-          (if (recSample.length > tiers.driverKeyCap) s">${tiers.driverKeyCap}"
-           else recSample.length.toString))
-        if (recSample.isEmpty) {
+          (if (recKeys.overflowed) s">${tiers.driverKeyCap}"
+           else recKeys.tuples.size.toString))
+        if (recKeys.isEmpty) {
           // nothing's bound was touched (insert-only window, or every
           // delete strictly inside its group's range): pure fold, no
           // source read, no anti-join — and the frame is already
@@ -394,7 +369,7 @@ object IncrementalView {
         } else {
           // boundedSourceRead is already key-exact (semi-join applied
           // internally only when the In filters alone can't be)
-          val rec = boundedSourceRead(src, cur, needRec, recSample, keys, tiers)
+          val rec = boundedSourceRead(src, cur, needRec, recKeys, keys)
             .groupBy(keys.map(col): _*)
             .agg(fullAggCols(aggs).head, fullAggCols(aggs).tail: _*)
           val incKept = incC.as("i").join(rec.as("r"),
@@ -418,95 +393,9 @@ object IncrementalView {
       // outputs on `keys` and the anti-join makes them key-disjoint
       LakeDml.merge(viewT, newRowsC, keys,
         deleteMatched = Some(col(s"_src_$N") === 0),
-        meta = extraMeta ++ recMeta ++
-          Map(SourceVersionKey -> cur.toString, RefreshModeKey -> "incremental"),
+        meta = meta ++ recMeta,
         sourceKeyBounds = Some(census.bounds(keys)))
     }
-  }
-
-  /** `df` checkpointed, with a [[KeyCensus]] of its `keys` taken by the
-    * checkpoint's own job (the shape of
-    * `IncrementalDedup.checkpointWithBkCensus`): no second action reads
-    * the keys back.
-    */
-  private def checkpointWithKeyCensus(df: DataFrame, keys: Seq[String],
-                                      cap: Int): (DataFrame, KeyCensus) = {
-    val census = new KeyCensus(cap, keys.map(df.schema(_).dataType).toIndexedSeq)
-    df.sparkSession.sparkContext.register(census) // unnamed: no per-task UI strings
-    val idx = keys.map(df.schema.fieldIndex).toIndexedSeq
-    val cp = df.mapPartitions { it =>
-      it.map { r => census.add(idx.map(r.get)); r }
-    }(org.apache.spark.sql.Encoders.row(df.schema)).localCheckpoint()
-    (cp, census)
-  }
-
-  /** A frame's distinct key tuples, at most `cap + 1` of them in total
-    * (one more than the driver-exact tier holds, so overflow shows),
-    * and per key column its min, max and whether it holds a null.
-    * Every part is a set fold: a retried task that re-adds its rows
-    * changes nothing. A column whose values have no key in the stats
-    * domain that prunes on them (binary, NaN) gets no range.
-    */
-  private final class KeyCensus(cap: Int, types: IndexedSeq[org.apache.spark.sql.types.DataType])
-      extends org.apache.spark.util.AccumulatorV2[IndexedSeq[Any], KeyCensus] {
-    private val width = types.size
-    private val seen = scala.collection.mutable.LinkedHashSet.empty[IndexedSeq[Any]]
-    private val lo = new Array[Any](width)
-    private val hi = new Array[Any](width)
-    private val hasNull = new Array[Boolean](width)
-    private val unordered = new Array[Boolean](width)
-
-    /** The key tuples; more than `cap` means the census overflowed. */
-    def tuples: Seq[IndexedSeq[Any]] = seen.toSeq
-
-    /** Range predicates every key satisfies (Nil for an empty frame). */
-    def bounds(keys: Seq[String]): Seq[LakePredicate] =
-      keys.indices.flatMap { i =>
-        if (hasNull(i) || unordered(i) || lo(i) == null) Nil
-        else Seq(LakePredicate.GtEq(keys(i), lo(i)), LakePredicate.LtEq(keys(i), hi(i)))
-      }
-
-    private def fold(i: Int, vLo: Any, vHi: Any): Unit = {
-      def key(v: Any) = FileStats.probeKey(v, types(i))
-      if (!unordered(i)) (key(vLo), key(vHi)) match {
-        case (Some(kl), Some(kh)) =>
-          if (lo(i) == null) { lo(i) = vLo; hi(i) = vHi }
-          else {
-            if (FileStats.cmp(kl, key(lo(i)).get) < 0) lo(i) = vLo
-            if (FileStats.cmp(kh, key(hi(i)).get) > 0) hi(i) = vHi
-          }
-        case _ => unordered(i) = true
-      }
-    }
-
-    override def isZero: Boolean =
-      seen.isEmpty && (0 until width).forall(i => lo(i) == null && !hasNull(i) && !unordered(i))
-    override def copy(): KeyCensus = { val c = new KeyCensus(cap, types); c.merge(this); c }
-    override def reset(): Unit = {
-      seen.clear()
-      for (i <- 0 until width) { lo(i) = null; hi(i) = null; hasNull(i) = false; unordered(i) = false }
-    }
-    override def add(key: IndexedSeq[Any]): Unit = {
-      if (seen.size <= cap) seen += key
-      var i = 0
-      while (i < width) {
-        if (key(i) == null) hasNull(i) = true else fold(i, key(i), key(i))
-        i += 1
-      }
-    }
-    override def merge(other: org.apache.spark.util.AccumulatorV2[IndexedSeq[Any], KeyCensus]): Unit = {
-      val o = other.value
-      o.seen.iterator.takeWhile(_ => seen.size <= cap).foreach(seen += _)
-      var i = 0
-      while (i < width) {
-        hasNull(i) |= o.hasNull(i)
-        if (o.unordered(i)) unordered(i) = true
-        else if (o.lo(i) != null) fold(i, o.lo(i), o.hi(i))
-        i += 1
-      }
-    }
-    override def value: KeyCensus = this
-    override def toString: String = s"KeyCensus(${seen.size} tuples)"
   }
 
   /** View read bounded to the delta's group keys. SUPERSET-safe: the
@@ -521,23 +410,16 @@ object IncrementalView {
     */
   private def boundedViewRead(viewT: LakeTable, delta: DataFrame, census: KeyCensus,
                               keys: Seq[String], tiers: DriverTiers): DataFrame = {
-    val sample = census.tuples
-    if (sample.isEmpty) return viewT.read(None).where(lit(false))
-    if (sample.length > tiers.driverKeyCap)
-      return bloomBoundedViewRead(viewT, delta, keys, tiers)
-    val perCol = keys.zipWithIndex.map { case (k, i) =>
-      val vs = sample.map(_(i)).distinct
-      (k, vs.filterNot(_ == null), vs.contains(null))
-    }
-    // bound only when every key column is null-free and modest: the In
-    // predicates then file-skip on the driver AND row-filter exactly
-    // in the scan. A wide or null-bearing delta reads the view plain —
-    // the bounding there would cost more (giant isin plans over a view
-    // the delta touches densely anyway) than it saves, and the
-    // right-outer join drops untouched groups regardless.
-    if (perCol.forall { case (_, nn, hasNull) => !hasNull && nn.nonEmpty })
-      viewT.scan(perCol.map { case (k, nn, _) => LakePredicate.In(k, nn) }, None)
-    else bloomBoundedViewRead(viewT, delta, keys, tiers)
+    // bound only when every key column is null-free and the tuples fit
+    // the driver tier: the In predicates then file-skip on the driver
+    // AND row-filter exactly in the scan. A wide or null-bearing delta
+    // takes the bloom tier — the bounding there would cost more (giant
+    // isin plans over a view the delta touches densely anyway) than it
+    // saves, and the right-outer join drops untouched groups regardless.
+    if (census.isEmpty) viewT.read(None).where(lit(false))
+    else if (census.overflowed || keys.indices.exists(census.hasNull))
+      bloomBoundedViewRead(viewT, delta, keys, tiers)
+    else viewT.scan(keys.indices.map(i => LakePredicate.In(keys(i), census.values(i))), None)
   }
 
   /** Driver-large (or null-bearing) delta over a LARGE view: a bloom
@@ -572,44 +454,30 @@ object IncrementalView {
     }
   }
 
-  /** Source rows restricted EXACTLY to the `needRec` key set (for the
-    * MIN/MAX recompute), whose driver-side sample (`limit(driverKeyCap
-    * + 1)`) the caller already collected. Single null-free key with a
-    * driver-exact value set: `In` is the exact row filter (scan
-    * predicates filter rows, not just files) — no semi-join, with
-    * file skipping across the whole tier. Otherwise per-column `In`
-    * predicates bound the scan where they can and a null-safe
-    * semi-join restores tuple exactness.
+  /** Source rows restricted EXACTLY to the non-empty `needRec` key set
+    * (for the MIN/MAX recompute), whose census `rec` the caller took.
+    * Single null-free key with a driver-exact value set: `In` is the
+    * exact row filter (scan predicates filter rows, not just files) —
+    * no semi-join, with file skipping across the whole tier. Otherwise
+    * per-column `In` predicates bound the scan where they can and a
+    * null-safe semi-join restores tuple exactness.
     */
   private def boundedSourceRead(src: LakeTable, cur: Long,
-                                needRec: DataFrame,
-                                sample: Array[org.apache.spark.sql.Row],
-                                keys: Seq[String],
-                                tiers: DriverTiers): DataFrame = {
-    if (sample.isEmpty) return src.read(Some(cur)).where(lit(false))
-    val exactSingle = keys.size == 1 && sample.length <= tiers.driverKeyCap &&
-      !sample.exists(_.isNullAt(0))
-    if (exactSingle) {
+                                needRec: DataFrame, rec: KeyCensus,
+                                keys: Seq[String]): DataFrame =
+    if (keys.size == 1 && !rec.overflowed && !rec.hasNull(0)) {
       // driver-exact tier: the flat In file-skips AND row-filters —
       // exact with no join (the probe-set binary search in FileStats
       // keeps the skip cheap at the full driverKeyCap)
-      src.scan(Seq(LakePredicate.In(keys.head,
-        sample.map(_.get(0)).distinct.toSeq)), Some(cur))
+      src.scan(Seq(LakePredicate.In(keys.head, rec.values(0))), Some(cur))
     } else {
       val base =
-        if (sample.length > tiers.driverKeyCap) src.read(Some(cur))
-        else {
-          val preds = keys.zipWithIndex.flatMap { case (k, i) =>
-            val vals = sample.map(_.get(i)).toSeq
-            // a NULL group key can't ride an In predicate; drop the
-            // bound for that column (the semi-join stays exact)
-            if (vals.contains(null)) None
-            else Some(LakePredicate.In(k, vals.distinct))
-          }
-          src.scan(preds, Some(cur))
-        }
+        if (rec.overflowed) src.read(Some(cur))
+        // a NULL group key can't ride an In predicate; drop the bound
+        // for that column (the semi-join stays exact)
+        else src.scan(keys.indices.filterNot(rec.hasNull)
+          .map(i => LakePredicate.In(keys(i), rec.values(i))), Some(cur))
       base.as("s").join(needRec.as("k"),
         keys.map(k => base(k) <=> needRec(k)).reduce(_ && _), "left_semi")
     }
-  }
 }

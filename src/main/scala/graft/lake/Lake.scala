@@ -110,12 +110,6 @@ final case class Snapshot(
                             spec: String = Snapshot.joinSpec(partitionBy)): Snapshot =
     withEntries(entries ++ ds.map(DirEntry(_, dirSchemaJson, spec, seq)))
   private[lake] def plusMeta(m: Map[String, String]): Snapshot = copy(meta = meta ++ m)
-  /** Reads the same data and delete files as `o`, each data dir at the
-    * same commit sequence: no row was added or removed between them.
-    */
-  private[lake] def sameFiles(o: Snapshot): Boolean =
-    dirs == o.dirs && dirs.indices.forall(i => dirSeq(i) == o.dirSeq(i)) &&
-      deleteDirs == o.deleteDirs && eqDeletes == o.eqDeletes
   /** The field-id high-water mark ([[SchemaIds.LastIdKey]]): it keeps a
     * dropped column's id from ever being reissued.
     */
@@ -260,6 +254,13 @@ object LakeTable {
   private[graft] val MetadataOps =
     Set("create", "rename", "add-column", "drop", "widen", "set-spec", "rewrite-deletes",
       "add-check", "drop-check", "set-autocompact", "set-meta")
+
+  /** Whether commit `s` can add or remove rows: metadata commits and
+    * compactions cannot. The one rule behind [[LakeTable.readChanges]]'
+    * walk and the views' no-change refresh ([[ViewRefresh]]).
+    */
+  private[graft] def changesRows(s: Snapshot): Boolean =
+    !(MetadataOps.contains(s.op) || s.op == "compact")
 
   /** A manifest dir entry OUTSIDE the table root: an absolute URI (or
     * absolute path) registered by [[LakeTable.addFiles]]. Owned dirs
@@ -484,6 +485,16 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
   private[graft] def snapshotAt(v: Long): Option[Snapshot] =
     if (v <= 0) None else Manifest.read(io, manifestPath(v))
 
+  /** Whether a commit in `(from, to]` can change rows: a newest-first
+    * walk from `to` that stops at the first such commit, so a window
+    * ending in a data commit reads no manifest beyond `to`. An expired
+    * commit counts as a change (the walk cannot prove otherwise).
+    */
+  private[lake] def rowsChangedIn(from: Long, to: Snapshot): Boolean =
+    (to.version until from by -1).iterator
+      .map(v => if (v == to.version) Some(to) else snapshotAt(v))
+      .exists(_.forall(LakeTable.changesRows))
+
   /** [[snapshotAt]] for an incremental walk: an absent version throws
     * [[SnapshotExpiredException]].
     */
@@ -668,10 +679,9 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     var prev = if (fromVersion <= 0) None else Some(walkSnapshotAt(fromVersion))
     for (v <- fromVersion + 1 to hi) {
       val s = walkSnapshotAt(v)
-      val noRowChange = LakeTable.MetadataOps.contains(s.op) || s.op == "compact"
       val prevDirs = prev.map(_.dirs.toSet).getOrElse(Set.empty)
       val removed = prevDirs -- s.dirs.toSet
-      if (noRowChange) ()
+      if (!LakeTable.changesRows(s)) ()
       else if (removed.nonEmpty) {
         if (!skipRewrites) throw new RewriteCommitException(v, s.op, rootLocation)
       } else {

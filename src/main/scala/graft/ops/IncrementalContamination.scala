@@ -3,7 +3,7 @@ package graft.ops
 import java.nio.file.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.lake.{LakePredicate, LakeTable, WriteMode}
+import graft.lake.{DriverTiers, LakePredicate, LakeTable, WriteMode}
 
 /** At-ingest benchmark-contamination screening — the third member of
   * the at-ingest curation family ([[IncrementalDedup]],
@@ -36,7 +36,7 @@ import graft.lake.{LakePredicate, LakeTable, WriteMode}
   */
 object IncrementalContamination {
 
-  import IncrementalDedup.{checkpointWithBkCensus, idempotentAppend, prof, readOrEmpty}
+  import IncrementalDedup.{idempotentAppend, prof, readOrEmpty}
 
   /** Distinct word-n-gram rows (id, g) — raw gram strings, in-row
     * distinct before the explode (no dedup shuffle).
@@ -82,12 +82,12 @@ object IncrementalContamination {
                                textCol: String, idCol: String, n: Int,
                                indexBuckets: Int, compactEvery: Int = 4): Unit = {
     prof(s"contam batch=$batchId start")
-    val (grams, bks) = checkpointWithBkCensus(gramRows(batch, textCol, idCol, n)
+    val (grams, bks) = DriverTiers.materialize(gramRows(batch, textCol, idCol, n)
       .withColumn("bk", pmod(xxhash64(col("g")), lit(indexBuckets)).cast("int"))
-      .repartition(col("bk")))
+      .repartition(col("bk")), Seq("bk"), indexBuckets)
     prof(s"contam batch=$batchId grams checkpointed")
     val bench = readOrEmpty(spark, benchTbl,
-      Seq(LakePredicate.In("bk", bks)),
+      Seq(LakePredicate.In("bk", bks.values(0))),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("g",
           org.apache.spark.sql.types.StringType),
@@ -97,17 +97,18 @@ object IncrementalContamination {
     // grams are distinct per doc AND distinct in the index, so the
     // join emits each (doc, gram) hit exactly once — the count is the
     // number of distinct shared grams, no post-join dedup needed
-    val flags = grams.join(bench, Seq("g", "bk"))
+    // one materialization serves the emptiness probe (a census that
+    // overflows at its first row) and the append
+    val (flags, hits) = DriverTiers.materialize(grams.join(bench, Seq("g", "bk"))
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_hit_grams"))
-      .coalesce(1)
-      .localCheckpoint() // one materialization serves probe + append
+      .coalesce(1), Seq("id"), cap = 0)
     // most crawl batches are clean — an unconditional append would
     // grow flags/ by one empty commit per trigger for the stream's
     // whole lifetime (the trickle the dedup family bounds the same
     // way); a skipped marker is safe: a replay recomputes the same
     // empty frame
-    if (!flags.isEmpty)
+    if (!hits.isEmpty)
       idempotentAppend(flagsTbl, flags, batchId, Nil, Nil)
     // fragmentation-gated fold of the per-trigger commit trickle
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0 &&

@@ -1,11 +1,12 @@
 package graft.ops
 
 import java.nio.file.{Files, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import graft.Async
-import graft.lake.{LakePredicate, LakeTable, Snapshot, WriteMode}
+import graft.lake.{DriverTiers, LakePredicate, LakeTable, Snapshot, WriteMode}
 
 /** Incremental (at-ingest) MinHash near-dedup — the streaming form of
   * [[Dedup.minHashLshPairs]]: every arriving micro-batch is
@@ -88,48 +89,69 @@ object IncrementalDedup {
     at.fold(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))(
       s => tbl.scan(preds, Some(s.version)))
 
-  /** Eagerly materialize `df` (localCheckpoint) AND census its `bk`
-    * column in the SAME job, via an accumulator fed by a pass-through
-    * mapPartitions: the distinct bucket keys are known the moment the
-    * checkpoint lands, where a separate `select(bk).distinct.collect`
-    * costs one more sequential job on the trigger's critical path —
-    * at micro-batch sizes the fixed per-job scheduling cost is the
-    * whole bill. Retried tasks may re-add keys (accumulator at-least-
-    * once); a SET census is insensitive to that, and every key comes
-    * from a real row so the census is exact.
+  /** One trigger's candidate pairs (`u` < `v`, both ids of type
+    * `idType`), their shingle/vector-store buckets, whether there are
+    * any, and whether they are driver-held.
     */
-  private[ops] def checkpointWithBkCensus(df: DataFrame): (DataFrame, Seq[Int]) = {
-    val acc = df.sparkSession.sparkContext.collectionAccumulator[Int]("bkCensus")
-    val bkIdx = df.schema.fieldIndex("bk")
-    val cp = df.mapPartitions { it =>
-      val seen = new java.util.HashSet[Integer]()
-      it.map { r =>
-        val b = r.getInt(bkIdx)
-        if (seen.add(b)) acc.add(b)
-        r
-      }
-    }(org.apache.spark.sql.Encoders.row(df.schema)).localCheckpoint()
-    import scala.jdk.CollectionConverters._
-    (cp, acc.value.asScala.map(_.toInt).toSet.toSeq.sorted)
+  private[ops] final case class Candidates(pairs: DataFrame, buckets: Seq[Any],
+                                           nonEmpty: Boolean, local: Boolean)
+
+  /** Candidate pairs are near-dup-density-sized on benign corpora, so
+    * the normal path brings them to the driver once (the rebuilt
+    * LocalRelation makes both verify joins exchange-free and the bucket
+    * keys need no extra job). But density is ADVERSARY-CONTROLLED — a
+    * boilerplate-heavy crawl can collide one band bucket with a large
+    * fraction of history — so at most `cap` distinct pairs reach the
+    * driver: above it the pairs stay distributed and the verify joins
+    * run as ordinary shuffled joins; only the bucket-key set — <
+    * `indexBuckets`, a parameter — ever reaches the driver.
+    *
+    * The frame materializes ONCE, and the same job censuses its
+    * distinct pairs with their buckets ([[DriverTiers.materialize]]):
+    * no second job reads them back, and the over-cap fallback reuses
+    * the materialized rows. It carries NO distinct: the index joins
+    * broadcast the batch side, so a distinct would be the candidate
+    * path's ONLY exchange — the census dedups under the cap, and the
+    * distributed distinct runs only in the rare over-cap fallback.
+    */
+  private[ops] def candidates(spark: SparkSession, uv: DataFrame, idType: DataType,
+                              indexBuckets: Int, cap: Int): Candidates = {
+    val (cands, census) = DriverTiers.materialize(uv
+      .where(col("u") =!= col("v"))        // belt-and-suspenders vs self-pairs
+      .withColumn("bku", pmod(xxhash64(col("u")), lit(indexBuckets)).cast("int"))
+      .withColumn("bkv", pmod(xxhash64(col("v")), lit(indexBuckets)).cast("int")),
+      Seq("u", "v", "bku", "bkv"), cap)
+    if (!census.overflowed) {
+      val local = spark.createDataFrame(
+        java.util.Arrays.asList(census.tuples.map(t => Row(t(0), t(1))): _*),
+        StructType(Seq(StructField("u", idType), StructField("v", idType))))
+      val buckets = census.tuples.flatMap(t => Seq(t(2), t(3))).distinct
+      Candidates(broadcast(local), buckets, !census.isEmpty, local = true)
+    } else {
+      val buckets = cands.select(col("bku").as("bk"))
+        .unionByName(cands.select(col("bkv").as("bk")))
+        .distinct().collect().map(_.getInt(0)).toSeq
+      Candidates(cands.select(col("u"), col("v")).distinct(), buckets, nonEmpty = true, local = false)
+    }
   }
+
+  /** Cap on the distinct candidate pairs a micro-batch brings to the
+    * driver ([[candidates]]); above it the verify joins run distributed.
+    * A pair witnessed by several bands counts once. With its two buckets
+    * a pair of long ids serializes to about 62 bytes, so the driver
+    * holds about 16 MB at the cap, and each task ships at most that
+    * much ([[DriverTiers.materialize]]).
+    */
+  val DefaultCandPairCap = 250000
 
   /** One micro-batch of the ingest loop — factored out of foreachBatch
     * so the at-least-once path is testable: calling it twice with the
     * same batchId must change nothing (appends skip on the batch
     * marker; the recomputed candidate join sees the batch's own rows
     * already indexed and the self-pair guards keep it from tombstoning
-    * a document against itself).
+    * a document against itself). `candPairCap` bounds the distinct
+    * candidate pairs brought to the driver ([[candidates]]).
     */
-  /** Cap on candidate-pair ROWS collected to the driver per
-    * micro-batch; above it the verify joins run distributed (see
-    * ingestBatch). The probe counts pre-dedup rows (a pair can recur
-    * once per band/LSH-table that witnesses it — measured factor ~2-3
-    * on benign corpora), so the default carries headroom over the r9
-    * distinct-pair cap; 250k rows of two ids + two ints is ~8 MB of
-    * driver memory, still a safe bound.
-    */
-  val DefaultCandPairCap = 250000
-
   private[ops] def ingestBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
                                bandsTbl: LakeTable, shTbl: LakeTable, dropsTbl: LakeTable,
                                textCol: String, idCol: String, n: Int,
@@ -154,13 +176,13 @@ object IncrementalDedup {
       .repartition(col("bk"))
       .localCheckpoint())
     // the band-bucket census rides the checkpoint job itself
-    // (accumulator in a pass-through mapPartitions) — the separate
-    // distinct-collect it replaces was one more job on the trigger's
-    // critical path, and at micro-batch sizes the per-job scheduling
-    // fixed cost is the entire bill
-    val bbandedF = Async(spark)(checkpointWithBkCensus(bbanded
+    // ([[DriverTiers.materialize]]) — a separate distinct-collect would
+    // be one more job on the trigger's critical path, and at
+    // micro-batch sizes the per-job scheduling fixed cost is the entire
+    // bill. Bucket keys are < indexBuckets, so it never overflows.
+    val bbandedF = Async(spark)(DriverTiers.materialize(bbanded
       .withColumn("bk", pmod(xxhash64(col("bh")), lit(indexBuckets)).cast("int"))
-      .repartition(col("bk"))))
+      .repartition(col("bk")), Seq("bk"), indexBuckets))
     prof(s"batch=$batchId start")
     val bshC = Async.await(bshF)
     val (bbandedC, bandKeys) = Async.await(bbandedF)
@@ -170,7 +192,7 @@ object IncrementalDedup {
     // bucket span), not O(history). Key sets are ≤ indexBuckets,
     // so the census is parameter-bounded driver state.
     val prevBanded = readOrEmpty(spark, bandsTbl,
-      Seq(LakePredicate.In("bk", bandKeys)), bbandedC.schema)()
+      Seq(LakePredicate.In("bk", bandKeys.values(0))), bbandedC.schema)()
     // Index appends start NOW, overlapping the candidate/verify work
     // below. Both index reads are bound to the snapshot BEFORE the
     // append (lake snapshots are immutable): prevBanded above, and the
@@ -205,56 +227,11 @@ object IncrementalDedup {
       .join(bbandedC.select(col("band"), col("bh"), col("id").as("b")), Seq("band", "bh"))
       .where(col("a") < col("b"))
       .select(col("a").as("u"), col("b").as("v"))
-    // candidate pairs are near-dup-density-sized on benign corpora, so
-    // the normal path collects them once (the rebuilt LocalRelation
-    // makes both verify joins exchange-free and the shingle-bucket keys
-    // need no extra job). But density is ADVERSARY-CONTROLLED — a
-    // boilerplate-heavy crawl can collide one band bucket with a large
-    // fraction of history — so the collect is CAPPED at `candPairCap`
-    // (the RuntimeFilter limit(cap+1) pattern): above the cap the pairs
-    // stay distributed and the verify joins run as ordinary shuffled
-    // joins; only the bucket-key set — ≤ indexBuckets, a parameter —
-    // ever reaches the driver.
-    //
-    // Two per-trigger cost choices, both measured: the frame
-    // materializes ONCE (localCheckpoint serves the cap probe AND the
-    // over-cap fallback — the old probe-then-re-evaluate shape
-    // computed the banded joins twice precisely in the adversarial
-    // case, ADVICE r9), and it carries NO distinct: both index joins
-    // broadcast the batch side, so a distinct would be the candidate
-    // path's ONLY exchange — pair dedup is instead done on the driver
-    // under the cap (a band can witness the same pair ≤ `bands`
-    // times, so raw rows bound distinct pairs within a small factor)
-    // and by the distributed distinct in the rare over-cap fallback.
-    val candQuery = crossIdx.unionByName(inBatch)
-      .where(col("u") =!= col("v"))        // belt-and-suspenders vs self-pairs
-      .withColumn("bku", pmod(xxhash64(col("u")), lit(indexBuckets)).cast("int"))
-      .withColumn("bkv", pmod(xxhash64(col("v")), lit(indexBuckets)).cast("int"))
-      .localCheckpoint()
-    prof(s"batch=$batchId candidates checkpointed")
-    val candSample = candQuery.limit(candPairCap + 1).collect()
-    val underCap = candSample.length <= candPairCap
-    val idType = batch.schema(idCol).dataType
-    val candSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("u", idType),
-      org.apache.spark.sql.types.StructField("v", idType)))
-    val (cand, candKeys, hasCands) =
-      if (underCap) {
-        val distinctPairs = candSample.map(r => (r.get(0), r.get(1))).distinct
-        val local = spark.createDataFrame(
-          java.util.Arrays.asList(distinctPairs.map(p =>
-            org.apache.spark.sql.Row(p._1, p._2)): _*), candSchema)
-        val keys: Seq[Int] =
-          candSample.flatMap(r => Seq(r.getInt(2), r.getInt(3))).distinct.toSeq
-        (broadcast(local), keys, distinctPairs.nonEmpty)
-      } else {
-        val keys: Seq[Int] = candQuery.select(col("bku").as("bk"))
-          .unionByName(candQuery.select(col("bkv").as("bk")))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        (candQuery.select(col("u"), col("v")).distinct(), keys, true)
-      }
+    val cand = candidates(spark, crossIdx.unionByName(inBatch),
+      batch.schema(idCol).dataType, indexBuckets, candPairCap)
+    prof(s"batch=$batchId candidates materialized")
     val prevSh = readOrEmpty(spark, shTbl,
-      Seq(LakePredicate.In("bk", candKeys)), bshC.schema)(shBase)
+      Seq(LakePredicate.In("bk", cand.buckets)), bshC.schema)(shBase)
     // NOTE: on a replayed batch the index already holds the batch's
     // sets, so ids can appear twice here — harmless (duplicate pairs
     // verify identically; `drops` is distinct) and cheaper than a
@@ -262,10 +239,10 @@ object IncrementalDedup {
     val sets = bshC.unionByName(prevSh).drop("bk")
     val uSide = sets
       .select(col("id").as("u"), col("shingles").as("u_sh"), col("sz").as("u_sz"))
-      .join(cand, Seq("u")) // candidate-sized result
+      .join(cand.pairs, Seq("u")) // candidate-sized result
     val drops = sets
       .select(col("id").as("v"), col("shingles").as("v_sh"), col("sz").as("v_sz"))
-      .join(if (underCap) broadcast(uSide) else uSide, Seq("v"))
+      .join(if (cand.local) broadcast(uSide) else uSide, Seq("v"))
       .withColumn("inter", size(array_intersect(col("u_sh"), col("v_sh"))))
       .where(col("inter").cast("double") /
         (col("u_sz") + col("v_sz") - col("inter")) >= threshold)
@@ -276,9 +253,11 @@ object IncrementalDedup {
     // and each table skips itself on its batch marker. No candidates
     // ⇒ drops is provably empty ⇒ its write (and the verify joins
     // feeding it) are skipped outright.
-    prof(s"batch=$batchId cands=${candSample.length} verify built")
-    val dropsAppendF = Async(spark)(if (hasCands)
-      idempotentAppend(dropsTbl, drops.coalesce(1), batchId, Nil, Nil))
+    prof(s"batch=$batchId verify built")
+    val dropsAppendF = Async(spark)(if (cand.nonEmpty)
+      // sorted: the driver-held pairs come in the census's merge order,
+      // which follows task completion, and the file should repeat
+      idempotentAppend(dropsTbl, drops.coalesce(1).sortWithinPartitions("id"), batchId, Nil, Nil))
     Seq(dropsAppendF, bandsAppendF, shAppendF).foreach(Async.await)
     prof(s"batch=$batchId appends done")
     // periodic bin-pack (also concurrent per table): fold the

@@ -4,7 +4,7 @@ import java.nio.file.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Async
-import graft.lake.{LakePredicate, LakeTable, WriteMode}
+import graft.lake.{DriverTiers, LakePredicate, LakeTable, WriteMode}
 import graft.functions.HashFunctions._
 import graft.functions.VectorFunctions._
 
@@ -51,7 +51,7 @@ object IncrementalSemDedup {
                                tables: Int, bits: Int, threshold: Double,
                                indexBuckets: Int, compactEvery: Int,
                                candPairCap: Int): Unit = {
-    import IncrementalDedup.{checkpointWithBkCensus, idempotentAppend, prof, readOrEmpty}
+    import IncrementalDedup.{candidates, idempotentAppend, prof, readOrEmpty}
     prof(s"sem batch=$batchId start")
     // per-trigger fixed job costs dominate at micro-batch sizes, so
     // every independent job runs concurrently (the IncrementalDedup
@@ -68,9 +68,9 @@ object IncrementalSemDedup {
       .repartition(col("bk"))
       .localCheckpoint())
     // bucket census rides the checkpoint job (see
-    // IncrementalDedup.checkpointWithBkCensus) — one fewer sequential
-    // job per trigger than a separate distinct-collect
-    val bucketsF = Async(spark)(checkpointWithBkCensus(batch
+    // IncrementalDedup.ingestBatch) — one fewer sequential job per
+    // trigger than a separate distinct-collect
+    val bucketsF = Async(spark)(DriverTiers.materialize(batch
       .select(col(idCol).as("id"),
         explode(array((0 until tables).map(t =>
           struct(lit(t).as("table"),
@@ -78,14 +78,14 @@ object IncrementalSemDedup {
           .as("tb"))
       .select(col("id"), col("tb.table").as("table"), col("tb.bucket").as("bucket"))
       .withColumn("bk", pmod(xxhash64(col("table"), col("bucket")), lit(indexBuckets)).cast("int"))
-      .repartition(col("bk"))))
+      .repartition(col("bk")), Seq("bk"), indexBuckets))
     val vecs = Async.await(vecsF)
     // bucket-local index read: only the partitions this batch's LSH
     // buckets occupy — O(batch's bucket span), never O(history)
     val (buckets, bucketKeys) = Async.await(bucketsF)
     prof(s"sem batch=$batchId checkpoints done")
     val prevBuckets = readOrEmpty(spark, bucketsTbl,
-      Seq(LakePredicate.In("bk", bucketKeys)), buckets.schema)()
+      Seq(LakePredicate.In("bk", bucketKeys.values(0))), buckets.schema)()
     val vecsBase = vecsTbl.latest
     val bucketsAppendF = Async(spark)(idempotentAppend(bucketsTbl, buckets, batchId, Seq("bk"), Nil))
     val vecsAppendF = Async(spark)(idempotentAppend(vecsTbl, vecs, batchId, Seq("bk"), Nil))
@@ -101,52 +101,24 @@ object IncrementalSemDedup {
         Seq("table", "bucket"))
       .where(col("a") < col("b"))
       .select(col("a").as("u"), col("b").as("v"))
-    // materialized once and distinct-free (driver-side pair dedup
-    // under the cap; distributed distinct only in the over-cap
-    // fallback): the broadcast index joins make the candidate path
-    // exchange-free — see IncrementalDedup for the rationale
-    // (ADVICE r9 + per-trigger cost)
-    val candQuery = crossIdx.unionByName(inBatch)
-      .where(col("u") =!= col("v"))
-      .withColumn("bku", pmod(xxhash64(col("u")), lit(indexBuckets)).cast("int"))
-      .withColumn("bkv", pmod(xxhash64(col("v")), lit(indexBuckets)).cast("int"))
-      .localCheckpoint()
-    prof(s"sem batch=$batchId candidates checkpointed")
-    val candSample = candQuery.limit(candPairCap + 1).collect()
-    val underCap = candSample.length <= candPairCap
-    prof(s"sem batch=$batchId cands=${candSample.length} underCap=$underCap")
-    val idType = batch.schema(idCol).dataType
-    val candSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("u", idType),
-      org.apache.spark.sql.types.StructField("v", idType)))
-    val (cand, candKeys, hasCands) =
-      if (underCap) {
-        val distinctPairs = candSample.map(r => (r.get(0), r.get(1))).distinct
-        val local = spark.createDataFrame(
-          java.util.Arrays.asList(distinctPairs.map(p =>
-            org.apache.spark.sql.Row(p._1, p._2)): _*), candSchema)
-        val keys: Seq[Int] =
-          candSample.flatMap(r => Seq(r.getInt(2), r.getInt(3))).distinct.toSeq
-        (broadcast(local), keys, distinctPairs.nonEmpty)
-      } else {
-        val keys: Seq[Int] = candQuery.select(col("bku").as("bk"))
-          .unionByName(candQuery.select(col("bkv").as("bk")))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        (candQuery.select(col("u"), col("v")).distinct(), keys, true)
-      }
+    // materialized once, distinct pairs censused by the same job (see
+    // IncrementalDedup.candidates)
+    val cand = candidates(spark, crossIdx.unionByName(inBatch),
+      batch.schema(idCol).dataType, indexBuckets, candPairCap)
+    prof(s"sem batch=$batchId candidates materialized local=${cand.local}")
     val prevVecs = readOrEmpty(spark, vecsTbl,
-      Seq(LakePredicate.In("bk", candKeys)), vecs.schema)(vecsBase)
+      Seq(LakePredicate.In("bk", cand.buckets)), vecs.schema)(vecsBase)
     val sets = vecs.unionByName(prevVecs).drop("bk")
     val uSide = sets
       .select(col("id").as("u"), col("vec").as("u_vec"))
-      .join(cand, Seq("u"))
+      .join(cand.pairs, Seq("u"))
     val drops = sets
       .select(col("id").as("v"), col("vec").as("v_vec"))
-      .join(if (underCap) broadcast(uSide) else uSide, Seq("v"))
+      .join(if (cand.local) broadcast(uSide) else uSide, Seq("v"))
       .where(cosine_sim(col("u_vec"), col("v_vec")) >= threshold)
       .select(col("v").as("id")).distinct() // larger id tombstoned
-    val dropsAppendF = Async(spark)(if (hasCands)
-      idempotentAppend(dropsTbl, drops.coalesce(1), batchId, Nil, Nil))
+    val dropsAppendF = Async(spark)(if (cand.nonEmpty)
+      idempotentAppend(dropsTbl, drops.coalesce(1).sortWithinPartitions("id"), batchId, Nil, Nil))
     Seq(dropsAppendF, bucketsAppendF, vecsAppendF).foreach(Async.await)
     prof(s"sem batch=$batchId appends done")
     // fragmentation-gated bin-pack (see IncrementalDedup.CompactMinDirs)

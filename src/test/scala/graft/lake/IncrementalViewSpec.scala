@@ -367,4 +367,37 @@ class IncrementalViewSpec extends AnyFunSuite {
     assert(snap.meta(IncrementalView.RefreshModeKey) === "full")
     assert(view(cat) === oracle(cat))
   }
+
+  test("refresh after only a compaction of the source runs no job and adds no view dir") {
+    val cat = freshCat()
+    cat.write(Seq(("c", 4L, 40.0)).toDF("g", "id", "v"), "ns.src", WriteMode.Append)
+    IncrementalView.refresh(cat, "ns.src", "ns.view", Seq("g"), aggs)
+    val src = cat.table("ns.src")
+    src.compactBinPack(maxDirBytes = Long.MaxValue)
+    assert(src.latest.get.op === "compact")
+    val dirs = cat.table("ns.view").latest.get.dirs
+    var snap: Snapshot = null
+    val jobs = TestSpark.jobs {
+      snap = IncrementalView.refresh(cat, "ns.src", "ns.view", Seq("g"), aggs)
+    }
+    assert(jobs.isEmpty, jobs)
+    assert(snap.dirs === dirs)
+    assert(snap.meta(IncrementalView.SourceVersionKey).toLong === src.latest.get.version)
+    assert(view(cat) === oracle(cat))
+  }
+
+  test("MIN/MAX recompute: the recompute keys are censused by their checkpoint's job") {
+    val cat = freshCat()
+    IncrementalView.refresh(cat, "ns.src", "ns.view", Seq("g"), aggs)
+    // deleting a's MIN forces that group's bounded recompute
+    LakeDml.delete(cat.table("ns.src"), $"id" === 1L, strategy = DmlStrategy.MergeOnRead)
+    var snap: Snapshot = null
+    val jobs = TestSpark.jobs {
+      snap = IncrementalView.refresh(cat, "ns.src", "ns.view", Seq("g"), aggs)
+    }
+    assert(snap.meta(IncrementalView.RecomputedGroupsKey) === "1")
+    assert(!jobs.exists(_.startsWith("collect at IncrementalView")), jobs)
+    assert(jobs.size <= 13, jobs) // a collect of the recompute keys adds one
+    assert(view(cat) === oracle(cat))
+  }
 }

@@ -327,4 +327,54 @@ class JoinViewSpec extends AnyFunSuite {
     assert(mode(cat) === "full")
     assert(viewRows(cat) === expected(cat))
   }
+
+  test("a window of schema changes and compactions commits meta only: no job, no data dir") {
+    val cat = fresh()
+    cat.write(Seq((1L, 10L, 5.0), (2L, 20L, 7.0)).toDF("id", "ck", "amt"),
+      "ns.fact", WriteMode.Overwrite)
+    cat.write(Seq((10L, "A")).toDF("ck", "seg"), "ns.dim", WriteMode.Overwrite)
+    cat.table("ns.dim").write(Seq((20L, "B")).toDF("ck", "seg"), WriteMode.Append)
+    def refresh(v: String) = JoinView.refreshSql(cat, "ns.fact", "ns.dim", v,
+      "id", "ck", "ck", Seq("seg"))
+    refresh("ns.v")
+    cat.table("ns.fact").addColumn("note", org.apache.spark.sql.types.StringType)
+    cat.table("ns.dim").compactBinPack(maxDirBytes = Long.MaxValue)
+    val dirs = cat.table("ns.v").latest.get.dirs
+    val jobs = TestSpark.jobs(refresh("ns.v"))
+    assert(jobs.isEmpty, jobs)
+    val snap = cat.table("ns.v").latest.get
+    assert(snap.dirs === dirs)
+    assert(snap.meta(JoinView.FactVersionKey).toLong === cat.table("ns.fact").latest.get.version)
+    assert(snap.meta(JoinView.DimVersionKey).toLong === cat.table("ns.dim").latest.get.version)
+    refresh("ns.rebuilt")
+    def rows(v: String) = JoinView.read(cat, v).select("id", "ck", "amt", "seg")
+      .as[(Long, Long, Double, String)].collect().toSet
+    assert(rows("ns.v") === rows("ns.rebuilt"))
+  }
+
+  test("job counts: fact-only, dim-only and delete-bearing windows") {
+    // each tier materializes its keys once and reads their census; no
+    // second action collects them (that costs 2, 3 and 3 jobs more)
+    val cat = fresh()
+    cat.write(Seq((1L, 10L, 5.0), (2L, 10L, 7.0), (3L, 20L, 9.0))
+      .toDF("id", "ck", "amt"), "ns.fact", WriteMode.Overwrite)
+    cat.write(Seq((10L, "A"), (20L, "B")).toDF("ck", "seg"),
+      "ns.dim", WriteMode.Overwrite)
+    def refresh() = JoinView.refreshSql(cat, "ns.fact", "ns.dim", "ns.v",
+      factKey = "id", joinKey = "ck", dimKey = "ck", dimCols = Seq("seg"))
+    def measured(): Seq[String] = {
+      val jobs = TestSpark.jobs(refresh())
+      assert(!jobs.exists(_.startsWith("collect at JoinView")), jobs)
+      assert(mode(cat) === "incremental")
+      assert(viewRows(cat) === expected(cat))
+      jobs
+    }
+    refresh()
+    cat.table("ns.fact").write(Seq((4L, 20L, 1.0)).toDF("id", "ck", "amt"), WriteMode.Append)
+    assert(measured().size <= 9)
+    cat.table("ns.dim").upsert(Seq((10L, "A2")).toDF("ck", "seg"), Seq("ck"))
+    assert(measured().size <= 15)
+    LakeDml.delete(cat.table("ns.fact"), $"id" === 2L, strategy = DmlStrategy.MergeOnRead)
+    assert(measured().size <= 14)
+  }
 }

@@ -124,4 +124,19 @@ class IncrementalContaminationSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got(1L) === 3L)
   }
+
+  test("a warm screening trigger answers 'any hits?' from the flags' checkpoint job") {
+    val work = Files.createTempDirectory("contam4-")
+    IncrementalContamination.indexBenchmark(spark, bench, work)
+    val benchTbl = new graft.lake.LakeTable(spark, work.resolve("benchgrams").toString)
+    val flagsTbl = new graft.lake.LakeTable(spark, work.resolve("flags").toString)
+    def screen(docs: org.apache.spark.sql.DataFrame, bid: Long): Unit =
+      IncrementalContamination.screenBatch(spark, docs, bid, benchTbl, flagsTbl,
+        "text", "doc_id", 4, 16, compactEvery = 0)
+    screen(arrivals.where($"doc_id" === 3L), 0L)
+    val jobs = TestSpark.jobs(screen(arrivals, 1L))
+    assert(!jobs.exists(_.startsWith("isEmpty at")), jobs)
+    assert(jobs.size <= 6, jobs) // a separate emptiness probe adds one
+    assert(flagsTbl.read().select("id").as[Long].collect().toSeq === Seq(1L))
+  }
 }

@@ -355,6 +355,23 @@ class IncrementalDedupSpec extends AnyFunSuite {
     (0L until 200L).foreach(id => assert(got(id) === !dropped(id), s"doc $id"))
   }
 
+  test("a warm 100-document trigger censuses its candidate pairs in their checkpoint's job") {
+    import graft.lake.LakeTable
+    val all = corpus(200)
+    val work = java.nio.file.Files.createTempDirectory("incdedup-jobs")
+    val Seq(bandsTbl, shTbl, dropsTbl) = Seq("bands", "shingles", "drops")
+      .map(n => new LakeTable(spark, work.resolve(n).toString))
+    def trigger(lo: Long): Unit =
+      IncrementalDedup.ingestBatch(spark, all.where($"doc_id" >= lo && $"doc_id" < lo + 100),
+        lo / 100, bandsTbl, shTbl, dropsTbl, textCol = "text", idCol = "doc_id", n = 3,
+        numHashes = 128, bands = 32, threshold = 0.5, indexBuckets = 16, compactEvery = 0)
+    trigger(0L)
+    val jobs = TestSpark.jobs(trigger(100L))
+    assert(!jobs.exists(_.startsWith("collect at IncrementalDedup")), jobs)
+    assert(jobs.size <= 13, jobs) // a capped collect of the pairs adds two
+    assert(dropsTbl.read().where($"id" >= 100L).count() > 0, "the measured trigger must drop")
+  }
+
   test("every job an ingest trigger starts carries the stream's job group") {
     import org.apache.spark.sql.streaming.StreamingQueryListener
     import scala.concurrent.{Await, Future}

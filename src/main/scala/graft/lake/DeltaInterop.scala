@@ -901,11 +901,11 @@ final class DeltaExport(spark: SparkSession, location: String) {
   def vacuum(retentionMs: Long = 7L * 24 * 3600 * 1000): Seq[String] = {
     val st = state()
     require(st.version >= 0, "vacuum on a never-written table")
-    val live: Set[String] = st.adds.map(a =>
-      TaskScan.canon(new HPath(root, decodePath(a.path)).toString)).toSet
+    // every side is a qualified path form: one spelling ([[FileKey]])
+    val live: Set[String] = st.adds.map(a => new HPath(root, decodePath(a.path)).toString).toSet
     // inline (`i`) vectors live in the log entry itself: no file to keep
     val liveDvs: Set[String] = st.adds.flatMap(_.dv).filter(_.storageType != "i").map(d =>
-      TaskScan.canon(io.qualify(DeltaDv.dvPath(root, d)).toString)).toSet
+      io.qualify(DeltaDv.dvPath(root, d)).toString).toSet
     val horizon = System.currentTimeMillis() - retentionMs
     val deleted = Seq.newBuilder[String]
     val it = io.fs.listFiles(root, true)
@@ -916,8 +916,7 @@ final class DeltaExport(spark: SparkSession, location: String) {
       val isLog = rel.contains("_delta_log")
       val isData = p.getName.endsWith(".parquet") ||
         p.getName.startsWith("deletion_vector_")
-      val canon = TaskScan.canon(p.toString)
-      if (!isLog && isData && !live.contains(canon) && !liveDvs.contains(canon) &&
+      if (!isLog && isData && !live.contains(p.toString) && !liveDvs.contains(p.toString) &&
           f.getModificationTime < horizon) {
         io.fs.delete(f.getPath, false)
         deleted += p.toString

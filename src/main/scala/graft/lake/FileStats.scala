@@ -776,10 +776,10 @@ private[graft] object FileStats {
     require(present.nonEmpty, s"no stats columns $cols in ${df.columns.toSeq}")
     val aggs = present.flatMap(c => Seq(min(col(c)), max(col(c)),
       count(when(col(c).isNull, 1)).as(s"_n_$c")))
-    val rows = df.groupBy(input_file_name().as("_f"))
+    val rows = df.groupBy(FileKey.column.as("_f"))
       .agg(aggs.head, aggs.tail: _*).collect()
     DirStats(present.toIndexedSeq, rows.toSeq.map { r =>
-      relativeKey(r.getString(0), dir.getName) -> present.indices.map { i =>
+      relativeKey(FileKey.path(r.getString(0)).toString, dir.getName) -> present.indices.map { i =>
         ColRange(toKey(r.get(1 + 3 * i)), toKey(r.get(2 + 3 * i)), r.getLong(3 + 3 * i))
       }
     })

@@ -701,8 +701,8 @@ final class IcebergTableReader(spark: SparkSession, location: String) {
           if (addedDeletes.exists(_.content == EqualityDeletes)) prevData
           else {
             val named = TaskScan.positionRows(spark, addedDeletes.map(task))
-              .select(TaskScan.canon(col("file_path"))).distinct().collect().map(_.getString(0)).toSet
-            prevData.filter(f => named(TaskScan.canon(io.qualify(resolve(f.path)).toString)))
+              .select(FileKey.canon(col("file_path"))).distinct().collect().map(_.getString(0)).toSet
+            prevData.filter(f => named(io.qualify(resolve(f.path)).toString))
           }
         if (targets.nonEmpty)
           frames += tagged(scan(targets, prevDel, only = Some(addedDeletes)), "delete", s.sequence)
@@ -901,23 +901,9 @@ final class IcebergExport(spark: SparkSession, location: String) {
       throw new IllegalStateException(s"unreadable footers under $dir")).toMap
     val srcType: Map[String, DataType] =
       spec.map(f => f.name -> df.schema(f.srcCol).dataType).toMap
-    // inverse of Spark's escapePathName: decode %XX sequences ONLY —
-    // URLDecoder would also turn a literal '+' into a space and
-    // corrupt string partition values
-    def unescapePath(raw: String): String = {
-      val sb = new java.lang.StringBuilder(raw.length)
-      var i = 0
-      while (i < raw.length) {
-        val c = raw.charAt(i)
-        if (c == '%' && i + 2 < raw.length) {
-          sb.append(Integer.parseInt(raw.substring(i + 1, i + 3), 16).toChar)
-          i += 3
-        } else { sb.append(c); i += 1 }
-      }
-      sb.toString
-    }
     def parseValue(f: SpecField, raw: String): Any = {
-      val s = unescapePath(raw)
+      // Spark's inverse of its escapePathName: %XX only, a '+' stays
+      val s = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(raw)
       if (s == "__HIVE_DEFAULT_PARTITION__") null
       else f.transform match {
         case "day" | "month" | "hour" | "year" => Integer.valueOf(s.toInt)
@@ -1248,10 +1234,23 @@ final class IcebergExport(spark: SparkSession, location: String) {
     commit(keys.select(cols.map(col): _*), EqualityDeletes, cols, "delete")
 
   /** Position-delete commit: `coords` must have columns
-    * (file_path string, pos long) naming rows of EXISTING data files.
+    * (file_path string, pos long) naming rows of EXISTING data files,
+    * by path form or by URI form (`_metadata.file_path`). URI forms
+    * are stored as the data file's path form, the one its manifest
+    * entry holds ([[FileKey]]); the lookup runs on the delete rows.
     */
-  def positionDelete(coords: DataFrame): Long =
-    commit(coords.select(col("file_path"), col("pos")), PositionDeletes, Nil, "delete")
+  def positionDelete(coords: DataFrame): Long = {
+    val forms = FileStats.listParquet(io, dataDir).map(st => io.qualify(st.getPath))
+      .map(p => (FileKey.uri(p), p.toString)).filter { case (u, p) => u != p }
+    val rows =
+      if (forms.isEmpty) coords.select(col("file_path"), col("pos"))
+      else {
+        val byUri = spark.createDataFrame(forms).toDF("_gr_uri", "_gr_path")
+        coords.join(broadcast(byUri), FileKey.canon(coords("file_path")) === byUri("_gr_uri"), "left")
+          .select(coalesce(byUri("_gr_path"), coords("file_path")).as("file_path"), coords("pos"))
+      }
+    commit(rows, PositionDeletes, Nil, "delete")
+  }
 }
 
 object IcebergExport {

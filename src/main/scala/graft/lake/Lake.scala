@@ -380,22 +380,15 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     * distributed aggregate over the snapshot.
     */
   def files(version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, regexp_extract, substring}
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit, regexp_extract}
     val snap = resolve(version)
     val sp = spark
     import sp.implicits._
+    // each file's manifest key, dir, size and URI form (the live count's join key)
     val listed = snap.dirs.flatMap { d =>
-      val it = if (io.isDir(loc(d))) Some(io.fs.listFiles(loc(d), true)) else None
-      val b = Seq.newBuilder[(String, String, Long)]
-      it.foreach { i =>
-        while (i.hasNext) {
-          val st = i.next()
-          if (st.getPath.getName.endsWith(".parquet"))
-            b += ((s"$d/${FileStats.relativeKey(st.getPath.toString, new HPath(d).getName)}",
-              d, st.getLen))
-        }
-      }
-      b.result()
+      FileStats.listParquet(io, loc(d)).map(st =>
+        (s"$d/${FileStats.relativeKey(st.getPath.toString, new HPath(d).getName)}",
+          d, st.getLen, FileKey.uri(st.getPath)))
     }
     // record_count semantics are LIVE rows per file. On a delete-free
     // snapshot those are the write-time footer counts recorded in the
@@ -416,25 +409,10 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
         listed.map(f => (f._1, f._2, f._3, m(f._1)))
           .toDF("file", "dir", "size_bytes", "record_count")
       case _ =>
-        val files = listed.toDF("file", "dir", "size_bytes")
-        val prefix = qualifiedRootPrefix
-        // live-side key must mirror `listed`'s naming: root-relative
-        // for owned files, "<dir-uri>/<relative>" for imported external
-        // dirs (one prefix branch per external dir, commit-bounded)
-        val ownedKey = substring(col(LakePos.FileCol), prefix.length + 1, Int.MaxValue)
-        val liveKey = snap.dirs.filter(LakeTable.externalDir)
-          .foldLeft(ownedKey) { (acc, d) =>
-            val dl = location(d)
-            org.apache.spark.sql.functions.when(
-              col(LakePos.FileCol).startsWith(org.apache.spark.sql.functions.lit(dl + "/")),
-              org.apache.spark.sql.functions.concat(
-                org.apache.spark.sql.functions.lit(d + "/"),
-                substring(col(LakePos.FileCol), dl.length + 2, Int.MaxValue))).otherwise(acc)
-          }
         val live = scanImpl(Nil, version, keepPos = true)
-          .groupBy(liveKey.as("file"))
+          .groupBy(col(LakePos.FileCol).as("_gr_uri"))
           .agg(count(lit(1)).as("record_count"))
-        files.join(live, Seq("file"), "left")
+        listed.toDF("file", "dir", "size_bytes", "_gr_uri").join(live, Seq("_gr_uri"), "left")
           .withColumn("record_count", coalesce(col("record_count"), lit(0L)))
     }
     withCounts
@@ -693,17 +671,12 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
         val prevPosDeletes = prev.map(_.deleteDirs.toSet).getOrElse(Set.empty)
         val newPosDeletes = s.deleteDirs.filterNot(prevPosDeletes)
         if (newPosDeletes.nonEmpty) {
-          val delRows = spark.read.schema(DeleteFiles.schema)
-            .parquet(newPosDeletes.map(location): _*)
-            .select(
-              DeleteFiles.qualifiedKey(col(DeleteFiles.FileField), qualifiedRootPrefix)
-                .as("_gr_del_file"),
-              col(DeleteFiles.PosField).as("_gr_del_pos"))
+          val delRows = DeleteFiles.read(this, newPosDeletes)
           val prior = SchemaIds.align(readWithPos(Some(v - 1)), prevSchema, cur,
             Seq(LakePos.FileCol, LakePos.PosCol))
           frames += tagged(prior.join(delRows,
-            prior(LakePos.FileCol) === delRows("_gr_del_file") &&
-              prior(LakePos.PosCol) === delRows("_gr_del_pos"),
+            prior(LakePos.FileCol) === delRows(DeleteFiles.FileField) &&
+              prior(LakePos.PosCol) === delRows(DeleteFiles.PosField),
             "left_semi"), "delete", v)
         }
         val prevEq = prev.map(_.eqDeletes.toSet).getOrElse(Set.empty)
@@ -813,7 +786,7 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     val posNames = if (needPos) Seq(LakePos.FileCol, LakePos.PosCol) else Nil
     def attachPos(df: DataFrame): DataFrame =
       if (!needPos) df
-      else df.withColumn(LakePos.FileCol, col("_metadata.file_path"))
+      else df.withColumn(LakePos.FileCol, FileKey.column)
         .withColumn(LakePos.PosCol, col("_metadata.row_index"))
     val cur = snap.schema
     val hiddenFields = specFields(snap)._1.filter(_.hidden)
@@ -1006,15 +979,6 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     */
   private[lake] def readWithPos(version: Option[Long] = None): DataFrame =
     scanImpl(Nil, version, keepPos = true)
-
-  /** Hadoop-qualified root with a trailing slash — the prefix under
-    * which `_metadata.file_path` reports this table's data files.
-    * Delete files store paths relative to it (relocatable manifests).
-    */
-  private[lake] lazy val qualifiedRootPrefix: String = {
-    val q = rootQ.toString
-    if (q.endsWith("/")) q else q + "/"
-  }
 
   /** Predicate-pushing scan (Iceberg-style hidden-partition pruning):
     * each predicate filters the DATA column (exact semantics) AND,
@@ -1504,14 +1468,8 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     val cloneDeleteDirs =
       if (snap.deleteDirs.isEmpty) Nil
       else {
-        val del = spark.read.schema(DeleteFiles.schema)
-          .parquet(snap.deleteDirs.map(location): _*)
-          .select(
-            DeleteFiles.qualifiedKey(col(DeleteFiles.FileField), qualifiedRootPrefix)
-              .as(DeleteFiles.FileField),
-            col(DeleteFiles.PosField))
         val staged = target.loc(s"deletes/.staging-${UUID.randomUUID()}")
-        del.write.parquet(staged.toString)
+        DeleteFiles.read(this, snap.deleteDirs).write.parquet(staged.toString)
         val dirName = s"deletes/${UUID.randomUUID()}"
         target.io.move(staged, target.loc(dirName))
         Seq(dirName)
@@ -1644,7 +1602,7 @@ final class LakeTable(val spark: SparkSession, rootSpec: String) {
     val src = io.qualify(new HPath(srcDir))
     require(io.isDir(src), s"add_files source is not a directory: $src")
     val srcStr = src.toString
-    require(!(srcStr + "/").startsWith(qualifiedRootPrefix) && srcStr != rootQ.toString,
+    require(FileKey.underRoot(rootQ, src).isEmpty && srcStr != rootQ.toString,
       s"add_files source $srcStr is inside the table root — it is already table data")
     require(io.countFiles(src, ".parquet") > 0,
       s"add_files source $srcStr contains no parquet files")

@@ -36,49 +36,31 @@ private[lake] object DeleteFiles {
     StructField(FileField, StringType, nullable = false),
     StructField(PosField, LongType, nullable = false)))
 
-  /** Stored [[FileField]] form of an absolute file path: root-relative
-    * for files under the table root (keeps the table relocatable),
-    * absolute for files of imported external dirs ([[LakeTable.addFiles]]
-    * registers data outside the root — relativizing those would corrupt
-    * the key). Owned relative keys always start `data/`, so the two
-    * forms never collide.
-    */
-  def storedKey(file: Column, rootPrefix: String): Column =
-    when(file.startsWith(lit(rootPrefix)),
-      substring(file, rootPrefix.length + 1, Int.MaxValue)).otherwise(file)
-
-  /** Inverse of [[storedKey]]: the qualified file path of a stored
-    * [[FileField]] value, either form.
-    */
-  def qualifiedKey(field: Column, rootPrefix: String): Column =
-    when(field.startsWith(lit("data/")), concat(lit(rootPrefix), field))
-      .otherwise(field)
-
   /** Project a frame carrying [[LakePos]] columns down to the delete
-    * file schema, relativizing the absolute file path against the
-    * table's qualified root prefix (external files keep their absolute
-    * path — see [[storedKey]]).
+    * file schema, keys in [[FileKey.relative]] form.
     */
-  def toDeleteRows(df: DataFrame, rootPrefix: String): DataFrame =
+  def toDeleteRows(df: DataFrame, table: LakeTable): DataFrame =
     df.select(
-      storedKey(col(LakePos.FileCol), rootPrefix).as(FileField),
+      FileKey.relative(col(LakePos.FileCol), table.rootQ).as(FileField),
       col(LakePos.PosCol).as(PosField))
 
+  /** The rows of delete dirs `dirs`, each key in URI form: what
+    * [[LakePos.FileCol]] holds for its data file.
+    */
+  def read(table: LakeTable, dirs: Seq[String]): DataFrame =
+    table.spark.read.schema(schema).parquet(dirs.map(table.location): _*)
+      .select(FileKey.absolute(col(FileField), table.rootQ).as(FileField), col(PosField))
+
   /** Anti-join `data` (which carries [[LakePos]] columns) against the
-    * snapshot's delete dirs. Absolute-vs-relative reconciliation
-    * happens on the (small) delete side, so the data side stays a
-    * plain column reference the join can hash directly.
+    * snapshot's delete dirs. Key forms are reconciled on the (small)
+    * delete side, so the data side stays a plain column reference the
+    * join can hash directly.
     */
   def applyTo(data: DataFrame, table: LakeTable, deleteDirs: Seq[String]): DataFrame = {
     if (deleteDirs.isEmpty) return data
-    val paths = deleteDirs.map(table.location)
-    val del = table.spark.read.schema(schema).parquet(paths: _*)
-      .select(
-        qualifiedKey(col(FileField), table.qualifiedRootPrefix).as("_gr_del_file"),
-        col(PosField).as("_gr_del_pos"))
+    val del = read(table, deleteDirs)
     data.join(del,
-      data(LakePos.FileCol) === del("_gr_del_file") &&
-        data(LakePos.PosCol) === del("_gr_del_pos"),
+      data(LakePos.FileCol) === del(FileField) && data(LakePos.PosCol) === del(PosField),
       "left_anti")
   }
 }
@@ -130,10 +112,10 @@ private[lake] object EqualityDeletes {
     * rows (and later appends) survive, which is exactly what lets one
     * upsert commit delete old key versions while inserting new ones.
     *
-    * Per-row sequence is derived from the row's file path: the first
-    * two path segments under the table root name the commit dir
-    * (`data/<uuid>`), joined against a broadcast dir→seq lookup built
-    * from the manifest — O(dirs) driver-side rows, never data-scaled.
+    * Per-row sequence is derived from the row's file path: its
+    * manifest dir ([[FileKey.dirOf]]) joins a broadcast dir→seq lookup
+    * built from the manifest — O(dirs) driver-side rows, never
+    * data-scaled.
     * Key matching is null-safe (`<=>`), and delete values read under
     * the current schema's types (widening after the delete was written
     * upcasts the stored values the same way it upcasts data files).
@@ -145,18 +127,8 @@ private[lake] object EqualityDeletes {
     val seqRows = snap.dirs.indices.map(i => (snap.dirs(i), snap.dirSeq(i)))
     import spark.implicits._
     val seqDf = seqRows.toDF("_gr_dirname", "_gr_dirseq")
-    // owned files: first two root-relative path segments name the
-    // commit dir ("data/<uuid>"). Imported external dirs are named by
-    // their absolute URI instead — a prefix test per external dir
-    // (O(external dirs) case branches, driver-known and commit-bounded,
-    // never data-scaled) maps their files back to the manifest name.
-    val ownedDirOf: Column = substring_index(
-      substring(col(LakePos.FileCol), table.qualifiedRootPrefix.length + 1, Int.MaxValue),
-      "/", 2)
-    val dirOf: Column = snap.dirs.filter(LakeTable.externalDir)
-      .foldLeft(ownedDirOf)((acc, d) =>
-        when(col(LakePos.FileCol).startsWith(lit(table.location(d) + "/")), lit(d))
-          .otherwise(acc))
+    val dirOf = FileKey.dirOf(col(LakePos.FileCol), table.rootQ,
+      snap.dirs.filter(LakeTable.externalDir))
     val withSeq = data.withColumn("_gr_dirname", dirOf)
       .join(broadcast(seqDf), "_gr_dirname")
     val schema = snap.schema

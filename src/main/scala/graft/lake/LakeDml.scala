@@ -127,7 +127,7 @@ object LakeDml {
     // the orphan sweep if this statement dies before committing
     def stageFirst(): (Option[org.apache.hadoop.fs.Path], Long) = {
       val staged = table.loc(s"deletes/.staging-${java.util.UUID.randomUUID()}")
-      DeleteFiles.toDeleteRows(matched, table.qualifiedRootPrefix)
+      DeleteFiles.toDeleteRows(matched, table)
         .write.mode("overwrite").parquet(staged.toString)
       // exact row count from the staged dir's parquet FOOTERS — zero
       // Spark jobs (the dir was just written by this driver); the
@@ -176,7 +176,7 @@ object LakeDml {
               if (touchedFiles < total &&
                   touchedFiles <= math.max(1L, (total * morMaxTouchedRatio).toLong)) {
                 val staged = table.loc(s"deletes/.staging-${java.util.UUID.randomUUID()}")
-                DeleteFiles.toDeleteRows(matched, table.qualifiedRootPrefix)
+                DeleteFiles.toDeleteRows(matched, table)
                   .write.mode("overwrite").parquet(staged.toString)
                 (Some(staged), rows)
               } else (None, rows)

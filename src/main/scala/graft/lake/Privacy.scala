@@ -195,11 +195,11 @@ object Privacy {
       spark.read.parquet(paths: _*).schema, keys)
     val hits = spark.read.parquet(paths: _*)
       .where(cond)
-      .groupBy(input_file_name().as("f")).agg(count(lit(1)).as("n"))
+      .groupBy(FileKey.column.as("f")).agg(count(lit(1)).as("n"))
       .collect()
     val before = hits.map(_.getLong(1)).sum
     val hitDirs = hits.map(r => java.nio.file.Paths.get(
-      new java.net.URI(r.getString(0))).getParent).distinct
+      FileKey.path(r.getString(0)).toUri).getParent).distinct
     // validate EVERY hit slice before the first in-place rewrite (the
     // same validate-before-irreversible-act rule eraseAll applies to
     // anchors): a contract violation found mid-loop would otherwise

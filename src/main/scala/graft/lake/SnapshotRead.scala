@@ -45,29 +45,20 @@ private[lake] object SnapshotRead {
       roots: Seq[org.apache.hadoop.fs.Path],
       schemaOpt: Option[StructType],
       spec: org.apache.spark.sql.execution.datasources.PartitionSpec,
-      keep: Map[String, Set[String]])
+      keep: Map[String, Set[String]],
+      root: HPath)
     extends InMemoryFileIndex(spark, roots, Map.empty, schemaOpt,
       userSpecifiedPartitionSpec = Some(spec)) {
-    // commit dir ("data/<uuid>") + dir-relative file key of a listed
-    // file, from the LAST "data" path segment: partition subdirs are
-    // always `name=value` (never a bare "data"), so the last match is
-    // the table's data root even when the warehouse path itself
-    // contains a "data" segment
-    private def dirAndKey(p: org.apache.hadoop.fs.Path): Option[(String, String)] = {
-      val segs = p.toUri.getPath.split('/')
-      val i = segs.lastIndexWhere(_ == "data")
-      if (i < 0 || i + 2 >= segs.length) None
-      else Some((segs(i) + "/" + segs(i + 1), segs.drop(i + 2).mkString("/")))
-    }
     override def listFiles(
         partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
         dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       : Seq[org.apache.spark.sql.execution.datasources.PartitionDirectory] =
       super.listFiles(partitionFilters, dataFilters).map { pd =>
         pd.copy(files = pd.files.filter { f =>
-          dirAndKey(f.getPath) match {
-            case Some((dir, key)) => keep.get(dir).forall(_.contains(key))
-            case None             => true // unidentifiable → keep
+          // an owned file's root-relative path is data/<uuid>/<key>
+          FileKey.underRoot(root, f.getPath).map(_.split("/", 3)) match {
+            case Some(Array(data, uuid, key)) => keep.get(s"$data/$uuid").forall(_.contains(key))
+            case _                            => true // unidentifiable → keep
           }
         })
       }
@@ -113,7 +104,7 @@ private[lake] object SnapshotRead {
     val index =
       if (statsKeep.nonEmpty)
         new StatsPrunedFileIndex(spark, parts.map(_.path), Some(userSchema),
-          PartitionSpec(partCols, parts), statsKeep)
+          PartitionSpec(partCols, parts), statsKeep, table.rootQ)
       else
         new InMemoryFileIndex(spark, parts.map(_.path), Map.empty,
           Some(userSchema),
@@ -132,7 +123,7 @@ private[lake] object SnapshotRead {
     // columns from the file-source `_metadata` struct when asked)
     import org.apache.spark.sql.functions.col
     val pos =
-      if (withPos) Seq(col("_metadata.file_path").as(LakePos.FileCol),
+      if (withPos) Seq(FileKey.column.as(LakePos.FileCol),
         col("_metadata.row_index").as(LakePos.PosCol))
       else Nil
     df.select((userSchema.fieldNames.toSeq ++ fields.filter(_.hidden).map(_.name)).map(col)

@@ -1,7 +1,7 @@
 package graft.lake
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
@@ -52,15 +52,6 @@ private[lake] object TaskScan {
   val SeqCol = "_gr_seq"
   val TaskCol = "_gr_task"
   val PosCol = "_gr_pos"
-
-  private val SchemeSlashes = "^([a-zA-Z0-9+.-]+):/+"
-
-  /** Both sides of every file-path equality pass through this: Hadoop
-    * renders `file:///x` and `file:/x` interchangeably, and a delete
-    * file may use either.
-    */
-  def canon(path: String): String = path.replaceFirst(SchemeSlashes, "$1:/")
-  def canon(path: Column): Column = regexp_replace(path, SchemeSlashes, "$1:/")
 
   /** Scan `tasks` as `schema` (by name; a NullType field is one only
     * the files can type). Data columns read with their declared types,
@@ -121,15 +112,16 @@ private[lake] object TaskScan {
       .select(keys.fieldNames.map(col).toIndexedSeq :+ col(SeqCol): _*)
 
   /** One join per delete kind, each `(data, joinType) => data`.
-    * Position rows find their task by canonical qualified path.
+    * Position rows find their task by qualified path form, in either
+    * scheme spelling ([[FileKey.canon]]).
     */
   private def appliers(spark: SparkSession, tasks: Seq[FileTask], statuses: Seq[FileStatus],
                        d: ScanDeletes): Seq[(DataFrame, String) => DataFrame] = {
     val positions = d.positions.map { rows =>
       import spark.implicits._
-      val byPath = tasks.indices.map(i => (canon(statuses(i).getPath.toString), i, tasks(i).dataSeq))
+      val byPath = tasks.indices.map(i => (statuses(i).getPath.toString, i, tasks(i).dataSeq))
         .toDF("_gr_dpath", "_gr_dtask", "_gr_dtseq")
-      val coords = rows.join(broadcast(byPath), canon(rows("file_path")) === byPath("_gr_dpath"))
+      val coords = rows.join(broadcast(byPath), FileKey.canon(rows("file_path")) === byPath("_gr_dpath"))
         .where(byPath("_gr_dtseq") <= rows(SeqCol))
         .select(col("_gr_dtask"), col("pos").as("_gr_dpos"))
       (data: DataFrame, how: String) => data.join(broadcast(coords),

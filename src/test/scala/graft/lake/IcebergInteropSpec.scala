@@ -82,6 +82,23 @@ class IcebergInteropSpec extends AnyFunSuite {
     assert(targets.count() === 100)
   }
 
+  test("position deletes from _metadata.file_path apply under a root holding a space") {
+    val loc = Files.createDirectories(
+      Files.createTempDirectory("iceberg-interop-").resolve("with space")).toString
+    val exp = new IcebergExport(spark, loc)
+    val s1 = exp.append(spark.range(0, 20).select($"id", ($"id" % 3).as("m")).repartition(2))
+    // a raw scan names rows in URI form (`with%20space`); the manifest
+    // holds the path form
+    exp.positionDelete(spark.read.option("recursiveFileLookup", "true").parquet(s"$loc/data")
+      .where($"id" === 7L)
+      .select(col("_metadata.file_path").as("file_path"), col("_metadata.row_index").as("pos")))
+    val rdr = new IcebergTableReader(spark, loc)
+    assert(rdr.read().select($"id").as[Long].collect().sorted.toSeq === (0L until 20L).filter(_ != 7L))
+    val ch = rdr.readChangesSince(s1)
+    assert(ch.where($"_change_type" === "delete").select($"id").as[Long].collect().toSeq === Seq(7L))
+    assert(ch.count() === 1L)
+  }
+
   test("v2 sequence inheritance: null entry sequence inherits the manifest list's") {
     import IcebergFormat._
     val loc = freshLoc()

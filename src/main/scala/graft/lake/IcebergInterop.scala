@@ -702,7 +702,11 @@ final class IcebergTableReader(spark: SparkSession, location: String) {
           else {
             val named = TaskScan.positionRows(spark, addedDeletes.map(task))
               .select(FileKey.canon(col("file_path"))).distinct().collect().map(_.getString(0)).toSet
-            prevData.filter(f => named(io.qualify(resolve(f.path)).toString))
+            // older writers stored a URI form as given
+            prevData.filter { f =>
+              val p = io.qualify(resolve(f.path))
+              named(p.toString) || named(FileKey.uri(p))
+            }
           }
         if (targets.nonEmpty)
           frames += tagged(scan(targets, prevDel, only = Some(addedDeletes)), "delete", s.sequence)
@@ -1062,7 +1066,7 @@ final class IcebergExport(spark: SparkSession, location: String) {
     * manifest list carrying the prior snapshot's manifests forward, and
     * the next metadata.json. Returns the new snapshot id.
     */
-  private def commit(df: DataFrame, content: Int, eqCols: Seq[String],
+  private[lake] def commit(df: DataFrame, content: Int, eqCols: Seq[String],
                      operation: String, partitionBy: Seq[String] = Nil): Long = {
     val st = state
     val seq = st.lastSeq + 1
@@ -1240,16 +1244,13 @@ final class IcebergExport(spark: SparkSession, location: String) {
     * entry holds ([[FileKey]]); the lookup runs on the delete rows.
     */
   def positionDelete(coords: DataFrame): Long = {
-    val forms = FileStats.listParquet(io, dataDir).map(st => io.qualify(st.getPath))
-      .map(p => (FileKey.uri(p), p.toString)).filter { case (u, p) => u != p }
-    val rows =
-      if (forms.isEmpty) coords.select(col("file_path"), col("pos"))
-      else {
-        val byUri = spark.createDataFrame(forms).toDF("_gr_uri", "_gr_path")
-        coords.join(broadcast(byUri), FileKey.canon(coords("file_path")) === byUri("_gr_uri"), "left")
-          .select(coalesce(byUri("_gr_path"), coords("file_path")).as("file_path"), coords("pos"))
-      }
-    commit(rows, PositionDeletes, Nil, "delete")
+    // only files whose two forms differ; under a plain root the lookup
+    // is empty and the optimizer drops the join
+    val byUri = spark.createDataFrame(FileStats.listParquet(io, dataDir).map(st => io.qualify(st.getPath))
+      .map(p => (FileKey.uri(p), p.toString)).filter { case (u, p) => u != p }).toDF("_gr_uri", "_gr_path")
+    commit(coords.join(broadcast(byUri), FileKey.canon(coords("file_path")) === byUri("_gr_uri"), "left")
+      .select(coalesce(byUri("_gr_path"), coords("file_path")).as("file_path"), coords("pos")),
+      PositionDeletes, Nil, "delete")
   }
 }
 

@@ -199,7 +199,7 @@ object Privacy {
       .collect()
     val before = hits.map(_.getLong(1)).sum
     val hitDirs = hits.map(r => java.nio.file.Paths.get(
-      FileKey.path(r.getString(0)).toUri).getParent).distinct
+      new java.net.URI(r.getString(0))).getParent).distinct
     // validate EVERY hit slice before the first in-place rewrite (the
     // same validate-before-irreversible-act rule eraseAll applies to
     // anchors): a contract violation found mid-loop would otherwise

@@ -112,15 +112,18 @@ private[lake] object TaskScan {
       .select(keys.fieldNames.map(col).toIndexedSeq :+ col(SeqCol): _*)
 
   /** One join per delete kind, each `(data, joinType) => data`.
-    * Position rows find their task by qualified path form, in either
-    * scheme spelling ([[FileKey.canon]]).
+    * Position rows find their task by qualified path form, or by URI
+    * form (older writers stored it as given), in either scheme
+    * spelling ([[FileKey.canon]]).
     */
   private def appliers(spark: SparkSession, tasks: Seq[FileTask], statuses: Seq[FileStatus],
                        d: ScanDeletes): Seq[(DataFrame, String) => DataFrame] = {
     val positions = d.positions.map { rows =>
       import spark.implicits._
-      val byPath = tasks.indices.map(i => (statuses(i).getPath.toString, i, tasks(i).dataSeq))
-        .toDF("_gr_dpath", "_gr_dtask", "_gr_dtseq")
+      val byPath = tasks.indices.flatMap { i =>
+        val p = statuses(i).getPath
+        Seq(p.toString, FileKey.uri(p)).distinct.map(k => (k, i, tasks(i).dataSeq))
+      }.toDF("_gr_dpath", "_gr_dtask", "_gr_dtseq")
       val coords = rows.join(broadcast(byPath), FileKey.canon(rows("file_path")) === byPath("_gr_dpath"))
         .where(byPath("_gr_dtseq") <= rows(SeqCol))
         .select(col("_gr_dtask"), col("pos").as("_gr_dpos"))

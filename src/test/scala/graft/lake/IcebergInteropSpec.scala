@@ -99,6 +99,23 @@ class IcebergInteropSpec extends AnyFunSuite {
     assert(ch.count() === 1L)
   }
 
+  test("position-delete files holding URI-form paths still apply under a spaced root") {
+    val loc = Files.createDirectories(
+      Files.createTempDirectory("iceberg-interop-").resolve("with space")).toString
+    val exp = new IcebergExport(spark, loc)
+    val s1 = exp.append(spark.range(0, 20).select($"id", ($"id" % 3).as("m")).repartition(2))
+    // an older writer stored `_metadata.file_path` as given (`with%20space`)
+    exp.commit(spark.read.option("recursiveFileLookup", "true").parquet(s"$loc/data")
+      .where($"id" === 7L)
+      .select(col("_metadata.file_path").as("file_path"), col("_metadata.row_index").as("pos")),
+      IcebergFormat.PositionDeletes, Nil, "delete")
+    val rdr = new IcebergTableReader(spark, loc)
+    assert(rdr.read().select($"id").as[Long].collect().sorted.toSeq === (0L until 20L).filter(_ != 7L))
+    val ch = rdr.readChangesSince(s1)
+    assert(ch.where($"_change_type" === "delete").select($"id").as[Long].collect().toSeq === Seq(7L))
+    assert(ch.count() === 1L)
+  }
+
   test("v2 sequence inheritance: null entry sequence inherits the manifest list's") {
     import IcebergFormat._
     val loc = freshLoc()

@@ -367,6 +367,24 @@ class LakeSpec extends AnyFunSuite {
     assert(f.map(_.getAs[Long]("record_count")).sorted.toSeq === Seq(9L, 10L))
   }
 
+  test("write(statsBy): scanning-fallback stats key files as footers do under escaped partition values") {
+    import LakePredicate._
+    // footers cannot bound the partition column, so the write scans for
+    // its stats; a per-row file path reports `k=a%20b`, `k=x%2525y`
+    val t = new LakeTable(spark, Files.createTempDirectory("lake-spec-esc-").resolve("t"))
+    t.write((1L to 20L).map(i => (i, if (i % 2 == 0) "a b" else "x%y")).toDF("id", "k")
+      .repartition(1), WriteMode.Overwrite, partitionBy = Seq("k"), statsBy = Seq("k", "id"))
+    val snap = t.latest.get
+    val stats = FileStats.dirStats(snap, 0, _ => true).get
+    val keys = FileStats.decodeFileRows(snap.meta(FileStats.fileRowsKey(snap.dirs.head))).map(_._1)
+    assert(stats.files.map(_._1).sorted === keys.sorted)
+    assert(keys.map(_.takeWhile(_ != '/')).sorted === Seq("k=a b", "k=x%25y"))
+    // ids of `k=x%y` top out at 19: its file is skipped
+    val hit = t.scan(Seq(GtEq("id", 20L)))
+    assert(scannedFiles(hit) === 1L)
+    assert(hit.select($"id").as[Long].collect().toSeq === Seq(20L))
+  }
+
   test("snapshots metadata table reflects history") {
     val cat = freshCat()
     cat.write(sample(), "ns.m", WriteMode.Overwrite)
